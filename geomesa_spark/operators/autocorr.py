@@ -109,11 +109,17 @@ GI_STAR_SQL = (
 #: q=Σ_edges (x_i+x_j).  Expanding Σ(x_i−x̄)(x_j−x̄) = p − x̄·q + w·x̄²
 #: and Σ(x_i−x̄)² = s2 − n·x̄² keeps every input exact.
 MORAN_I_SQL = (
+    # n <= 1, no edge (every populated cell isolated) or zero variance
+    # (all counts equal) leave I undefined (0/0 -> ANSI divide-by-zero);
+    # none carries spatial signal, so I = 0 there (both engines, same text)
+    "CASE WHEN n <= 1 OR w = 0"
+    " OR s2 - n * ((CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)) <= 0"
+    " THEN CAST(0 AS BIGINT) ELSE "
     "CAST(ROUND(((CAST(n AS DOUBLE) / w)"
     " * ((p - (CAST(s1 AS DOUBLE) / n) * q"
     "      + w * ((CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)))"
     "    / (s2 - n * ((CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)))))"
-    " * 1000000000) AS BIGINT)"
+    " * 1000000000) AS BIGINT) END"
 )
 
 #: Mann-Kendall z with tie correction from exact integers: s_stat (sign

@@ -132,35 +132,55 @@ class PolygonSet:
         pdf = pd.concat(frames, ignore_index=True).drop_duplicates(["polygon_id", "cell"])
         return spark.createDataFrame(pdf), res_used
 
-    def geometry_frame(self, spark) -> DataFrame:
-        """(polygon_id, edges array<struct<x1,y1,x2,y2>>) — every closed
-        ring's edges of every part, FLATTENED into one array per polygon.
+    def flat_edges(self, pid: str) -> list[tuple[float, float, float, float]]:
+        """Every closed ring's edges of every part of ``pid``, FLATTENED
+        into one (x1, y1, x2, y2) list.
 
         Even-odd crossing parity over the union of closed rings equals the
         sum of per-ring parities, so one flat array suffices — and the
         per-candidate PIP expression becomes a single ``aggregate`` over a
         precomputed array (no per-row sequence/struct building; Spark HOFs
         are interpreted, so per-row allocation is the cost driver)."""
-        rows = []
-        for pid in self.ids:
-            edges = []
-            for part_rings in self.parts[pid]:
-                for ring in part_rings:
-                    closed = kernels.close_ring(np.asarray(ring, dtype=np.float64))
-                    for i in range(len(closed) - 1):
-                        edges.append(
-                            {
-                                "x1": float(closed[i, 0]),
-                                "y1": float(closed[i, 1]),
-                                "x2": float(closed[i + 1, 0]),
-                                "y2": float(closed[i + 1, 1]),
-                            }
-                        )
-            rows.append({"polygon_id": pid, "edges": edges})
+        edges: list[tuple[float, float, float, float]] = []
+        for part_rings in self.parts[pid]:
+            for ring in part_rings:
+                c = kernels.close_ring(np.asarray(ring, dtype=np.float64))
+                edges.extend(
+                    zip(c[:-1, 0].tolist(), c[:-1, 1].tolist(),
+                        c[1:, 0].tolist(), c[1:, 1].tolist())
+                )
+        return edges
+
+    def geometry_frame(self, spark) -> DataFrame:
+        """(polygon_id, edges array<struct<x1,y1,x2,y2>>) — one row per
+        polygon holding its :meth:`flat_edges`."""
+        rows = [
+            {
+                "polygon_id": pid,
+                "edges": [dict(zip(("x1", "y1", "x2", "y2"), e)) for e in self.flat_edges(pid)],
+            }
+            for pid in self.ids
+        ]
         return spark.createDataFrame(
             rows,
             schema="polygon_id string, edges array<struct<x1:double,y1:double,x2:double,y2:double>>",
         )
+
+    def edges_sql(self, pid: str) -> str:
+        """``pid``'s :meth:`flat_edges` as ONE SQL array literal — the
+        ``edges`` argument of :meth:`jvm_pip_sql` when the polygon is a
+        query constant rather than a broadcast row.  ``repr`` round-trips
+        every double exactly and the ``D`` suffix keeps it a DOUBLE (a bare
+        ``1.5`` parses as DECIMAL), so the refine stays bit-compatible with
+        :func:`geomesa_spark.geo.kernels.point_in_polygon`."""
+
+        def lit(v: float) -> str:
+            return repr(v) + "D" if np.isfinite(v) else f"double('{v}')"
+
+        return "array(" + ", ".join(
+            f"named_struct('x1', {lit(x1)}, 'y1', {lit(y1)}, 'x2', {lit(x2)}, 'y2', {lit(y2)})"
+            for x1, y1, x2, y2 in self.flat_edges(pid)
+        ) + ")"
 
     @staticmethod
     def jvm_pip_sql(predicate: str, lon: str = "lon", lat: str = "lat",
@@ -257,8 +277,8 @@ def cell_expr(lon, lat, res: int) -> F.Column:
     buffer every non-UDF column (the full ``spans`` payload!) in a row
     queue while awaiting Python results — measured 2.5× slower on the
     flagship join.  The Morton interleave is just shifts/masks, which
-    Catalyst codegens; the Arrow kernel remains the API for planner/
-    driver-side use and documents the same math.
+    Catalyst codegens; :func:`add_cell_column` is the form the engine's
+    operators use.
     """
     lon_c = lon if isinstance(lon, F.Column) else F.col(lon)
     lat_c = lat if isinstance(lat, F.Column) else F.col(lat)
@@ -281,9 +301,22 @@ def cell_expr(lon, lat, res: int) -> F.Column:
         return c
 
     cell = part1by1(x).bitwiseOR(F.shiftleft(part1by1(y), 1))
-    return F.when(
-        lon_c.isNull() | lat_c.isNull() | F.isnan(lon_c) | F.isnan(lat_c), F.lit(-1)
-    ).otherwise(cell)
+    inf = F.lit(float("inf"))  # see _finite_sql
+    return F.when((F.abs(lon_c) < inf) & (F.abs(lat_c) < inf), cell).otherwise(F.lit(-1))
+
+
+def _finite_sql(lon: str, lat: str) -> str:
+    """SQL: both coordinates are finite — false or NULL exactly for the
+    rows :func:`geomesa_spark.cells.encode` maps to -1.  Spark orders NaN
+    above +Infinity, so ``abs(c) < Infinity`` rejects NaN and ±inf in one
+    comparison, and is NULL for a NULL coordinate."""
+    return " AND ".join(
+        f"abs({_quote(c)}) < double('Infinity')" for c in (lon, lat)
+    )
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 _SPREAD_MASKS = (
@@ -295,13 +328,45 @@ _SPREAD_MASKS = (
 )
 
 
+def _morton_projections(
+    df: DataFrame, res: int, lon: str, lat: str, out: str, keep_invalid: bool
+) -> DataFrame:
+    """``df`` plus the Morton cell id at ``res`` as column ``out``, built
+    as a chain of small projections (see :func:`add_cell_column` for why
+    the chain).  Each step is ONE ``selectExpr`` of SQL text covering both
+    axes, so the driver pays one py4j call per step instead of one per
+    Column node.  ``keep_invalid`` keeps every row and gives the ones with
+    a NULL, NaN or ±inf coordinate cell -1; otherwise the caller has
+    already filtered them out."""
+    cols = df.columns
+    keep = [_quote(c) for c in cols if c not in (out, "_gx", "_gy")]
+    n = 1 << res
+    d = df.selectExpr(
+        *keep,
+        f"least(greatest(FLOOR(({_quote(lon)} + 180.0D) / 360.0D * {n}), 0), {n - 1}) AS _gx",
+        f"least(greatest(FLOOR(({_quote(lat)} + 90.0D) / 180.0D * {n}), 0), {n - 1}) AS _gy",
+    )
+    for s, m in _SPREAD_MASKS:
+        d = d.selectExpr(
+            *keep, *(f"(_g{a} | shiftleft(_g{a}, {s})) & {m}L AS _g{a}" for a in "xy")
+        )
+    cell = "_gx | shiftleft(_gy, 1)"
+    if keep_invalid:
+        cell = f"CASE WHEN {_finite_sql(lon, lat)} THEN {cell} ELSE -1L END"
+    cell += f" AS {_quote(out)}"
+    if out in cols:  # replace in place, like withColumn
+        return d.selectExpr(*[cell if c == out else _quote(c) for c in cols])
+    return d.selectExpr(*keep, cell)
+
+
 def add_cell_column(
     df: DataFrame, res: int, lon: str = "lon", lat: str = "lat", out: str = "cell"
 ) -> DataFrame:
     """Append the Morton cell id as column ``out`` — the HOT-PATH encode.
-    Rows with null/NaN coordinates are dropped first (the rows
-    :func:`cell_expr` mapped to -1; every consumer joins/filters them
-    away anyway, and the validity predicate pushes down to the scan).
+    Rows with a NULL, NaN or ±inf coordinate are dropped first (the rows
+    :func:`cell_expr` maps to -1; every consumer joins/filters them away
+    anyway, and the validity predicate's null check pushes down to the
+    scan).
 
     Why a DataFrame helper instead of one Column expression: the
     single-expression form substitutes ``c`` twice per interleave step,
@@ -310,34 +375,13 @@ def add_cell_column(
     whole-stage-codegen method then exceeds HotSpot's huge-method JIT
     limit and THE WHOLE FUSED STAGE runs in the bytecode interpreter —
     measured 54 µs/row vs <1 ns/row for the same math JIT-compiled.
-    Chained ``withColumn`` steps keep each intermediate as a named
+    Chained projection steps keep each intermediate as a named
     projection (Catalyst's CollapseProject declines to inline aliases
     referenced twice), so codegen emits each step once as a local.
     Bit-identical to :func:`geomesa_spark.cells.encode` (parity-tested).
     """
-    lon_c, lat_c = F.col(lon), F.col(lat)
-    d = df.filter(
-        lon_c.isNotNull() & lat_c.isNotNull() & ~F.isnan(lon_c) & ~F.isnan(lat_c)
-    )
-    n = 1 << res
-    d = d.withColumn(
-        "_gx",
-        F.least(
-            F.greatest(F.floor((lon_c + F.lit(180.0)) / F.lit(360.0) * F.lit(n)), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long"),
-    ).withColumn(
-        "_gy",
-        F.least(
-            F.greatest(F.floor((lat_c + F.lit(90.0)) / F.lit(180.0) * F.lit(n)), F.lit(0)),
-            F.lit(n - 1),
-        ).cast("long"),
-    )
-    for c in ("_gx", "_gy"):
-        for s, m in _SPREAD_MASKS:
-            d = d.withColumn(c, (F.col(c).bitwiseOR(F.shiftleft(F.col(c), s))).bitwiseAND(F.lit(m)))
-    return d.withColumn(out, F.col("_gx").bitwiseOR(F.shiftleft(F.col("_gy"), 1))).drop(
-        "_gx", "_gy"
+    return _morton_projections(
+        df.filter(_finite_sql(lon, lat)), res, lon, lat, out, keep_invalid=False
     )
 
 
@@ -349,8 +393,8 @@ def extract_geo_points(docs: DataFrame) -> DataFrame:
     row carries the original ``spans`` value (span-sequence invariant).
     Docs without a geo span drop out (inner explode — "the join must not
     invent rows"); malformed/EMPTY WKT nulls out and is filtered.
-    Extraction is pure JVM (regexp) — whole-stage-codegen friendly; only
-    cell encoding drops to an Arrow UDF.
+    Extraction is pure JVM (regexp) and whole-stage-codegen friendly, as
+    is the cell encode that follows it (:func:`add_cell_column`).
     """
     g = docs.withColumn(
         "_geo_wkts", F.expr("transform(filter(spans, s -> s.kind = 'geo'), s -> s.text)")

@@ -22,9 +22,10 @@ tree, mount empty at survey time — SURVEY.md §0):
   parquet row-group pruning from min/max stats on ``cell``.
 
 At 100 TB this is the difference between scanning everything and reading
-only the covered buckets: the scan is declarative (``.filter(col(
-"cell_bucket").isin(...))``), so Catalyst's PartitionFilters +
-PushedFilters do the elimination before a single row moves.
+only the covered buckets: the scan is declarative (one SQL filter,
+``cell_bucket IN (...) AND (cell BETWEEN ...)``), so Catalyst's
+PartitionFilters + PushedFilters do the elimination before a single row
+moves.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import cells
 from ..geo import wkt
-from ..operators.spatial_join import PolygonSet, cell_encode_udf
+from ..operators.spatial_join import PolygonSet, _morton_projections
 
 #: bucket resolution: 4 → up to 256 directories; coarse enough for sane
 #: file counts, fine enough that a city-scale query prunes >99% of data.
@@ -156,9 +157,13 @@ def write_partitioned(
     ``time_bin=W/cell_bucket=B`` (week bins ≙ BinnedTime) so geom+time is
     the PRIMARY key — "this bbox, last week" reads only last week's bucket
     dirs instead of every time bin.
+
+    JVM-only: the cell id is the codegen'd Morton encode of
+    :func:`~geomesa_spark.operators.spatial_join.add_cell_column`, with no
+    Python worker in the job.  Rows with a NULL, NaN or ±inf coordinate
+    are kept with cell -1, as :func:`geomesa_spark.cells.encode` gives.
     """
-    enc = cell_encode_udf(res)
-    d = points.withColumn("cell", enc(F.col("lon"), F.col("lat")))
+    d = _morton_projections(points, res, "lon", "lat", "cell", keep_invalid=True)
     d = d.withColumn(
         "cell_bucket", F.shiftrightunsigned(F.col("cell"), 2 * (res - bucket_res))
     )
@@ -274,24 +279,25 @@ def scan_partitioned(
     and the cell ranges under PushedFilters.
     """
     cover = _spatial_cover(geom_wkt, res, bucket_res, max_cells, max_ranges)
-    if cover is None:
+    if cover is None or not cover[0]:
         # unparseable or degenerate geometry covers nothing: empty scan
-        # (the old pre-range-pushdown code returned empty here too; the
-        # range disjunction below must not index into an empty list)
+        # (an empty bucket list would also be invalid SQL below)
         return spark.read.parquet(path).filter(F.lit(False))
     buckets, ranges = cover
-    df = spark.read.parquet(path).filter(F.col("cell_bucket").isin(buckets))
+    # the whole predicate is ONE SQL string → one F.expr: building it from
+    # Column nodes costs a py4j round trip per node (~4 per range)
+    terms = [f"cell_bucket IN ({', '.join(map(str, buckets))})"]
     if ranges:
-        cond = F.col("cell").between(*ranges[0])
-        for lo, hi in ranges[1:]:
-            cond = cond | F.col("cell").between(lo, hi)
-        df = df.filter(cond)
+        terms.append(
+            "(" + " OR ".join(f"cell BETWEEN {lo} AND {hi}" for lo, hi in ranges) + ")"
+        )
+    df = spark.read.parquet(path)
     if time_range is not None and "time_bin" in df.columns:
         width = 86400 * time_bin_days
         b0 = int(pd.Timestamp(time_range[0]).timestamp()) // width
         b1 = int(pd.Timestamp(time_range[1]).timestamp()) // width
-        df = df.filter((F.col("time_bin") >= b0) & (F.col("time_bin") <= b1))
-    return df
+        terms.append(f"time_bin >= {b0} AND time_bin <= {b1}")
+    return df.filter(F.expr(" AND ".join(terms)))
 
 
 def query(
@@ -308,7 +314,11 @@ def query(
     """Full GeoMesa-query analogue over a partitioned layout:
     pruned scan (primary filter: spatial buckets AND time bins when the
     layout has them) → exact temporal row filter → exact refine
-    (secondary filter) → dedupe."""
+    (secondary filter) → dedupe.
+
+    JVM-only: the refine is :meth:`PolygonSet.jvm_pip_sql` over the query
+    polygon's edges written as one SQL literal (:func:`_exact_refine`), so
+    the plan has no Python eval node."""
     cand = scan_partitioned(
         spark, path, geom_wkt, res=res,
         time_range=time_range if time_col else None,
@@ -319,9 +329,18 @@ def query(
         )
     if loose:
         return cand
+    return cand.filter(_exact_refine(geom_wkt, predicate))
+
+
+def _exact_refine(geom_wkt: str, predicate: str) -> F.Column:
+    """Exact secondary filter against one query geometry: the JVM PIP
+    expression with the geometry's flattened edges (antimeridian parts
+    included) inlined as a literal.  A non-polygon geometry matches no
+    point, as it does in :meth:`PolygonSet.refine_udf`."""
     ps = PolygonSet.from_rows([dict(polygon_id="_q", wkt=geom_wkt)])
-    refine = ps.refine_udf(predicate)
-    return cand.filter(refine(F.col("lon"), F.col("lat"), F.lit("_q")))
+    if not ps.ids:
+        return F.lit(False)
+    return F.expr(PolygonSet.jvm_pip_sql(predicate, edges=ps.edges_sql("_q")))
 
 
 # ---------------------------------------------------------------------------
@@ -565,6 +584,5 @@ def query_dual_indexed(
         cand = scan_attr_partitioned(
             spark, attr_path, attr_col, eq=eq, lo=lo, hi=hi, prefix_len=prefix_len
         )
-        ps = PolygonSet.from_rows([dict(polygon_id="_q", wkt=geom_wkt)])
-        out = cand.filter(ps.refine_udf(predicate)(F.col("lon"), F.col("lat"), F.lit("_q")))
+        out = cand.filter(_exact_refine(geom_wkt, predicate))
     return out.drop(*[c for c in _LAYOUT_COLS if c in out.columns])

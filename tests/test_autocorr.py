@@ -112,6 +112,45 @@ def test_morans_i_matches_textbook_formula(spark):
     assert row["moran_i_x1e9"] > 0
 
 
+def _cell_centers(spark, cells_counts):
+    """Points at grid-cell centers: {(cx, cy): count} → DataFrame."""
+    import pandas as pd
+
+    lon, lat = [], []
+    for (cx, cy), k in cells_counts.items():
+        lon += [-180.0 + (cx + 0.5) * 360.0 / SIDE] * k
+        lat += [-90.0 + (cy + 0.5) * 180.0 / SIDE] * k
+    return spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
+
+
+@pytest.mark.parametrize(
+    "counts,edges",
+    [
+        # all-equal counts on a 3x3 block: edges exist, variance is 0
+        ({(cx, cy): 3 for cx in (4, 5, 6) for cy in (7, 8, 9)}, 40),
+        # all-isolated cells with varied counts: no edge at all
+        ({(0, 0): 1, (3, 3): 2, (6, 9): 5, (12, 2): 7}, 0),
+    ],
+    ids=["all_equal_counts", "all_isolated_cells"],
+)
+def test_morans_i_degenerate_input_is_zero(spark, counts, edges):
+    """I is 0/0 on these inputs: both engines return 0, not an ANSI
+    divide-by-zero."""
+    import duckdb
+
+    row = autocorr.morans_i(_cell_centers(spark, counts), res=RES).collect()[0]
+    assert row["n_cells"] == len(counts) and row["w_edges"] == edges
+    assert row["moran_i_x1e9"] == 0
+    # the DuckDB oracle interpolates the same text
+    xs = list(counts.values())
+    duck = duckdb.sql(
+        f"SELECT {autocorr.MORAN_I_SQL} AS i FROM (SELECT {len(xs)}::BIGINT AS n, "
+        f"{sum(xs)}::BIGINT AS s1, {sum(x * x for x in xs)}::BIGINT AS s2, "
+        f"{edges}::BIGINT AS w, 0::BIGINT AS p, 0::BIGINT AS q)"
+    ).fetchone()[0]
+    assert duck == 0
+
+
 def test_local_morans_i_matches_textbook(spark):
     df, lon, lat = _pts(spark)
     got = {

@@ -1,6 +1,7 @@
 """Planner (pruned scan) + lineage/resume tests."""
 
 import os
+import re
 import shutil
 
 import numpy as np
@@ -84,6 +85,110 @@ def test_loose_is_superset(spark, layout):
     exact = {r["doc_id"] for r in planner.query(spark, layout, poly).collect()}
     loose = {r["doc_id"] for r in planner.query(spark, layout, poly, loose=True).collect()}
     assert exact <= loose
+
+
+def _python_eval_free(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+class TestJvmExactRefine:
+    """``planner.query`` refines in the JVM and must agree with the numpy
+    kernel on every point, including vertices, edge points and the ±180°
+    seam of an antimeridian-crossing query polygon."""
+
+    CONCAVE = "POLYGON((10 10, 20 10, 20 20, 15 13.3, 10 20, 10 10))"
+    ANTIMERIDIAN = "POLYGON((170 -10, -170 -10, -170 10, 170 10, 170 -10))"
+
+    @staticmethod
+    def _planted(poly_wkt, rng, n_random=1500):
+        ps = sj.PolygonSet.from_rows([dict(polygon_id="q", wkt=poly_wkt)])
+        e = np.asarray(ps.flat_edges("q"))
+        # t = 0 plants every vertex; the others land on (or within an ulp
+        # of) the edges
+        on_edges = np.concatenate(
+            [e[:, :2] + t * (e[:, 2:] - e[:, :2]) for t in (0.0, 0.25, 0.5, 1.0 / 3.0)]
+        )
+        lon0, lat0, lon1, lat1 = planner.extract_bounds(poly_wkt)
+        rand = np.column_stack(
+            [rng.uniform(lon0 - 2, lon1 + 2, n_random), rng.uniform(lat0 - 2, lat1 + 2, n_random)]
+        )
+        pts = np.concatenate([on_edges, rand])
+        pts[:, 0] = np.clip(pts[:, 0], -180.0, 180.0)
+        return ps, pts
+
+    @pytest.fixture(scope="class")
+    def planted(self, spark, tmp_path_factory):
+        import pandas as pd
+
+        rng = np.random.default_rng(11)
+        frames, polys = [], {}
+        for name in ("CONCAVE", "ANTIMERIDIAN"):
+            ps, pts = self._planted(getattr(self, name), rng)
+            polys[name] = ps
+            frames.append(pts)
+        pts = np.concatenate(frames)
+        seam = np.array([[180.0, 0.0], [-180.0, 0.0], [180.0, 10.0], [-180.0, -10.0]])
+        pts = np.concatenate([pts, seam])
+        pdf = pd.DataFrame({"doc_id": np.arange(len(pts)), "lon": pts[:, 0], "lat": pts[:, 1]})
+        path = str(tmp_path_factory.mktemp("refine") / "pts")
+        planner.write_partitioned(spark.createDataFrame(pdf), path, res=10)
+        return path, pdf, polys
+
+    @pytest.mark.parametrize("name", ["CONCAVE", "ANTIMERIDIAN"])
+    @pytest.mark.parametrize("predicate", ["intersects", "contains"])
+    def test_query_equals_numpy_kernel(self, spark, planted, name, predicate):
+        path, pdf, polys = planted
+        out = planner.query(spark, path, getattr(self, name), predicate, res=10)
+        assert _python_eval_free(out)
+        got = sorted(r["doc_id"] for r in out.collect())
+        lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+        cls = [kernels.point_in_polygon(lon, lat, rings) for rings in polys[name].parts["q"]]
+        # planted vertex/edge points really are boundary points
+        assert np.any([c == kernels.PIP_BOUNDARY for c in cls], axis=0).sum() >= 4
+        if predicate == "contains":  # interior of any part
+            hit = np.any([c == kernels.PIP_IN for c in cls], axis=0)
+        else:
+            hit = np.any([c != kernels.PIP_OUT for c in cls], axis=0)
+        exp = sorted(pdf["doc_id"].to_numpy()[hit].tolist())
+        assert got == exp and len(got) > 0
+
+    def test_query_plan_prunes_and_has_no_python(self, spark, layout):
+        poly = "POLYGON((10 10, 20 10, 20 20, 10 20, 10 10))"
+        out = planner.query(spark, layout, poly)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PartitionFilters: \[[^\]]*cell_bucket#\d+ IN \(", plan)
+        assert (
+            "PushedFilters: [Or(" in plan
+            or "PushedFilters: [And(GreaterThanOrEqual(cell," in plan
+        )
+        assert _python_eval_free(out)
+
+
+def test_write_partitioned_cell_matches_numpy_encode(spark, tmp_path):
+    """The layout's ``cell`` is the JVM encode and must equal
+    ``cells.encode`` on every row; NULL, NaN and ±inf rows are kept with
+    cell -1."""
+    from geomesa_spark import cells
+
+    rng = np.random.default_rng(3)
+    lon = np.concatenate([rng.uniform(-180, 180, 2000), [-180.0, 180.0, 0.0, 179.999999]])
+    lat = np.concatenate([rng.uniform(-90, 90, 2000), [-90.0, 90.0, 0.0, 89.999999]])
+    coords = list(zip(lon.tolist(), lat.tolist())) + [
+        (np.nan, 1.0), (2.0, np.nan), (np.inf, 3.0), (4.0, -np.inf), (-np.inf, np.inf),
+        (None, 5.0), (6.0, None),
+    ]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(coords)], "doc_id long, lon double, lat double"
+    )
+    path = str(tmp_path / "layout")
+    planner.write_partitioned(df, path, res=10)
+    got = spark.read.parquet(path).select("doc_id", "cell").toPandas().sort_values("doc_id")
+    assert got["doc_id"].tolist() == list(range(len(coords)))  # no row dropped
+    as_np = np.array(coords, dtype=np.float64)  # None → NaN
+    exp = cells.encode(as_np[:, 0], as_np[:, 1], 10)
+    np.testing.assert_array_equal(got["cell"].to_numpy(), exp)
+    assert (exp[-7:] == -1).all()
 
 
 class TestZ3TimeBinnedLayout:
@@ -351,6 +456,7 @@ class TestStrategyDecider:
             )
             got[strat] = sorted(r["doc_id"] for r in out.collect())
             assert set(out.columns) == {"doc_id", "lon", "lat", "tag"}
+            assert _python_eval_free(out)  # neither strategy refines in Python
         assert got["spatial"] == got["attr"] == got["auto"]
         # brute force on the pandas source
         lon0, lat0, lon1, lat1 = planner.extract_bounds(geom)

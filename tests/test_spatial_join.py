@@ -267,28 +267,41 @@ def test_unique_ids_skips_dedupe_exchange(spark, docs_df, sf_dir):
 
 
 def test_cell_expr_matches_numpy_encode(spark):
-    """The JVM Catalyst cell expression must be bit-identical to the
-    numpy kernel on random + edge coordinates."""
-    import pandas as pd
-
+    """The JVM cell encoders must be bit-identical to the numpy kernel on
+    random + edge coordinates: ``cell_expr`` gives -1 where
+    ``cells.encode`` does (NULL, NaN, ±inf), and ``add_cell_column``
+    drops exactly those rows."""
     from geomesa_spark import cells as c
 
     rng = np.random.default_rng(5)
     lon = np.concatenate([rng.uniform(-180, 180, 3000), [-180.0, 180.0, 0.0, 179.999999]])
     lat = np.concatenate([rng.uniform(-90, 90, 3000), [-90.0, 90.0, 0.0, 89.999999]])
-    pdf = pd.DataFrame({"lon": lon, "lat": lat})
-    pdf.loc[0, "lon"] = np.nan  # NaN → -1
-    df = spark.createDataFrame(pdf)
+    coords = list(zip(lon.tolist(), lat.tolist())) + [
+        (np.nan, 1.0), (2.0, np.nan), (np.inf, 3.0), (4.0, -np.inf), (-np.inf, np.inf),
+        (None, 5.0), (6.0, None),
+    ]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(coords)], "id long, lon double, lat double"
+    )
+    as_np = np.array(coords, dtype=np.float64)  # None → NaN
     import pyspark.sql.functions as F
 
     for res in (3, 8, 15, 26):
         got = (
-            df.select(sj.cell_expr(F.col("lon"), F.col("lat"), res).alias("cell"))
+            df.orderBy("id")
+            .select(sj.cell_expr(F.col("lon"), F.col("lat"), res).alias("cell"))
             .toPandas()["cell"]
             .to_numpy()
         )
-        exp = c.encode(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), res)
+        exp = c.encode(as_np[:, 0], as_np[:, 1], res)
         np.testing.assert_array_equal(got, exp)
+    for res in (4, 10, 20):
+        got = sj.add_cell_column(df, res).toPandas().sort_values("id")
+        exp = c.encode(as_np[:, 0], as_np[:, 1], res)
+        valid = exp >= 0
+        assert valid.sum() == len(coords) - 7
+        np.testing.assert_array_equal(got["id"].to_numpy(), np.nonzero(valid)[0])
+        np.testing.assert_array_equal(got["cell"].to_numpy(), exp[valid])
 
 
 def test_auto_salt_and_auto_res(spark, docs_df, sf_dir):

@@ -75,7 +75,8 @@ def main() -> None:
     z3df = q.q_z3_bbox_time(spark, sf_dir)
     plans["z3_bbox_time"] = (
         "Want: PartitionFilters carrying both time_bin bounds and the "
-        "cell_bucket IN-list (directory pruning before any row is read).",
+        "cell_bucket IN-list (directory pruning before any row is read), "
+        "and no Python eval node: the exact refine is a JVM expression.",
         plan_of(z3df),
         z3df,
     )
@@ -187,6 +188,17 @@ def main() -> None:
         sys.exit(
             f"PLAN REGRESSION: spacetime join has {n_st_shuf} shuffle "
             f"Exchanges (want <=2: one per side on the composite key)"
+        )
+
+    # REGRESSION GUARD: the Z3 query path is JVM-only — pruned scan, then
+    # the exact refine as a Catalyst expression over the query polygon's
+    # edge literal.  A Python eval node means the refine went back to an
+    # Arrow UDF and every candidate crosses the Python boundary again.
+    z3_text = plans["z3_bbox_time"][1]
+    if "ArrowEvalPython" in z3_text or "BatchEvalPython" in z3_text:
+        sys.exit(
+            "PLAN REGRESSION: z3_bbox_time has a Python eval node (want: "
+            "JVM-only pruned scan + exact refine)"
         )
 
     # REGRESSION GUARD (round-2 JIT discovery): the Morton cell encode must
