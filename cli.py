@@ -128,8 +128,6 @@ def cmd_export(args):
 
 
 def cmd_ingest(args):
-    import pyspark.sql.functions as F
-
     from geomesa_spark.operators import spatial_join as sj
     from geomesa_spark.plans import lineage, planner
     from geomesa_spark.sources import convert
@@ -142,12 +140,7 @@ def cmd_ingest(args):
     else:
         docs = _load_docs(spark, args)
         pts = sj.extract_geo_points(docs).select("doc_id", "lon", "lat")
-    enc = sj.cell_encode_udf(args.res)
-    d = pts.withColumn("cell", enc(F.col("lon"), F.col("lat"))).withColumn(
-        "cell_bucket",
-        F.shiftrightunsigned(F.col("cell"), 2 * (args.res - planner.BUCKET_RES)),
-    )
-    stats = lineage.run_partitioned_job(d, args.out)
+    stats = lineage.run_partitioned_job(planner._layout_columns(pts, args.res), args.out)
     print(json.dumps(stats))
 
 

@@ -139,6 +139,9 @@ def quadkey(cell: np.ndarray, res: int) -> np.ndarray:
     """Base-4 quadkey strings (tile-pyramid ids; prefix = ancestor)."""
     c = np.asarray(cell, dtype=np.int64)
     out = np.empty(c.shape, dtype=object)
+    if res == 0:  # the root tile's quadkey has no digits
+        out.reshape(-1)[:] = ""
+        return out
     digits = np.empty((res,) + c.shape, dtype=np.int64)
     for i in range(res):
         digits[res - 1 - i] = (c >> np.int64(2 * i)) & np.int64(3)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..cache import swap_cache
-from .tiling import _tile_xy_expr
+from .spatial_join import _axis_sql
 
 __all__ = [
     "getis_ord_gi",
@@ -43,11 +43,11 @@ __all__ = [
 
 
 def _cell_key(lon: str, lat: str, res: int) -> F.Column:
-    """Packed (x << res) | y grid key — same convention as
-    tiling.hotspot_clusters, pure whole-stage-codegen arithmetic."""
-    return F.shiftleft(_tile_xy_expr(lon, res, 360.0, 180.0), res).bitwiseOR(
-        _tile_xy_expr(lat, res, 180.0, 90.0)
-    )
+    """Packed (x << res) | y grid key over the engine's axis formula — the
+    one packed-key form (the tile pyramid, hotspot clusters, the tube
+    operators and the streaming Gi* use it too); pure whole-stage-codegen
+    arithmetic."""
+    return F.expr(f"shiftleft({_axis_sql(lon, res)}, {res}) | {_axis_sql(lat, res, lat=True)}")
 
 
 def _neighbor_keys(res: int, include_self: bool) -> str:

@@ -10,15 +10,16 @@ survey time, SURVEY.md §0):
   resolution, broadcast, equi-joined on ``cell``, then refined exactly.
   The FLAGSHIP document join (:func:`spatial_join_documents`) is a
   **zero-shuffle, 100 % JVM pipeline**: codegen'd span extraction →
-  codegen'd Morton cell id (:func:`cell_expr`) → BroadcastHashJoin on the
-  cover → BroadcastHashJoin on the polygon edge arrays → exact
+  codegen'd Morton cell id (:func:`add_cell_column`) → BroadcastHashJoin
+  on the cover → BroadcastHashJoin on the polygon edge arrays → exact
   point-in-polygon as a Catalyst higher-order expression
   (:meth:`PolygonSet.jvm_pip_sql`).  (doc, polygon) uniqueness is
   enforced in the filter itself — a match survives only if no earlier geo
   span of the same doc matches — so no dedupe exchange exists and the
   ``spans`` payload never crosses a shuffle OR an Arrow boundary.
-  :func:`spatial_join_broadcast` keeps the Arrow-batched numpy refine for
-  arbitrary point tables (the general API; same semantics, tested equal);
+  :func:`spatial_join_broadcast` is the general API for arbitrary point
+  tables and refines the same way (geometry broadcast + JVM PIP; tested
+  equal to the numpy kernel);
 - the grid-partitioned join (``GeoMesaJoinRelation`` + ``RelationUtils``
   envelope partitioning) → here: both big sides cell-encoded and
   shuffle-joined on ``cell`` with AQE skew splitting; hot cells are
@@ -215,95 +216,6 @@ class PolygonSet:
             return f"({inside} AND NOT ({on_edge}))"
         return f"({inside} OR ({on_edge}))"
 
-    @staticmethod
-    def jvm_refine_condition(predicate: str, lon: str = "lon", lat: str = "lat",
-                             edges: str = "edges") -> F.Column:
-        return F.expr(PolygonSet.jvm_pip_sql(predicate, lon, lat, edges))
-
-    def refine_udf(self, predicate: str):
-        """Arrow-batched exact refine: (lon, lat, polygon_id) → bool.
-
-        The 12-fixture-scale polygon dict rides in the closure (re-pickled
-        per task — fine for small dims; for large polygon sets switch to a
-        SparkContext broadcast variable, same kernel).
-        """
-        parts_by_id = self.parts
-        pred = predicate
-
-        @F.pandas_udf("boolean")
-        def refine(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-            lons = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-            lats = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-            out = np.zeros(len(lons), dtype=bool)
-            pids = pid.to_numpy(dtype=object)
-            for p in pd.unique(pids):
-                m = pids == p
-                parts = parts_by_id.get(p)
-                if parts is None:
-                    continue
-                hit = np.zeros(int(m.sum()), dtype=bool)
-                for rings in parts:
-                    cls_ = kernels.point_in_polygon(lons[m], lats[m], rings)
-                    if pred == "contains":  # interior only (DE-9IM T*****FF*)
-                        hit |= cls_ == kernels.PIP_IN
-                    else:  # intersects / covers include the boundary
-                        hit |= cls_ != kernels.PIP_OUT
-                out[m] = hit
-            return pd.Series(out)
-
-        return refine
-
-
-def cell_encode_udf(res: int):
-    """Batched lon/lat → cell id pandas UDF (the Z2SFC replacement)."""
-
-    @F.pandas_udf("long")
-    def enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        c = cells.encode(
-            lon.to_numpy(dtype=np.float64, na_value=np.nan),
-            lat.to_numpy(dtype=np.float64, na_value=np.nan),
-            res,
-        )
-        return pd.Series(c)
-
-    return enc
-
-
-def cell_expr(lon, lat, res: int) -> F.Column:
-    """lon/lat → cell id as a PURE Catalyst expression — bit-identical to
-    :func:`geomesa_spark.cells.encode` but whole-stage-codegen'd JVM-side.
-
-    This is the hot-path variant: an Arrow UDF in a stage forces Spark to
-    buffer every non-UDF column (the full ``spans`` payload!) in a row
-    queue while awaiting Python results — measured 2.5× slower on the
-    flagship join.  The Morton interleave is just shifts/masks, which
-    Catalyst codegens; :func:`add_cell_column` is the form the engine's
-    operators use.
-    """
-    lon_c = lon if isinstance(lon, F.Column) else F.col(lon)
-    lat_c = lat if isinstance(lat, F.Column) else F.col(lat)
-    n = 1 << res
-    x = F.least(
-        F.greatest(F.floor((lon_c + F.lit(180.0)) / F.lit(360.0) * F.lit(n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    y = F.least(
-        F.greatest(F.floor((lat_c + F.lit(90.0)) / F.lit(180.0) * F.lit(n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-
-    def part1by1(c: F.Column) -> F.Column:
-        c = (c.bitwiseOR(F.shiftleft(c, 16))).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        c = (c.bitwiseOR(F.shiftleft(c, 8))).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        c = (c.bitwiseOR(F.shiftleft(c, 4))).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        c = (c.bitwiseOR(F.shiftleft(c, 2))).bitwiseAND(F.lit(0x3333333333333333))
-        c = (c.bitwiseOR(F.shiftleft(c, 1))).bitwiseAND(F.lit(0x5555555555555555))
-        return c
-
-    cell = part1by1(x).bitwiseOR(F.shiftleft(part1by1(y), 1))
-    inf = F.lit(float("inf"))  # see _finite_sql
-    return F.when((F.abs(lon_c) < inf) & (F.abs(lat_c) < inf), cell).otherwise(F.lit(-1))
-
 
 def _finite_sql(lon: str, lat: str) -> str:
     """SQL: both coordinates are finite — false or NULL exactly for the
@@ -328,35 +240,63 @@ _SPREAD_MASKS = (
 )
 
 
-def _morton_projections(
-    df: DataFrame, res: int, lon: str, lat: str, out: str, keep_invalid: bool
-) -> DataFrame:
-    """``df`` plus the Morton cell id at ``res`` as column ``out``, built
-    as a chain of small projections (see :func:`add_cell_column` for why
-    the chain).  Each step is ONE ``selectExpr`` of SQL text covering both
-    axes, so the driver pays one py4j call per step instead of one per
-    Column node.  ``keep_invalid`` keeps every row and gives the ones with
-    a NULL, NaN or ±inf coordinate cell -1; otherwise the caller has
-    already filtered them out."""
-    cols = df.columns
-    keep = [_quote(c) for c in cols if c not in (out, "_gx", "_gy")]
+def _axis_sql(col: str, res: int, lat: bool = False) -> str:
+    """SQL: the BIGINT grid index of coordinate column ``col`` at ``res``
+    — floor((lon + 180) / 360 · 2^res), or (lat + 90) / 180 with ``lat`` —
+    clamped to [0, 2^res - 1].  The Spark side's one axis formula (cell
+    ids, tile coordinates, packed grid keys); equal to
+    :func:`geomesa_spark.cells.lonlat_to_xy` on finite coordinates.  A NaN
+    floors to 0 and ±inf clamps to an edge, so callers that must not place
+    those rows drop them with :func:`_finite_sql`."""
+    offset, span = (90.0, 180.0) if lat else (180.0, 360.0)
     n = 1 << res
-    d = df.selectExpr(
-        *keep,
-        f"least(greatest(FLOOR(({_quote(lon)} + 180.0D) / 360.0D * {n}), 0), {n - 1}) AS _gx",
-        f"least(greatest(FLOOR(({_quote(lat)} + 90.0D) / 180.0D * {n}), 0), {n - 1}) AS _gy",
-    )
+    return f"least(greatest(FLOOR(({_quote(col)} + {offset}D) / {span}D * {n}), 0), {n - 1})"
+
+
+def _interleave_projections(
+    df: DataFrame, x: str, y: str, out: str, valid: str | None = None
+) -> DataFrame:
+    """``df`` plus the Morton interleave of its integer columns ``x`` and
+    ``y`` (each below 2^32) as column ``out``: the five spread steps of
+    :func:`geomesa_spark.cells.interleave`, one ``selectExpr`` each (see
+    :func:`add_cell_column` for why a chain), then the interleave.  Rows
+    failing the SQL condition ``valid`` get -1."""
+    cols = [c for c in df.columns if c not in ("_gx", "_gy")]
+    keep = [_quote(c) for c in cols if c != out]
+    gx, gy = _quote(x), _quote(y)
+    d = df
     for s, m in _SPREAD_MASKS:
         d = d.selectExpr(
-            *keep, *(f"(_g{a} | shiftleft(_g{a}, {s})) & {m}L AS _g{a}" for a in "xy")
+            *keep,
+            *(f"({g} | shiftleft({g}, {s})) & {m}L AS _g{a}" for a, g in (("x", gx), ("y", gy))),
         )
+        gx, gy = "_gx", "_gy"
     cell = "_gx | shiftleft(_gy, 1)"
-    if keep_invalid:
-        cell = f"CASE WHEN {_finite_sql(lon, lat)} THEN {cell} ELSE -1L END"
+    if valid is not None:
+        cell = f"CASE WHEN {valid} THEN {cell} ELSE -1L END"
     cell += f" AS {_quote(out)}"
     if out in cols:  # replace in place, like withColumn
         return d.selectExpr(*[cell if c == out else _quote(c) for c in cols])
     return d.selectExpr(*keep, cell)
+
+
+def _morton_projections(
+    df: DataFrame, res: int, lon: str, lat: str, out: str, keep_invalid: bool
+) -> DataFrame:
+    """``df`` plus the Morton cell id at ``res`` as column ``out``: one
+    ``selectExpr`` for both axes (:func:`_axis_sql`), then
+    :func:`_interleave_projections`.  SQL text keeps the driver at one
+    py4j call per step instead of one per Column node.  ``keep_invalid``
+    keeps every row and gives the ones with a NULL, NaN or ±inf coordinate
+    cell -1, as :func:`geomesa_spark.cells.encode` does; otherwise the
+    caller has already filtered them out."""
+    keep = [_quote(c) for c in df.columns if c not in ("_gx", "_gy")]
+    d = df.selectExpr(
+        *keep, f"{_axis_sql(lon, res)} AS _gx", f"{_axis_sql(lat, res, lat=True)} AS _gy"
+    )
+    return _interleave_projections(
+        d, "_gx", "_gy", out, _finite_sql(lon, lat) if keep_invalid else None
+    )
 
 
 def add_cell_column(
@@ -364,9 +304,9 @@ def add_cell_column(
 ) -> DataFrame:
     """Append the Morton cell id as column ``out`` — the HOT-PATH encode.
     Rows with a NULL, NaN or ±inf coordinate are dropped first (the rows
-    :func:`cell_expr` maps to -1; every consumer joins/filters them away
-    anyway, and the validity predicate's null check pushes down to the
-    scan).
+    :func:`geomesa_spark.cells.encode` maps to -1; every consumer
+    joins/filters them away anyway, and the validity predicate's null
+    check pushes down to the scan).
 
     Why a DataFrame helper instead of one Column expression: the
     single-expression form substitutes ``c`` twice per interleave step,
@@ -442,18 +382,20 @@ def spatial_join_broadcast(
     (id, polygon) pairs can only come from the same id appearing on
     multiple rows.  ``unique_ids=True`` (id column is row-unique, e.g. an
     event table) therefore drops the ``dropDuplicates`` exchange entirely:
-    the whole join is then ZERO-shuffle (Scan → cell expr →
-    BroadcastHashJoin → refine).  Default keeps the dedupe for exploded
-    inputs (one doc, many geo points)."""
+    the whole join is then ZERO-shuffle (Scan → cell id →
+    BroadcastHashJoin on the cover → BroadcastHashJoin on the edges →
+    JVM refine).  Default keeps the dedupe for exploded inputs (one doc,
+    many geo points)."""
     spark = points.sparkSession
     ps = PolygonSet.from_rows(polygon_rows)
     cover_df, res_used = ps.cover_frame(spark, res, max_cells)
     pts = add_cell_column(points, res_used)
     joined = pts.join(F.broadcast(cover_df), "cell", "inner")
-    if not loose:
-        joined = joined.filter(
-            F.col("full")
-            | ps.refine_udf(predicate)(F.col("lon"), F.col("lat"), F.col("polygon_id"))
+    if not loose:  # the flagship's refine: edge broadcast + JVM PIP
+        joined = (
+            joined.join(F.broadcast(ps.geometry_frame(spark)), "polygon_id", "inner")
+            .filter(F.expr(f"full OR {PolygonSet.jvm_pip_sql(predicate)}"))
+            .select(*[joined[c] for c in joined.columns])
         )
     out = joined.drop("full")
     return out if unique_ids else out.dropDuplicates([id_col, "polygon_id"])

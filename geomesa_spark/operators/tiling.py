@@ -7,9 +7,10 @@ geomesa-index-api/.../iterators/DensityScan.scala; mount empty at survey
 time — SURVEY.md §0).  Spark-first restatement:
 
 - ``assign_tiles``: every point row explodes to one (zoom, tile_x,
-  tile_y, tile_id) row per requested zoom — pure column math + one Arrow
-  UDF for the cell ids; the multi-zoom explode is a ``stack``-style
-  union-free explode of a literal array, so no shuffle at all;
+  tile_y, tile_cell [, quadkey]) row per requested zoom — pure JVM
+  column math: the multi-zoom explode is an ``inline`` of a literal
+  struct array (no shuffle), the cell id is the engine's Morton
+  projection chain and the quadkey one SQL expression over it;
 - ``tile_pyramid``: groupBy (zoom, tile) with partial+final aggregation
   (Spark's default — the analogue of DensityScan's per-tserver partials
   merged client-side);
@@ -19,6 +20,9 @@ time — SURVEY.md §0).  Spark-first restatement:
 - ``rasterize_tiles``: per-tile W×H numpy 2-D histogram via
   ``applyInPandas`` (the vector→raster render), returning png-free raw
   grids as flattened arrays (no image libs offline).
+
+Every entry point drops rows with a NULL, NaN or ±inf coordinate — the
+rows :func:`geomesa_spark.cells.encode` marks invalid.
 """
 
 from __future__ import annotations
@@ -29,93 +33,44 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from .. import cells
-from .spatial_join import cell_encode_udf
+from .autocorr import _cell_key, _neighbor_keys, _with_xy
+from .spatial_join import _axis_sql, _finite_sql, _interleave_projections
 
 
 def with_tile_xy(df: DataFrame, zoom: int, lon="lon", lat="lat") -> DataFrame:
-    """Add (tile_x, tile_y) at one zoom using the engine cell id (Arrow
-    UDF) — tile_x/tile_y are the deinterleaved halves, exposed because
-    deinterleaved coords are SQL-oracle-friendly."""
-    enc = cell_encode_udf(zoom)
-
-    @F.pandas_udf("long")
-    def tx(cell: pd.Series) -> pd.Series:
-        x, _ = cells.deinterleave(cell.to_numpy(np.int64))
-        return pd.Series(x)
-
-    @F.pandas_udf("long")
-    def ty(cell: pd.Series) -> pd.Series:
-        _, y = cells.deinterleave(cell.to_numpy(np.int64))
-        return pd.Series(y)
-
-    d = df.withColumn("tile_cell", enc(F.col(lon), F.col(lat)))
-    return d.withColumn("tile_x", tx("tile_cell")).withColumn("tile_y", ty("tile_cell"))
-
-
-def _tile_xy_expr(col: str, z: int, span: float, offset: float) -> F.Column:
-    """floor((v+offset)/span * 2^z) clamped to [0, 2^z-1] — identical to
-    cells.lonlat_to_xy, but pure JVM (whole-stage codegen)."""
-    n = 1 << z
-    raw = F.floor((F.col(col) + F.lit(offset)) / F.lit(span) * F.lit(n))
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
-
-
-def interleave_udf():
-    """Vectorized (x, y) → Morton cell id (the only non-JVM step)."""
-
-    @F.pandas_udf("long")
-    def inter(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(cells.interleave(x.to_numpy(np.int64), y.to_numpy(np.int64)))
-
-    return inter
-
-
-def quadkey_udf(zoom_col: str = "zoom"):
-    @F.pandas_udf("string")
-    def qk(cell: pd.Series, zoom: pd.Series) -> pd.Series:
-        c = cell.to_numpy(np.int64)
-        z = zoom.to_numpy(np.int64)
-        out = np.empty(len(c), dtype=object)
-        for zz in np.unique(z):
-            m = z == zz
-            out[m] = cells.quadkey(c[m], int(zz))
-        return pd.Series(out, dtype=object)
-
-    return qk
+    """Add (tile_x, tile_y, tile_cell) at one zoom: the axis indices
+    straight from the engine's axis formula, and their Morton interleave
+    (the engine cell id at ``zoom``).  Pure JVM; rows with a NULL, NaN or
+    ±inf coordinate are dropped."""
+    d = df.filter(_finite_sql(lon, lat)).withColumns(
+        {"tile_x": F.expr(_axis_sql(lon, zoom)), "tile_y": F.expr(_axis_sql(lat, zoom, lat=True))}
+    )
+    return _interleave_projections(d, "tile_x", "tile_y", "tile_cell")
 
 
 def assign_tiles(
     df: DataFrame, zooms: list[int], lon="lon", lat="lat", with_quadkey: bool = True,
     with_cell: bool = True,
 ) -> DataFrame:
-    """One output row per (input row × zoom): columns zoom, tile_cell,
-    tile_x, tile_y [, quadkey].  Judge-checked output shape (SURVEY.md
-    §2.8).
+    """One output row per (input row × zoom): columns zoom, tile_x, tile_y
+    [, tile_cell] [, quadkey].  Judge-checked output shape (SURVEY.md
+    §2.8).  Rows with a NULL, NaN or ±inf coordinate are dropped.
 
-    The multi-zoom explode and the tile_x/tile_y floor math are pure JVM
-    (whole-stage codegen over a literal array — no shuffle, no Python);
-    only the Morton interleave (and optional quadkey string) drop to
-    vectorized Arrow UDFs."""
-    structs = [
-        F.struct(
-            F.lit(z).cast("int").alias("zoom"),
-            _tile_xy_expr(lon, z, 360.0, 180.0).alias("tile_x"),
-            _tile_xy_expr(lat, z, 180.0, 90.0).alias("tile_y"),
-        )
+    Pure JVM: the multi-zoom explode inlines a literal array of per-zoom
+    (zoom, tile_x, tile_y) structs, the cell id is the Morton projection
+    chain over tile_x/tile_y, and the quadkey is the cell's base-4 digits
+    left-padded to ``zoom`` digits ('' at zoom 0, as
+    :func:`geomesa_spark.cells.quadkey`)."""
+    structs = ", ".join(
+        f"named_struct('zoom', {z}, 'tile_x', {_axis_sql(lon, z)}, "
+        f"'tile_y', {_axis_sql(lat, z, lat=True)})"
         for z in sorted(zooms)
-    ]
-    d = df.filter(F.col(lon).isNotNull() & F.col(lat).isNotNull())
-    d = d.select("*", F.explode(F.array(*structs)).alias("_t"))
-    d = (
-        d.withColumn("zoom", F.col("_t.zoom"))
-        .withColumn("tile_x", F.col("_t.tile_x"))
-        .withColumn("tile_y", F.col("_t.tile_y"))
-        .drop("_t")
     )
+    d = df.filter(_finite_sql(lon, lat)).selectExpr("*", f"inline(array({structs}))")
     if with_cell or with_quadkey:
-        d = d.withColumn("tile_cell", interleave_udf()(F.col("tile_x"), F.col("tile_y")))
+        d = _interleave_projections(d, "tile_x", "tile_y", "tile_cell")
     if with_quadkey:
-        d = d.withColumn("quadkey", quadkey_udf()(F.col("tile_cell"), F.col("zoom")))
+        d = d.withColumn("quadkey", F.expr("lpad(conv(tile_cell, 10, 4), zoom, '0')"))
     return d
 
 
@@ -145,17 +100,16 @@ def tile_pyramid(
     aggs = [F.count(F.lit(1)).alias("n")]
     if weight is not None:
         aggs.append(F.sum(weight).alias("weight_sum"))
-    d = df.filter(F.col(lon).isNotNull() & F.col(lat).isNotNull())
+    d = df.filter(_finite_sql(lon, lat))
     # pack (tile_x, tile_y) into ONE long key before the aggregation: the
     # partial-agg output (the only large exchange in this job — ~distinct
     # tiles per task rows) then ships key+count = 16 bytes/row instead of
     # x+y+count = 24, and the hash map probes a single long.  x/y are
     # re-derived AFTER the agg, on tile-count rows (round-2 verdict item 3:
     # this stage was memory-bandwidth-bound — shed bytes/row).
-    tkey = F.shiftleft(_tile_xy_expr(lon, base_z, 360.0, 180.0), base_z).bitwiseOR(
-        _tile_xy_expr(lat, base_z, 180.0, 90.0)
+    keyed = d.select(
+        _cell_key(lon, lat, base_z).alias("tkey"), *([weight] if weight is not None else [])
     )
-    keyed = d.select(tkey.alias("tkey"), *([weight] if weight is not None else []))
     # partial_agg=False: when the base-zoom keyspace (4^base_z tiles) is
     # comparable to rows-per-task — high zooms over wide-area data — the
     # map-side partial agg compresses ~nothing yet builds a task-sized hash
@@ -202,9 +156,9 @@ def tile_pyramid(
         out = out.unionByName(lvl)
     cols = ["zoom", "tile_x", "tile_y", "n"] + (["weight_sum"] if weight else [])
     out = out.select(*cols)
-    # interleave AFTER the aggregation — the UDF touches tile rows, not
-    # point rows (tiles ≪ points at every real zoom)
-    return out.withColumn("tile_cell", interleave_udf()(F.col("tile_x"), F.col("tile_y")))
+    # interleave AFTER the aggregation — on tile rows, not point rows
+    # (tiles ≪ points at every real zoom)
+    return _interleave_projections(out, "tile_x", "tile_y", "tile_cell")
 
 
 def rollup_pyramid(base: DataFrame, from_zoom: int, to_zoom: int) -> DataFrame:
@@ -340,11 +294,8 @@ def hotspot_clusters(
     from ..cache import swap_cache
     from .dedup import dedup_clusters
 
-    key = F.shiftleft(_tile_xy_expr(lon, res, 360.0, 180.0), res).bitwiseOR(
-        _tile_xy_expr(lat, res, 180.0, 90.0)
-    )
     core = (
-        pts.select(key.alias("cell_key"))
+        pts.select(_cell_key(lon, lat, res).alias("cell_key"))
         .groupBy("cell_key")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= int(min_pts))
@@ -354,27 +305,12 @@ def hotspot_clusters(
     # persist each consumer re-runs the corpus-scale count shuffle; with
     # it they all read ≤4^res cached rows (bounded registry, see cache.py)
     core = swap_cache("hotspot_clusters.core", core)
-    n_side = 1 << res
-    # 8 neighbors of (x, y), dropped at the grid border (no wrap: the
-    # clamped tile grid does not wrap either)
-    nbrs = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            if dx == 0 and dy == 0:
-                continue
-            nbrs.append(
-                f"IF(_x + {dx} BETWEEN 0 AND {n_side - 1} "
-                f"AND _y + {dy} BETWEEN 0 AND {n_side - 1}, "
-                f"shiftleft(_x + {dx}, {res}) | (_y + {dy}), NULL)"
-            )
+    # the 8 neighbors of each core cell, dropped at the grid border
     edges = (
-        core.withColumn("_x", F.expr(f"shiftrightunsigned(cell_key, {res})"))
-        .withColumn("_y", F.expr(f"cell_key & {n_side - 1}"))
+        _with_xy(core, res)
         .select(
             "cell_key",
-            F.explode(
-                F.expr("filter(array(" + ", ".join(nbrs) + "), x -> x IS NOT NULL)")
-            ).alias("nbr_key"),
+            F.explode(F.expr(_neighbor_keys(res, include_self=False))).alias("nbr_key"),
         )
         .join(
             core.select(F.col("cell_key").alias("nbr_key")), "nbr_key", "inner"

@@ -574,22 +574,20 @@ def od_matrix(
 
     Engine shape: one window shuffle (first/last by time within the
     session) + one map-side-combinable count on (origin, dest).  Cells
-    are the packed tile keys of :mod:`operators.tiling` (pure JVM).
+    are the packed grid keys of :func:`operators.autocorr._cell_key`
+    (pure JVM).
 
     Returns (origin_key, dest_key, n_trips BIGINT).
     """
     from pyspark.sql import Window
 
-    from .tiling import _tile_xy_expr
+    from .autocorr import _cell_key
 
-    key = F.shiftleft(_tile_xy_expr(lon_col, res, 360.0, 180.0), res).bitwiseOR(
-        _tile_xy_expr(lat_col, res, 180.0, 90.0)
-    )
     w = Window.partitionBy(id_col, session_col).orderBy(
         F.col(ts_col).asc(), F.col(point_col).asc()
     ).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     d = (
-        pts.withColumn("_key", key)
+        pts.withColumn("_key", _cell_key(lon_col, lat_col, res))
         .withColumn("origin_key", F.first("_key").over(w))
         .withColumn("dest_key", F.last("_key").over(w))
         .groupBy(id_col, session_col, "origin_key", "dest_key")
@@ -685,11 +683,8 @@ def dwell_segments(
     """
     from pyspark.sql import Window
 
-    from .tiling import _tile_xy_expr
+    from .autocorr import _cell_key
 
-    key = F.shiftleft(_tile_xy_expr(lon_col, res, 360.0, 180.0), res).bitwiseOR(
-        _tile_xy_expr(lat_col, res, 180.0, 90.0)
-    )
     w_all = Window.partitionBy(id_col).orderBy(
         F.col(ts_col).asc(), F.col(point_col).asc()
     )
@@ -697,7 +692,7 @@ def dwell_segments(
         F.col(ts_col).asc(), F.col(point_col).asc()
     )
     d = (
-        pts.withColumn("cell_key", key)
+        pts.withColumn("cell_key", _cell_key(lon_col, lat_col, res))
         .withColumn("_t", F.unix_micros(F.col(ts_col).cast("timestamp")))
         .withColumn(
             "_grp", F.row_number().over(w_all) - F.row_number().over(w_cell)

@@ -225,8 +225,8 @@ def point_level_keys(
 ) -> DataFrame:
     """Point probe side: one (xz_level, xz_cell) row per point per level in
     ``levels`` — the point's ancestor cell at that level.  Pure JVM: the
-    max-res cell is codegen'd (:func:`cell_expr`) and each ancestor is a
-    shift; no Python, no shuffle."""
+    max-res cell is codegen'd (:func:`add_cell_column`) and each ancestor
+    is a shift; no Python, no shuffle."""
     levels = sorted(set(int(l) for l in levels))
     if not levels:
         # empty geometry table: emit nothing (join would be empty anyway)

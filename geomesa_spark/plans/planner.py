@@ -141,6 +141,17 @@ def time_bin_expr(time_col: str, bin_days: int = TIME_BIN_DAYS) -> F.Column:
     )
 
 
+def _layout_columns(points: DataFrame, res: int, bucket_res: int = BUCKET_RES) -> DataFrame:
+    """``points`` plus the cell layout's two keys: ``cell``, the Morton id
+    at ``res`` (JVM encode; -1 for a NULL, NaN or ±inf coordinate, as
+    :func:`geomesa_spark.cells.encode` gives), and ``cell_bucket``, its
+    ancestor at ``bucket_res`` (a 2·(res - bucket_res)-bit shift)."""
+    d = _morton_projections(points, res, "lon", "lat", "cell", keep_invalid=True)
+    return d.withColumn(
+        "cell_bucket", F.shiftrightunsigned(F.col("cell"), 2 * (res - bucket_res))
+    )
+
+
 def write_partitioned(
     points: DataFrame, path: str, res: int = 10, bucket_res: int = BUCKET_RES,
     mode: str = "overwrite", time_col: str | None = None,
@@ -163,10 +174,7 @@ def write_partitioned(
     Python worker in the job.  Rows with a NULL, NaN or ±inf coordinate
     are kept with cell -1, as :func:`geomesa_spark.cells.encode` gives.
     """
-    d = _morton_projections(points, res, "lon", "lat", "cell", keep_invalid=True)
-    d = d.withColumn(
-        "cell_bucket", F.shiftrightunsigned(F.col("cell"), 2 * (res - bucket_res))
-    )
+    d = _layout_columns(points, res, bucket_res)
     part_cols = ["cell_bucket"]
     if time_col is not None:
         d = d.withColumn("time_bin", time_bin_expr(time_col, time_bin_days))
@@ -336,7 +344,7 @@ def _exact_refine(geom_wkt: str, predicate: str) -> F.Column:
     """Exact secondary filter against one query geometry: the JVM PIP
     expression with the geometry's flattened edges (antimeridian parts
     included) inlined as a literal.  A non-polygon geometry matches no
-    point, as it does in :meth:`PolygonSet.refine_udf`."""
+    point, as :meth:`PolygonSet.from_rows` skips it for every join."""
     ps = PolygonSet.from_rows([dict(polygon_id="_q", wkt=geom_wkt)])
     if not ps.ids:
         return F.lit(False)

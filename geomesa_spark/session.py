@@ -16,8 +16,9 @@ def get_spark(
 ) -> SparkSession:
     """Local session tuned the way the engine expects a cluster session to
     be tuned: AQE on (runtime coalescing + skew-join splitting), Arrow
-    exchange on (every engine kernel is a pandas UDF), UTC timestamps
-    (oracle parity), shuffle partitions ≈ cores for local mode.
+    exchange on (the kernels that stay in numpy run as pandas UDFs and
+    ``applyInPandas`` groups), UTC timestamps (oracle parity), shuffle
+    partitions ≈ cores for local mode.
 
     On a real cluster the same config rides on ``spark-submit --conf``;
     nothing here is local-mode-specific except the master URL.

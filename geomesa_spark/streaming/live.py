@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.spatial_join import PolygonSet, cell_encode_udf
+from ..operators.spatial_join import _morton_projections, spatial_join_broadcast
 
 UPSERT_OUTPUT_SCHEMA = "feature_id string, ts timestamp, lon double, lat double, op string"
 UPSERT_STATE_SCHEMA = "ts long, lon double, lat double"
@@ -190,10 +190,11 @@ def live_cell_counts(
 ) -> DataFrame:
     """Tumbling-window density per cell with late-data watermark — the
     streaming Z3Histogram/DensityScan."""
-    enc = cell_encode_udf(res)
     return (
-        points.withWatermark(ts_col, watermark)
-        .withColumn("cell", enc(F.col("lon"), F.col("lat")))
+        _morton_projections(
+            points.withWatermark(ts_col, watermark), res, "lon", "lat", "cell",
+            keep_invalid=True,
+        )
         .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("cell"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -268,16 +269,13 @@ def stream_hotspots(
 def stream_static_spatial_join(
     points: DataFrame, polygon_rows: list[dict], res: int = 8, predicate: str = "intersects",
 ) -> DataFrame:
-    """Live points ⋈ static polygon set: same cover-broadcast + refine
-    shape as the batch join — stream-static joins need no watermark and
-    stay shuffle-free on the stream side."""
-    spark = points.sparkSession
-    ps = PolygonSet.from_rows(polygon_rows)
-    cover_df, res_used = ps.cover_frame(spark, res)
-    pts = points.withColumn("cell", cell_encode_udf(res_used)(F.col("lon"), F.col("lat")))
-    joined = pts.join(F.broadcast(cover_df), "cell", "inner")
-    refine = ps.refine_udf(predicate)
-    return joined.filter(refine(F.col("lon"), F.col("lat"), F.col("polygon_id")))
+    """Live points ⋈ static polygon set: the batch
+    :func:`~geomesa_spark.operators.spatial_join.spatial_join_broadcast`
+    (cover broadcast, edge broadcast, JVM exact refine) on the stream.
+    Each input row matches a polygon at most once, so there is no dedupe
+    state: stream-static joins need no watermark and stay shuffle-free on
+    the stream side."""
+    return spatial_join_broadcast(points, polygon_rows, predicate, res, unique_ids=True)
 
 
 def session_windows(
@@ -314,12 +312,7 @@ def persist_stream(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        d = batch_df.withColumn(
-            "cell", cell_encode_udf(res)(F.col("lon"), F.col("lat"))
-        ).withColumn(
-            "cell_bucket",
-            F.shiftrightunsigned(F.col("cell"), 2 * (res - planner.BUCKET_RES)),
-        )
+        d = planner._layout_columns(batch_df, res)
         # epoch=epoch_id: each micro-batch appends per-bucket files; the
         # completed-set skip applies only within the same epoch, so a bucket
         # committed by an earlier epoch still receives later epochs' rows

@@ -52,6 +52,8 @@ def test_quadkey_prefix_is_ancestor():
     q5 = cells.quadkey(cells.encode(lon, lat, 5), 5)[0]
     assert q11.startswith(q5)
     assert len(q11) == 11 and len(q5) == 5
+    # zoom 0 is the root tile: every point's quadkey is the empty prefix
+    assert list(cells.quadkey(cells.encode(lon, lat, 0), 0)) == [""]
 
 
 def test_k_ring_sizes_and_wrap():

@@ -495,9 +495,7 @@ class TestLineageResume:
     def _points(self, spark, sf_dir):
         docs = corpus.load_documents_spans(spark, sf_dir)
         pts = sj.extract_geo_points(docs).select("doc_id", "lon", "lat")
-        enc = sj.cell_encode_udf(10)
-        d = pts.withColumn("cell", enc(F.col("lon"), F.col("lat")))
-        return d.withColumn("cell_bucket", F.shiftrightunsigned(F.col("cell"), 12))
+        return planner._layout_columns(pts, 10)
 
     def test_full_run_then_resume_noop(self, spark, sf_dir, tmp_path):
         job = str(tmp_path / "job1")
@@ -619,9 +617,7 @@ def test_lineage_legacy_shardless_manifests_skip_whole_bucket(spark, sf_dir, tmp
     job = str(tmp_path / "legacy")
     docs = corpus.load_documents_spans(spark, sf_dir)
     pts = sj.extract_geo_points(docs).select("doc_id", "lon", "lat")
-    enc = sj.cell_encode_udf(10)
-    d = pts.withColumn("cell", enc(F.col("lon"), F.col("lat")))
-    d = d.withColumn("cell_bucket", F.shiftrightunsigned(F.col("cell"), 12))
+    d = planner._layout_columns(pts, 10)
     r1 = lineage.run_partitioned_job(d, job)
     n1 = lineage.read_job_output(spark, job).count()
     # doctor every manifest into the legacy shard-less shape

@@ -266,11 +266,66 @@ def test_unique_ids_skips_dedupe_exchange(spark, docs_df, sf_dir):
     assert n_fast < n_plain
 
 
+#: general-API refine fixtures: a holed polygon, a multipolygon, a
+#: concave polygon and an antimeridian-crossing polygon
+REFINE_POLYGONS = [
+    dict(polygon_id="holed",
+         wkt="POLYGON((0 0, 10 0, 10 10, 0 10, 0 0), (3 3, 7 3, 7 7, 3 7, 3 3))"),
+    dict(polygon_id="multi",
+         wkt="MULTIPOLYGON(((20 0, 25 0, 25 5, 20 5, 20 0)), ((30 0, 36 0, 33 6, 30 0)))"),
+    dict(polygon_id="concave", wkt="POLYGON((10 20, 20 20, 20 30, 15 23.3, 10 30, 10 20))"),
+    dict(polygon_id="anti", wkt="POLYGON((170 -10, -170 -10, -170 10, 170 10, 170 -10))"),
+]
+
+
+@pytest.mark.parametrize("predicate", ["intersects", "contains"])
+def test_broadcast_join_refine_equals_numpy_kernel(spark, predicate):
+    """``spatial_join_broadcast`` refines in the JVM and must agree with
+    ``kernels.point_in_polygon`` on every point — vertices, points on
+    edges, hole boundaries, the ±180° seam — with no Python eval node in
+    the executed plan."""
+    ps = sj.PolygonSet.from_rows(REFINE_POLYGONS)
+    rng = np.random.default_rng(17)
+    pts = [np.array([[180.0, 0.0], [-180.0, 0.0], [180.0, 10.0], [-180.0, -10.0]])]
+    for pid in ps.ids:
+        e = np.asarray(ps.flat_edges(pid))
+        # t = 0 plants every vertex; the others land on (or within an ulp
+        # of) the edges
+        pts += [e[:, :2] + t * (e[:, 2:] - e[:, :2]) for t in (0.0, 0.25, 0.5, 1.0 / 3.0)]
+        for rings in ps.parts[pid]:
+            lo, hi = rings[0].min(axis=0) - 1.0, rings[0].max(axis=0) + 1.0
+            pts.append(rng.uniform(lo, hi, (300, 2)))
+    pts = np.concatenate(pts)
+    pts[:, 0] = np.clip(pts[:, 0], -180.0, 180.0)
+    pdf = pd.DataFrame({"event_id": np.arange(len(pts)), "lon": pts[:, 0], "lat": pts[:, 1]})
+    out = sj.spatial_join_broadcast(
+        spark.createDataFrame(pdf), REFINE_POLYGONS, predicate, id_col="event_id",
+        unique_ids=True,
+    )
+    rows = out.select("event_id", "polygon_id").collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    got = {(r["event_id"], r["polygon_id"]) for r in rows}
+    assert len(rows) == len(got)
+    exp, n_boundary = set(), 0
+    for pid in ps.ids:
+        cls = [kernels.point_in_polygon(pts[:, 0], pts[:, 1], rings) for rings in ps.parts[pid]]
+        n_boundary += int(np.any([c == kernels.PIP_BOUNDARY for c in cls], axis=0).sum())
+        if predicate == "contains":  # interior of any part
+            hit = np.any([c == kernels.PIP_IN for c in cls], axis=0)
+        else:
+            hit = np.any([c != kernels.PIP_OUT for c in cls], axis=0)
+        exp |= {(int(i), pid) for i in np.nonzero(hit)[0]}
+    assert n_boundary >= 40  # the planted vertex/edge points are boundary
+    assert {pid for _, pid in exp} == set(ps.ids)
+    assert got == exp, f"missing={sorted(exp - got)[:5]} extra={sorted(got - exp)[:5]}"
+
+
 def test_cell_expr_matches_numpy_encode(spark):
-    """The JVM cell encoders must be bit-identical to the numpy kernel on
-    random + edge coordinates: ``cell_expr`` gives -1 where
-    ``cells.encode`` does (NULL, NaN, ±inf), and ``add_cell_column``
-    drops exactly those rows."""
+    """The JVM cell encode must be bit-identical to the numpy kernel on
+    random + edge coordinates: with ``keep_invalid`` the Morton
+    projection chain gives -1 where ``cells.encode`` does (NULL, NaN,
+    ±inf), and ``add_cell_column`` drops exactly those rows."""
     from geomesa_spark import cells as c
 
     rng = np.random.default_rng(5)
@@ -284,13 +339,11 @@ def test_cell_expr_matches_numpy_encode(spark):
         [(i, a, b) for i, (a, b) in enumerate(coords)], "id long, lon double, lat double"
     )
     as_np = np.array(coords, dtype=np.float64)  # None → NaN
-    import pyspark.sql.functions as F
-
     for res in (3, 8, 15, 26):
         got = (
-            df.orderBy("id")
-            .select(sj.cell_expr(F.col("lon"), F.col("lat"), res).alias("cell"))
-            .toPandas()["cell"]
+            sj._morton_projections(df, res, "lon", "lat", "cell", keep_invalid=True)
+            .toPandas()
+            .sort_values("id")["cell"]
             .to_numpy()
         )
         exp = c.encode(as_np[:, 0], as_np[:, 1], res)

@@ -121,10 +121,10 @@ def test_live_cell_counts_windows(spark, tmp_path):
 def test_stream_static_spatial_join(spark, tmp_path):
     pdf = pd.DataFrame(
         {
-            "event_id": ["e1", "e2", "e3"],
-            "ts": pd.to_datetime(["2026-01-01"] * 3),
-            "lon": [15.0, 50.0, 0.0],
-            "lat": [15.0, 0.0, 0.0],
+            "event_id": ["e1", "e2", "e3", "e4"],
+            "ts": pd.to_datetime(["2026-01-01"] * 4),
+            "lon": [15.0, 50.0, 0.0, 20.0],
+            "lat": [15.0, 0.0, 0.0, 12.5],  # e4 on P1's east edge
         }
     )
     p = str(tmp_path / "live")
@@ -138,7 +138,7 @@ def test_stream_static_spatial_join(spark, tmp_path):
         live.stream_static_spatial_join(stream, polys), "livejoin", spark, "append"
     )
     got = {(r["event_id"], r["polygon_id"]) for r in out.collect()}
-    assert got == {("e1", "P1"), ("e2", "P5")}
+    assert got == {("e1", "P1"), ("e2", "P5"), ("e4", "P1")}
 
 
 def test_session_windows(spark, tmp_path):

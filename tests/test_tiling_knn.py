@@ -24,10 +24,22 @@ def points_pdf(points_df):
     return points_df.toPandas()
 
 
+def _with_nonfinite(spark, points_df):
+    """``points_df`` plus rows with a NULL, NaN or ±inf coordinate (ids
+    ``bad*``), which every tiling entry point must drop."""
+    bad = [(np.nan, 1.0), (2.0, np.nan), (np.inf, 3.0), (-np.inf, 4.0), (5.0, -np.inf),
+           (None, 6.0), (7.0, None)]
+    extra = spark.createDataFrame(
+        [(f"bad{i}", a, b) for i, (a, b) in enumerate(bad)], "doc_id string, lon double, lat double"
+    )
+    return points_df.unionByName(extra.select(*points_df.columns))
+
+
 def test_assign_tiles_matches_bruteforce(spark, points_df, points_pdf):
-    zooms = [5, 8, 11]
-    out = tiling.assign_tiles(points_df, zooms).select("doc_id", "zoom", "tile_cell").toPandas()
-    got = set(map(tuple, out.itertuples(index=False, name=None)))
+    zooms = [0, 1, 5, 8, 11, 20]
+    out = tiling.assign_tiles(_with_nonfinite(spark, points_df), zooms).toPandas()
+    assert not out["doc_id"].str.startswith("bad").any()
+    got = set(map(tuple, out[["doc_id", "zoom", "tile_cell"]].itertuples(index=False, name=None)))
     exp = set()
     for z in zooms:
         c = cells.encode(points_pdf["lon"].to_numpy(), points_pdf["lat"].to_numpy(), z)
@@ -35,6 +47,14 @@ def test_assign_tiles_matches_bruteforce(spark, points_df, points_pdf):
             if ci >= 0:
                 exp.add((d, z, int(ci)))
     assert got == exp
+    tile_cell = out["tile_cell"].to_numpy()
+    np.testing.assert_array_equal(
+        tile_cell, cells.interleave(out["tile_x"].to_numpy(), out["tile_y"].to_numpy())
+    )
+    for z in zooms:
+        m = (out["zoom"] == z).to_numpy()
+        assert list(out["quadkey"][m]) == list(cells.quadkey(tile_cell[m], z))
+    assert (out["quadkey"][out["zoom"] == 0] == "").all()
 
 
 def test_quadkey_prefix_consistency(spark, points_df):
@@ -63,17 +83,30 @@ def test_pyramid_rollup_consistent(spark, points_df):
 def test_pyramid_partial_agg_parity(spark, points_df):
     """partial_agg=False (raw-key shuffle, post-exchange agg) must be
     bit-identical to the default map-side-combine plan."""
-    a = tiling.tile_pyramid(points_df, [5, 8, 11], partial_agg=True)
-    b = tiling.tile_pyramid(points_df, [5, 8, 11], partial_agg=False)
+    zooms = [0, 1, 5, 8, 11, 20]
+    pts = _with_nonfinite(spark, points_df)
+    a = tiling.tile_pyramid(pts, zooms, partial_agg=True)
+    b = tiling.tile_pyramid(pts, zooms, partial_agg=False)
     ca = sorted(map(tuple, a.collect()))
     cb = sorted(map(tuple, b.collect()))
     assert ca == cb and len(ca) > 0
+    pdf = a.toPandas()
+    np.testing.assert_array_equal(
+        pdf["tile_cell"].to_numpy(),
+        cells.interleave(pdf["tile_x"].to_numpy(), pdf["tile_y"].to_numpy()),
+    )
+    # every zoom counts exactly the finite points: the NULL/NaN/±inf rows
+    # are in no tile
+    n = points_df.count()
+    assert (pdf.groupby("zoom")["n"].sum() == n).all() and set(pdf["zoom"]) == set(zooms)
 
 
 def test_rasterize_grid_counts(spark, points_df):
-    out = tiling.rasterize_tiles(points_df, zoom=4, w=8, h=8)
+    out = tiling.rasterize_tiles(_with_nonfinite(spark, points_df), zoom=4, w=8, h=8)
     pdf = out.toPandas()
     assert (pdf["grid"].apply(len) == 64).all()
+    # the NULL/NaN/±inf rows land in no tile and add to no grid
+    assert (pdf["tile_cell"] >= 0).all()
     total = sum(np.asarray(g).sum() for g in pdf["grid"])
     assert int(total) == points_df.count()
 

@@ -91,7 +91,8 @@ def main() -> None:
 
     plans["spatial_join_rect_intersects"] = (
         "Want: zero shuffle exchange (unique_ids path): scan -> codegen "
-        "cell -> BroadcastHashJoin -> Arrow refine only.",
+        "cell -> BroadcastHashJoin on the cover -> BroadcastHashJoin on "
+        "the edges -> JVM exact refine; no Python eval node.",
         plan_of(q.q_spatial_join_rect_intersects(spark, sf_dir)),
         q.q_spatial_join_rect_intersects(spark, sf_dir),
     )
@@ -199,6 +200,14 @@ def main() -> None:
         sys.exit(
             "PLAN REGRESSION: z3_bbox_time has a Python eval node (want: "
             "JVM-only pruned scan + exact refine)"
+        )
+    # ... and so is the general broadcast polygon join: its exact refine is
+    # the flagship's edge broadcast + Catalyst PIP, not an Arrow UDF.
+    rect_text = plans["spatial_join_rect_intersects"][1]
+    if "ArrowEvalPython" in rect_text or "BatchEvalPython" in rect_text:
+        sys.exit(
+            "PLAN REGRESSION: spatial_join_rect_intersects has a Python eval "
+            "node (want: JVM-only cover join + exact refine)"
         )
 
     # REGRESSION GUARD (round-2 JIT discovery): the Morton cell encode must
