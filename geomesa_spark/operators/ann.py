@@ -57,7 +57,7 @@ def train_centroids(
     full probes (n_probe = n_centroids) results are centroid-independent
     anyway (exact rerank)."""
     pdf = (
-        df.sample(min(sample, 1.0), seed=seed)
+        df.sample(fraction=min(sample, 1.0), seed=seed)
         .select(vec_col)
         .limit(int(max_train))
         .toPandas()

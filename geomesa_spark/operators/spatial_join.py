@@ -432,7 +432,7 @@ def choose_document_resolution(
     hit = _AUTO_RES_CACHE.get(key)
     if hit is not None:
         return hit
-    pts = extract_geo_points(docs.sample(sample, seed=42)).select("lon", "lat")
+    pts = extract_geo_points(docs.sample(fraction=sample, seed=42)).select("lon", "lat")
     res = choose_resolution(
         pts, candidate_res=candidate_res, sample=1.0,
         max_rows_per_cell=max(1, int(max_rows_per_cell * sample)),
@@ -606,7 +606,7 @@ def spatial_join_grid(
 
     if salt_threshold == "auto":
         probe = (
-            r.sample(0.05, seed=42)
+            r.sample(fraction=0.05, seed=42)
             .groupBy("cell").count()
             .orderBy(F.col("count").desc()).limit(1).collect()
         )
@@ -817,7 +817,7 @@ def salt_hot_cells(
 
     spark = l.sparkSession
     hist = (
-        l.sample(0.1, seed=42)
+        l.sample(fraction=0.1, seed=42)
         .groupBy("cell")
         .count()
         .filter(F.col("count") * 10 > threshold)

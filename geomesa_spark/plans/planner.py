@@ -95,7 +95,7 @@ def choose_resolution(
     finest = cand[-1]
     pts = points.select("lon", "lat")
     if frac < 1.0:
-        pts = pts.sample(frac, seed=42)
+        pts = pts.sample(fraction=frac, seed=42)
     hist = add_cell_column(pts, finest).groupBy("cell").count()
     # one action: histogram rows fan out to (res, parent-cell) once per
     # candidate, re-sum per parent, max per res — only scalars collect
