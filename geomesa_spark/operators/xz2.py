@@ -565,7 +565,7 @@ def write_partitioned_geoms(
     ``curve/XZ3SFC.scala``: binned time ⊕ XZ2 for non-point + time):
     hive dirs are ``time_bin=W/xz_level=L/xz_bucket=B`` so "this region,
     last week" prunes the time dimension BEFORE the spatial one."""
-    from ..plans.planner import TIME_BIN_DAYS, time_bin_expr
+    from ..plans.planner import TIME_BIN_DAYS, _forget_layout, time_bin_expr
 
     d = encode_geometries(geoms, wkt_col, max_res)
     d = d.withColumn(
@@ -589,6 +589,7 @@ def write_partitioned_geoms(
         .partitionBy(*part_cols)
         .parquet(path)
     )
+    _forget_layout(path)
 
 
 def xz_prune_condition(
@@ -633,11 +634,11 @@ def scan_partitioned_geoms(
     ``time_range`` (against an XZ3 layout with ``time_bin=`` dirs) adds a
     time_bin BETWEEN term — the time dimension prunes too; the caller
     applies the exact fine-grained timestamp filter."""
-    from ..plans.planner import TIME_BIN_DAYS, extract_bounds
+    from ..plans.planner import TIME_BIN_DAYS, _open_layout, extract_bounds
 
     lon0, lat0, lon1, lat1 = extract_bounds(query_wkt)
     cond = xz_prune_condition(lon0, lat0, lon1, lat1, max_res, bucket_res)
-    df = spark.read.parquet(path).filter(cond)
+    df = _open_layout(spark, path).filter(cond)
     if time_range is not None and "time_bin" in df.columns:
         width = 86400 * (time_bin_days or TIME_BIN_DAYS)
         t0 = int(pd.Timestamp(time_range[0], tz="UTC").timestamp())

@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .. import cells
 from ..geo import wkt
@@ -141,6 +142,54 @@ def time_bin_expr(time_col: str, bin_days: int = TIME_BIN_DAYS) -> F.Column:
     )
 
 
+#: path -> (validity token, schema) of each layout a query has opened.
+#: Metadata only, never rows; ``cache.clear_caches()`` leaves it alone, as
+#: Spark keeps a catalog table's schema across ``clearCache()``.
+_LAYOUT_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _layout_token(spark: SparkSession, path: str) -> tuple | None:
+    """What a rewrite of the layout at ``path`` changes: the modification
+    time of the root and of its ``_SUCCESS`` marker, and the marker's
+    length.  None when the root does not exist."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return None
+    success = jvm.org.apache.hadoop.fs.Path(root, "_SUCCESS")
+    marker = None
+    if fs.exists(success):
+        st = fs.getFileStatus(success)
+        marker = (st.getModificationTime(), st.getLen())
+    return fs.getFileStatus(root).getModificationTime(), marker
+
+
+def _open_layout(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (data and
+    partition columns) once per layout.
+
+    Inference reads a Parquet footer in a one-task Spark job on every
+    query; here the inferred schema is remembered with :func:`_layout_token`
+    and handed to the reader while the token holds.  The file listing
+    still runs on every call, so files appended or deleted since are seen;
+    a writer outside the planner that rewrites the layout changes the
+    token.  The planner's own writers drop their path's entry."""
+    token = _layout_token(spark, path)
+    hit = _LAYOUT_SCHEMAS.get(path)
+    if token is not None and hit is not None and hit[0] == token:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if token is not None:
+        _LAYOUT_SCHEMAS[path] = (token, df.schema)
+    return df
+
+
+def _forget_layout(path: str) -> None:
+    """Drop the remembered schema of the layout at ``path`` (after a write)."""
+    _LAYOUT_SCHEMAS.pop(path, None)
+
+
 def _layout_columns(points: DataFrame, res: int, bucket_res: int = BUCKET_RES) -> DataFrame:
     """``points`` plus the cell layout's two keys: ``cell``, the Morton id
     at ``res`` (JVM encode; -1 for a NULL, NaN or ±inf coordinate, as
@@ -186,6 +235,7 @@ def write_partitioned(
         .partitionBy(*part_cols)
         .parquet(path)
     )
+    _forget_layout(path)
 
 
 def _merge_fine_ranges(ranges: list[tuple[int, int]], max_ranges: int) -> list[tuple[int, int]]:
@@ -290,7 +340,7 @@ def scan_partitioned(
     if cover is None or not cover[0]:
         # unparseable or degenerate geometry covers nothing: empty scan
         # (an empty bucket list would also be invalid SQL below)
-        return spark.read.parquet(path).filter(F.lit(False))
+        return _open_layout(spark, path).filter(F.lit(False))
     buckets, ranges = cover
     # the whole predicate is ONE SQL string → one F.expr: building it from
     # Column nodes costs a py4j round trip per node (~4 per range)
@@ -299,7 +349,7 @@ def scan_partitioned(
         terms.append(
             "(" + " OR ".join(f"cell BETWEEN {lo} AND {hi}" for lo, hi in ranges) + ")"
         )
-    df = spark.read.parquet(path)
+    df = _open_layout(spark, path)
     if time_range is not None and "time_bin" in df.columns:
         width = 86400 * time_bin_days
         b0 = int(pd.Timestamp(time_range[0]).timestamp()) // width
@@ -408,6 +458,7 @@ def write_attr_partitioned(
         .partitionBy(*part_cols)
         .parquet(path)
     )
+    _forget_layout(path)
 
 
 def scan_attr_partitioned(
@@ -436,7 +487,7 @@ def scan_attr_partitioned(
         # same loud-failure contract as xz2.query_geoms (round-3 ADVICE):
         # bin pruning alone would return a bin-granular superset
         raise ValueError("date_range requires date_col for the exact refine")
-    df = spark.read.parquet(path)
+    df = _open_layout(spark, path)
     if eq is not None:
         df = df.filter(
             (F.col("attr_part") == _attr_part_value(eq, prefix_len))

@@ -5,6 +5,8 @@ import re
 import shutil
 
 import numpy as np
+import pandas as pd
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -336,6 +338,137 @@ class TestAttrIndexedLayout:
         for val in ["42abc", "émile", "plain"]:
             got = planner.scan_attr_partitioned(spark, path, "k", eq=val)
             assert [r["k"] for r in got.collect()] == [val]
+
+
+class TestLayoutSchemaMemo:
+    """A layout's schema is inferred once: a repeated query starts no
+    schema-inference job, a rewrite by plain Spark is noticed, and the
+    file listing stays fresh."""
+
+    POLY = "POLYGON((2 2, 8 2, 8 8, 2 8, 2 2))"
+    TR = ("2024-01-03 00:00:00", "2024-01-20 00:00:00")
+
+    @staticmethod
+    def _points(ids, inside):
+        """Points at (5, 5) + id/1000 inside POLY and TR, at (15, 15) outside."""
+        ids = np.asarray(ids)
+        off = 5.0 if inside else 15.0
+        return pd.DataFrame({
+            "eid": ids, "lon": off + ids / 1000.0, "lat": off + ids / 1000.0,
+            "ts": pd.Timestamp("2024-01-10") + pd.to_timedelta(ids % 5, unit="D"),
+        })
+
+    @staticmethod
+    def _run(spark, fn):
+        """(sorted collected rows, Spark jobs started) of ``fn()``'s frame."""
+        sc = spark.sparkContext
+        group = f"memo-{os.urandom(4).hex()}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = sorted(map(tuple, fn().collect()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def _z3(self, spark, path, ids_in, ids_out):
+        pdf = pd.concat([self._points(ids_in, True), self._points(ids_out, False)])
+        planner.write_partitioned(spark.createDataFrame(pdf), path, res=10, time_col="ts")
+
+    def _z3_query(self, spark, path):
+        return lambda: planner.query(
+            spark, path, self.POLY, res=10, time_col="ts", time_range=self.TR
+        )
+
+    def _second_query_skips_inference(self, spark, path, fn):
+        planner._forget_layout(path)
+        rows1, jobs1 = self._run(spark, fn)
+        assert path in planner._LAYOUT_SCHEMAS
+        rows2, jobs2 = self._run(spark, fn)
+        assert rows2 == rows1 and rows1
+        assert jobs2 == jobs1 - 1
+
+    def test_z3_second_query_skips_inference(self, spark, tmp_path):
+        path = str(tmp_path / "z3")
+        self._z3(spark, path, range(40), range(40, 60))
+        self._second_query_skips_inference(spark, path, self._z3_query(spark, path))
+
+    def test_attr_second_query_skips_inference(self, spark, tmp_path):
+        path = str(tmp_path / "attr")
+        pdf = self._points(range(30), True).assign(tag=[f"t{i % 3}" for i in range(30)])
+        planner.write_attr_partitioned(spark.createDataFrame(pdf), path, "tag", date_col="ts")
+        self._second_query_skips_inference(
+            spark, path,
+            lambda: planner.scan_attr_partitioned(
+                spark, path, "tag", eq="t1", date_range=self.TR, date_col="ts"
+            ),
+        )
+
+    def test_xz2_second_query_skips_inference(self, spark, tmp_path):
+        from geomesa_spark.operators import xz2
+
+        path = str(tmp_path / "xz2")
+        boxes = pd.DataFrame({
+            "geom_id": [f"g{i}" for i in range(12)],
+            "wkt": [
+                f"POLYGON(({x} {x}, {x + 1} {x}, {x + 1} {x + 1}, {x} {x + 1}, {x} {x}))"
+                for x in range(0, 24, 2)
+            ],
+        })
+        xz2.write_partitioned_geoms(spark.createDataFrame(boxes), path)
+        self._second_query_skips_inference(
+            spark, path,
+            lambda: xz2.scan_partitioned_geoms(spark, path, self.POLY).select("geom_id"),
+        )
+
+    def test_overwrite_by_plain_spark_is_noticed(self, spark, tmp_path):
+        path = str(tmp_path / "z3")
+        self._z3(spark, path, range(20), range(20, 30))
+        self._z3_query(spark, path)().collect()
+        assert path in planner._LAYOUT_SCHEMAS
+        # a different column set, written without the planner
+        pdf = pd.concat([self._points(range(100, 115), True), self._points(range(115, 120), False)])
+        pdf = pdf.rename(columns={"eid": "fid"}).assign(tag="new")
+        d = planner._layout_columns(spark.createDataFrame(pdf), 10)
+        d = d.withColumn("time_bin", planner.time_bin_expr("ts"))
+        d.write.mode("overwrite").partitionBy("time_bin", "cell_bucket").parquet(path)
+        out = self._z3_query(spark, path)()
+        assert {"fid", "tag"} <= set(out.columns) and "eid" not in out.columns
+        got = {(r["fid"], r["tag"]) for r in out.collect()}
+        assert got == {(i, "new") for i in range(100, 115)}
+
+    def test_appended_files_are_listed(self, spark, tmp_path):
+        path = str(tmp_path / "z3")
+        self._z3(spark, path, range(20), range(20, 30))
+        query = self._z3_query(spark, path)
+        assert {r["eid"] for r in query().collect()} == set(range(20))
+        # a plain partitionBy append that leaves no _SUCCESS marker
+        d = planner._layout_columns(spark.createDataFrame(self._points(range(50, 60), True)), 10)
+        (
+            d.withColumn("time_bin", planner.time_bin_expr("ts"))
+            .write.mode("append")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .partitionBy("time_bin", "cell_bucket")
+            .parquet(path)
+        )
+        inside = set(range(20)) | set(range(50, 60))
+        assert {r["eid"] for r in query().collect()} == inside
+        # a file copied into an existing leaf dir changes neither the root
+        # nor _SUCCESS: the memo hits and the listing still sees the copy
+        src, copied = next(
+            (f, eids) for f, eids in (
+                (os.path.join(dp, f), _file_eids(os.path.join(dp, f)))
+                for dp, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
+            ) if eids & inside
+        )
+        shutil.copy(src, os.path.join(os.path.dirname(src), "copy-" + os.path.basename(src)))
+        rows, jobs = self._run(spark, lambda: query().select("eid"))
+        assert jobs == 1
+        assert len(rows) == len(inside) + len(copied & inside)
+
+
+def _file_eids(file: str) -> set:
+    return set(pq.read_table(file, columns=["eid"]).column("eid").to_pylist())
 
 
 def test_choose_resolution_skew(spark, sf_dir):
