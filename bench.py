@@ -73,7 +73,7 @@ def main() -> None:
     # spin up JVM codegen + ALL Arrow Python workers outside the clock
     # (sample touches every input split; limit would warm a single worker)
     sj.spatial_join_documents(
-        docs.sample(0.05, seed=1), corpus.fixture_polygons(), "intersects", res=auto_res
+        docs.sample(fraction=0.05, seed=1), corpus.fixture_polygons(), "intersects", res=auto_res
     ).count()
     # ...and the non-flagship hot paths get the SAME treatment on tiny
     # slices: ring/grid UDFs, kNN ring join, and the XZ2 keys/refine UDFs
@@ -85,11 +85,11 @@ def main() -> None:
     # preserves the input split set, so every one of the N Python workers
     # cold-imports before the clock; limit() warms exactly one task's
     # worker and the measured run then pays N-1 simultaneous cold starts
-    _pts_w = sj.extract_geo_points(docs.sample(0.05, seed=2)).select("doc_id", "lon", "lat")
+    _pts_w = sj.extract_geo_points(docs.sample(fraction=0.05, seed=2)).select("doc_id", "lon", "lat")
     _ev_w = (
         spark.read.parquet(corpus.ensure_events_geo(sf_dir))
         .select("event_id", "lon", "lat")
-        .sample(0.05, seed=2)
+        .sample(fraction=0.05, seed=2)
         .repartition(cpus)
     )
     sj.spatial_join_grid(_pts_w, _ev_w, res=8, dist_m=50_000.0, unique_ids=True).count()

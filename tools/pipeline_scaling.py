@@ -90,9 +90,9 @@ JOBS = {
 }
 
 # warm-up: touch every split so all worker slots cold-import before timing
-docs.sample(0.05, seed=1).select(F.md5("text")).count()
-gopher_quality(docs.sample(0.02, seed=1)).count()
-minhash_lsh_pairs(docs.sample(0.01, seed=1), num_perm=32, bands=8).count()
+docs.sample(fraction=0.05, seed=1).select(F.md5("text")).count()
+gopher_quality(docs.sample(fraction=0.02, seed=1)).count()
+minhash_lsh_pairs(docs.sample(fraction=0.01, seed=1), num_perm=32, bands=8).count()
 
 res = {"cores": cores, "n_docs": n}
 for name, fn in JOBS.items():

@@ -54,8 +54,8 @@ n = docs.count()
 # all worker slots cold-import numpy/pandas/geomesa_spark before timing
 # (limit() would warm only the first task's worker; the measured run then
 # pays 32 simultaneous cold imports — dominates short jobs)
-sj.spatial_join_documents(docs.sample(0.05, seed=1), corpus.fixture_polygons(), "intersects").count()
-tiling.tile_pyramid(sj.extract_geo_points(docs.sample(0.05, seed=1)).select("doc_id","lon","lat"), [5, 8, 11]).count()
+sj.spatial_join_documents(docs.sample(fraction=0.05, seed=1), corpus.fixture_polygons(), "intersects").count()
+tiling.tile_pyramid(sj.extract_geo_points(docs.sample(fraction=0.05, seed=1)).select("doc_id","lon","lat"), [5, 8, 11]).count()
 
 # steady-state measurement: 3 in-session reps, best taken — a 100 TB
 # production job runs for hours, so per-session worker spin-up is noise;

@@ -81,7 +81,7 @@ if job_name == "knn":
         return len(out), int(out["dist_m"].sum() * 1000)
 
     # warm every worker slot outside the clock (sample keeps all splits)
-    knn_op.knn(pts.sample(0.02, seed=1), QUERIES[:2], res=7)
+    knn_op.knn(pts.sample(fraction=0.02, seed=1), QUERIES[:2], res=7)
     t_best = float("inf"); rows = None
     for _ in range(3):
         spark.catalog.clearCache()
@@ -124,8 +124,8 @@ elif job_name == "xz2":
         ).count()
 
     xz2_op.xz2_join_points(
-        geoms.sample(0.02, seed=1),
-        pts.sample(0.02, seed=1).select(FF.col("event_id").alias("point_event_id"), "lon", "lat"),
+        geoms.sample(fraction=0.02, seed=1),
+        pts.sample(fraction=0.02, seed=1).select(FF.col("event_id").alias("point_event_id"), "lon", "lat"),
     ).count()
     t_best = float("inf"); rows = None
     for _ in range(3):

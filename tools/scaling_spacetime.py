@@ -92,7 +92,7 @@ res = {"cores": cores, "n_a": n_a, "n_b": n_b}
 if not floor_only:
     # warm every worker slot outside the clock
     sj.spatiotemporal_join_grid(
-        a.sample(0.02, seed=1), b.sample(0.02, seed=1), res=7, dist_m=50_000.0,
+        a.sample(fraction=0.02, seed=1), b.sample(fraction=0.02, seed=1), res=7, dist_m=50_000.0,
         max_dt_s=3600, left_id="id_a", right_id="id_b", unique_ids=True,
     ).count()
     t_best = float("inf"); rows = None

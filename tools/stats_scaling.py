@@ -118,8 +118,8 @@ JOBS = {
 }
 
 # warm-up: compile every codegen stage on slices before timing
-autocorr.getis_ord_gi(big.sample(0.002, seed=1), res=7).count()
-pp.ripley_k(small.sample(0.02, seed=1), (10_000.0,), res=7, lat_max=60.0).count()
+autocorr.getis_ord_gi(big.sample(fraction=0.002, seed=1), res=7).count()
+pp.ripley_k(small.sample(fraction=0.02, seed=1), (10_000.0,), res=7, lat_max=60.0).count()
 gcache.clear_caches(); spark.catalog.clearCache()
 
 res = {"cores": cores, "n_big": nb, "n_small": ns}
