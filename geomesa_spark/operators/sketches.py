@@ -24,6 +24,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+#: most distinct values ``cms_frequencies(items=None)`` brings to the driver
+MAX_DISTINCT_ITEMS = 1000
+
 
 def cms_sketch_bytes(
     df: DataFrame, col: str, eps: float = 1e-4, confidence: float = 0.999, seed: int = 42
@@ -40,12 +43,18 @@ def cms_frequencies(
     eps: float = 1e-4, confidence: float = 0.999, seed: int = 42,
 ) -> DataFrame:
     """(item, est_n) estimated frequencies for ``items`` (default: the
-    column's distinct values — only sane for low-cardinality columns; for
-    high-cardinality pass the items of interest explicitly)."""
+    column's distinct values, at most :data:`MAX_DISTINCT_ITEMS` of them;
+    a column with more raises ``ValueError`` — pass the items of interest
+    explicitly)."""
     spark = df.sparkSession
     sk = cms_sketch_bytes(df, col, eps, confidence, seed)
     jcms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(sk)
     if items is None:
-        items = [r[0] for r in df.select(col).distinct().collect()]
+        items = [r[0] for r in df.select(col).distinct().limit(MAX_DISTINCT_ITEMS + 1).collect()]
+        if len(items) > MAX_DISTINCT_ITEMS:
+            raise ValueError(
+                f"{col} has more than {MAX_DISTINCT_ITEMS} distinct values; "
+                "pass items= with the values to estimate"
+            )
     rows = [(it, int(jcms.estimateCount(it))) for it in items]
     return spark.createDataFrame(rows, f"{col} string, est_n long")

@@ -373,6 +373,24 @@ def test_cms_frequencies_bounds(spark):
     assert est2 == exact
 
 
+def test_cms_frequencies_default_items_bounded(spark):
+    """items=None collects at most MAX_DISTINCT_ITEMS distinct values and
+    fails loudly above that; explicit items= are not bounded."""
+    from geomesa_spark.operators import sketches
+
+    bound = sketches.MAX_DISTINCT_ITEMS
+
+    def keys(n):
+        return spark.range(n).selectExpr("CAST(id AS STRING) AS k")
+
+    est = sketches.cms_frequencies(keys(bound), "k").collect()
+    assert len(est) == bound and all(r["est_n"] >= 1 for r in est)
+    with pytest.raises(ValueError, match="items="):
+        sketches.cms_frequencies(keys(bound + 1), "k")
+    got = sketches.cms_frequencies(keys(bound + 1), "k", items=["0", str(bound)]).collect()
+    assert [r["est_n"] for r in got] == [1, 1]
+
+
 # ---------------------------------------------------------------- dedup
 
 
