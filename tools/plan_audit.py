@@ -135,7 +135,94 @@ def main() -> None:
         rk,
     )
 
+    gst = q.q_gi_spacetime(spark, sf_dir)
+    plans["gi_spacetime"] = (
+        "Want: ONE map-side-combinable (cell_key, day_bin) count over the "
+        "points; the 27-key neighborhood sum an EQUI-join on (nbr_key, "
+        "nbr_day) over cube-sized tables; nested loops only as the "
+        "condition-free cross with the broadcast day bins and globals; no "
+        "CartesianProduct.",
+        plan_of(gst),
+        gst,
+    )
+
+    ehsa = q.q_ehsa(spark, sf_dir)
+    plans["ehsa"] = (
+        "Want: ONE map-side-combinable (cell_key, day_bin) count over the "
+        "points; the per-day Gi* neighborhood an EQUI-join on (day_bin, "
+        "nbr_key); the Mann-Kendall pair tally an EQUI-join on cell_key; "
+        "nested loops only as condition-free broadcast crosses; no "
+        "CartesianProduct.",
+        plan_of(ehsa),
+        ehsa,
+    )
+
+    kde = q.q_kde_grid(spark, sf_dir)
+    plans["kde_grid"] = (
+        "Want: ONE map-side-combinable cell_key count over the points; the "
+        "kernel scatter an explode + aggregate on the cell table, joined "
+        "back on cell_key; no nested-loop or cartesian node.",
+        plan_of(kde),
+        kde,
+    )
+
     import re
+
+    def combined_count(text: str, keys: str) -> bool:
+        """A partial_count over exactly ``keys`` (map-side combine)."""
+        return bool(re.search(
+            rf"^Keys \[\d+\]: \[{keys}\]\nFunctions \[1\]: \[partial_count\(1\)\]",
+            text, re.M,
+        ))
+
+    def equi_join_on(text: str, *cols: str) -> bool:
+        """Some join's left keys are exactly ``cols`` (any order)."""
+        return any(
+            sorted(re.sub(r"#\d+L?", "", k) for k in m.split(", ")) == sorted(cols)
+            for m in re.findall(r"^Left keys \[\d+\]: \[(.*)\]$", text, re.M)
+        )
+
+    def conditioned_nested_loops(text: str) -> int:
+        """Nested-loop joins that test a condition (a theta join)."""
+        conds = re.findall(
+            r"^\(\d+\) BroadcastNestedLoopJoin\n(?:(?!\(\d+\) ).*\n)*?"
+            r"Join condition: (.*)$",
+            text, re.M,
+        )
+        return sum(c != "None" for c in conds)
+
+    # REGRESSION GUARD: the space-time statistics and the kernel density
+    # count the points once (map-side combined) and do every neighborhood
+    # or pair stage as an equi-join on cell- or cube-sized tables; a nested
+    # loop with a condition or a cartesian node means a theta join crept in.
+    cube_count = r"cell_key#\d+L, day_bin#\d+L"
+    for name, checks in {
+        "gi_spacetime": {
+            "a map-side (cell_key, day_bin) partial_count":
+                combined_count(plans["gi_spacetime"][1], cube_count),
+            "an equi-join on (nbr_key, nbr_day)":
+                equi_join_on(plans["gi_spacetime"][1], "nbr_key", "nbr_day"),
+        },
+        "ehsa": {
+            "a map-side (cell_key, day_bin) partial_count":
+                combined_count(plans["ehsa"][1], cube_count),
+            "an equi-join on (day_bin, nbr_key)":
+                equi_join_on(plans["ehsa"][1], "day_bin", "nbr_key"),
+            "an equi-join on cell_key": equi_join_on(plans["ehsa"][1], "cell_key"),
+        },
+        "kde_grid": {
+            "a map-side cell_key partial_count":
+                combined_count(plans["kde_grid"][1], r"cell_key#\d+L"),
+            "an equi-join on cell_key": equi_join_on(plans["kde_grid"][1], "cell_key"),
+            "no nested-loop join": "BroadcastNestedLoopJoin" not in plans["kde_grid"][1],
+        },
+    }.items():
+        text = plans[name][1]
+        checks["no CartesianProduct"] = "CartesianProduct" not in text
+        checks["no nested-loop join with a condition"] = not conditioned_nested_loops(text)
+        missing = [what for what, ok in checks.items() if not ok]
+        if missing:
+            sys.exit(f"PLAN REGRESSION: {name} lacks {'; '.join(missing)}")
 
     # REGRESSION GUARD (round-5): the autocorr family's only point-scale
     # stage is the first cell count, and it must keep its map-side combine;
