@@ -50,7 +50,8 @@ def cms_frequencies(
     sk = cms_sketch_bytes(df, col, eps, confidence, seed)
     jcms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(sk)
     if items is None:
-        items = [r[0] for r in df.select(col).distinct().limit(MAX_DISTINCT_ITEMS + 1).collect()]
+        distinct = df.select(col).distinct().limit(MAX_DISTINCT_ITEMS + 1)
+        items = [r[0] for r in distinct.collect()]
         if len(items) > MAX_DISTINCT_ITEMS:
             raise ValueError(
                 f"{col} has more than {MAX_DISTINCT_ITEMS} distinct values; "

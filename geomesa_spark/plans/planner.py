@@ -174,7 +174,9 @@ def _open_layout(spark: SparkSession, path: str) -> DataFrame:
     and handed to the reader while the token holds.  The file listing
     still runs on every call, so files appended or deleted since are seen;
     a writer outside the planner that rewrites the layout changes the
-    token.  The planner's own writers drop their path's entry."""
+    token.  The planner's own writers drop their path's entry.  Callers
+    racing on one path can at worst store a schema under a token that is
+    already stale, which the next call infers again."""
     token = _layout_token(spark, path)
     hit = _LAYOUT_SCHEMAS.get(path)
     if token is not None and hit is not None and hit[0] == token:

@@ -196,25 +196,21 @@ def main() -> None:
     # or pair stage as an equi-join on cell- or cube-sized tables; a nested
     # loop with a condition or a cartesian node means a theta join crept in.
     cube_count = r"cell_key#\d+L, day_bin#\d+L"
+    gst_t, ehsa_t, kde_t = (plans[n][1] for n in ("gi_spacetime", "ehsa", "kde_grid"))
     for name, checks in {
         "gi_spacetime": {
-            "a map-side (cell_key, day_bin) partial_count":
-                combined_count(plans["gi_spacetime"][1], cube_count),
-            "an equi-join on (nbr_key, nbr_day)":
-                equi_join_on(plans["gi_spacetime"][1], "nbr_key", "nbr_day"),
+            "a map-side (cell_key, day_bin) partial_count": combined_count(gst_t, cube_count),
+            "an equi-join on (nbr_key, nbr_day)": equi_join_on(gst_t, "nbr_key", "nbr_day"),
         },
         "ehsa": {
-            "a map-side (cell_key, day_bin) partial_count":
-                combined_count(plans["ehsa"][1], cube_count),
-            "an equi-join on (day_bin, nbr_key)":
-                equi_join_on(plans["ehsa"][1], "day_bin", "nbr_key"),
-            "an equi-join on cell_key": equi_join_on(plans["ehsa"][1], "cell_key"),
+            "a map-side (cell_key, day_bin) partial_count": combined_count(ehsa_t, cube_count),
+            "an equi-join on (day_bin, nbr_key)": equi_join_on(ehsa_t, "day_bin", "nbr_key"),
+            "an equi-join on cell_key": equi_join_on(ehsa_t, "cell_key"),
         },
         "kde_grid": {
-            "a map-side cell_key partial_count":
-                combined_count(plans["kde_grid"][1], r"cell_key#\d+L"),
-            "an equi-join on cell_key": equi_join_on(plans["kde_grid"][1], "cell_key"),
-            "no nested-loop join": "BroadcastNestedLoopJoin" not in plans["kde_grid"][1],
+            "a map-side cell_key partial_count": combined_count(kde_t, r"cell_key#\d+L"),
+            "an equi-join on cell_key": equi_join_on(kde_t, "cell_key"),
+            "no nested-loop join": "BroadcastNestedLoopJoin" not in kde_t,
         },
     }.items():
         text = plans[name][1]
