@@ -25,8 +25,9 @@ def _host_probe_s() -> float:
     """Fixed single-thread cache-resident CPU loop (tools/bw_probe.py's
     cpu_worker, fixed work) — the value makes the bench artifact noise-
     self-identifying (round-3 verdict item 4): this VM shows transient
-    2-4x hypervisor slowdowns, and a probe ~2x its quiet-host baseline
-    (~0.05 s) marks the whole JSON as taken in a noisy window."""
+    2-4x hypervisor slowdowns, and a probe above about 0.2 s (an idle
+    4-core host reads 0.05-0.11 s) marks the whole JSON as taken in a
+    noisy window."""
     import numpy as np
 
     a = np.random.default_rng(0).random(8192)
@@ -210,9 +211,9 @@ def main() -> None:
                 "spatial_join_docs_per_sec": docs_per_sec,
                 "auto_res": auto_res,
                 "cpus": cpus,
-                # noise marker: quiet host ~0.05 s; ~2x that means the
-                # suite numbers above were taken in a hypervisor-noise
-                # window (see BENCH/BASELINE.md)
+                # noise marker: an idle 4-core host reads 0.05-0.11 s;
+                # above about 0.2 s the suite numbers above were taken in
+                # a hypervisor-noise window (see BENCH/BASELINE.md)
                 "host_probe_s": [probe_start, _host_probe_s()],
             }
         )
