@@ -442,6 +442,7 @@ class TestLayoutSchemaMemo:
         self._z3(spark, path, range(20), range(20, 30))
         query = self._z3_query(spark, path)
         assert {r["eid"] for r in query().collect()} == set(range(20))
+        marker = os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
         # a plain partitionBy append that leaves no _SUCCESS marker
         d = planner._layout_columns(spark.createDataFrame(self._points(range(50, 60), True)), 10)
         (
@@ -451,20 +452,20 @@ class TestLayoutSchemaMemo:
             .partitionBy("time_bin", "cell_bucket")
             .parquet(path)
         )
+        assert os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns == marker
         inside = set(range(20)) | set(range(50, 60))
         assert {r["eid"] for r in query().collect()} == inside
         # a file copied into an existing leaf dir changes neither the root
         # nor _SUCCESS: the memo hits and the listing still sees the copy
-        src, copied = next(
-            (f, eids) for f, eids in (
-                (os.path.join(dp, f), _file_eids(os.path.join(dp, f)))
-                for dp, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
-            ) if eids & inside
-        )
+        files = [
+            os.path.join(dp, f) for dp, _, fs in os.walk(path) for f in fs
+            if f.endswith(".parquet")
+        ]
+        src = next(f for f in files if _file_eids(f) & inside)
         shutil.copy(src, os.path.join(os.path.dirname(src), "copy-" + os.path.basename(src)))
         rows, jobs = self._run(spark, lambda: query().select("eid"))
         assert jobs == 1
-        assert len(rows) == len(inside) + len(copied & inside)
+        assert len(rows) == len(inside) + len(_file_eids(src) & inside)
 
 
 def _file_eids(file: str) -> set:
