@@ -21,11 +21,12 @@ the identical SQL ring join.
 Parallelism note: when Spark broadcasts the keyed side of a pair join,
 the heavy stage's task count is the PROBE side's split count — a small
 single-file input runs the whole pair emission on as many tasks as it
-has row groups regardless of fleet size (measured in
+has row groups regardless of fleet size (measured with the retired
 tools/stats_scaling.py: the knox half-billion-pair stage on 8 tasks at
 32 cores).  Production tables have thousands of splits; bench/test
 inputs should be repartitioned to fleet parallelism first (the
-entry_queries._event_points idiom).
+entry_queries._event_points idiom, which `tools/scaling.py --job ripley
+knox` follows).
 
 Float discipline (repo-wide rule): pair counts, n, and time deltas are
 exact BIGINTs; distances use the module haversine SQL template — the
@@ -148,13 +149,26 @@ def wrap_ring_sql(res: int) -> str:
 
 
 def _require_ring_cover(res: int, lat_max: float, d_max_m: float) -> None:
+    """Raise unless the +/-1 cell ring holds every pair within ``d_max_m``.
+
+    Two band points (|lat| <= lat_max) at great-circle angle delta = d/R
+    differ in latitude by at most delta, and in longitude by at most
+    2*asin(sin(delta/2) / cos(lat_max)): by the haversine formula
+    hav(delta) = hav(dlat) + cos(lat1)*cos(lat2)*hav(dlon)
+               >= cos(lat_max)^2 * hav(dlon).
+    Pairs whose differences are at most one cell's height and width land
+    in the same or adjacent cells (the longitude ring wraps)."""
     n_side = 1 << res
+    delta = d_max_m / EARTH_RADIUS_M
+    s = math.sin(delta / 2.0) / math.cos(math.radians(lat_max))
+    dlon = 2.0 * math.asin(s) if s < 1.0 else math.inf
     cell_lat_m = (180.0 / n_side) * _DEG_M
     cell_lon_m = (360.0 / n_side) * _DEG_M * math.cos(math.radians(lat_max))
-    if d_max_m > min(cell_lat_m, cell_lon_m):
+    if delta > math.pi / n_side or dlon > 2.0 * math.pi / n_side:
         raise ValueError(
             f"d_max={d_max_m} m exceeds the +/-1-ring guarantee at res={res}, "
-            f"lat_max={lat_max} (cell {cell_lat_m:.0f} x {cell_lon_m:.0f} m); "
+            f"lat_max={lat_max} (cell {cell_lat_m:.0f} x {cell_lon_m:.0f} m at "
+            "lat_max; the great-circle bound is tighter); "
             "coarsen res, shrink the window, or use the lat-aware k-ring "
             "join (spatial_join.ring_cells_udf)"
         )

@@ -169,11 +169,65 @@ def test_haversine_sql_text_matches_oracle_template(spark):
     assert pp.HAVERSINE_M_SQL.format(**kw) == entry_queries._HAVERSINE.format(**kw)
 
 
-def test_ring_cover_guard():
+def _seam_pairs(d_m, lat_max, res):
+    """Point pairs at |lat| = lat_max (where a degree of longitude is
+    shortest) whose great-circle distance is just under or just over
+    ``d_m``, placed across longitude seams (the antimeridian included)
+    and latitude seams at several offsets."""
+    w = 360.0 / (1 << res)
+    lon, lat = [], []
+    for delta in (d_m / pp.EARTH_RADIUS_M * (1 - 1e-9), d_m / pp.EARTH_RADIUS_M * (1 + 1e-9)):
+        for phi in (lat_max, -lat_max):
+            dlon = math.degrees(2 * math.asin(math.sin(delta / 2) / math.cos(math.radians(phi))))
+            for seam in (-180.0 + 7 * w, 3 * w, 180.0):
+                for t in (1e-6, 0.25, 0.5, 0.75, 1 - 1e-6):
+                    a = seam - t * dlon
+                    lon += [a, (a + dlon + 180.0) % 360.0 - 180.0]
+                    lat += [phi, phi]
+        dlat = math.degrees(delta)
+        for seam in (0.0, 180.0 / (1 << res) * 20 - 90.0):
+            for t in (1e-6, 0.5, 1 - 1e-6):
+                lon += [10.0, 10.0]
+                lat += [seam - t * dlat, seam - t * dlat + dlat]
+    return np.array(lon), np.array(lat)
+
+
+def test_ring_cover_guard(spark):
     with pytest.raises(ValueError):
         pp.ripley_k(None, (500_000.0,), res=6, lat_max=60.0)
     with pytest.raises(ValueError):
         pp.knox_test(None, dist_m=200_000.0, res=6, lat_max=80.0)
+    res, lat_max = 6, 60.0
+    # the former linear bound, min(cell height, cell width at lat_max):
+    # just under it a pair at lat 60 spans more than one cell of longitude
+    d_linear = (180.0 / (1 << res)) * pp._DEG_M
+    with pytest.raises(ValueError):
+        pp.ripley_k(None, (d_linear - 1.0,), res=res, lat_max=lat_max)
+    lon, lat = _seam_pairs(d_linear - 1.0, lat_max, res)
+    x = np.floor((lon + 180.0) / 360.0 * (1 << res)).astype(int)
+    dx = np.abs(x[:, None] - x[None, :])
+    far = np.minimum(dx, (1 << res) - dx) >= 2
+    dm = _hav_matrix(lon, lat)
+    assert ((dm <= d_linear - 1.0) & far).any()  # the pair the ring misses
+
+    # the largest whole-metre distance the great-circle guard accepts
+    d_max = float(math.floor(
+        2 * math.asin(math.cos(math.radians(lat_max)) * math.sin(math.pi / (1 << res)))
+        * pp.EARTH_RADIUS_M
+    ))
+    pp._require_ring_cover(res, lat_max, d_max)
+    with pytest.raises(ValueError):
+        pp._require_ring_cover(res, lat_max, d_max + 1.0)
+    lon, lat = _seam_pairs(d_max, lat_max, res)
+    rng = np.random.default_rng(3)
+    lon = np.concatenate([lon, rng.uniform(-180.0, 180.0, 300)])
+    lat = np.concatenate([lat, rng.uniform(-lat_max, lat_max, 300)])
+    pdf = pd.DataFrame({"event_id": np.arange(len(lon), dtype=np.int64), "lon": lon, "lat": lat})
+    got = pp.ripley_k(spark.createDataFrame(pdf), (d_max,), res=res, lat_max=lat_max).collect()
+    w = _window(pdf)
+    dm = _hav_matrix(w["lon"].to_numpy(), w["lat"].to_numpy())
+    want = int((dm[np.triu_indices(len(w), k=1)] <= d_max).sum())
+    assert want > 60 and got[0]["pairs"] == want
 
 
 def test_pointpattern_plan_shape(spark):
