@@ -239,10 +239,17 @@ def stream_hotspots(
     window ONLY once the watermark passes its end, every window arrives
     in the foreachBatch sink COMPLETE and exactly once — the sink then
     runs the batch Gi* kernel per window (`autocorr.gi_from_cells`,
-    by=window_start) on the ≤4^res-row finalized cell table and appends
+    by=window_start) on the ≤4^res-row finalized cell table and writes
     (window_start, cell_key, x, k_i, w_i, gi_z_x1e6) to ``out_path``.
-    Exactly-once end-to-end: the aggregation state is checkpointed and a
-    replayed epoch rewrites the same rows.
+
+    Layout: each epoch that emits windows owns one directory,
+    ``{out_path}/epoch={epoch_id}``, written with mode overwrite, so
+    ``spark.read.parquet(out_path)`` reads every window once (plus an
+    ``epoch`` partition column).  Exactly-once end-to-end: the
+    aggregation state is checkpointed, and an epoch replayed after a
+    failure between the sink write and the checkpoint commit recomputes
+    the same windows and overwrites its own directory instead of
+    appending a second copy.
 
     Returns the StreamingQuery handle.
     """
@@ -254,8 +261,8 @@ def stream_hotspots(
         from ..operators.autocorr import gi_from_cells
 
         gi_from_cells(batch_df, res, by=("window_start",)).write.mode(
-            "append"
-        ).parquet(out_path)
+            "overwrite"
+        ).parquet(f"{out_path}/epoch={epoch_id}")
 
     return (
         counts.writeStream.outputMode("append")

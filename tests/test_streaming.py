@@ -584,3 +584,45 @@ def test_stream_hotspots_matches_batch_gi(spark, tmp_path):
         if r["window_start"] == base.to_pydatetime() and r["cell_key"] == ((cx << 4) | cy)
     ]
     assert blob and blob[0]["gi_z_x1e6"] > 2_000_000
+
+
+def test_stream_hotspots_replayed_epoch_writes_no_duplicates(spark, tmp_path):
+    """A failure after the sink wrote an epoch but before the checkpoint
+    committed it replays that epoch on restart: drop the last commit
+    marker, restart, and every (window_start, cell_key) still appears
+    once, with the replayed epoch's rows unchanged."""
+    rng = np.random.default_rng(5)
+    base = pd.Timestamp("2026-03-01 00:00:00")
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, hour in enumerate((0, 1, 4)):
+        n = 200 if hour < 4 else 1
+        pdf = pd.DataFrame({
+            "ts": [base + pd.Timedelta(hours=hour, minutes=int(m)) for m in rng.integers(0, 59, n)],
+            "lon": rng.uniform(-170, 170, n),
+            "lat": rng.uniform(-80, 80, n),
+        })
+        spark.createDataFrame(pdf).coalesce(1).write.parquet(str(src / f"f{i}"))
+    out, ck = str(tmp_path / "gi_out"), tmp_path / "ck"
+
+    def run():
+        stream = (
+            spark.readStream.schema("ts timestamp, lon double, lat double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src / "*"))
+        )
+        live.stream_hotspots(
+            stream, out, str(ck), res=4, window="1 hour", watermark="30 minutes",
+        ).awaitTermination()
+        cols = ("window_start", "cell_key", "x", "k_i", "w_i", "gi_z_x1e6")
+        return sorted(map(tuple, spark.read.parquet(out).select(*cols).collect()))
+
+    first = run()
+    last = max(int(p.name) for p in (ck / "commits").iterdir() if p.name.isdigit())
+    assert (tmp_path / "gi_out" / f"epoch={last}").is_dir()  # the epoch wrote rows
+    for p in (ck / "commits").iterdir():
+        if p.name in (str(last), f".{last}.crc"):
+            p.unlink()
+    assert run() == first
+    keys = [(r[0], r[1]) for r in first]
+    assert len(keys) == len(set(keys)) and len({k[0] for k in keys}) == 2
