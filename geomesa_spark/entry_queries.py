@@ -23,6 +23,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from .operators.spatial_join import HAVERSINE_M_SQL
+
 # deterministic synthetic lon/lat derived from event_id — identical integer
 # arithmetic on both engines (events has no coordinates of its own)
 LON_EXPR = "((event_id * 9973) % 36000) / 100.0 - 180.0"
@@ -106,17 +108,9 @@ def _pts_cte() -> str:
     return f"pts AS (SELECT event_id, {LON_EXPR} AS lon, {LAT_EXPR} AS lat FROM events)"
 
 
-# formula ORDER matches geo.kernels.haversine_m exactly — radians() per
-# coordinate FIRST, then the difference — so both engines evaluate the
-# identical IEEE expression bit-for-bit (round-3 ADVICE: the old
-# radians(lat2 - lat1) form differed by ~1 ulp, a latent flake at larger
-# scale factors where some pair could straddle the ROUND boundary)
-_HAVERSINE = (
-    "2.0 * 6371008.8 * asin(least(sqrt("
-    "pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-    "cos(radians({lat1})) * cos(radians({lat2})) * "
-    "pow(sin((radians({lon2}) - radians({lon1})) / 2), 2)), 1.0))"
-)
+# the oracles embed the engine's own haversine text, so both engines
+# evaluate the identical IEEE expression
+_HAVERSINE = HAVERSINE_M_SQL
 
 
 # ---------------------------------------------------------------------------

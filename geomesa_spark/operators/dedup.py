@@ -477,9 +477,10 @@ def embedding_near_dup(
         den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
         return pd.Series(np.where(den > 0, num / den, 0.0))
 
-    # optimizer fence (see spatial_join.haversine_udf): without it the
-    # threshold filter clones the UDF and every candidate's FULL embedding
-    # pair crosses Arrow twice
+    # optimizer fence: the nondeterministic flag (the UDF is deterministic)
+    # stops Catalyst pushing the threshold filter through the projection —
+    # without it the filter clones the UDF and every candidate's FULL
+    # embedding pair crosses Arrow twice
     return (
         cand.withColumn("cosine", cos.asNondeterministic()(F.col("v_a"), F.col("v_b")))
         .filter(F.col("cosine") >= float(cos_threshold))

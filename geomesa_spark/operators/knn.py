@@ -8,7 +8,8 @@ restatement: the query set is the SMALL side; each round, every still-
 unsatisfied query contributes a k-ring of cells (antimeridian-wrapping,
 pole-clamping — :func:`geomesa_spark.cells.k_ring`), the union becomes a
 broadcast (query_id, cell) frame equi-joined against the cell-encoded
-point table, candidates get exact haversine distances, and the per-query
+point table, candidates get exact haversine distances (in the JVM, against
+the query point the broadcast cover rows carry), and the per-query
 top-k survives.  A query terminates when its k-th candidate distance is
 PROVABLY inside the ring's guaranteed-covered radius; otherwise its ring
 radius doubles.  On a cell-partitioned table each round prunes to the
@@ -28,7 +29,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from .. import cells
-from ..geo import kernels
 from . import spatial_join
 
 _DEG_M = 111_195.0  # meters per degree latitude at R=6371008.8
@@ -83,18 +83,7 @@ def knn(
     centers = {q["query_id"]: (float(q["lon"]), float(q["lat"])) for q in queries}
     want_k = {q["query_id"]: int(q["k"]) for q in queries}
 
-    @F.pandas_udf("double")
-    def qdist(lon: pd.Series, lat: pd.Series, qid: pd.Series) -> pd.Series:
-        lons = lon.to_numpy(np.float64, na_value=np.nan)
-        lats = lat.to_numpy(np.float64, na_value=np.nan)
-        qids = qid.to_numpy(object)
-        out = np.full(len(lons), np.inf)
-        for q in pd.unique(qids):
-            m = qids == q
-            clon, clat = centers[q]
-            out[m] = kernels.haversine_m(lons[m], lats[m], clon, clat)
-        return pd.Series(out)
-
+    hav = spatial_join.HAVERSINE_M_SQL.format(lon1="lon", lat1="lat", lon2="clon", lat2="clat")
     n_side = 1 << res
     radius = {q: 1 for q in centers}
     best: dict[str, pd.DataFrame] = {}
@@ -111,13 +100,13 @@ def knn(
             clon, clat = centers[q]
             qcell = int(cells.encode(np.asarray([clon]), np.asarray([clat]), res)[0])
             ring = cells.k_ring(qcell, res, min(radius[q], n_side))
-            rows.append(pd.DataFrame({"query_id": q, "cell": ring}))
+            rows.append(pd.DataFrame({"query_id": q, "cell": ring, "clon": clon, "clat": clat}))
         cover = spark.createDataFrame(pd.concat(rows, ignore_index=True))
 
         from pyspark.sql import Window
 
         cand = pts.join(F.broadcast(cover), "cell", "inner")
-        cand = cand.withColumn("dist_m", qdist(F.col("lon"), F.col("lat"), F.col("query_id")))
+        cand = cand.withColumn("dist_m", F.expr(hav))
         w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col(id_col).asc())
         topk = (
             cand.withColumn("rank", F.row_number().over(w))

@@ -15,8 +15,8 @@ the region is the |lat| <= ``lat_max`` band (default 60 deg), inside
 which a +/-1 cell ring at the chosen resolution provably covers every
 pair within ``d_max`` (guarded at plan time — see `_require_ring_cover`).
 A truly global run should use the lat-aware k-ring of
-`spatial_join.ring_cells_udf`; the band keeps the ORACLE expressible as
-the identical SQL ring join.
+`spatial_join.spatial_join_grid` (with ``dist_m``); the band keeps the
+ORACLE expressible as the identical SQL ring join.
 
 Parallelism note: when Spark broadcasts the keyed side of a pair join,
 the heavy stage's task count is the PROBE side's split count — a small
@@ -29,9 +29,9 @@ entry_queries._event_points idiom, which `tools/scaling.py --job ripley
 knox` follows).
 
 Float discipline (repo-wide rule): pair counts, n, and time deltas are
-exact BIGINTs; distances use the module haversine SQL template — the
-SAME text the DuckDB oracle embeds (asserted in tests against
-`entry_queries._HAVERSINE`) — and each derived statistic (K, L, Knox
+exact BIGINTs; distances use the engine's one haversine SQL template
+(`spatial_join.HAVERSINE_M_SQL`) — the SAME text the DuckDB oracle
+embeds — and each derived statistic (K, L, Knox
 expectation/z) is ONE closed-form double expression generated by a
 shared `*_sql()` function, so both engines run the identical IEEE-754
 sequence and quantized outputs match bit-for-bit.
@@ -43,19 +43,12 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from .spatial_join import HAVERSINE_M_SQL
+
 __all__ = ["ripley_k", "cross_k", "nn_g_function", "knox_test", "HAVERSINE_M_SQL"]
 
 EARTH_RADIUS_M = 6371008.8
 _DEG_M = math.pi * EARTH_RADIUS_M / 180.0
-
-#: Same text as entry_queries._HAVERSINE / same op order as
-#: geo.kernels.haversine_m — parity asserted in tests/test_pointpattern.py.
-HAVERSINE_M_SQL = (
-    "2.0 * 6371008.8 * asin(least(sqrt("
-    "pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-    "cos(radians({lat1})) * cos(radians({lat2})) * "
-    "pow(sin((radians({lon2}) - radians({lon1})) / 2), 2)), 1.0))"
-)
 
 
 def band_area_m2(lat_max: float) -> float:
@@ -170,7 +163,7 @@ def _require_ring_cover(res: int, lat_max: float, d_max_m: float) -> None:
             f"lat_max={lat_max} (cell {cell_lat_m:.0f} x {cell_lon_m:.0f} m at "
             "lat_max; the great-circle bound is tighter); "
             "coarsen res, shrink the window, or use the lat-aware k-ring "
-            "join (spatial_join.ring_cells_udf)"
+            "join (spatial_join.spatial_join_grid with dist_m)"
         )
 
 

@@ -98,9 +98,9 @@ def tube_select(
             )
         )
 
-    # optimizer fence (see spatial_join.haversine_udf): without it the
-    # threshold filter splits the UDF into per-candidate + per-survivor
-    # ArrowEvalPython copies
+    # optimizer fence: the flag (the UDF IS deterministic) stops Catalyst
+    # pushing the threshold filter through the projection, which would
+    # split the UDF into per-candidate + per-survivor ArrowEvalPython copies
     tube_dist = tube_dist.asNondeterministic()
     pts = spatial_join.add_cell_column(candidates, res)
     joined = pts.join(F.broadcast(cover_df), "cell", "inner")
@@ -224,7 +224,8 @@ def route_join(
                 dist[m], bear[m] = kernels.point_segments_nearest(lons[m], lats[m], segs[rr])
             return pd.DataFrame({"dist": dist, "bearing": bear})
 
-        # optimizer fence: one evaluation (see spatial_join.haversine_udf)
+        # optimizer fence (nondeterministic flag): the filter below cannot
+        # be pushed through this projection, so the UDF is evaluated once
         cand = cand.withColumn(
             "_near",
             route_near.asNondeterministic()(F.col("lon"), F.col("lat"), F.col("route_id")),
@@ -242,7 +243,8 @@ def route_join(
             & F.coalesce(delta <= float(max_heading_delta_deg), F.lit(True))
         ).drop("_near")
     else:
-        # optimizer fence: one route_dist evaluation (see spatial_join.haversine_udf)
+        # optimizer fence (nondeterministic flag): one route_dist evaluation,
+        # not a filter copy plus a projection copy
         cand = cand.withColumn(
             "route_dist_m",
             route_dist.asNondeterministic()(F.col("lon"), F.col("lat"), F.col("route_id")),

@@ -44,6 +44,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -230,23 +231,34 @@ def run_partitioned_job(
             }
         )
 
-    manifest_pdf = (
-        todo_df.groupBy("cell_bucket", "__shard")
-        .applyInPandas(write_chunk, schema=out_schema)
-        .toPandas()
-    )
-
-    # commit: manifest file + snapshot (atomic rename)
+    # commit: manifest file + snapshot (atomic rename).  The executors
+    # write the manifest rows themselves (one small file, written to a
+    # temporary directory and renamed into place); only the counts this
+    # function reports are read back, never the rows.
     prev_manifests = []
     if _snapshots(snap_dir):
         with open(os.path.join(snap_dir, _snapshots(snap_dir)[-1])) as f:
             prev_manifests = json.load(f)["manifests"]
+    tmp = os.path.join(man_dir, f"manifest-{len(prev_manifests):05d}.inprogress")
+    (
+        todo_df.groupBy("cell_bucket", "__shard")
+        .applyInPandas(write_chunk, schema=out_schema)
+        .repartition(1)
+        .write.mode("overwrite")
+        .parquet(tmp)
+    )
+    stats = spark.read.parquet(tmp).agg(
+        F.count(F.lit(1)).alias("chunks"),
+        F.countDistinct("cell_bucket").alias("buckets"),
+        F.coalesce(F.sum("cell_bucket"), F.lit(0)).alias("bucket_sum"),
+        F.coalesce(F.sum("n_rows"), F.lit(0)).alias("rows"),
+    ).collect()[0]
     new_manifest = None
-    if len(manifest_pdf):
-        new_manifest = f"manifest-{len(prev_manifests):05d}-{int(manifest_pdf['cell_bucket'].sum())}.parquet"
-        tmp = os.path.join(man_dir, new_manifest + ".tmp")
-        manifest_pdf.to_parquet(tmp, index=False)
-        os.replace(tmp, os.path.join(man_dir, new_manifest))
+    if stats["chunks"]:
+        new_manifest = f"manifest-{len(prev_manifests):05d}-{int(stats['bucket_sum'])}.parquet"
+        (part,) = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+        os.replace(os.path.join(tmp, part), os.path.join(man_dir, new_manifest))
+    shutil.rmtree(tmp)
     n_snap = len(_snapshots(snap_dir))
     snap = {
         "sequence": seq if seq is not None else n_snap,
@@ -258,12 +270,12 @@ def run_partitioned_job(
         json.dump(snap, f)
     os.replace(tmp, os.path.join(snap_dir, f"snap-{n_snap:05d}.json"))
     return {
-        "written_buckets": int(manifest_pdf["cell_bucket"].nunique()) if len(manifest_pdf) else 0,
+        "written_buckets": int(stats["buckets"]),
         "skipped_buckets": len({b for b, _ in done}),
-        "written_chunks": len(manifest_pdf),
+        "written_chunks": int(stats["chunks"]),
         "skipped_chunks": len(done),
         "n_shards": k,
-        "rows": int(manifest_pdf["n_rows"].sum()) if len(manifest_pdf) else 0,
+        "rows": int(stats["rows"]),
     }
 
 

@@ -52,6 +52,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.executor.memory", executor_mem or "4g")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # generated-class cache (static conf, LRU): a perfbench `join`
+        # round's working set is 134 classes (4 cores), more than the
+        # default 100, which evicts each class before the round reuses it,
+        # so every call paid Janino and HotSpot's re-JIT again; at 1024 a
+        # repeated round compiles nothing
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

@@ -163,10 +163,12 @@ def test_knox_matches_bruteforce(spark):
 
 
 def test_haversine_sql_text_matches_oracle_template(spark):
+    """One haversine text: the statistics, the DuckDB oracles and the
+    distance joins share the same object."""
     from geomesa_spark import entry_queries
+    from geomesa_spark.operators import spatial_join
 
-    kw = dict(lon1="alon", lat1="alat", lon2="blon", lat2="blat")
-    assert pp.HAVERSINE_M_SQL.format(**kw) == entry_queries._HAVERSINE.format(**kw)
+    assert pp.HAVERSINE_M_SQL is entry_queries._HAVERSINE is spatial_join.HAVERSINE_M_SQL
 
 
 def _seam_pairs(d_m, lat_max, res):

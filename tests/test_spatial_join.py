@@ -481,17 +481,96 @@ def test_spatiotemporal_unique_ids_no_duplicates(spark):
     assert len(pairs) == len(set(pairs)) and len(pairs) > n  # no dup rows
 
 
-def test_haversine_refine_single_evaluation(spark):
-    """The dist_m refine UDF must appear ONCE in the physical plan — the
-    deterministic flag lets Catalyst split it into a per-candidate filter
-    copy plus a per-survivor projection copy (round-3 plan audit)."""
-    import pandas as pd
+def test_distance_joins_run_no_python(spark):
+    """The distance joins build their ring covers and refine in the JVM:
+    the plans of ``dwithin_join_broadcast``, ``spatial_join_grid`` with
+    ``dist_m`` and ``spatiotemporal_join_grid`` hold no ArrowEvalPython or
+    BatchEvalPython node, and each still finds its one pair."""
+    ts = pd.Timestamp("2024-03-01 00:00:00")
+    a = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": ["a"], "lon": [0.0], "lat": [0.0], "ts": [ts]}))
+    b = spark.createDataFrame(pd.DataFrame(
+        {"event_id": ["b"], "lon": [0.1], "lat": [0.1], "ts": [ts]}))
+    joins = {
+        "dwithin": sj.dwithin_join_broadcast(
+            a, [dict(center_id="c", lon=0.1, lat=0.1)], 50_000.0),
+        "grid": sj.spatial_join_grid(a, b, res=7, dist_m=50_000.0, salt_threshold=None),
+        "salted grid": sj.spatial_join_grid(a, b, res=7, dist_m=50_000.0, salt_threshold=1),
+        "spacetime": sj.spatiotemporal_join_grid(a, b, res=7, dist_m=50_000.0),
+    }
+    for name, j in joins.items():
+        assert j.count() == 1, name
+        plan = j._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, name
 
-    a = pd.DataFrame({"doc_id": ["a"], "lon": [0.0], "lat": [0.0]})
-    b = pd.DataFrame({"event_id": ["b"], "lon": [0.1], "lat": [0.1]})
-    j = sj.spatial_join_grid(
-        spark.createDataFrame(a), spark.createDataFrame(b),
-        res=7, dist_m=50_000.0, unique_ids=True, salt_threshold=None,
-    )
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("hav(") == 1
+
+def _destinations(lon, lat, d_m, bearings_deg):
+    """Points ``d_m`` from (lon, lat) along each bearing (spherical direct
+    problem), longitudes wrapped into [-180, 180)."""
+    phi, lam = np.radians(lat), np.radians(lon)
+    th = np.radians(bearings_deg)
+    dl = d_m / kernels.EARTH_RADIUS_M
+    phi2 = np.arcsin(np.clip(
+        np.sin(phi) * np.cos(dl) + np.cos(phi) * np.sin(dl) * np.cos(th), -1.0, 1.0))
+    lam2 = lam + np.arctan2(np.sin(th) * np.sin(dl) * np.cos(phi),
+                            np.cos(dl) - np.sin(phi) * np.sin(phi2))
+    return (np.degrees(lam2) + 180.0) % 360.0 - 180.0, np.degrees(phi2)
+
+
+def _awkward_points(res):
+    """Points on cell seams (both axes, at several latitudes), on the
+    antimeridian and within 1° of either pole."""
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    lon = [-180.0 + k * w for k in (1, n // 3, n // 2, n - 1)] + [180.0, -180.0, 179.9999999]
+    pts = [(x, y) for x in lon for y in (0.0, -90.0 + 5 * h, 45.0, -61.3)]
+    pts += [(x, 10.0 + 0.5 * h) for x in (0.5 * w, -180.0 + 0.5 * w)]  # mid-cell
+    pts += [(x, y) for x in (0.0, 73.1, 179.95, -180.0)
+            for y in (89.0, 89.5, 89.99, 90.0, -89.2, -90.0)]
+    return np.array(pts)
+
+
+@pytest.mark.parametrize("res,dist_m", [(8, 50_000.0), (6, 200_000.0)])
+def test_ring_cover_complete_on_seams_antimeridian_poles(spark, res, dist_m):
+    """Every cell holding a point within ``dist_m`` of a left row is in the
+    row's k-ring — for rows on cell seams, on the antimeridian and within
+    1° of a pole — and the grid and space-time joins equal a brute-force
+    haversine oracle on partners planted just inside and just outside
+    ``dist_m`` in 48 directions."""
+    from geomesa_spark import cells as c
+
+    left = _awkward_points(res)
+    bearings = np.arange(0.0, 360.0, 7.5)
+    ring = {
+        (r["i"], r["cell"])
+        for r in sj._ring_cover(spark.createDataFrame(pd.DataFrame(
+            {"i": np.arange(len(left)), "lon": left[:, 0], "lat": left[:, 1]})), res, dist_m
+        ).collect()
+    }
+    for i, (x, y) in enumerate(left):
+        for f in (0.25, 0.999999):
+            dx, dy = _destinations(x, y, f * dist_m, bearings)
+            need = set(c.encode(dx, dy, res).tolist())
+            assert all((i, cell) in ring for cell in need), (x, y, f)
+
+    rlon, rlat = [], []
+    for x, y in left:
+        for f in (1 - 1e-6, 1 + 1e-6):
+            dx, dy = _destinations(x, y, f * dist_m, bearings)
+            rlon.append(dx)
+            rlat.append(dy)
+    rlon, rlat = np.concatenate(rlon), np.concatenate(rlat)
+    ts = pd.Timestamp("2024-03-01 00:00:00")
+    a = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": np.arange(len(left)), "lon": left[:, 0], "lat": left[:, 1], "ts": ts}))
+    b = spark.createDataFrame(pd.DataFrame(
+        {"event_id": np.arange(len(rlon)), "lon": rlon, "lat": rlat, "ts": ts}))
+    d = kernels.haversine_m(left[:, :1], left[:, 1:], rlon[None, :], rlat[None, :])
+    exp = set(zip(*(v.tolist() for v in np.nonzero(d <= dist_m))))
+    assert len(exp) >= len(left) * len(bearings)  # every planted inside partner
+    for j in (
+        sj.spatial_join_grid(a, b, res=res, dist_m=dist_m, salt_threshold=None),
+        sj.spatiotemporal_join_grid(a, b, res=res, dist_m=dist_m, max_dt_s=60),
+    ):
+        got = {(r["doc_id"], r["event_id"]) for r in j.select("doc_id", "event_id").collect()}
+        assert got == exp, (sorted(exp - got)[:5], sorted(got - exp)[:5])

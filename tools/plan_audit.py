@@ -97,12 +97,22 @@ def main() -> None:
         q.q_spatial_join_rect_intersects(spark, sf_dir),
     )
 
+    plans["st_dwithin_centers"] = (
+        "Want: zero shuffle exchange (unique_ids path): scan -> codegen "
+        "cell -> BroadcastHashJoin on the center cover, whose rows carry "
+        "the center's (clon, clat) -> haversine refine as a JVM "
+        "expression; no Python eval node.",
+        plan_of(q.q_st_dwithin_centers(spark, sf_dir)),
+        q.q_st_dwithin_centers(spark, sf_dir),
+    )
+
     plans["spacetime_join"] = (
         "Want: exactly two shuffle Exchanges (one per side, hashing the "
         "composite (cell, tbin) key), one join, NO dedupe exchange after "
         "it (unique_ids split-explode: ring cells left-only, +/-1 bins "
         "right-only, so a pair collides on exactly one key), haversine "
-        "+ |dt| refine above the join.",
+        "+ |dt| refine above the join, ring cover and refine in the JVM "
+        "(no Python eval node).",
         plan_of(q.q_spacetime_join(spark, sf_dir)),
         q.q_spacetime_join(spark, sf_dir),
     )
@@ -274,24 +284,21 @@ def main() -> None:
             f"Exchanges (want <=2: one per side on the composite key)"
         )
 
-    # REGRESSION GUARD: the Z3 query path is JVM-only — pruned scan, then
-    # the exact refine as a Catalyst expression over the query polygon's
-    # edge literal.  A Python eval node means the refine went back to an
-    # Arrow UDF and every candidate crosses the Python boundary again.
-    z3_text = plans["z3_bbox_time"][1]
-    if "ArrowEvalPython" in z3_text or "BatchEvalPython" in z3_text:
-        sys.exit(
-            "PLAN REGRESSION: z3_bbox_time has a Python eval node (want: "
-            "JVM-only pruned scan + exact refine)"
-        )
-    # ... and so is the general broadcast polygon join: its exact refine is
-    # the flagship's edge broadcast + Catalyst PIP, not an Arrow UDF.
-    rect_text = plans["spatial_join_rect_intersects"][1]
-    if "ArrowEvalPython" in rect_text or "BatchEvalPython" in rect_text:
-        sys.exit(
-            "PLAN REGRESSION: spatial_join_rect_intersects has a Python eval "
-            "node (want: JVM-only cover join + exact refine)"
-        )
+    # REGRESSION GUARD: these plans are JVM-only.  The Z3 query path and
+    # the general broadcast polygon join refine with Catalyst PIP over the
+    # polygon's edges; the distance joins build their ring cover
+    # (sequence/pmod explode) and refine with the haversine SQL, the
+    # dwithin cover rows carrying each center's coordinates.  A Python
+    # eval node means a step went back to an Arrow UDF and every candidate
+    # crosses the Python boundary again.
+    for name in ("z3_bbox_time", "spatial_join_rect_intersects", "st_dwithin_centers",
+                 "spacetime_join"):
+        text = plans[name][1]
+        if "ArrowEvalPython" in text or "BatchEvalPython" in text:
+            sys.exit(
+                f"PLAN REGRESSION: {name} has a Python eval node (want: a "
+                "JVM-only cover, scan and exact refine)"
+            )
 
     # REGRESSION GUARD (round-2 JIT discovery): the Morton cell encode must
     # stay a chain of small projections — expression collapse inlines the
