@@ -745,43 +745,39 @@ def q_lang_id(spark, sf_dir):
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
-    """ORACLE-BACKED (round-5 verdict item 4 — was rows-only): the
-    character-shingle MinHash Python tier on the md5 basis (h = first 15
-    hex chars of md5(shingle), sig_i = min(h ⊕ md5(i)), all values < 2^60
-    so signed/unsigned min agree) — DuckDB reruns the identical shingle →
-    signature → band → verify pipeline.  The xxhash tier
-    (dedup.minhash_lsh_pairs) stays covered by the planted-pair pytest
-    suite."""
+    """ORACLE-BACKED character-shingle MinHash (dedup.minhash_lsh_pairs)
+    on the md5 basis (h = first 15 hex chars of md5(shingle), sig_i =
+    min(h ⊕ md5(i)), all values < 2^60 so signed/unsigned min agree) —
+    DuckDB reruns the identical shingle → signature → band → verify
+    pipeline."""
     from .operators import dedup
 
     d = _t(spark, sf_dir, "documents").withColumn("doc_id_s", F.col("doc_id").cast("string"))
-    return dedup.minhash_lsh_pairs_md5(
+    return dedup.minhash_lsh_pairs(
         d, id_col="doc_id_s", num_perm=16, bands=4, jaccard_threshold=0.5
     )
 
 
 def q_simhash_pairs(spark, sf_dir):
-    """ORACLE-BACKED (round-5 verdict item 4 — was rows-only): 64-bit
-    SimHash Hamming-ball pairs on the md5 basis — the Arrow/numpy kernel
-    computes bit-for-bit what dedup.simhash_values_jvm derives from md5
-    hex groups, so DuckDB's brute-force n² over the same hashes matches
-    exactly (the 5-block pigeonhole join is complete for hamming ≤ 4).
-    The crc32 tier (dedup.simhash_pairs) stays pytest-covered."""
+    """ORACLE-BACKED 64-bit SimHash Hamming-ball pairs
+    (dedup.simhash_pairs_jvm: md5 token hashes, all-JVM).  With 5 blocks
+    the pigeonhole join is complete for hamming ≤ 4, so DuckDB's
+    brute-force n² over the same md5-derived hashes matches exactly."""
     from .operators import dedup
 
     d = _t(spark, sf_dir, "documents").withColumn("doc_id_s", F.col("doc_id").cast("string"))
-    return dedup.simhash_pairs_md5(d, id_col="doc_id_s", max_hamming=4)
+    return dedup.simhash_pairs_jvm(
+        d, id_col="doc_id_s", n_bits=64, n_blocks=5, max_hamming=4
+    ).select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), "hamming")
 
 
 def q_embedding_near_dup(spark, sf_dir):
-    """ORACLE-BACKED (round-3 verdict item 6 — was rows-only): cosine
-    near-dup via sign-LSH over integer-micro-quantized vectors with
-    md5-derived ±1 hyperplanes and a bigint τ² verify — every step plain
-    SQL on DuckDB, bit-identical both engines.  τ² = 81/400 (τ = 0.45)
-    sits just under the driver table's max pairwise cosine (~0.49), so
-    the green row exercises the MATCH path, not the empty path.  The
-    Gaussian-plane float tier (dedup.embedding_near_dup) stays covered by
-    the planted-pair pytest suite."""
+    """ORACLE-BACKED cosine near-dup (dedup.embedding_near_dup_exact):
+    sign-LSH over integer-micro-quantized vectors with md5-derived ±1
+    hyperplanes and a bigint τ² verify — every step plain SQL on DuckDB,
+    bit-identical both engines.  τ² = 81/400 (τ = 0.45) sits just under
+    the embeddings table's max pairwise cosine (~0.49), so the green row
+    exercises the MATCH path, not the empty path."""
     from .operators import dedup
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1668,7 +1664,7 @@ def _minhash_md5_sql(n_sigs: int = 12, n_bands: int = 4, pct: int = 50) -> str:
 def _simhash_md5_sql(n_bits: int = 16, max_hamming: int = 3) -> str:
     # bit j derives from hex group j // 16 of md5(token) — mirrors
     # dedup.simhash_values_jvm exactly (DuckDB BIGINT caps this twin at
-    # n_bits ≤ 62; the 64-bit Spark tier is pytest-verified instead)
+    # n_bits ≤ 62; `_simhash64_md5_sql` is the 64-bit twin)
     n_groups = (n_bits + 15) // 16
 
     def hex4(g: int) -> str:
@@ -1711,7 +1707,7 @@ def _simhash_md5_sql(n_bits: int = 16, max_hamming: int = 3) -> str:
 def _minhash_shingle_sql(
     num_perm: int = 16, bands: int = 4, k: int = 5, pct: int = 50
 ) -> str:
-    """DuckDB twin of dedup.minhash_lsh_pairs_md5: distinct k-char shingles
+    """DuckDB twin of dedup.minhash_lsh_pairs: distinct k-char shingles
     of lower(text) (space-padded when shorter than k) → h = first-15-hex of
     md5 → sig_i = min(xor(h, md5(i))) → band-slice equality candidates →
     matching-slot verify.  Identical band content ⟺ identical Spark bucket
@@ -1764,7 +1760,7 @@ def _minhash_shingle_sql(
 
 
 def _simhash64_md5_sql(max_hamming: int = 4) -> str:
-    """DuckDB twin of dedup.simhash_pairs_md5: the FULL 64-bit md5-basis
+    """DuckDB twin of dedup.simhash_pairs_jvm at 64 bits: the FULL md5-basis
     SimHash (true bit ops — xor/>>/&/bit_count — where the 16-bit twin
     `_simhash_md5_sql` uses division and caps at 62 bits) and a
     brute-force n² Hamming join; the blocked Spark plan must equal it by

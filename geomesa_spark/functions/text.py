@@ -113,12 +113,26 @@ def lang_id_udf():
     return lang
 
 
+_FNV_PRIME = np.uint64(1099511628211)
+
+
+def _shingle_hashes(text: str, k: int) -> np.ndarray:
+    """All k-byte-shingle hashes of a string, fully vectorized: polynomial
+    hash over the utf-8 bytes with uint64 wraparound.  DETERMINISTIC across
+    processes (never Python's salted ``hash``)."""
+    b = np.frombuffer(text.encode("utf-8", "ignore"), dtype=np.uint8)
+    if len(b) < k:
+        b = np.pad(b, (0, k - len(b)), constant_values=32)
+    win = np.lib.stride_tricks.sliding_window_view(b, k).astype(np.uint64)
+    powers = _FNV_PRIME ** np.arange(k, dtype=np.uint64)  # wraps mod 2^64
+    h = (win * powers[None, :]).sum(axis=1, dtype=np.uint64)
+    return np.unique(h >> np.uint64(3))  # drop low bits (power-pattern bias)
+
+
 def fingerprint_udf(window: int = 16):
     """64-bit document fingerprint: min of rolling polynomial hashes over
     byte windows (winnowing-style single fingerprint) — content-based,
     whitespace-robust enough for near-identical detection, deterministic."""
-    from ..operators.dedup import _shingle_hashes
-
     @F.pandas_udf("long")
     def fp(texts: pd.Series) -> pd.Series:
         out = np.zeros(len(texts), dtype=np.int64)
@@ -183,8 +197,7 @@ def winnow_fingerprints(
     """FULL winnowing (Schleimer/Wilkerson/Aiken, SIGMOD'03): the distinct
     per-window minima of character k-gram hashes — the plagiarism-grade
     fingerprint SET, not just a global min (that is :func:`fingerprint_udf`,
-    the numpy throughput tier; this is the all-JVM, oracle-portable tier,
-    same two-tier pattern as MinHash/SimHash in ``operators/dedup``).
+    the numpy throughput tier; this is the all-JVM, oracle-portable tier).
 
     Guarantee: any shared substring of length >= w + k - 1 between two
     documents yields at least one shared fingerprint.

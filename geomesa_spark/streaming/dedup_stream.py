@@ -11,8 +11,9 @@ mirroring the batch design:
   the watermark delay instead of growing forever (the documented failure
   mode of plain streaming ``dropDuplicates``).
 - :func:`stream_near_dup` — SimHash near-dup with the SAME pigeonhole
-  blocking as the batch tier (``dedup.simhash_pairs_jvm``): each doc's
-  64-bit JVM simhash splits into ``n_blocks`` block keys; state lives PER
+  blocking as the batch tier (``dedup.simhash_pairs_jvm``, block keys
+  from the same ``dedup._simhash_block_keys``): each doc's 64-bit JVM
+  simhash splits into ``n_blocks`` block keys; state lives PER
   (block, bval) group via ``applyInPandasWithState``, so an arriving doc
   only compares against prior docs sharing ≥1 block — with
   ``max_hamming < n_blocks`` the pigeonhole lemma makes that candidate
@@ -98,10 +99,8 @@ def stream_near_dup(
     intra-batch pairs emit deterministically (earlier doc = match_id).
     """
     assert max_hamming < n_blocks, "pigeonhole completeness requires h < blocks"
-    from ..operators.dedup import simhash_values_jvm
+    from ..operators.dedup import _simhash_block_keys, simhash_values_jvm
 
-    bits_per_block = n_bits // n_blocks
-    block_mask = (1 << bits_per_block) - 1
     ttl_ms = ttl_minutes * 60_000
 
     d = simhash_values_jvm(
@@ -111,23 +110,14 @@ def stream_near_dup(
         n_bits,
         keep_cols=("_ts_ms",),
     )
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(bl).alias("block"),
-                F.expr(
-                    f"shiftrightunsigned(simhash, {bl * bits_per_block}) & {block_mask}"
-                ).alias("bval"),
-            )
-            for bl in range(n_blocks)
-        ]
-    )
-    e = d.select("id", "simhash", "_ts_ms", F.explode(blocks).alias("bk")).select(
+    e = d.select(
+        "id", "simhash", "_ts_ms", F.explode(_simhash_block_keys(n_bits, n_blocks)).alias("bk")
+    ).select(
         "id",
         "simhash",
         "_ts_ms",
-        F.col("bk.block").alias("block"),
-        F.col("bk.bval").alias("bval"),
+        F.col("bk.band").alias("block"),
+        F.col("bk.key").alias("bval"),
     )
 
     def check(key, pdfs, state: GroupState):

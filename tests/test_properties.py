@@ -1,14 +1,16 @@
-"""Property-based tests (hypothesis) for the pure kernels — the fuzzing
-tier of the reference's test strategy (SURVEY.md §5): round-trips and
-invariants that must hold for ALL inputs, not just fixtures."""
+"""Property-based tests (hypothesis) for the pure kernels and the near-dup
+candidate join — the fuzzing tier of the reference's test strategy
+(SURVEY.md §5): round-trips and invariants that must hold for ALL inputs,
+not just fixtures.  The Spark properties run few, small examples."""
 
 import numpy as np
+import pyspark.sql.functions as F
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geomesa_spark import cells
 from geomesa_spark.geo import kernels, wkt
-from geomesa_spark.operators import xz2
+from geomesa_spark.operators import dedup, xz2
 
 lons = st.floats(min_value=-180.0, max_value=180.0, allow_nan=False)
 lats = st.floats(min_value=-90.0, max_value=90.0, allow_nan=False)
@@ -82,3 +84,59 @@ def test_vincenty_vs_haversine_bounds(lon1, lat1, lon2, lat2):
     assert v >= 0
     if h > 1000:  # relative comparison meaningless at ~0 distance
         assert abs(v - h) / h < 0.01
+
+
+band_keys = st.lists(
+    st.tuples(st.integers(0, 2), st.integers(0, 3)), max_size=4
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(st.dictionaries(st.integers(0, 40), band_keys, max_size=12))
+def test_candidate_pairs_equal_bruteforce(spark, keyed):
+    """The shared LSH self-join returns exactly the id pairs that share a
+    (band, key), each once, ordered id_a < id_b, with both sides' carried
+    columns attached."""
+    rows = [(i, [{"band": b, "key": k} for b, k in ks], i * 10) for i, ks in keyed.items()]
+    df = spark.createDataFrame(rows, "id long, keys array<struct<band:int,key:long>>, v long")
+    got = [tuple(r) for r in dedup._candidate_pairs(df, F.col("keys"), carry=("v",)).collect()]
+    want = {
+        (a, b, 10 * a, 10 * b)
+        for a in keyed for b in keyed
+        if a < b and set(keyed[a]) & set(keyed[b])
+    }
+    assert len(got) == len(set(got)) and set(got) == want
+
+
+words = st.sampled_from("ant bee cat dog eel fox gnu hen ibis jay kiwi lark".split())
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(st.lists(words, min_size=1, max_size=6), min_size=20, max_size=30),
+    st.sampled_from([(16, 2), (16, 4), (64, 5)]),
+)
+def test_simhash_pairs_equal_bruteforce_hamming(spark, docs, bits_blocks):
+    """For max_hamming < n_blocks the pigeonhole block join is complete:
+    the JVM SimHash pairs equal a numpy brute-force Hamming <= h join over
+    the same hashes.  h = n_blocks - 1 is the binding case (the candidate
+    set does not depend on h, the exact verify does)."""
+    n_bits, n_blocks = bits_blocks
+    h = n_blocks - 1
+    df = spark.createDataFrame(
+        [(f"d{i:02d}", " ".join(ws)) for i, ws in enumerate(docs)], "doc_id string, text string"
+    )
+    hashes = {
+        r["id"]: r["simhash"] for r in dedup.simhash_values_jvm(df, "text", "doc_id", n_bits).collect()
+    }
+    ids = sorted(hashes)
+    vals = np.array([hashes[i] for i in ids], dtype=np.int64).view(np.uint64)
+    xor = vals[:, None] ^ vals[None, :]
+    ham = np.unpackbits(xor.view(np.uint8).reshape(len(ids), len(ids), 8), axis=2).sum(axis=2)
+    want = {
+        (ids[a], ids[b], int(ham[a, b]))
+        for a in range(len(ids)) for b in range(a + 1, len(ids))
+        if ham[a, b] <= h
+    }
+    got = dedup.simhash_pairs_jvm(df, n_bits=n_bits, n_blocks=n_blocks, max_hamming=h).collect()
+    assert {tuple(r) for r in got} == want and len(got) == len(want)

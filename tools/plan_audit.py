@@ -176,6 +176,16 @@ def main() -> None:
         kde,
     )
 
+    for name in ("simhash_pairs", "simhash_md5_pairs", "minhash_md5_pairs"):
+        nd = getattr(q, f"q_{name}")(spark, sf_dir)
+        plans[name] = (
+            "Want: an all-JVM near-dup plan: md5 hashes in projections, "
+            "explode to (band, key), one self-join on (band, key), "
+            "pair dedupe and exact verify above it; no Python eval node.",
+            plan_of(nd),
+            nd,
+        )
+
     import re
 
     def combined_count(text: str, keys: str) -> bool:
@@ -288,16 +298,18 @@ def main() -> None:
     # the general broadcast polygon join refine with Catalyst PIP over the
     # polygon's edges; the distance joins build their ring cover
     # (sequence/pmod explode) and refine with the haversine SQL, the
-    # dwithin cover rows carrying each center's coordinates.  A Python
-    # eval node means a step went back to an Arrow UDF and every candidate
-    # crosses the Python boundary again.
+    # dwithin cover rows carrying each center's coordinates; the SimHash
+    # and token-MinHash near-dup plans hash with md5 in projections.  A
+    # Python eval node means a step went back to an Arrow UDF and every
+    # row or candidate crosses the Python boundary again.
     for name in ("z3_bbox_time", "spatial_join_rect_intersects", "st_dwithin_centers",
-                 "spacetime_join"):
+                 "spacetime_join", "simhash_pairs", "simhash_md5_pairs",
+                 "minhash_md5_pairs"):
         text = plans[name][1]
         if "ArrowEvalPython" in text or "BatchEvalPython" in text:
             sys.exit(
-                f"PLAN REGRESSION: {name} has a Python eval node (want: a "
-                "JVM-only cover, scan and exact refine)"
+                f"PLAN REGRESSION: {name} has a Python eval node (want: "
+                "every step in the JVM)"
             )
 
     # REGRESSION GUARD (round-2 JIT discovery): the Morton cell encode must

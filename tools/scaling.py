@@ -308,7 +308,7 @@ JOBS: dict[str, Job] = {
                 "paragraph dedup with survivorship"),
     "minhash": Job(15_000, _pipe_docs, lambda docs: dedup.minhash_lsh_pairs(
         docs, num_perm=32, bands=8), _rows, "gopher",
-        "MinHash + LSH candidate pairs (Arrow signatures)"),
+        "shingle MinHash + LSH candidate pairs (md5 Arrow signatures)"),
 }
 
 
