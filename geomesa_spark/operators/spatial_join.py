@@ -403,10 +403,11 @@ def extract_geo_points(docs: DataFrame) -> DataFrame:
     Extraction is pure JVM (regexp) and whole-stage-codegen friendly, as
     is the cell encode that follows it (:func:`add_cell_column`).
     """
-    g = docs.withColumn(
-        "_geo_wkts", F.expr("transform(filter(spans, s -> s.kind = 'geo'), s -> s.text)")
-    )
-    g = g.select("*", F.posexplode("_geo_wkts").alias("geo_pos", "_geo_wkt")).drop("_geo_wkts")
+    # explode the expression itself: exploding a projected array column
+    # makes Catalyst infer size(col) > 0 below the explode and push it
+    # through the projection, which evaluates the array a second time
+    geo_wkts = F.expr("transform(filter(spans, s -> s.kind = 'geo'), s -> s.text)")
+    g = docs.select("*", F.posexplode(geo_wkts).alias("geo_pos", "_geo_wkt"))
     # two regexp_extract calls run the anchored match twice, but the A/B
     # measured alternatives slower: a single regexp_replace("$1\x01$2") +
     # split pays replacement-string allocation, a string != compare and a
@@ -545,8 +546,13 @@ def spatial_join_documents(
         f"'lon', TRY_CAST(nullif(regexp_extract(s.text, '{sql_re}', 1), '') AS DOUBLE), "
         f"'lat', TRY_CAST(nullif(regexp_extract(s.text, '{sql_re}', 2), '') AS DOUBLE)))"
     )
+    # the refine below reads _lls again, so it stays a column; the OUTER
+    # posexplode gets no inferred size(_lls) > 0 filter, which Catalyst
+    # would push below the projection and so run every span's regexp
+    # extraction twice.  A doc without a geo span yields one NULL row,
+    # which the NOT NULL filter drops.
     g = docs.withColumn("_lls", F.expr(lls))
-    g = g.select("*", F.posexplode("_lls").alias("geo_pos", "_ll"))
+    g = g.select("*", F.posexplode_outer("_lls").alias("geo_pos", "_ll"))
     g = (
         g.withColumn("lon", F.col("_ll.lon"))
         .withColumn("lat", F.col("_ll.lat"))

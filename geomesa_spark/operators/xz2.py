@@ -205,18 +205,19 @@ def encode_geometries(
     ``with_bbox`` — the joins' codegen prefilter).  ≤4 rows per geometry
     (≤8 if antimeridian-split).  Rows with unparseable geometry drop out
     (inner explode of [])."""
-    keyed = geoms.withColumn(
-        "_xz_keys", geometry_keys_udf(max_res, with_bbox)(F.col(wkt_col))
-    )
+    # explode the UDF call itself: exploding a projected key column makes
+    # Catalyst infer size(keys) > 0 below the explode and push it through
+    # the projection, which runs the keys UDF a second time
+    keys = geometry_keys_udf(max_res, with_bbox)(F.col(wkt_col))
     d = (
-        keyed.select("*", F.explode("_xz_keys").alias("_xz"))
+        geoms.select("*", F.explode(keys).alias("_xz"))
         .withColumn("xz_level", F.col("_xz.xz_level"))
         .withColumn("xz_cell", F.col("_xz.xz_cell"))
     )
     if with_bbox:
         for c in ("xz_minx", "xz_miny", "xz_maxx", "xz_maxy"):
             d = d.withColumn(c, F.col(f"_xz.{c}"))
-    return d.drop("_xz", "_xz_keys")
+    return d.drop("_xz")
 
 
 def point_level_keys(
@@ -548,39 +549,36 @@ def xz2_join_geoms(
 # ---------------------------------------------------------------------------
 
 def write_partitioned_geoms(
-    geoms: DataFrame, path: str, wkt_col: str = "wkt",
-    max_res: int = DEFAULT_MAX_RES, bucket_res: int = 4, mode: str = "overwrite",
-    time_col: str | None = None, time_bin_days: int | None = None,
+    geoms: DataFrame, path: str, max_res: int = DEFAULT_MAX_RES,
+    mode: str = "overwrite", time_col: str | None = None,
 ) -> None:
-    """Persist a geometry table in an XZ2-keyed hive layout:
-    ``xz_level=L/xz_bucket=B`` directories, sorted by ``xz_cell`` within
-    files.  ``xz_bucket`` is the key cell coarsened to ``bucket_res`` for
-    levels below it (levels coarser than bucket_res use the cell itself —
-    those layers hold the handful of continent-scale features).  A row is
-    written once PER KEY (≤4×), the storage analogue of GeoMesa storing
-    one XZ2 row per feature: reads prune by (level, bucket) and dedupe by
-    id is unnecessary because scans refine + each key cell is distinct.
+    """Persist a geometry table (its geometry in the ``wkt`` column) in an
+    XZ2-keyed hive layout: ``xz_level=L/xz_bucket=B`` directories, sorted
+    by ``xz_cell`` within files.  ``xz_bucket`` is the key cell coarsened
+    to ``planner.BUCKET_RES`` for finer levels (levels up to it use the
+    cell itself — those layers hold the handful of continent-scale
+    features).  A row is written once PER KEY (≤4×), the storage analogue
+    of GeoMesa storing one XZ2 row per feature: reads prune by (level,
+    bucket), and :func:`feature_view` gives one row per feature.
 
     With ``time_col`` the layout becomes the XZ3 analogue (GeoMesa
     ``curve/XZ3SFC.scala``: binned time ⊕ XZ2 for non-point + time):
     hive dirs are ``time_bin=W/xz_level=L/xz_bucket=B`` so "this region,
     last week" prunes the time dimension BEFORE the spatial one."""
-    from ..plans.planner import TIME_BIN_DAYS, _forget_layout, time_bin_expr
+    from ..plans.planner import BUCKET_RES, _forget_layout, time_bin_expr
 
-    d = encode_geometries(geoms, wkt_col, max_res)
+    d = encode_geometries(geoms, "wkt", max_res)
     d = d.withColumn(
         "xz_bucket",
-        F.when(F.col("xz_level") <= bucket_res, F.col("xz_cell")).otherwise(
+        F.when(F.col("xz_level") <= BUCKET_RES, F.col("xz_cell")).otherwise(
             F.expr(
-                f"CAST(shiftrightunsigned(xz_cell, (xz_level - {bucket_res}) * 2) AS LONG)"
+                f"CAST(shiftrightunsigned(xz_cell, (xz_level - {BUCKET_RES}) * 2) AS LONG)"
             )
         ),
     )
     part_cols = ["xz_level", "xz_bucket"]
     if time_col is not None:
-        d = d.withColumn(
-            "time_bin", time_bin_expr(time_col, time_bin_days or TIME_BIN_DAYS)
-        )
+        d = d.withColumn("time_bin", time_bin_expr(time_col))
         part_cols = ["time_bin", "xz_level", "xz_bucket"]
     (
         d.repartition(*[F.col(c) for c in part_cols])
@@ -592,37 +590,35 @@ def write_partitioned_geoms(
     _forget_layout(path)
 
 
-def xz_prune_condition(
-    lon0: float, lat0: float, lon1: float, lat1: float,
-    max_res: int = DEFAULT_MAX_RES, bucket_res: int = 4,
-) -> F.Column:
+def xz_prune_condition(lon0: float, lat0: float, lon1: float, lat1: float) -> F.Column:
     """(xz_level, xz_bucket) partition-prune disjunction for a query bbox:
-    for each level, the buckets whose cells can intersect the bbox.  All
-    partition-column comparisons, so Catalyst directory-prunes before any
-    row is read.  Complete: a stored geometry intersecting the query has
-    ≥1 key cell intersecting the query bbox (key cells cover the stored
-    geometry), and that key cell's ancestor at r lies in the bbox cover
-    at r.  Shared by :func:`scan_partitioned_geoms` and the SQL pushdown
-    (``plans.sql_rewrite.SqlEngine.register_geom_parquet``)."""
-    terms = []
-    for lv in range(0, max_res + 1):
-        r = min(lv, bucket_res)
+    one ``xz_level = L AND xz_bucket IN cover_L`` term per level L below
+    ``BUCKET_RES``, and one ``xz_level >= BUCKET_RES AND xz_bucket IN
+    cover_BUCKET_RES`` term shared by every finer level (their buckets are
+    ancestors at BUCKET_RES).  All partition-column comparisons, so
+    Catalyst directory-prunes before any row is read.  Complete: a stored
+    geometry intersecting the query has ≥1 key cell intersecting the query
+    bbox (key cells cover the stored geometry), and that key cell's
+    ancestor at r lies in the bbox cover at r.  The SQL pushdown rule
+    (``jvm/.../SpatialFilterRule.java``) injects the same terms beneath
+    :func:`feature_view`."""
+    from ..plans.planner import BUCKET_RES
+
+    def cover(r: int) -> list[int]:
         cov, rr = cells.cover_bbox(lon0, lat0, lon1, lat1, r)
         cov = np.unique(cells.parent(cov, rr - r)) if rr > r else cov
-        buckets = sorted(int(b) for b in cov)
-        terms.append(
-            (F.col("xz_level") == lv) & F.col("xz_bucket").isin(buckets)
-        )
-    cond = terms[0]
-    for t in terms[1:]:
-        cond = cond | t
+        return sorted(int(b) for b in cov)
+
+    level, bucket = F.col("xz_level"), F.col("xz_bucket")
+    cond = (level >= BUCKET_RES) & bucket.isin(cover(BUCKET_RES))
+    for lv in range(BUCKET_RES):
+        cond = cond | ((level == lv) & bucket.isin(cover(lv)))
     return cond
 
 
 def scan_partitioned_geoms(
     spark: SparkSession, path: str, query_wkt: str,
-    max_res: int = DEFAULT_MAX_RES, bucket_res: int = 4,
-    time_range: tuple[str, str] | None = None, time_bin_days: int | None = None,
+    time_range: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Pruned candidate scan over an XZ2 layout: for each level, keep only
     buckets whose cells can intersect the query bbox (see
@@ -634,27 +630,37 @@ def scan_partitioned_geoms(
     ``time_range`` (against an XZ3 layout with ``time_bin=`` dirs) adds a
     time_bin BETWEEN term — the time dimension prunes too; the caller
     applies the exact fine-grained timestamp filter."""
-    from ..plans.planner import TIME_BIN_DAYS, _open_layout, extract_bounds
+    from ..plans.planner import _open_layout, extract_bounds, time_bin_bounds
 
-    lon0, lat0, lon1, lat1 = extract_bounds(query_wkt)
-    cond = xz_prune_condition(lon0, lat0, lon1, lat1, max_res, bucket_res)
-    df = _open_layout(spark, path).filter(cond)
+    df = _open_layout(spark, path).filter(xz_prune_condition(*extract_bounds(query_wkt)))
     if time_range is not None and "time_bin" in df.columns:
-        width = 86400 * (time_bin_days or TIME_BIN_DAYS)
-        t0 = int(pd.Timestamp(time_range[0], tz="UTC").timestamp())
-        t1 = int(pd.Timestamp(time_range[1], tz="UTC").timestamp())
-        df = df.filter(
-            (F.col("time_bin") >= t0 // width) & (F.col("time_bin") <= t1 // width)
-        )
+        b0, b1 = time_bin_bounds(time_range)
+        df = df.filter((F.col("time_bin") >= b0) & (F.col("time_bin") <= b1))
     return df
+
+
+#: the XZ layouts' key and bin columns, none of which a feature row carries
+_KEY_COLS = ("xz_level", "xz_cell", "xz_bucket", "time_bin")
+
+
+def feature_view(spark: SparkSession, path: str, id_col: str = "geom_id") -> DataFrame:
+    """The feature table of an XZ2/XZ3 layout: key and bin columns dropped,
+    one row per ``id_col``.  The layout stores each feature once per key
+    (≤4×); a feature's key rows are identical once the key columns are
+    dropped, so the dedupe is value-stable.  Register it as a view and the
+    SQL pushdown rule prunes the (level, bucket) and time dirs beneath the
+    dedupe from literal predicates on ``st_geomFromWKT(wkt)`` and on the
+    timestamp column."""
+    from ..plans.planner import _open_layout
+
+    df = _open_layout(spark, path)
+    return df.drop(*[c for c in _KEY_COLS if c in df.columns]).dropDuplicates([id_col])
 
 
 def query_geoms(
     spark: SparkSession, path: str, query_wkt: str, predicate: str = "intersects",
     id_col: str = "geom_id", wkt_col: str = "wkt",
-    max_res: int = DEFAULT_MAX_RES,
     time_col: str | None = None, time_range: tuple[str, str] | None = None,
-    time_bin_days: int | None = None,
 ) -> DataFrame:
     """Region query over a stored geometry table: pruned scan → exact
     geometry-geometry refine (Arrow-batched, per-row relate on the pruned
@@ -675,10 +681,7 @@ def query_geoms(
             "time_range requires time_col: the partition prune is "
             "bin-granular and the exact [t0, t1) refine reads time_col"
         )
-    cand = scan_partitioned_geoms(
-        spark, path, query_wkt, max_res,
-        time_range=time_range, time_bin_days=time_bin_days,
-    )
+    cand = scan_partitioned_geoms(spark, path, query_wkt, time_range=time_range)
     if time_col is not None and time_range is not None:
         cand = cand.filter(
             (F.col(time_col) >= F.lit(time_range[0]).cast("timestamp"))
@@ -704,6 +707,6 @@ def query_geoms(
 
     return (
         cand.filter(refine(F.col(wkt_col)))
-        .drop("xz_level", "xz_cell", "xz_bucket", "time_bin")
+        .drop(*_KEY_COLS)
         .dropDuplicates([id_col])
     )

@@ -42,6 +42,8 @@ from ..operators.spatial_join import PolygonSet, _morton_projections
 
 #: bucket resolution: 4 → up to 256 directories; coarse enough for sane
 #: file counts, fine enough that a city-scale query prunes >99% of data.
+#: A constant of the layout format, as is :data:`TIME_BIN_DAYS`: the SQL
+#: pushdown rule (``jvm/.../SpatialFilterRule.java``) assumes both.
 BUCKET_RES = 4
 
 
@@ -135,11 +137,17 @@ def choose_resolution(
 TIME_BIN_DAYS = 7
 
 
-def time_bin_expr(time_col: str, bin_days: int = TIME_BIN_DAYS) -> F.Column:
-    """Epoch-day bin index (UTC), floor division — pure JVM."""
-    return F.floor(F.unix_timestamp(F.col(time_col)) / F.lit(86400 * bin_days)).cast(
+def time_bin_expr(time_col: str) -> F.Column:
+    """Epoch-week bin index (UTC), floor division — pure JVM."""
+    return F.floor(F.unix_timestamp(F.col(time_col)) / F.lit(86400 * TIME_BIN_DAYS)).cast(
         "long"
     )
+
+
+def time_bin_bounds(time_range: tuple[str, str]) -> tuple[int, int]:
+    """The first and last time bin a ``[t0, t1]`` window touches."""
+    width = 86400 * TIME_BIN_DAYS
+    return tuple(int(pd.Timestamp(t).timestamp()) // width for t in time_range)
 
 
 #: path -> (validity token, schema) of each layout a query has opened.
@@ -192,27 +200,26 @@ def _forget_layout(path: str) -> None:
     _LAYOUT_SCHEMAS.pop(path, None)
 
 
-def _layout_columns(points: DataFrame, res: int, bucket_res: int = BUCKET_RES) -> DataFrame:
+def _layout_columns(points: DataFrame, res: int) -> DataFrame:
     """``points`` plus the cell layout's two keys: ``cell``, the Morton id
     at ``res`` (JVM encode; -1 for a NULL, NaN or ±inf coordinate, as
     :func:`geomesa_spark.cells.encode` gives), and ``cell_bucket``, its
-    ancestor at ``bucket_res`` (a 2·(res - bucket_res)-bit shift)."""
+    ancestor at ``BUCKET_RES`` (a 2·(res - BUCKET_RES)-bit shift)."""
     d = _morton_projections(points, res, "lon", "lat", "cell", keep_invalid=True)
     return d.withColumn(
-        "cell_bucket", F.shiftrightunsigned(F.col("cell"), 2 * (res - bucket_res))
+        "cell_bucket", F.shiftrightunsigned(F.col("cell"), 2 * (res - BUCKET_RES))
     )
 
 
 def write_partitioned(
-    points: DataFrame, path: str, res: int = 10, bucket_res: int = BUCKET_RES,
-    mode: str = "overwrite", time_col: str | None = None,
-    time_bin_days: int = TIME_BIN_DAYS,
+    points: DataFrame, path: str, res: int = 10, mode: str = "overwrite",
+    time_col: str | None = None,
 ) -> None:
     """Write a point table partitioned by ``cell_bucket`` (hive dirs) and
     sorted by ``cell`` within partitions (row-group min/max pruning).
 
     cell is the fine index key at ``res``; cell_bucket is its ancestor at
-    ``bucket_res`` (a 2·(res-bucket_res)-bit shift — cheap JVM-side once
+    ``BUCKET_RES`` (a 2·(res-BUCKET_RES)-bit shift — cheap JVM-side once
     cell exists).  ``sortWithinPartitions`` makes parquet stats tight.
 
     With ``time_col``, the layout becomes the Z3 analogue: hive dirs are
@@ -225,10 +232,10 @@ def write_partitioned(
     Python worker in the job.  Rows with a NULL, NaN or ±inf coordinate
     are kept with cell -1, as :func:`geomesa_spark.cells.encode` gives.
     """
-    d = _layout_columns(points, res, bucket_res)
+    d = _layout_columns(points, res)
     part_cols = ["cell_bucket"]
     if time_col is not None:
-        d = d.withColumn("time_bin", time_bin_expr(time_col, time_bin_days))
+        d = d.withColumn("time_bin", time_bin_expr(time_col))
         part_cols = ["time_bin", "cell_bucket"]
     (
         d.repartition(*[F.col(c) for c in part_cols])
@@ -274,7 +281,7 @@ def _merge_fine_ranges(ranges: list[tuple[int, int]], max_ranges: int) -> list[t
 
 
 def _spatial_cover(
-    geom_wkt: str, res: int, bucket_res: int, max_cells: int, max_ranges: int
+    geom_wkt: str, res: int, max_cells: int, max_ranges: int
 ) -> tuple[list[int], list[tuple[int, int]]] | None:
     """(cell_bucket list, merged fine-cell ranges) for a query geometry —
     shared by :func:`scan_partitioned` and :func:`choose_scan_strategy`.
@@ -297,10 +304,10 @@ def _spatial_cover(
         span = 2 * (res - r)
         for cc in c:
             fine_ranges.append((int(cc) << span, ((int(cc) + 1) << span) - 1))
-        if r >= bucket_res:
-            br = cells.parent(c, r - bucket_res)
+        if r >= BUCKET_RES:
+            br = cells.parent(c, r - BUCKET_RES)
         else:  # budget forced coarser than the bucket layer: enumerate children
-            span_b = 2 * (bucket_res - r)
+            span_b = 2 * (BUCKET_RES - r)
             br = (
                 np.asarray(c, dtype=np.int64)[:, None] << span_b
             ) + np.arange(1 << span_b, dtype=np.int64)[None, :]
@@ -315,10 +322,8 @@ def scan_partitioned(
     path: str,
     geom_wkt: str,
     res: int = 10,
-    bucket_res: int = BUCKET_RES,
     max_cells: int = 4096,
     time_range: tuple[str, str] | None = None,
-    time_bin_days: int = TIME_BIN_DAYS,
     max_ranges: int = 32,
 ) -> DataFrame:
     """Pruned scan: geometry → cover at the FINE resolution ``res``
@@ -338,7 +343,7 @@ def scan_partitioned(
     ``.explain(True)`` must show the bucket list under PartitionFilters
     and the cell ranges under PushedFilters.
     """
-    cover = _spatial_cover(geom_wkt, res, bucket_res, max_cells, max_ranges)
+    cover = _spatial_cover(geom_wkt, res, max_cells, max_ranges)
     if cover is None or not cover[0]:
         # unparseable or degenerate geometry covers nothing: empty scan
         # (an empty bucket list would also be invalid SQL below)
@@ -353,9 +358,7 @@ def scan_partitioned(
         )
     df = _open_layout(spark, path)
     if time_range is not None and "time_bin" in df.columns:
-        width = 86400 * time_bin_days
-        b0 = int(pd.Timestamp(time_range[0]).timestamp()) // width
-        b1 = int(pd.Timestamp(time_range[1]).timestamp()) // width
+        b0, b1 = time_bin_bounds(time_range)
         terms.append(f"time_bin >= {b0} AND time_bin <= {b1}")
     return df.filter(F.expr(" AND ".join(terms)))
 
@@ -407,19 +410,18 @@ def _exact_refine(geom_wkt: str, predicate: str) -> F.Column:
 # attribute-indexed layout (AttributeIndex analogue)
 # ---------------------------------------------------------------------------
 
-def _attr_part_value(value: str, prefix_len: int) -> str:
+def _attr_part_value(value: str) -> str:
     """The hive partition value for an attribute value: 'x' + uppercase hex
-    of the first ``prefix_len`` CHARACTERS' UTF-8 bytes.  Hex preserves
+    of the first CHARACTER's (code point's) UTF-8 bytes.  Hex preserves
     byte lexicographic order (each byte → exactly two hex digits, and
     '0'-'9A-F' is ASCII-ordered), so string RANGES map to partition-value
     ranges; the 'x' sentinel stops Spark's partition-column type inference
     from turning all-digit values like '41' into integers."""
-    return "x" + value[:prefix_len].encode("utf-8").hex().upper()
+    return "x" + value[:1].encode("utf-8").hex().upper()
 
 
 def write_attr_partitioned(
-    df: DataFrame, path: str, attr_col: str, prefix_len: int = 1,
-    date_col: str | None = None, date_bin_days: int = TIME_BIN_DAYS,
+    df: DataFrame, path: str, attr_col: str, date_col: str | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Attribute-indexed LAYOUT — the engine's answer to GeoMesa's
@@ -444,13 +446,13 @@ def write_attr_partitioned(
     GeoMesa does — the layout machinery here is type-agnostic strings.
     """
     part = F.concat(
-        F.lit("x"), F.hex(F.substring(F.col(attr_col), 1, prefix_len))
+        F.lit("x"), F.hex(F.substring(F.col(attr_col), 1, 1))
     )
     d = df.withColumn("attr_part", part)
     part_cols = ["attr_part"]
     sort_cols = [attr_col]
     if date_col is not None:
-        d = d.withColumn("date_bin", time_bin_expr(date_col, date_bin_days))
+        d = d.withColumn("date_bin", time_bin_expr(date_col))
         part_cols = ["attr_part", "date_bin"]
         sort_cols = [attr_col, date_col]
     (
@@ -470,10 +472,8 @@ def scan_attr_partitioned(
     eq: str | None = None,
     lo: str | None = None,
     hi: str | None = None,
-    prefix_len: int = 1,
     date_range: tuple[str, str] | None = None,
     date_col: str | None = None,
-    date_bin_days: int = TIME_BIN_DAYS,
 ) -> DataFrame:
     """Pruned scan over an attribute layout: equality (``eq``) or closed
     range (``lo``..``hi``) on the attribute → (a) ``attr_part`` partition
@@ -482,7 +482,7 @@ def scan_attr_partitioned(
     pruning — the layout sorts by the attribute), and with ``date_range``
     (c) ``date_bin`` directory pruning plus, when ``date_col`` is given,
     the exact half-open ``[t0, t1)`` row filter — the same contract as
-    :func:`query` for Z3.  ``prefix_len`` must match the write."""
+    :func:`query` for Z3."""
     if (eq is None) == (lo is None and hi is None):
         raise ValueError("pass exactly one of eq= or lo=/hi=")
     if date_range is not None and date_col is None:
@@ -492,24 +492,22 @@ def scan_attr_partitioned(
     df = _open_layout(spark, path)
     if eq is not None:
         df = df.filter(
-            (F.col("attr_part") == _attr_part_value(eq, prefix_len))
+            (F.col("attr_part") == _attr_part_value(eq))
             & (F.col(attr_col) == eq)
         )
     else:
         if lo is not None:
             df = df.filter(
-                (F.col("attr_part") >= _attr_part_value(lo, prefix_len))
+                (F.col("attr_part") >= _attr_part_value(lo))
                 & (F.col(attr_col) >= lo)
             )
         if hi is not None:
             df = df.filter(
-                (F.col("attr_part") <= _attr_part_value(hi, prefix_len))
+                (F.col("attr_part") <= _attr_part_value(hi))
                 & (F.col(attr_col) <= hi)
             )
     if date_range is not None and "date_bin" in df.columns:
-        width = 86400 * date_bin_days
-        b0 = int(pd.Timestamp(date_range[0]).timestamp()) // width
-        b1 = int(pd.Timestamp(date_range[1]).timestamp()) // width
+        b0, b1 = time_bin_bounds(date_range)
         df = df.filter((F.col("date_bin") >= b0) & (F.col("date_bin") <= b1))
         df = df.filter(
             (F.col(date_col) >= date_range[0]) & (F.col(date_col) < date_range[1])
@@ -566,8 +564,6 @@ def choose_scan_strategy(
     lo: str | None = None,
     hi: str | None = None,
     res: int = 10,
-    bucket_res: int = BUCKET_RES,
-    prefix_len: int = 1,
     max_cells: int = 4096,
 ) -> dict:
     """GeoMesa ``StrategyDecider`` analogue (round-5 verdict item 8): when
@@ -587,12 +583,12 @@ def choose_scan_strategy(
     "spatial_total", "attr_total"}."""
     if (eq is None) == (lo is None and hi is None):
         raise ValueError("pass exactly one of eq= or lo=/hi=")
-    cover = _spatial_cover(geom_wkt, res, bucket_res, max_cells, max_ranges=32)
+    cover = _spatial_cover(geom_wkt, res, max_cells, max_ranges=32)
     bucket_set = {str(b) for b in cover[0]} if cover is not None else set()
     sp_m, sp_t = _hive_part_bytes(spatial_path, "cell_bucket", lambda v: v in bucket_set)
 
-    p_lo = _attr_part_value(eq if eq is not None else lo, prefix_len) if (eq or lo) else None
-    p_hi = _attr_part_value(eq if eq is not None else hi, prefix_len) if (eq or hi) else None
+    p_lo = _attr_part_value(eq if eq is not None else lo) if (eq or lo) else None
+    p_hi = _attr_part_value(eq if eq is not None else hi) if (eq or hi) else None
 
     def attr_match(v: str) -> bool:
         return (p_lo is None or v >= p_lo) and (p_hi is None or v <= p_hi)
@@ -620,7 +616,6 @@ def query_dual_indexed(
     lo: str | None = None,
     hi: str | None = None,
     res: int = 10,
-    prefix_len: int = 1,
     strategy: str = "auto",
 ) -> DataFrame:
     """Execute a combined spatial + attribute query against whichever
@@ -630,8 +625,7 @@ def query_dual_indexed(
     exact row-level filter, so both plans return identical rows."""
     if strategy == "auto":
         strategy = choose_scan_strategy(
-            spatial_path, attr_path, geom_wkt, eq=eq, lo=lo, hi=hi,
-            res=res, prefix_len=prefix_len,
+            spatial_path, attr_path, geom_wkt, eq=eq, lo=lo, hi=hi, res=res,
         )["strategy"]
     if strategy == "spatial":
         out = query(spark, spatial_path, geom_wkt, predicate, res=res)
@@ -643,7 +637,7 @@ def query_dual_indexed(
             out = out.filter(F.col(attr_col) <= hi)
     else:
         cand = scan_attr_partitioned(
-            spark, attr_path, attr_col, eq=eq, lo=lo, hi=hi, prefix_len=prefix_len
+            spark, attr_path, attr_col, eq=eq, lo=lo, hi=hi
         )
         out = cand.filter(_exact_refine(geom_wkt, predicate))
     return out.drop(*[c for c in _LAYOUT_COLS if c in out.columns])

@@ -213,6 +213,12 @@ class TestLayout:
         exp = {gid for gid, w in boxes if relate.intersects(qg, wkt.parse_wkt(w))}
         assert got == exp and len(got) > 0
 
+    def test_feature_view_is_deduped_feature_table(self, spark, layout):
+        boxes, path = layout
+        df = xz2.feature_view(spark, path, "geom_id")
+        assert set(df.columns) == {"geom_id", "wkt"}
+        assert sorted(map(tuple, df.collect())) == sorted(boxes)
+
 
 class TestXZ3Layout:
     """XZ3 = binned time ⊕ XZ2 (GeoMesa ``curve/XZ3SFC.scala``): the

@@ -20,7 +20,9 @@ OUT = os.path.join(REPO, "jvm", "classes")
 
 def build() -> str:
     """Compile if needed; returns the classes dir.  Raises RuntimeError
-    when javac is unavailable (callers skip — environmental)."""
+    when javac is unavailable (callers skip — environmental), and
+    SubprocessError carrying javac's messages when the sources do not
+    compile."""
     if shutil.which("javac") is None:
         raise RuntimeError("javac not on PATH")
     sources = glob.glob(os.path.join(SRC, "**", "*.java"), recursive=True)
@@ -34,11 +36,13 @@ def build() -> str:
 
     jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
     os.makedirs(OUT, exist_ok=True)
-    subprocess.run(
+    p = subprocess.run(
         ["javac", "-nowarn", "-encoding", "UTF-8", "-cp", os.path.join(jars, "*"),
          "-d", OUT, *sources],
-        check=True, capture_output=True, text=True,
+        capture_output=True, text=True,
     )
+    if p.returncode != 0:
+        raise subprocess.SubprocessError(f"javac exited {p.returncode}:\n{p.stderr}")
     return OUT
 
 

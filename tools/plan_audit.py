@@ -202,6 +202,18 @@ def main() -> None:
             for m in re.findall(r"^Left keys \[\d+\]: \[(.*)\]$", text, re.M)
         )
 
+    def final_plan_ids(text: str) -> set[str]:
+        """Node ids of the plan tree, without AQE's "Initial Plan" copies
+        (a persisted stage prints both its final and initial plan)."""
+        ids, skip_deeper = set(), None
+        for line in text.split("\n\n", 1)[0].splitlines():
+            depth = len(line) - len(line.lstrip(" :|"))
+            if skip_deeper is not None and depth > skip_deeper:
+                continue
+            skip_deeper = depth if "== Initial Plan ==" in line else None
+            ids.update(re.findall(r"\((\d+)\)", line))
+        return ids
+
     def conditioned_nested_loops(text: str) -> int:
         """Nested-loop joins that test a condition (a theta join)."""
         conds = re.findall(
@@ -282,6 +294,32 @@ def main() -> None:
             "bounds tested in codegen before the Arrow refine)"
         )
 
+    # REGRESSION GUARD: an explode of a projected array column gets an
+    # inferred size(col) > 0 Filter pushed below the projection, so the
+    # array expression runs twice — for XZ2 the keys pandas UDF, for the
+    # flagship every span's regexp extraction.
+    n_keys_evals = len(final_plan_ids(xz_text) & set(re.findall(
+        r"^\((\d+)\) ArrowEvalPython\n(?:(?!\(\d+\) ).*\n)*?Arguments: \[keys\(", xz_text, re.M
+    )))
+    if n_keys_evals != 1:
+        sys.exit(
+            f"PLAN REGRESSION: xz2_poly_point_join evaluates the geometry keys UDF "
+            f"in {n_keys_evals} ArrowEvalPython nodes (want 1)"
+        )
+    flag_text = plans["flagship_spans_join"][1]
+    gen_id = int(re.search(r"^\((\d+)\) Generate", flag_text, re.M).group(1))
+    regex_filters = [
+        i for i, cond in re.findall(
+            r"^\((\d+)\) Filter\n(?:(?!\(\d+\) ).*\n)*?Condition : (.*)$", flag_text, re.M
+        )
+        if int(i) < gen_id and "regexp_extract" in cond
+    ]
+    if regex_filters:
+        sys.exit(
+            f"PLAN REGRESSION: flagship Filter(s) {regex_filters} below the Generate "
+            "re-run the span regexp extraction (want: the array evaluated once)"
+        )
+
     # REGRESSION GUARD (round-3 split-explode design): the spacetime join
     # must shuffle each side ONCE and never re-exchange for a dedupe — a
     # third Exchange means either the x27 single-side explode or a
@@ -318,7 +356,6 @@ def main() -> None:
     # to compile (8 kB bytecode limit), silently interpreting the hot path
     # at ~1/3 throughput.  A healthy flagship plan shows exactly 2 FLOOR
     # leaves (one per axis norm) and ZERO shuffle Exchanges.
-    flag_text = plans["flagship_spans_join"][1]
     n_floor = flag_text.count("FLOOR")
     n_flag_shuf = len(re.findall(r"^\(\d+\) Exchange", flag_text, re.M))
     if n_floor > 2 or n_flag_shuf > 0:
