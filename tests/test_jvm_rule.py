@@ -88,8 +88,8 @@ _CHILD = textwrap.dedent(
         return rows, read, " ".join(filters)
 
     def case(name, lay, sql, table, raw):
-        rows, read, pf = scan(spark.sql(sql.format(t=table)))
-        want = spark.sql(sql.format(t=raw)).collect()
+        rows, read, pf = scan(spark.sql(sql.replace("TABLE", table)))
+        want = spark.sql(sql.replace("TABLE", raw)).collect()
         cases[name] = dict(
             eq=collections.Counter(map(tuple, rows)) == collections.Counter(map(tuple, want)),
             n=len(rows), read=read, total=totals[lay],
@@ -120,59 +120,59 @@ _CHILD = textwrap.dedent(
 
     POLY = "POLYGON((10 10, 20 10, 20 20, 10 20, 10 10))"
     point_cases = {{
-        "point_contains": f"SELECT doc_id FROM {{{{t}}}} WHERE "
+        "point_contains": "SELECT doc_id FROM TABLE WHERE "
             f"st_contains(st_geomFromWKT('{{POLY}}'), st_point(lon, lat))",
-        "point_intersects_order_by": f"SELECT doc_id FROM {{{{t}}}} WHERE "
+        "point_intersects_order_by": "SELECT doc_id FROM TABLE WHERE "
             f"st_intersects(st_geomFromWKT('{{POLY}}'), st_point(lon, lat)) ORDER BY doc_id",
-        "point_within": f"SELECT doc_id FROM {{{{t}}}} WHERE "
+        "point_within": "SELECT doc_id FROM TABLE WHERE "
             f"st_within(st_point(lon, lat), st_geomFromWKT('{{POLY}}'))",
-        "dwithin_point_literal": "SELECT doc_id FROM {{t}} WHERE "
+        "dwithin_point_literal": "SELECT doc_id FROM TABLE WHERE "
             "st_dwithin(st_point(lon, lat), st_point(15.0D, 15.0D), 100000.0D)",
-        "dwithin_wkt_point": "SELECT doc_id FROM {{t}} WHERE "
+        "dwithin_wkt_point": "SELECT doc_id FROM TABLE WHERE "
             "st_dwithin(st_point(lon, lat), st_geomFromWKT('POINT(12 52)'), 300000.0)",
-        "dwithin_linestring": "SELECT doc_id FROM {{t}} WHERE st_dwithin("
+        "dwithin_linestring": "SELECT doc_id FROM TABLE WHERE st_dwithin("
             "st_geomFromWKT('LINESTRING(12 12, 15 15, 18 13)'), st_point(lon, lat), 150000.0D)",
-        "dwithin_polygon": f"SELECT doc_id FROM {{{{t}}}} WHERE "
+        "dwithin_polygon": "SELECT doc_id FROM TABLE WHERE "
             f"st_dwithin(st_geomFromWKT('{{POLY}}'), st_point(lon, lat), 50000.0D)",
-        "dwithin_antimeridian": "SELECT doc_id FROM {{t}} WHERE st_dwithin("
+        "dwithin_antimeridian": "SELECT doc_id FROM TABLE WHERE st_dwithin("
             "st_point(lon, lat), st_geomFromWKT('POINT(179.5 0.0)'), 300000.0)",
-        "wkt_trailing_dot": "SELECT doc_id FROM {{t}} WHERE st_contains(st_geomFromWKT("
+        "wkt_trailing_dot": "SELECT doc_id FROM TABLE WHERE st_contains(st_geomFromWKT("
             "'POLYGON((-1. -1., 10 -1., 10 10, -1. 10, -1. -1.))'), st_point(lon, lat))",
-        "wkt_leading_dot": "SELECT doc_id FROM {{t}} WHERE st_contains(st_geomFromWKT("
+        "wkt_leading_dot": "SELECT doc_id FROM TABLE WHERE st_contains(st_geomFromWKT("
             "'POLYGON((-.5 -.5, 10 -.5, 10 10, -.5 10, -.5 -.5))'), st_point(lon, lat))",
-        "wkt_plus_sign": "SELECT doc_id FROM {{t}} WHERE st_contains(st_geomFromWKT("
+        "wkt_plus_sign": "SELECT doc_id FROM TABLE WHERE st_contains(st_geomFromWKT("
             "'POLYGON((+1 +1, -10 +1, -10 -10, +1 -10, +1 +1))'), st_point(lon, lat))",
-        "wkt_exponent": "SELECT doc_id FROM {{t}} WHERE st_contains(st_geomFromWKT("
+        "wkt_exponent": "SELECT doc_id FROM TABLE WHERE st_contains(st_geomFromWKT("
             "'POLYGON((1e1 1e1, -1e1 1e1, -1e1 -1e1, 1e1 -1e1, 1e1 1e1))'), st_point(lon, lat))",
-        "unparseable_polygon": "SELECT count(*) AS n FROM {{t}} WHERE st_contains("
+        "unparseable_polygon": "SELECT count(*) AS n FROM TABLE WHERE st_contains("
             "st_geomFromWKT('POLYGON((bad'), st_point(lon, lat)) IS NULL",
-        "unparseable_linestring": "SELECT count(*) AS n FROM {{t}} WHERE st_dwithin("
+        "unparseable_linestring": "SELECT count(*) AS n FROM TABLE WHERE st_dwithin("
             "st_geomFromWKT('LINESTRING(bad'), st_point(lon, lat), 1000.0D) IS NULL",
-        "not_contains": f"SELECT doc_id FROM {{{{t}}}} WHERE "
+        "not_contains": "SELECT doc_id FROM TABLE WHERE "
             f"NOT st_contains(st_geomFromWKT('{{POLY}}'), st_point(lon, lat))",
-        "or_contains": f"SELECT doc_id FROM {{{{t}}}} WHERE "
+        "or_contains": "SELECT doc_id FROM TABLE WHERE "
             f"st_contains(st_geomFromWKT('{{POLY}}'), st_point(lon, lat)) OR lon < -170.0",
-        "both_literals": f"SELECT doc_id FROM {{{{t}}}} WHERE st_contains("
+        "both_literals": "SELECT doc_id FROM TABLE WHERE st_contains("
             f"st_geomFromWKT('{{POLY}}'), st_geomFromWKT('POINT(15 15)'))",
         "derived_alias": "SELECT doc_id FROM (SELECT doc_id, lon + 100.0 AS lon, lat "
-            f"FROM {{{{t}}}}) WHERE st_contains(st_geomFromWKT('{{POLY}}'), st_point(lon, lat))",
-        "no_predicate": "SELECT count(*) AS n FROM {{t}}",
+            f"FROM TABLE) WHERE st_contains(st_geomFromWKT('{{POLY}}'), st_point(lon, lat))",
+        "no_predicate": "SELECT count(*) AS n FROM TABLE",
     }}
     for name, sql in point_cases.items():
         case(name, "pts", sql, "pts", "raw_pts")
 
     WINDOW = "ts >= TIMESTAMP '2024-01-15 00:00:00' AND ts < TIMESTAMP '2024-02-05 00:00:00'"
     z3_cases = {{
-        "z3_space_time": f"SELECT doc_id FROM {{{{t}}}} WHERE "
+        "z3_space_time": "SELECT doc_id FROM TABLE WHERE "
             f"st_contains(st_geomFromWKT('{{POLY}}'), st_point(lon, lat)) AND {{WINDOW}}",
-        "z3_dwithin_time": "SELECT doc_id FROM {{t}} WHERE st_dwithin(st_point(lon, lat), "
+        "z3_dwithin_time": "SELECT doc_id FROM TABLE WHERE st_dwithin(st_point(lon, lat), "
             f"st_point(15.0D, 15.0D), 2000000.0D) AND {{WINDOW}}",
-        "z3_time_only": f"SELECT count(*) AS n FROM {{{{t}}}} WHERE {{WINDOW}}",
-        "z3_time_between": "SELECT count(*) AS n FROM {{t}} WHERE ts BETWEEN "
+        "z3_time_only": f"SELECT count(*) AS n FROM TABLE WHERE {{WINDOW}}",
+        "z3_time_between": "SELECT count(*) AS n FROM TABLE WHERE ts BETWEEN "
             "TIMESTAMP '2024-01-08 00:00:00' AND TIMESTAMP '2024-01-14 23:59:59'",
-        "z3_corridor_time": "SELECT doc_id FROM {{t}} WHERE st_dwithin(st_geomFromWKT("
+        "z3_corridor_time": "SELECT doc_id FROM TABLE WHERE st_dwithin(st_geomFromWKT("
             f"'LINESTRING(0 10, 15 15, 30 10)'), st_point(lon, lat), 500000.0D) AND {{WINDOW}}",
-        "z3_time_or": "SELECT doc_id FROM {{t}} WHERE "
+        "z3_time_or": "SELECT doc_id FROM TABLE WHERE "
             "ts >= TIMESTAMP '2024-01-15 00:00:00' OR doc_id = 1",
     }}
     for name, sql in z3_cases.items():
@@ -211,28 +211,28 @@ _CHILD = textwrap.dedent(
     BOX = "POLYGON((0 0, 30 0, 30 30, 0 30, 0 0))"
     BIG = "POLYGON((-60 -60, 60 -60, 60 60, -60 60, -60 -60))"
     xz_cases = {{
-        "xz_intersects": f"SELECT geom_id FROM {{{{t}}}} WHERE "
+        "xz_intersects": "SELECT geom_id FROM TABLE WHERE "
             f"st_intersects(st_geomFromWKT('{{BOX}}'), st_geomFromWKT(wkt))",
-        "xz_contains": f"SELECT geom_id FROM {{{{t}}}} WHERE "
+        "xz_contains": "SELECT geom_id FROM TABLE WHERE "
             f"st_contains(st_geomFromWKT('{{BIG}}'), st_geomFromWKT(wkt))",
-        "xz_dwithin": "SELECT geom_id FROM {{t}} WHERE st_dwithin("
+        "xz_dwithin": "SELECT geom_id FROM TABLE WHERE st_dwithin("
             "st_geomFromWKT('POINT(10 10)'), st_geomFromWKT(wkt), 500000.0D)",
-        "xz_or": f"SELECT geom_id FROM {{{{t}}}} WHERE st_intersects("
+        "xz_or": "SELECT geom_id FROM TABLE WHERE st_intersects("
             f"st_geomFromWKT('{{BOX}}'), st_geomFromWKT(wkt)) OR geom_id = 'g0'",
-        "xz_whole_view": "SELECT * FROM {{t}}",
+        "xz_whole_view": "SELECT * FROM TABLE",
     }}
     for name, sql in xz_cases.items():
         case(name, "shapes", sql, "shapes", "raw_shapes")
     # a Filter on the key rows themselves: pruning would change their count
-    case("xz_key_rows", "shapes", "SELECT geom_id, xz_level, xz_cell FROM {{t}} WHERE "
+    case("xz_key_rows", "shapes", "SELECT geom_id, xz_level, xz_cell FROM TABLE WHERE "
          f"st_intersects(st_geomFromWKT('{{BOX}}'), st_geomFromWKT(wkt))",
          "shape_keys", "raw_shape_keys")
     XZ3_WINDOW = ("ts >= TIMESTAMP '2024-01-08 00:00:00' "
                   "AND ts < TIMESTAMP '2024-01-22 00:00:00'")
-    case("xz3_all_dims", "shapes_t", "SELECT geom_id FROM {{t}} WHERE st_intersects("
+    case("xz3_all_dims", "shapes_t", "SELECT geom_id FROM TABLE WHERE st_intersects("
          "st_geomFromWKT('POLYGON((-40 -40, 40 -40, 40 40, -40 40, -40 -40))'), "
          f"st_geomFromWKT(wkt)) AND {{XZ3_WINDOW}}", "shapes_t", "raw_shapes_t")
-    case("xz3_time_only", "shapes_t", "SELECT count(*) AS n FROM {{t}} WHERE "
+    case("xz3_time_only", "shapes_t", "SELECT count(*) AS n FROM TABLE WHERE "
          "ts >= TIMESTAMP '2024-01-08 00:00:00' AND ts < TIMESTAMP '2024-01-15 00:00:00'",
          "shapes_t", "raw_shapes_t")
 
@@ -250,30 +250,30 @@ _CHILD = textwrap.dedent(
 
     DWIN = "ts >= TIMESTAMP '2024-01-08 00:00:00' AND ts < TIMESTAMP '2024-01-15 00:00:00'"
     attr_cases = {{
-        "attr_eq": "SELECT event_id, user_id FROM {{t}} WHERE event_type = 'click'",
-        "attr_range": "SELECT event_id FROM {{t}} "
+        "attr_eq": "SELECT event_id, user_id FROM TABLE WHERE event_type = 'click'",
+        "attr_range": "SELECT event_id FROM TABLE "
             "WHERE event_type >= 'click' AND event_type <= 'purchase'",
-        "attr_between": "SELECT event_id FROM {{t}} "
+        "attr_between": "SELECT event_id FROM TABLE "
             "WHERE event_type BETWEEN 'click' AND 'error'",
-        "attr_range_date": "SELECT event_id FROM {{t}} WHERE event_type >= 'click' "
+        "attr_range_date": "SELECT event_id FROM TABLE WHERE event_type >= 'click' "
             f"AND event_type <= 'purchase' AND {{DWIN}}",
-        "attr_eq_date": f"SELECT event_id FROM {{{{t}}}} WHERE event_type = 'click' AND {{DWIN}}",
-        "attr_own_alias": "SELECT e.event_id FROM {{t}} e WHERE e.event_type = 'click'",
-        "attr_escaped_quote": "SELECT event_id FROM {{t}} WHERE event_type = 'O''Brien'",
-        "attr_non_ascii": "SELECT event_id FROM {{t}} WHERE event_type = 'Ölfeld'",
-        "attr_non_ascii_cjk": "SELECT event_id FROM {{t}} WHERE event_type >= '日'",
-        "attr_or": "SELECT event_id FROM {{t}} WHERE event_type = 'click' OR user_id = 1",
-        "attr_not": "SELECT event_id FROM {{t}} WHERE NOT event_type = 'click'",
+        "attr_eq_date": f"SELECT event_id FROM TABLE WHERE event_type = 'click' AND {{DWIN}}",
+        "attr_own_alias": "SELECT e.event_id FROM TABLE e WHERE e.event_type = 'click'",
+        "attr_escaped_quote": "SELECT event_id FROM TABLE WHERE event_type = 'O''Brien'",
+        "attr_non_ascii": "SELECT event_id FROM TABLE WHERE event_type = 'Ölfeld'",
+        "attr_non_ascii_cjk": "SELECT event_id FROM TABLE WHERE event_type >= '日'",
+        "attr_or": "SELECT event_id FROM TABLE WHERE event_type = 'click' OR user_id = 1",
+        "attr_not": "SELECT event_id FROM TABLE WHERE NOT event_type = 'click'",
         "attr_case_when": "SELECT event_id, CASE WHEN event_type = 'purchase' "
-            "THEN 1 ELSE 0 END AS flag FROM {{t}}",
+            "THEN 1 ELSE 0 END AS flag FROM TABLE",
         "attr_case_when_date": "SELECT event_id, CASE WHEN ts >= TIMESTAMP "
-            "'2024-01-08 00:00:00' THEN 1 ELSE 0 END AS late FROM {{t}}",
-        "attr_other_table": "SELECT e.event_id FROM {{t}} e JOIN other_events o "
+            "'2024-01-08 00:00:00' THEN 1 ELSE 0 END AS late FROM TABLE",
+        "attr_other_table": "SELECT e.event_id FROM TABLE e JOIN other_events o "
             "ON e.event_id = o.event_id WHERE o.event_type = 'purchase'",
-        "attr_correlated_subquery": "SELECT event_id FROM {{t}} e WHERE EXISTS ("
+        "attr_correlated_subquery": "SELECT event_id FROM TABLE e WHERE EXISTS ("
             "SELECT 1 FROM other_events o WHERE o.event_id = e.event_id "
             "AND o.event_type = 'purchase')",
-        "attr_no_literal": "SELECT count(*) AS n FROM {{t}}",
+        "attr_no_literal": "SELECT count(*) AS n FROM TABLE",
     }}
     for name, sql in attr_cases.items():
         case(name, "attr", sql, "events_attr", "raw_events")
