@@ -972,7 +972,7 @@ def q_emerging_hotspots(spark, sf_dir):
 
 def q_ripley_k(spark, sf_dir):
     """Ripley's K/L at a 25/50/100/200 km ladder over the |lat|<=60
-    band: one bounded-ring pair join at 200 km, exact BIGINT pair counts
+    band: one ring-cover pair join at 200 km, exact BIGINT pair counts
     per rung, K/L via the shared pointpattern.ripley_*_sql closed forms
     (identical text in the DuckDB twin)."""
     from .operators import pointpattern as pp
@@ -983,7 +983,7 @@ def q_ripley_k(spark, sf_dir):
 def q_cross_k(spark, sf_dir):
     """Bivariate Ripley's K between 'click' and 'purchase' events at a
     50/100/200 km ladder (|lat|<=60 band): ordered A->B pair counts from
-    the cross-mode bounded-ring join; K/L via the shared
+    the cross-mode ring-cover join; K/L via the shared
     pointpattern.cross_*_sql closed forms."""
     from .operators import pointpattern as pp
 
@@ -1000,7 +1000,7 @@ def q_nn_g(spark, sf_dir):
     """Nearest-neighbor G(d) CDF at a 50/100/200 km ladder (|lat|<=60
     band; the sf-scale mean NN distance is ~109 km, so every rung is
     populated): per-rung COUNT(DISTINCT endpoint) over the same
-    bounded-ring pair join; exact BIGINTs + the shared
+    ring-cover pair join; exact BIGINTs + the shared
     pointpattern.NN_G_SQL ratio."""
     from .operators import pointpattern as pp
 

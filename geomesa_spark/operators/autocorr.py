@@ -436,6 +436,58 @@ def kernel_density(
     )
 
 
+def _day_cube(pts: DataFrame, res: int, ts: str, lon: str, lat: str) -> DataFrame:
+    """The sparse (cell_key, day_bin, x) count cube at ``res`` — one
+    map-side-combinable count over the points, cached under
+    ``autocorr.cube.{res}`` for every space-time statistic.  cast() first:
+    parquet may surface TIMESTAMP_NTZ, which unix_micros rejects — with the
+    session pinned to UTC the NTZ→LTZ cast is the identity wall-time
+    DuckDB's epoch_us uses (same idiom as tube.py)."""
+    day = F.expr(
+        f"CAST(floor(unix_micros(CAST({ts} AS TIMESTAMP)) / 86400000000.0) AS BIGINT)"
+    )
+    return swap_cache(
+        f"autocorr.cube.{res}",
+        pts.select(_cell_key(lon, lat, res).alias("cell_key"), day.alias("day_bin"))
+        .groupBy("cell_key", "day_bin")
+        .agg(F.count(F.lit(1)).alias("x")),
+    )
+
+
+def _mk_tally(series: DataFrame, val: str) -> DataFrame:
+    """Mann-Kendall sufficient statistics of each cell's ``val`` series
+    over (cell_key, day_bin, val) rows: S = Σ_{t1<t2} sign(v_{t2} − v_{t1})
+    from the per-cell pair self-join, plus the tie term Σ t(t−1)(2t+5) and
+    the series length.  All exact integers.
+    Returns (cell_key, s_stat, ties, t_bins)."""
+    a, b = [
+        series.select(
+            "cell_key", F.col("day_bin").alias(f"b{i}"), F.col(val).alias(f"v{i}")
+        )
+        for i in (1, 2)
+    ]
+    s = (
+        a.join(b, "cell_key")
+        .filter(F.col("b2") > F.col("b1"))
+        .groupBy("cell_key")
+        .agg(
+            F.sum(
+                F.expr("CASE WHEN v2 > v1 THEN 1 WHEN v2 < v1 THEN -1 ELSE 0 END")
+            ).alias("s_stat")
+        )
+    )
+    ties = (
+        series.groupBy("cell_key", val)
+        .agg(F.count(F.lit(1)).alias("tg"))
+        .groupBy("cell_key")
+        .agg(
+            F.sum(F.expr("tg * (tg - 1) * (2 * tg + 5)")).alias("ties"),
+            F.sum("tg").alias("t_bins"),
+        )
+    )
+    return s.join(ties, "cell_key")
+
+
 def gi_spacetime(
     pts: DataFrame,
     res: int = 5,
@@ -456,17 +508,7 @@ def gi_spacetime(
 
     Returns (cell_key, day_bin, x, k_i, w_i, gi_z_x1e6).
     """
-    day = F.expr(
-        f"CAST(floor(unix_micros(CAST({ts} AS TIMESTAMP)) / 86400000000.0) AS BIGINT)"
-    )
-    cd = swap_cache(
-        f"autocorr.cube.{res}",
-        pts.select(
-            _cell_key(lon, lat, res).alias("cell_key"), day.alias("day_bin")
-        )
-        .groupBy("cell_key", "day_bin")
-        .agg(F.count(F.lit(1)).alias("x")),
-    )
+    cd = _day_cube(pts, res, ts, lon, lat)
     bins = cd.select("day_bin").distinct()
     cube = swap_cache(
         f"autocorr.stcube.{res}",
@@ -555,17 +597,7 @@ def emerging_hotspot_analysis(
 
     Returns (cell_key, total, t_bins, n_hot, s_stat, mk_z_x1e6, category).
     """
-    day = F.expr(
-        f"CAST(floor(unix_micros(CAST({ts} AS TIMESTAMP)) / 86400000000.0) AS BIGINT)"
-    )
-    cd = swap_cache(
-        f"autocorr.cube.{res}",
-        pts.select(
-            _cell_key(lon, lat, res).alias("cell_key"), day.alias("day_bin")
-        )
-        .groupBy("cell_key", "day_bin")
-        .agg(F.count(F.lit(1)).alias("x")),
-    )
+    cd = _day_cube(pts, res, ts, lon, lat)
     totals = cd.groupBy("cell_key").agg(F.sum("x").alias("total"))
     bins = cd.select("day_bin").distinct()
     cube = (
@@ -584,33 +616,6 @@ def emerging_hotspot_analysis(
             "day_bin", "cell_key", "gi_z_x1e6"
         ),
     )
-    a, b = [
-        z.select(
-            "cell_key",
-            F.col("day_bin").alias(f"b{i}"),
-            F.col("gi_z_x1e6").alias(f"z{i}"),
-        )
-        for i in (1, 2)
-    ]
-    mk = (
-        a.join(b, "cell_key")
-        .filter(F.col("b2") > F.col("b1"))
-        .groupBy("cell_key")
-        .agg(
-            F.sum(
-                F.expr("CASE WHEN z2 > z1 THEN 1 WHEN z2 < z1 THEN -1 ELSE 0 END")
-            ).alias("s_stat")
-        )
-    )
-    ties = (
-        z.groupBy("cell_key", "gi_z_x1e6")
-        .agg(F.count(F.lit(1)).alias("tg"))
-        .groupBy("cell_key")
-        .agg(
-            F.sum(F.expr("tg * (tg - 1) * (2 * tg + 5)")).alias("ties"),
-            F.sum("tg").alias("t_bins"),
-        )
-    )
     last_day = bins.agg(F.max("day_bin").alias("_last"))
     hot = (
         z.crossJoin(F.broadcast(last_day))
@@ -628,7 +633,7 @@ def emerging_hotspot_analysis(
         )
     )
     return (
-        mk.join(ties, "cell_key")
+        _mk_tally(z, "gi_z_x1e6")
         .join(hot, "cell_key")
         .join(totals, "cell_key")
         .filter(F.col("total") >= int(min_total))
@@ -670,20 +675,7 @@ def emerging_hotspots(
 
     Returns (cell_key, total, t_bins, s_stat, mk_z_x1e6, trend).
     """
-    # cast() first: parquet may surface TIMESTAMP_NTZ, which unix_micros
-    # rejects — with the session pinned to UTC the NTZ→LTZ cast is the
-    # identity wall-time DuckDB's epoch_us uses (same idiom as tube.py)
-    day = F.expr(
-        f"CAST(floor(unix_micros(CAST({ts} AS TIMESTAMP)) / 86400000000.0) AS BIGINT)"
-    )
-    cd = swap_cache(
-        f"autocorr.cube.{res}",
-        pts.select(
-            _cell_key(lon, lat, res).alias("cell_key"), day.alias("day_bin")
-        )
-        .groupBy("cell_key", "day_bin")
-        .agg(F.count(F.lit(1)).alias("x")),
-    )
+    cd = _day_cube(pts, res, ts, lon, lat)
     hot = (
         cd.groupBy("cell_key")
         .agg(F.sum("x").alias("total"))
@@ -691,42 +683,15 @@ def emerging_hotspots(
     )
     bins = cd.select("day_bin").distinct()
     cube = (
-        hot.crossJoin(F.broadcast(bins))
+        hot.select("cell_key")
+        .crossJoin(F.broadcast(bins))
         .join(cd, ["cell_key", "day_bin"], "left")
-        .select(
-            "cell_key",
-            "total",
-            "day_bin",
-            F.coalesce(F.col("x"), F.lit(0)).alias("x"),
-        )
+        .select("cell_key", "day_bin", F.coalesce(F.col("x"), F.lit(0)).alias("x"))
     )
     cube = swap_cache(f"autocorr.densecube.{res}", cube)
-    a, b = [
-        cube.select(
-            "cell_key",
-            F.col("day_bin").alias(f"b{i}"),
-            F.col("x").alias(f"x{i}"),
-            *(["total"] if i == 1 else []),
-        )
-        for i in (1, 2)
-    ]
-    pairs = a.join(b, "cell_key").filter(F.col("b2") > F.col("b1"))
-    mk = pairs.groupBy("cell_key", "total").agg(
-        F.sum(
-            F.expr("CASE WHEN x2 > x1 THEN 1 WHEN x2 < x1 THEN -1 ELSE 0 END")
-        ).alias("s_stat")
-    )
-    ties = (
-        cube.groupBy("cell_key", "x")
-        .agg(F.count(F.lit(1)).alias("tg"))
-        .groupBy("cell_key")
-        .agg(
-            F.sum(F.expr("tg * (tg - 1) * (2 * tg + 5)")).alias("ties"),
-            F.sum("tg").alias("t_bins"),
-        )
-    )
     return (
-        mk.join(ties, "cell_key")
+        _mk_tally(cube, "x")
+        .join(hot, "cell_key")
         .select(
             "cell_key",
             "total",

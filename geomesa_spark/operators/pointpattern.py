@@ -5,18 +5,17 @@ GeoMesa's analytic surface stops at density aggregation (DensityScan,
 public tree: geomesa-index-api/.../iterators/DensityScan.scala); K and
 Knox are the canonical second-order statistics a GeoMesa user computes
 downstream of it (Ripley 1976; Knox 1964; Besag & Diggle 1977).  Both
-reduce to the engine's bounded-ring pair join: every candidate pair
-collides on ONE packed grid key (a 3x3 neighbor explode on one side, an
-equi-join on the other), so no all-pairs product ever forms — the same
-scale shape as `spatial_join.spatiotemporal_join_grid`.
+reduce to the engine's distance join: one side explodes to the k-ring
+cells of `spatial_join._ring_cover`, the other keys on its own cell, so
+every candidate pair collides on ONE cell and no all-pairs product ever
+forms — the same pair stage as `spatial_join.spatial_join_grid`.
 
 Study window: both statistics are defined over a bounded region; here
-the region is the |lat| <= ``lat_max`` band (default 60 deg), inside
-which a +/-1 cell ring at the chosen resolution provably covers every
-pair within ``d_max`` (guarded at plan time — see `_require_ring_cover`).
-A truly global run should use the lat-aware k-ring of
-`spatial_join.spatial_join_grid` (with ``dist_m``); the band keeps the
-ORACLE expressible as the identical SQL ring join.
+the region is the |lat| <= ``lat_max`` band (default 60 deg), which sets
+the point set and the area A in the closed forms.  It does not bound
+completeness: the ring cover is lat-aware and wraps the antimeridian, so
+any ``res`` and distance give exact pair counts (a coarse ``res`` only
+makes the candidate set larger).
 
 Parallelism note: when Spark broadcasts the keyed side of a pair join,
 the heavy stage's task count is the PROBE side's split count — a small
@@ -43,12 +42,11 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from .spatial_join import HAVERSINE_M_SQL
+from .spatial_join import _PAIR_HAVERSINE, HAVERSINE_M_SQL, _ring_cover, add_cell_column
 
 __all__ = ["ripley_k", "cross_k", "nn_g_function", "knox_test", "HAVERSINE_M_SQL"]
 
 EARTH_RADIUS_M = 6371008.8
-_DEG_M = math.pi * EARTH_RADIUS_M / 180.0
 
 
 def band_area_m2(lat_max: float) -> float:
@@ -122,116 +120,53 @@ KNOX_Z_SQL = (
 )
 
 
-def wrap_ring_sql(res: int) -> str:
-    """SQL array expr: packed keys of the 3x3 neighborhood of (_x, _y),
-    LON-WRAPPING (x mod 2^res — the antimeridian is an ordinary cell
-    seam for great-circle pairs) and lat-clamped (no pole wrap).  The
-    DuckDB oracle re-derives the same ring independently in its own
-    dialect (<< | and %); only the closed-form statistic expressions are
-    shared verbatim."""
-    n_side = 1 << res
-    terms = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            terms.append(
-                f"IF(_y + {dy} BETWEEN 0 AND {n_side - 1}, "
-                f"shiftleft((_x + {dx + n_side}) % {n_side}, {res})"
-                f" | (_y + {dy}), NULL)"
-            )
-    return "filter(array(" + ", ".join(terms) + "), x -> x IS NOT NULL)"
+def _window(pts: DataFrame, lat_max: float, cols) -> DataFrame:
+    return pts.filter(F.abs(F.col("lat")) <= float(lat_max)).select(*cols)
 
 
-def _require_ring_cover(res: int, lat_max: float, d_max_m: float) -> None:
-    """Raise unless the +/-1 cell ring holds every pair within ``d_max_m``.
-
-    Two band points (|lat| <= lat_max) at great-circle angle delta = d/R
-    differ in latitude by at most delta, and in longitude by at most
-    2*asin(sin(delta/2) / cos(lat_max)): by the haversine formula
-    hav(delta) = hav(dlat) + cos(lat1)*cos(lat2)*hav(dlon)
-               >= cos(lat_max)^2 * hav(dlon).
-    Pairs whose differences are at most one cell's height and width land
-    in the same or adjacent cells (the longitude ring wraps)."""
-    n_side = 1 << res
-    delta = d_max_m / EARTH_RADIUS_M
-    s = math.sin(delta / 2.0) / math.cos(math.radians(lat_max))
-    dlon = 2.0 * math.asin(s) if s < 1.0 else math.inf
-    cell_lat_m = (180.0 / n_side) * _DEG_M
-    cell_lon_m = (360.0 / n_side) * _DEG_M * math.cos(math.radians(lat_max))
-    if delta > math.pi / n_side or dlon > 2.0 * math.pi / n_side:
-        raise ValueError(
-            f"d_max={d_max_m} m exceeds the +/-1-ring guarantee at res={res}, "
-            f"lat_max={lat_max} (cell {cell_lat_m:.0f} x {cell_lon_m:.0f} m at "
-            "lat_max; the great-circle bound is tighter); "
-            "coarsen res, shrink the window, or use the lat-aware k-ring "
-            "join (spatial_join.spatial_join_grid with dist_m)"
-        )
-
-
-def _window(pts: DataFrame, lat_max: float, lon: str, lat: str, cols) -> DataFrame:
-    return pts.filter(F.abs(F.col(lat)) <= float(lat_max)).select(*cols)
-
-
-def _keyed(w: DataFrame, res: int, lon: str, lat: str) -> DataFrame:
-    n_side = 1 << res
-    return (
-        w.withColumn(
-            "_x",
-            F.expr(
-                f"least(greatest(CAST(floor(({lon} + 180.0) / 360.0 * {n_side}) "
-                f"AS BIGINT), 0), {n_side - 1})"
-            ),
-        )
-        .withColumn(
-            "_y",
-            F.expr(
-                f"least(greatest(CAST(floor(({lat} + 90.0) / 180.0 * {n_side}) "
-                f"AS BIGINT), 0), {n_side - 1})"
-            ),
-        )
-        .withColumn("_cell", F.expr(f"shiftleft(_x, {res}) | _y"))
-    )
-
-
-def _grid_pairs(
-    w: DataFrame,
-    res: int,
+def _pairs(
+    a: DataFrame,
     d_max_m: float,
+    res: int,
     id_col: str,
-    lon: str,
-    lat: str,
+    b: DataFrame | None = None,
     carry: tuple[str, ...] = (),
-    other: DataFrame | None = None,
 ) -> DataFrame:
-    """Point pairs within ``d_max_m`` via the bounded-ring equi-join:
-    side A keeps its own cell key, side B explodes the 3x3 (lon-wrapped)
-    neighborhood, so every candidate pair collides on exactly one key.
-    Self mode (``other`` is None): UNORDERED pairs, kept once by the id
-    order filter.  Cross mode: ORDERED A->B pairs (B = ``other``), each
-    counted once — no id filter.  Output:
-    (id_a, id_b, dist_m [, carry_a/_b...]).
+    """Point pairs within ``d_max_m`` on the spatial join's ring cover:
+    side A explodes to its k-ring cells (`spatial_join._ring_cover`), side
+    B gets its one cell (`spatial_join.add_cell_column`), the two
+    equi-join on ``cell`` and the haversine refine keeps the pairs within
+    reach.  A ring holds distinct cells and a B row one cell, so each pair
+    collides once.  Self mode (``b`` is None): UNORDERED pairs, kept once
+    by the id order filter.  Cross mode: ORDERED A->B pairs, each counted
+    once — no id filter.  Output: (id_a, id_b, dist_m [, carry_a/_b...]).
     """
-    a = _keyed(w, res, lon, lat).select(
-        F.col(id_col).alias("id_a"),
-        F.col(lon).alias("_alon"),
-        F.col(lat).alias("_alat"),
-        F.col("_cell").alias("_key"),
-        *[F.col(c).alias(f"{c}_a") for c in carry],
+    ring = _ring_cover(
+        a.select(
+            F.col(id_col).alias("id_a"), "lon", "lat",
+            *[F.col(c).alias(f"{c}_a") for c in carry],
+        ),
+        res,
+        d_max_m,
     )
-    b = _keyed(w if other is None else other, res, lon, lat).select(
-        F.col(id_col).alias("id_b"),
-        F.col(lon).alias("_blon"),
-        F.col(lat).alias("_blat"),
-        F.explode(F.expr(wrap_ring_sql(res))).alias("_key"),
-        *[F.col(c).alias(f"{c}_b") for c in carry],
+    cell = add_cell_column(
+        (a if b is None else b).select(
+            F.col(id_col).alias("id_b"),
+            F.col("lon").alias("lon_r"),
+            F.col("lat").alias("lat_r"),
+            *[F.col(c).alias(f"{c}_b") for c in carry],
+        ),
+        res,
+        lon="lon_r",
+        lat="lat_r",
     )
-    hav = HAVERSINE_M_SQL.format(lon1="_alon", lat1="_alat", lon2="_blon", lat2="_blat")
-    out = a.join(b, "_key")
-    if other is None:
+    out = ring.join(cell, "cell")
+    if b is None:
         out = out.filter(F.col("id_a") < F.col("id_b"))
     return (
-        out.withColumn("dist_m", F.expr(hav))
+        out.withColumn("dist_m", F.expr(_PAIR_HAVERSINE))
         .filter(F.col("dist_m") <= float(d_max_m))
-        .drop("_key", "_alon", "_alat", "_blon", "_blat")
+        .drop("cell", "lon", "lat", "lon_r", "lat_r")
     )
 
 
@@ -241,15 +176,13 @@ def ripley_k(
     res: int = 6,
     lat_max: float = 60.0,
     id_col: str = "event_id",
-    lon: str = "lon",
-    lat: str = "lat",
 ) -> DataFrame:
     """Ripley's K(d) / L(d) over the |lat| <= lat_max band at a ladder of
     distances (naive border-ignored estimator — the study region IS the
     band, so only band-edge pairs are undercounted; documented bias of
     the uncorrected form).
 
-    Engine shape: ONE bounded-ring pair join at d_max (the ladder max),
+    Engine shape: ONE ring-cover pair join at d_max (the ladder max),
     then a ladder explode + conditional count on the pair table; n is a
     broadcast scalar; the annulus (ring) counts and the binned
     pair-correlation g(d) derive from a lag window over the LADDER-sized
@@ -260,9 +193,8 @@ def ripley_k(
     from pyspark.sql import Window
 
     dists = sorted(float(d) for d in dists_m)
-    _require_ring_cover(res, lat_max, dists[-1])
-    w = _window(pts, lat_max, lon, lat, (id_col, lon, lat))
-    pairs = _grid_pairs(w, res, dists[-1], id_col, lon, lat)
+    w = _window(pts, lat_max, (id_col, "lon", "lat"))
+    pairs = _pairs(w, dists[-1], res, id_col)
     ladder = ", ".join(f"CAST({int(d)} AS BIGINT)" for d in dists)
     counts = (
         pairs.select(
@@ -305,23 +237,20 @@ def cross_k(
     res: int = 6,
     lat_max: float = 60.0,
     id_col: str = "event_id",
-    lon: str = "lon",
-    lat: str = "lat",
 ) -> DataFrame:
     """Bivariate (cross-type) Ripley's K between two marked point sets
     over the |lat| <= lat_max band: K_AB(d) = A * #{(a,b): dist<=d} /
     (n_a * n_b) — the standard test for attraction/repulsion between
     event types (K_AB > pi*d^2 = the types co-cluster at scale d).
 
-    Same bounded-ring pair equi-join as :func:`ripley_k`, in cross mode
+    Same ring-cover pair equi-join as :func:`ripley_k`, in cross mode
     (ordered A->B pairs, each counted once — no doubling, no id filter).
     Returns one row per d: (d_m, pairs, k_ab_m2, l_ab_mm).
     """
     dists = sorted(float(d) for d in dists_m)
-    _require_ring_cover(res, lat_max, dists[-1])
-    wa = _window(pts_a, lat_max, lon, lat, (id_col, lon, lat))
-    wb = _window(pts_b, lat_max, lon, lat, (id_col, lon, lat))
-    pairs = _grid_pairs(wa, res, dists[-1], id_col, lon, lat, other=wb)
+    wa = _window(pts_a, lat_max, (id_col, "lon", "lat"))
+    wb = _window(pts_b, lat_max, (id_col, "lon", "lat"))
+    pairs = _pairs(wa, dists[-1], res, id_col, b=wb)
     ladder = ", ".join(f"CAST({int(d)} AS BIGINT)" for d in dists)
     counts = (
         pairs.select(
@@ -358,8 +287,6 @@ def nn_g_function(
     res: int = 6,
     lat_max: float = 60.0,
     id_col: str = "event_id",
-    lon: str = "lon",
-    lat: str = "lat",
 ) -> DataFrame:
     """Nearest-neighbor distance function G(d) (Diggle 2003; the
     border-ignored empirical CDF of NN distances) over the |lat| <=
@@ -367,15 +294,14 @@ def nn_g_function(
     CSR G(d) = 1 - exp(-lambda*pi*d^2); G above that = clustering.
 
     A point's NN is <= d iff it has ANY neighbor within d, so G needs no
-    per-point minimum: the same bounded-ring pair join at the ladder max
+    per-point minimum: the same ring-cover pair join at the ladder max
     feeds a per-rung COUNT(DISTINCT id) over both pair endpoints — exact
-    for every rung <= d_max (the ring-cover guard bounds d_max).
+    for every rung <= d_max.
     Returns one row per d: (d_m, n_le, n, g_x1e6).
     """
     dists = sorted(float(d) for d in dists_m)
-    _require_ring_cover(res, lat_max, dists[-1])
-    w = _window(pts, lat_max, lon, lat, (id_col, lon, lat))
-    pairs = _grid_pairs(w, res, dists[-1], id_col, lon, lat)
+    w = _window(pts, lat_max, (id_col, "lon", "lat"))
+    pairs = _pairs(w, dists[-1], res, id_col)
     ladder = ", ".join(f"CAST({int(d)} AS BIGINT)" for d in dists)
     counts = (
         pairs.select(
@@ -401,8 +327,6 @@ def knox_test(
     lat_max: float = 60.0,
     id_col: str = "event_id",
     ts: str = "ts",
-    lon: str = "lon",
-    lat: str = "lat",
 ) -> DataFrame:
     """Knox space-time interaction test over the |lat| <= lat_max band:
     X = # pairs close in BOTH space (<= dist_m) and time (<= dt_s), with
@@ -410,27 +334,24 @@ def knox_test(
     close-in-space (S) and close-in-time (T) pair counts, and the Poisson
     z = (X-E)/sqrt(E) (Knox 1964; Besag & Diggle 1977 approximation).
 
-    Engine shape: S and X come from ONE bounded-ring spatial pair join
+    Engine shape: S and X come from ONE ring-cover spatial pair join
     (time delta carried through); T from a time-bin ring join (bins of
     width dt_s, one side explodes bin-1/bin/bin+1 so each qualifying
     pair collides exactly once).  No all-pairs stage; every count is an
     exact BIGINT.  Returns one row:
     (n, space_pairs, time_pairs, st_pairs, knox_e_x1e6, knox_z_x1e6).
     """
-    _require_ring_cover(res, lat_max, float(dist_m))
     dt_us = int(dt_s) * 1_000_000
     # NTZ->LTZ cast is the identity wall time under the UTC-pinned session
     # (same idiom as tube.py / autocorr.emerging_hotspots)
     w = _window(
         pts.withColumn("_us", F.expr(f"unix_micros(CAST({ts} AS TIMESTAMP))")),
         lat_max,
-        lon,
-        lat,
-        (id_col, lon, lat, "_us"),
+        (id_col, "lon", "lat", "_us"),
     )
-    spairs = _grid_pairs(
-        w, res, float(dist_m), id_col, lon, lat, carry=("_us",)
-    ).select("id_a", "id_b", F.expr("abs(_us_a - _us_b)").alias("_adt"))
+    spairs = _pairs(w, float(dist_m), res, id_col, carry=("_us",)).select(
+        F.expr("abs(_us_a - _us_b)").alias("_adt")
+    )
     s_x = spairs.agg(
         F.count(F.lit(1)).alias("space_pairs"),
         F.sum(F.expr(f"CASE WHEN _adt <= {dt_us} THEN 1 ELSE 0 END")).alias(

@@ -408,7 +408,12 @@ def geom_refine_udf(predicate: str = "intersects"):
     """Exact geometry×geometry refine for candidate pairs: (wkt_a, wkt_b)
     → bool through :mod:`geomesa_spark.geo.relate`, with per-batch parse
     caching on both sides (candidates cluster by geometry, so each parses
-    once per batch)."""
+    once per batch).
+
+    A polygon that crosses the antimeridian is evaluated on its
+    :func:`wkt.antimeridian_split` parts, as the XZ2 keys and
+    :func:`pip_refine_udf` see it: intersects when any part of A meets
+    any part of B, contains when each part of B lies in some part of A."""
     from ..geo import relate
 
     pred = predicate
@@ -416,10 +421,10 @@ def geom_refine_udf(predicate: str = "intersects"):
     parsed: dict[str, object] = {}
 
     def _parse(w):
-        if w in parsed:
-            return parsed[w]
-        g = parsed[w] = wkt.parse_wkt(w)
-        return g
+        if w not in parsed:
+            g = wkt.parse_wkt(w)
+            parsed[w] = None if g is None else wkt.antimeridian_split(g)
+        return parsed[w]
 
     @F.pandas_udf("boolean")
     def refine(wa: pd.Series, wb: pd.Series) -> pd.Series:
@@ -429,17 +434,19 @@ def geom_refine_udf(predicate: str = "intersects"):
         cb, ub = pd.factorize(wb, use_na_sentinel=True)
         pa = [_parse(w) for w in ua]
         pb = [_parse(w) for w in ub]
-        out = []
+        memo: dict[tuple[int, int], bool] = {}
         for ia, ib in zip(ca, cb):
+            if (ia, ib) in memo:
+                continue
             ga = pa[ia] if ia >= 0 else None
             gb = pb[ib] if ib >= 0 else None
             if ga is None or gb is None:
-                out.append(False)
+                memo[ia, ib] = False
             elif pred == "contains":
-                out.append(bool(relate.contains(ga, gb)))
+                memo[ia, ib] = all(any(relate.contains(x, y) for x in ga) for y in gb)
             else:
-                out.append(bool(relate.intersects(ga, gb)))
-        return pd.Series(out, dtype=bool)
+                memo[ia, ib] = any(relate.intersects(x, y) for x in ga for y in gb)
+        return pd.Series([memo[k] for k in zip(ca, cb)], dtype=bool)
 
     return refine
 
@@ -670,8 +677,6 @@ def query_geoms(
     spatio-temporal region query: the time_bin dir prunes coarse, then the
     exact half-open ``[t0, t1)`` timestamp filter applies row-level (same
     contract as :func:`plans.planner.query` for Z3)."""
-    from ..geo import relate
-
     if time_range is not None and time_col is None:
         # scan_partitioned_geoms prunes time at BIN granularity only; the
         # exact [t0, t1) refine below needs the timestamp column.  Without
@@ -687,26 +692,8 @@ def query_geoms(
             (F.col(time_col) >= F.lit(time_range[0]).cast("timestamp"))
             & (F.col(time_col) < F.lit(time_range[1]).cast("timestamp"))
         )
-    qg = wkt.parse_wkt(query_wkt)
-
-    @F.pandas_udf("boolean")
-    def refine(wkt_s: pd.Series) -> pd.Series:
-        out = []
-        cache: dict[str, bool] = {}
-        for w in wkt_s:
-            if w not in cache:
-                g = wkt.parse_wkt(w)
-                if g is None:
-                    cache[w] = False
-                elif predicate == "contains":
-                    cache[w] = relate.contains(qg, g)
-                else:
-                    cache[w] = relate.intersects(qg, g)
-            out.append(cache[w])
-        return pd.Series(out, dtype=bool)
-
     return (
-        cand.filter(refine(F.col(wkt_col)))
+        cand.filter(geom_refine_udf(predicate)(F.lit(query_wkt), F.col(wkt_col)))
         .drop(*_KEY_COLS)
         .dropDuplicates([id_col])
     )

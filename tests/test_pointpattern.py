@@ -2,8 +2,8 @@
 K/L ladder, Knox space-time test).  The driver-contract oracle shares
 the closed-form SQL with the engine by construction; here every pair
 count is recomputed from ALL O(n^2) haversine/time deltas in numpy —
-including antimeridian-straddling pairs, which exercise the wrapped
-ring."""
+including antimeridian-straddling pairs, which exercise the ring
+cover's longitude wrap."""
 
 import math
 
@@ -194,47 +194,90 @@ def _seam_pairs(d_m, lat_max, res):
     return np.array(lon), np.array(lat)
 
 
-def test_ring_cover_guard(spark):
-    with pytest.raises(ValueError):
-        pp.ripley_k(None, (500_000.0,), res=6, lat_max=60.0)
-    with pytest.raises(ValueError):
-        pp.knox_test(None, dist_m=200_000.0, res=6, lat_max=80.0)
+def _assert_all_exact(spark, pdf, res, lat_max, d):
+    """ripley_k, cross_k (even ids against odd), nn_g_function and
+    knox_test at one distance ``d`` equal the O(n^2) numpy counts."""
+    w = pdf[np.abs(pdf["lat"]) <= lat_max].reset_index(drop=True)
+    dm = _hav_matrix(w["lon"].to_numpy(), w["lat"].to_numpy())
+    iu = np.triu_indices(len(w), k=1)
+    close = dm <= d
+    df = spark.createDataFrame(pdf)
+
+    got = pp.ripley_k(df, (d,), res=res, lat_max=lat_max).collect()
+    assert got[0]["pairs"] == int(close[iu].sum())
+
+    even = (w["event_id"] % 2 == 0).to_numpy()
+    got = pp.cross_k(
+        df.filter("event_id % 2 = 0"), df.filter("event_id % 2 = 1"),
+        (d,), res=res, lat_max=lat_max,
+    ).collect()
+    assert got[0]["pairs"] == int(close[even][:, ~even].sum())
+
+    nn = dm.copy()
+    np.fill_diagonal(nn, np.inf)
+    got = pp.nn_g_function(df, (d,), res=res, lat_max=lat_max).collect()
+    assert got[0]["n_le"] == int((nn.min(axis=1) <= d).sum())
+
+    dt_s = 2 * 86_400
+    us = w["us"].to_numpy()
+    close_t = np.abs(us[:, None] - us[None, :])[iu] <= dt_s * 1_000_000
+    row = pp.knox_test(
+        df.select("event_id", "lon", "lat", F.expr("timestamp_micros(us)").alias("ts")),
+        dist_m=d, dt_s=dt_s, res=res, lat_max=lat_max,
+    ).collect()[0]
+    assert (row["space_pairs"], row["st_pairs"]) == (
+        int(close[iu].sum()), int((close[iu] & close_t).sum()),
+    )
+    return int(close[iu].sum())
+
+
+def _seam_cloud(d_m, lat_max, res, seed=3):
+    """Seam pairs at ``d_m`` plus 300 random window points."""
+    lon, lat = _seam_pairs(d_m, lat_max, res)
+    rng = np.random.default_rng(seed)
+    lon = np.concatenate([lon, rng.uniform(-180.0, 180.0, 300)])
+    lat = np.concatenate([lat, rng.uniform(-lat_max, lat_max, 300)])
+    us = 1_700_000_000_000_000 + rng.integers(0, 30 * 86_400_000_000, len(lon))
+    return pd.DataFrame(
+        {"event_id": np.arange(len(lon), dtype=np.int64), "lon": lon, "lat": lat, "us": us}
+    )
+
+
+def test_ring_cover_exact_at_any_res_and_distance(spark):
+    """The pair stage is complete wherever a fixed 3x3 ring was not: at
+    distances spanning several cells, near the poles, and at the seams
+    of the old ring's one-cell bound."""
     res, lat_max = 6, 60.0
-    # the former linear bound, min(cell height, cell width at lat_max):
+    # spans two cells of longitude at lat 60
+    assert _assert_all_exact(spark, _seam_cloud(500_000.0, lat_max, res), res, lat_max,
+                             500_000.0) > 60
+    # lat 80, where a cell is 109 km wide and 313 km high
+    assert _assert_all_exact(spark, _seam_cloud(200_000.0, 80.0, res), res, 80.0,
+                             200_000.0) > 60
+
+    # the linear one-cell bound, min(cell height, cell width at lat_max):
     # just under it a pair at lat 60 spans more than one cell of longitude
-    d_linear = (180.0 / (1 << res)) * pp._DEG_M
-    with pytest.raises(ValueError):
-        pp.ripley_k(None, (d_linear - 1.0,), res=res, lat_max=lat_max)
-    lon, lat = _seam_pairs(d_linear - 1.0, lat_max, res)
-    x = np.floor((lon + 180.0) / 360.0 * (1 << res)).astype(int)
+    d_linear = float(math.floor((180.0 / (1 << res)) * math.pi * pp.EARTH_RADIUS_M / 180.0))
+    pdf = _seam_cloud(d_linear - 1.0, lat_max, res)
+    x = np.floor((pdf["lon"].to_numpy() + 180.0) / 360.0 * (1 << res)).astype(int)
     dx = np.abs(x[:, None] - x[None, :])
     far = np.minimum(dx, (1 << res) - dx) >= 2
-    dm = _hav_matrix(lon, lat)
-    assert ((dm <= d_linear - 1.0) & far).any()  # the pair the ring misses
+    dm = _hav_matrix(pdf["lon"].to_numpy(), pdf["lat"].to_numpy())
+    assert ((dm <= d_linear - 1.0) & far).any()  # a pair a 3x3 ring misses
+    _assert_all_exact(spark, pdf, res, lat_max, d_linear - 1.0)
 
-    # the largest whole-metre distance the great-circle guard accepts
+    # one metre past the great-circle one-cell bound
     d_max = float(math.floor(
         2 * math.asin(math.cos(math.radians(lat_max)) * math.sin(math.pi / (1 << res)))
         * pp.EARTH_RADIUS_M
     ))
-    pp._require_ring_cover(res, lat_max, d_max)
-    with pytest.raises(ValueError):
-        pp._require_ring_cover(res, lat_max, d_max + 1.0)
-    lon, lat = _seam_pairs(d_max, lat_max, res)
-    rng = np.random.default_rng(3)
-    lon = np.concatenate([lon, rng.uniform(-180.0, 180.0, 300)])
-    lat = np.concatenate([lat, rng.uniform(-lat_max, lat_max, 300)])
-    pdf = pd.DataFrame({"event_id": np.arange(len(lon), dtype=np.int64), "lon": lon, "lat": lat})
-    got = pp.ripley_k(spark.createDataFrame(pdf), (d_max,), res=res, lat_max=lat_max).collect()
-    w = _window(pdf)
-    dm = _hav_matrix(w["lon"].to_numpy(), w["lat"].to_numpy())
-    want = int((dm[np.triu_indices(len(w), k=1)] <= d_max).sum())
-    assert want > 60 and got[0]["pairs"] == want
+    for d in (d_max, d_max + 1.0):
+        assert _assert_all_exact(spark, _seam_cloud(d, lat_max, res), res, lat_max, d) > 60
 
 
 def test_pointpattern_plan_shape(spark):
     """No cartesian/nested-loop over the point-scale sides: the pair
-    stage must be an equi-join on the packed key (the only broadcast
+    stage must be an equi-join on the ring cell (the only broadcast
     nested loops allowed are the scalar crossJoins)."""
     pdf = _cloud(n=400)
     df = spark.createDataFrame(pdf)

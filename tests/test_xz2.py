@@ -220,6 +220,32 @@ class TestLayout:
         assert sorted(map(tuple, df.collect())) == sorted(boxes)
 
 
+def test_query_geoms_antimeridian_matches_unpruned_refine(spark, tmp_path):
+    """A polygon across the antimeridian is keyed on its east/west parts;
+    the refine sees the same parts, so the pruned query returns what the
+    refine keeps over the whole table."""
+    am = "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))"
+    feats = [("am", am)] + _random_boxes(40, _rng())
+    path = str(tmp_path / "geoms")
+    xz2.write_partitioned_geoms(
+        spark.createDataFrame(pd.DataFrame(feats, columns=["geom_id", "wkt"])), path
+    )
+    every = spark.read.parquet(path)
+    cases = [
+        (_box_wkt(0, 0, 10, 10), "intersects", False),        # planar hull only
+        (_box_wkt(-175, 2, -165, 8), "intersects", True),     # west part
+        ("POLYGON((160 -5, -160 -5, -160 15, 160 15, 160 -5))", "contains", True),
+    ]
+    for q, pred, hit in cases:
+        got = {r["geom_id"] for r in xz2.query_geoms(spark, path, q, pred).collect()}
+        want = {
+            r["geom_id"]
+            for r in every.filter(xz2.geom_refine_udf(pred)(F.lit(q), F.col("wkt")))
+            .select("geom_id").distinct().collect()
+        }
+        assert got == want and ("am" in got) == hit
+
+
 class TestXZ3Layout:
     """XZ3 = binned time ⊕ XZ2 (GeoMesa ``curve/XZ3SFC.scala``): the
     geometry layout gains a leading ``time_bin=`` dir and the region

@@ -138,8 +138,8 @@ def main() -> None:
 
     rk = q.q_ripley_k(spark, sf_dir)
     plans["ripley_k"] = (
-        "Want: the pair stage is an EQUI-join on the packed ring key "
-        "(_key) — never a theta/cartesian product; ladder counts as one "
+        "Want: the pair stage is an EQUI-join on the ring-cover cell "
+        "(cell) — never a theta/cartesian product; ladder counts as one "
         "conditional aggregate above it.",
         plan_of(rk),
         rk,
@@ -254,7 +254,7 @@ def main() -> None:
 
     # REGRESSION GUARD (round-5): the autocorr family's only point-scale
     # stage is the first cell count, and it must keep its map-side combine;
-    # the point-pattern pair stage must stay an equi-join on the ring key.
+    # the point-pattern pair stage must stay an equi-join on the ring cell.
     gi_text = plans["gi_star"][1]
     if "CartesianProduct" in gi_text or "partial_count" not in gi_text:
         sys.exit(
@@ -263,12 +263,10 @@ def main() -> None:
             "aggregate, cell-table joins only)"
         )
     rk_text = plans["ripley_k"][1]
-    if "CartesianProduct" in rk_text or not re.search(
-        r"keys \[\d+\]: \[_key#", rk_text
-    ):
+    if "CartesianProduct" in rk_text or not equi_join_on(rk_text, "cell"):
         sys.exit(
             "PLAN REGRESSION: ripley_k pair stage is not an equi-join on "
-            "the packed ring key (want: join keys [_key], no cartesian)"
+            "the ring-cover cell (want: join keys [cell], no cartesian)"
         )
 
     # REGRESSION GUARD (round-4): the trajectory-similarity plan must stay

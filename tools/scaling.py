@@ -294,7 +294,7 @@ JOBS: dict[str, Job] = {
     "ripley": Job(110_000, _stats_points_split, lambda small: pp.ripley_k(
         small, (10_000.0, 25_000.0, 50_000.0), res=7, lat_max=60.0),
         _count_and_sum("pairs"), "stats_floor",
-        "Ripley's K 10/25/50 km res 7 (wrapped-ring pair join)"),
+        "Ripley's K 10/25/50 km res 7 (ring-cover pair join)"),
     "knox": Job(70_000, _stats_points_split, lambda small: pp.knox_test(
         small, dist_m=50_000.0, dt_s=3 * 3600, res=7, lat_max=60.0),
         _count_and_sum("st_pairs"), "stats_floor", "Knox 50 km / 3 h res 7"),
