@@ -438,15 +438,15 @@ def _pip_fast(a: pd.Series, b: pd.Series, side: str, rule: str) -> pd.Series | N
     """Vectorized fast path for the priority-tier predicates: one argument
     is ALL points and the other has few DISTINCT areal geometries (the
     ``WHERE st_contains(st_geomFromWKT('POLY…'), geom)`` shape — a literal
-    constant column).  Each distinct geometry is parsed once and
-    :func:`kernels.point_in_polygon` runs over its whole point group —
-    same kernel and same ring lists as the per-row relate path, so results
-    are bit-identical; returns None (caller falls back) when the shape
-    doesn't fit.
+    constant column).  Each distinct geometry is parsed once and classified
+    against its whole point group with the per-row path's union
+    point-in-polygon (``de9im._pip_multi`` over the same
+    :func:`relate.unwrap` parts), so results are bit-identical; returns
+    None (caller falls back) when the shape doesn't fit.
 
     side: which argument must be the point side ('a', 'b', 'any');
-    rule: 'in' (interior only), 'cov' (boundary counts), 'int'
-    (intersects, multipolygon ok), 'out' (disjoint)."""
+    rule: 'in' (interior only), 'cov' (boundary counts: covers and
+    intersects), 'out' (disjoint)."""
     if side in ("b", "any") and _all_points(b) and not _all_points(a):
         pts, geoms = b, a
     elif side in ("a", "any") and _all_points(a) and not _all_points(b):
@@ -459,9 +459,11 @@ def _pip_fast(a: pd.Series, b: pd.Series, side: str, rule: str) -> pd.Series | N
         g = wkt.wkb_to_geom(u)
         if g is None:
             parsed.append(None)
-        elif g.kind == wkt.WKB_POLYGON:
+            continue
+        g = relate.unwrap(g)
+        if g.kind == wkt.WKB_POLYGON:
             parsed.append([g.coords])
-        elif g.kind == wkt.WKB_MULTIPOLYGON and rule in ("int", "out"):
+        elif g.kind == wkt.WKB_MULTIPOLYGON:
             parsed.append(list(g.coords))
         else:
             return None  # mixed/odd kinds: keep exact per-row semantics
@@ -469,26 +471,41 @@ def _pip_fast(a: pd.Series, b: pd.Series, side: str, rule: str) -> pd.Series | N
     pt_null = ~(np.isfinite(lons) & np.isfinite(lats))
     geom_null = codes == -1
     hit = np.zeros(len(lons), dtype=bool)
-    for ui, parts in enumerate(parsed):
+    for ui, polys in enumerate(parsed):
         m = codes == ui
-        if parts is None:  # unparseable WKB → None, like the per-row path
+        if polys is None:  # unparseable WKB → None, like the per-row path
             geom_null |= m
             continue
         if not m.any():
             continue
+        cls = de9im._pip_multi(lons[m], lats[m], polys)
         if rule == "in":
-            hit[m] = kernels.point_in_polygon(lons[m], lats[m], parts[0]) == kernels.PIP_IN
+            hit[m] = cls == kernels.PIP_IN
+        elif rule == "out":
+            hit[m] = cls == kernels.PIP_OUT
         else:
-            cov = np.zeros(int(m.sum()), dtype=bool)
-            for rings in parts:
-                cov |= kernels.point_in_polygon(lons[m], lats[m], rings) != kernels.PIP_OUT
-            hit[m] = ~cov if rule == "out" else cov
+            hit[m] = cls != kernels.PIP_OUT
     out = hit.astype(object)
     out[pt_null | geom_null] = None
     return pd.Series(out)
 
 
-def _binary_relation(fn, fast: tuple[str, str] | None = None):
+#: point-side shapes :func:`_pip_fast` answers, per relation: (point side, rule)
+_PIP_FAST = {
+    "contains": ("b", "in"),
+    "within": ("a", "in"),
+    "intersects": ("any", "cov"),
+    "disjoint": ("any", "out"),
+    "covers": ("b", "cov"),
+    "coveredBy": ("a", "cov"),
+}
+
+
+def _binary_relation(name: str):
+    """The ``st_<name>`` UDF: :func:`relate.predicate` per row, after the
+    vectorized point path where the relation has one."""
+    fast = _PIP_FAST.get(name)
+
     def impl(a: pd.Series, b: pd.Series) -> pd.Series:
         if fast is not None:
             r = _pip_fast(a, b, *fast)
@@ -496,7 +513,7 @@ def _binary_relation(fn, fast: tuple[str, str] | None = None):
                 return r
         ga, gb = _parse_series(a), _parse_series(b)
         return pd.Series(
-            [bool(fn(x, y)) if (x is not None and y is not None) else None
+            [relate.predicate(name, x, y) if (x is not None and y is not None) else None
              for x, y in zip(ga, gb)]
         )
 
@@ -504,41 +521,16 @@ def _binary_relation(fn, fast: tuple[str, str] | None = None):
     return impl
 
 
-st_contains = _binary_relation(relate.contains, fast=("b", "in"))
-st_within = _binary_relation(lambda a, b: relate.contains(b, a), fast=("a", "in"))
-st_intersects = _binary_relation(relate.intersects, fast=("any", "int"))
-st_disjoint = _binary_relation(lambda a, b: not relate.intersects(a, b), fast=("any", "out"))
-st_covers = _binary_relation(relate.covers, fast=("b", "cov"))
-st_coveredBy = _binary_relation(lambda a, b: relate.covers(b, a), fast=("a", "cov"))
-st_equals = _binary_relation(relate.equals)
-st_crosses = _binary_relation(
-    lambda a, b: relate.intersects(a, b) and not relate.contains(a, b) and not relate.contains(b, a)
-)
-st_overlaps = _binary_relation(
-    lambda a, b: a.kind == b.kind and relate.intersects(a, b)
-    and not relate.contains(a, b) and not relate.contains(b, a) and not relate.equals(a, b)
-)
-st_touches = _binary_relation(
-    lambda a, b: relate.intersects(a, b)
-    and not (relate.contains(a, b) or relate.contains(b, a))
-    and _touch_only(a, b)
-)
-
-
-def _touch_only(a, b) -> bool:
-    """True when the geometries meet only at boundaries (point-on-boundary
-    / shared edge), i.e. no interior-interior overlap."""
-    if a.kind == wkt.WKB_POINT and b.kind == wkt.WKB_POLYGON:
-        return relate._pip_one(a.coords[0], a.coords[1], b.coords) == kernels.PIP_BOUNDARY
-    if b.kind == wkt.WKB_POINT and a.kind == wkt.WKB_POLYGON:
-        return relate._pip_one(b.coords[0], b.coords[1], a.coords) == kernels.PIP_BOUNDARY
-    if a.kind == wkt.WKB_POLYGON and b.kind == wkt.WKB_POLYGON:
-        oa = kernels.close_ring(a.coords[0])
-        ob = kernels.close_ring(b.coords[0])
-        ca = kernels.point_in_polygon(ob[:-1, 0], ob[:-1, 1], a.coords)
-        cb = kernels.point_in_polygon(oa[:-1, 0], oa[:-1, 1], b.coords)
-        return not (ca == kernels.PIP_IN).any() and not (cb == kernels.PIP_IN).any()
-    return False
+st_contains = _binary_relation("contains")
+st_within = _binary_relation("within")
+st_intersects = _binary_relation("intersects")
+st_disjoint = _binary_relation("disjoint")
+st_covers = _binary_relation("covers")
+st_coveredBy = _binary_relation("coveredBy")
+st_equals = _binary_relation("equals")
+st_crosses = _binary_relation("crosses")
+st_overlaps = _binary_relation("overlaps")
+st_touches = _binary_relation("touches")
 
 
 @_pd("boolean")
@@ -560,7 +552,11 @@ def st_dwithin(a: pd.Series, b: pd.Series, meters: pd.Series) -> pd.Series:
 @_pd("string")
 def st_relate(a: pd.Series, b: pd.Series) -> pd.Series:
     ga, gb = _parse_series(a), _parse_series(b)
-    return pd.Series([de9im.relate_matrix(x, y) for x, y in zip(ga, gb)], dtype=object)
+    return pd.Series(
+        [relate.matrix(x, y) if (x is not None and y is not None) else None
+         for x, y in zip(ga, gb)],
+        dtype=object,
+    )
 
 
 @_pd("boolean")
@@ -568,20 +564,13 @@ def st_relateBool(a: pd.Series, b: pd.Series, pattern: pd.Series) -> pd.Series:
     ga, gb = _parse_series(a), _parse_series(b)
     pats = pattern.to_numpy(object)
 
-    def match(m, p):
-        if m is None or p is None or len(p) != 9:
+    def match(x, y, p):
+        if x is None or y is None or p is None or len(p) != 9:
             return None
-        for mc, pc in zip(m, p):
-            if pc == "*":
-                continue
-            if pc == "T":
-                if mc == "F":
-                    return False
-            elif mc != pc:
-                return False
-        return True
+        m = relate.matrix(x, y)
+        return None if m is None else relate.matches(m, p)
 
-    return pd.Series([match(de9im.relate_matrix(x, y), p) for x, y, p in zip(ga, gb, pats)])
+    return pd.Series([match(x, y, p) for x, y, p in zip(ga, gb, pats)])
 
 
 @_pd("binary")

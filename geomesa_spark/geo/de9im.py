@@ -17,16 +17,18 @@ Conventions (planar, matching ``geo/relate.py``):
 - matrix rows are [interior, boundary, exterior] of A against the same
   of B, row-major, dimensions in {F, 0, 1, 2}.
 
-All work is O(segments_A × segments_B) per pair — st_relate is a
-diagnostic/compat surface, not a join path; joins use the cover+refine
-kernels.
+Every named ``st_*`` relation is a JTS pattern over this matrix
+(:func:`geomesa_spark.geo.relate.predicate`), so it is the engine's one
+definition of contains/covers/touches/crosses/overlaps/equals.  All work
+is O(segments_A × segments_B) per pair: it refines candidate pairs, while
+joins use the cover+refine kernels.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import kernels
+from . import kernels, wkt
 
 _EPS = 1e-9
 
@@ -248,6 +250,8 @@ def _pip_multi(xs: np.ndarray, ys: np.ndarray, polys: list[list[np.ndarray]]) ->
     """PIP against a union of polygons: IN if inside any part, else
     BOUNDARY if on any part's rings, else OUT (valid multis: disjoint
     part interiors)."""
+    if len(polys) == 1:
+        return kernels.point_in_polygon(xs, ys, polys[0])
     best = np.zeros(len(xs), dtype=np.int8)
     for rings in polys:
         best = np.maximum(best, _RANK[kernels.point_in_polygon(xs, ys, rings)])
@@ -496,8 +500,6 @@ def decompose(g):
     ('P', [(x, y)…]) | ('L', [coords…]) | ('A', [rings-list…]).  Returns
     None for mixed-dimension collections (JTS needs a full topology graph
     there) and for unknown kinds."""
-    from . import wkt
-
     pts: list[tuple] = []
     lines: list[np.ndarray] = []
     polys: list[list[np.ndarray]] = []
@@ -537,6 +539,14 @@ _DISPATCH = {
 }
 
 
+def decomposed_matrix(da: tuple, db: tuple) -> str:
+    """Joint DE-9IM of two :func:`decompose` results."""
+    fn = _DISPATCH.get((da[0], db[0]))
+    if fn is not None:
+        return fn(da[1], db[1])
+    return transpose(_DISPATCH[(db[0], da[0])](db[1], da[1]))
+
+
 def relate_matrix(ga, gb) -> str | None:
     """Joint DE-9IM for any homogeneous pair, including MULTI* and
     single-dimension GEOMETRYCOLLECTIONs; None when either side mixes
@@ -544,7 +554,4 @@ def relate_matrix(ga, gb) -> str | None:
     da, db = decompose(ga), decompose(gb)
     if da is None or db is None:
         return None
-    fn = _DISPATCH.get((da[0], db[0]))
-    if fn is not None:
-        return fn(da[1], db[1])
-    return transpose(_DISPATCH[(db[0], da[0])](db[1], da[1]))
+    return decomposed_matrix(da, db)

@@ -8,12 +8,19 @@ tiling) never come through here — they use the fully vectorized kernels in
 :mod:`geomesa_spark.geo.kernels`; this module is the per-geometry general
 dispatch used by the SQL function surface, batched at the Arrow-UDF level.
 
-Precision notes (documented semantics, SURVEY.md §2.6 priority tier):
-- point⊗polygon, point⊗point, point⊗linestring: exact (ray crossing /
-  segment tests with boundary classification);
-- polygon⊗polygon and linestring⊗* : exact for simple polygons via
-  vertex-containment + edge-crossing tests; DE-9IM exotica (EQUALS of
-  collapsed geometries, TOUCHES along collinear overlaps) approximate;
+Semantics:
+- every named relation is ONE definition: its JTS ``IntersectionMatrix``
+  pattern (:data:`_PATTERNS`) over the computed DE-9IM of
+  :func:`geomesa_spark.geo.de9im.relate_matrix`, through
+  :func:`predicate`; ``st_relate``/``st_relateBool`` read the same matrix
+  (:func:`matrix`, :func:`matches`);
+- :func:`intersects` is the fast ``intersects``/``disjoint`` (vertex
+  point-in-polygon + edge crossings, with de9im's planar incidence rule
+  for points on lines), so it agrees with the matrix's four
+  intersection cells;
+- a polygon whose ring jumps more than 180° in longitude is read as its
+  :func:`wkt.antimeridian_split` parts, as the XZ2 keys, ``PolygonSet``
+  and ``pip_refine_udf`` read it;
 - distances: planar in degrees (st_distance parity with JTS) and
   spherical meters (haversine; vertex/edge-projection for lines).
 """
@@ -22,8 +29,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import kernels, wkt
-from .kernels import PIP_IN, PIP_OUT
+from . import de9im, kernels, wkt
+from .kernels import PIP_OUT
 
 
 def _as_parts(g: wkt.Geometry) -> list:
@@ -44,8 +51,8 @@ def _pip_one(lon: float, lat: float, rings) -> int:
 
 
 def _point_on_line(lon: float, lat: float, coords: np.ndarray) -> bool:
-    d = kernels.point_segments_dist_m(np.asarray([lon]), np.asarray([lat]), coords)
-    return bool(d[0] < 0.5)  # sub-meter tolerance in geodesic space
+    # de9im's planar incidence rule, so the fast path and the matrix agree
+    return de9im._on_polyline((lon, lat), de9im._segments(coords))
 
 
 def _edges(coords: np.ndarray):
@@ -119,7 +126,7 @@ def intersects(ga: wkt.Geometry, gb: wkt.Geometry) -> bool:
 def _intersects_single(a: wkt.Geometry, b: wkt.Geometry) -> bool:
     P, L, G = wkt.WKB_POINT, wkt.WKB_LINESTRING, wkt.WKB_POLYGON
     if a.kind == P and b.kind == P:
-        return bool(np.allclose(a.coords, b.coords, atol=1e-12))
+        return de9im._pt_key(a.coords) == de9im._pt_key(b.coords)
     if a.kind == P and b.kind == G:
         return _pip_one(a.coords[0], a.coords[1], b.coords) != PIP_OUT
     if a.kind == G and b.kind == P:
@@ -139,164 +146,113 @@ def _intersects_single(a: wkt.Geometry, b: wkt.Geometry) -> bool:
     return False
 
 
-def contains(ga: wkt.Geometry, gb: wkt.Geometry) -> bool:
-    """DE-9IM contains: b's interior within a's interior, b not touching
-    only the boundary."""
-    P, L, G = wkt.WKB_POINT, wkt.WKB_LINESTRING, wkt.WKB_POLYGON
-    if ga.kind == G:
-        pa = ga.coords
-        if gb.kind == P:
-            return _pip_one(gb.coords[0], gb.coords[1], pa) == PIP_IN
-        if gb.kind == L:
-            cls = kernels.point_in_polygon(gb.coords[:, 0], gb.coords[:, 1], pa)
-            if (cls == PIP_OUT).any() or not (cls == PIP_IN).any():
+def unwrap(g: wkt.Geometry) -> wkt.Geometry:
+    """``g`` with each polygon whose ring jumps more than 180° in longitude
+    replaced by its :func:`wkt.antimeridian_split` parts (a MULTIPOLYGON
+    then); any other geometry is returned as is."""
+    if g.kind == wkt.WKB_POLYGON:
+        polys = [g.coords]
+    elif g.kind == wkt.WKB_MULTIPOLYGON:
+        polys = g.coords
+    else:
+        return g
+    # a ring spanning at most 180° of longitude has no such jump
+    lons = [np.asarray(rings[0], dtype=np.float64)[:, 0] for rings in polys]
+    if all(x.max() - x.min() <= 180.0 for x in lons):
+        return g
+    parts = [
+        q.coords
+        for rings in polys
+        for q in wkt.antimeridian_split(wkt.Geometry(wkt.WKB_POLYGON, rings))
+    ]
+    if len(parts) == len(polys):
+        return g
+    return wkt.Geometry(wkt.WKB_MULTIPOLYGON, parts)
+
+
+def matrix(ga: wkt.Geometry, gb: wkt.Geometry) -> str | None:
+    """The DE-9IM matrix the named relations are defined over
+    (``st_relate``); None for a mixed-dimension GEOMETRYCOLLECTION."""
+    return de9im.relate_matrix(unwrap(ga), unwrap(gb))
+
+
+def matches(m: str, pattern: str) -> bool:
+    """JTS ``IntersectionMatrix.matches``: per cell, ``*`` matches any
+    dimension, ``T`` any non-``F`` one, and ``F``/``0``/``1``/``2`` only
+    themselves."""
+    return all(p == "*" or p == c or (p == "T" and c != "F") for c, p in zip(m, pattern))
+
+
+#: JTS ``IntersectionMatrix`` patterns of the named relations, keyed by the
+#: (dimension of A, dimension of B) class pair ("P", "L", "A", as
+#: :func:`de9im.decompose` returns them) or ``"**"`` for every pair.  A
+#: relation holds when the matrix matches one of its patterns; a pair that
+#: its table does not list never satisfies it.
+_PATTERNS: dict[str, dict[str, tuple[str, ...]]] = {
+    "contains": {"**": ("T*****FF*",)},
+    "within": {"**": ("T*F**F***",)},
+    "covers": {"**": ("T*****FF*", "*T****FF*", "***T**FF*", "****T*FF*")},
+    "coveredBy": {"**": ("T*F**F***", "*TF**F***", "**FT*F***", "**F*TF***")},
+    "intersects": {"**": ("T********", "*T*******", "***T*****", "****T****")},
+    "disjoint": {"**": ("FF*FF****",)},
+    "touches": {"PP": (), "**": ("FT*******", "F**T*****", "F***T****")},
+    "crosses": {
+        **{d: ("T*T******",) for d in ("PL", "PA", "LA")},
+        **{d: ("T*****T**",) for d in ("LP", "AP", "AL")},
+        "LL": ("0********",),
+    },
+    "overlaps": {"PP": ("T*T***T**",), "AA": ("T*T***T**",), "LL": ("1*T***T**",)},
+    "equals": {d: ("T*F**FFF*",) for d in ("PP", "LL", "AA")},
+}
+
+
+def _vertex_outside(polys: list, d: tuple) -> bool:
+    """Some vertex of the decomposed geometry ``d`` lies in the exterior of
+    the polygon union ``polys`` (then it does not cover, nor contain, d)."""
+    kind, parts = d
+    v = np.vstack(parts if kind == "L" else [r for rings in parts for r in rings])
+    return bool((de9im._pip_multi(v[:, 0], v[:, 1], polys) == PIP_OUT).any())
+
+
+def predicate(name: str, ga: wkt.Geometry, gb: wkt.Geometry) -> bool | None:
+    """The named relation (``contains``, ``within``, ``covers``,
+    ``coveredBy``, ``intersects``, ``disjoint``, ``touches``, ``crosses``,
+    ``overlaps`` or ``equals``) of A to B: its :data:`_PATTERNS` entry over
+    the DE-9IM matrix of the pair, antimeridian-crossing polygons read as
+    their split parts.
+
+    ``intersects``/``disjoint`` are answered by :func:`intersects`, and
+    every other relation is False when it is.  Two more exact shortcuts
+    skip the matrix: a vertex of B in areal A's exterior rejects
+    ``contains``/``covers`` (and of A in areal B's, ``within``/
+    ``coveredBy``), and a dimension pair without patterns is False.  A
+    point side goes straight to the matrix, which is then its
+    point-in-polygon class.
+
+    A mixed-dimension GEOMETRYCOLLECTION has no matrix here: every
+    relation but ``intersects``/``disjoint`` is then None (NULL), as
+    ``st_relate`` is."""
+    ga, gb = unwrap(ga), unwrap(gb)
+    if name in ("intersects", "disjoint"):
+        return intersects(ga, gb) == (name == "intersects")
+    table = _PATTERNS[name]
+    da, db = de9im.decompose(ga), de9im.decompose(gb)
+    if da is None or db is None:
+        return None
+    pats = table.get(da[0] + db[0], table.get("**", ()))
+    if not pats:
+        return False
+    if "P" not in (da[0], db[0]):
+        if name in ("contains", "covers") and da[0] == "A":
+            if _vertex_outside(da[1], db):
                 return False
-            for r in pa:
-                if _any_edge_cross(gb.coords, kernels.close_ring(r)):
-                    return False
-            return True
-        if gb.kind == G:
-            return _poly_contains_poly(pa, gb.coords)
-        if gb.kind in (wkt.WKB_MULTIPOINT, wkt.WKB_MULTILINESTRING, wkt.WKB_MULTIPOLYGON):
-            return all(contains(ga, p) for p in _as_parts(gb))
-    if ga.kind == P and gb.kind == P:
-        return bool(np.allclose(ga.coords, gb.coords, atol=1e-12))
-    return False
-
-
-def covers(ga: wkt.Geometry, gb: wkt.Geometry) -> bool:
-    """Like contains but boundary points count as covered."""
-    if ga.kind == wkt.WKB_POLYGON and gb.kind == wkt.WKB_POINT:
-        return _pip_one(gb.coords[0], gb.coords[1], ga.coords) != PIP_OUT
-    if ga.kind == wkt.WKB_POLYGON and gb.kind == wkt.WKB_POLYGON:
-        ob = kernels.close_ring(gb.coords[0])
-        cls = kernels.point_in_polygon(ob[:-1, 0], ob[:-1, 1], ga.coords)
-        if (cls == PIP_OUT).any():
+        elif name in ("within", "coveredBy") and db[0] == "A":
+            if _vertex_outside(db[1], da):
+                return False
+        elif not intersects(ga, gb):
             return False
-        # vertices inside is necessary, not sufficient (an edge can bulge
-        # into A's exterior, or B can cover one of A's holes): exact via
-        # the computed DE-9IM — covers ⟺ EI=F ∧ EB=F
-        from . import de9im
-
-        m = de9im.poly_poly_matrix(ga.coords, gb.coords)
-        return m[6] == "F" and m[7] == "F"
-    return contains(ga, gb)
-
-
-#: equals() quantization: coordinates are rounded to this many decimals
-#: (~1e-12 deg ≈ 0.1 µm) before canonical selection AND comparison, so the
-#: byte order used to pick rotation/direction and the value comparison
-#: agree by construction (round-5 advice: exact-tobytes selection + atol
-#: comparison could canonicalize tolerance-equal rings differently and
-#: return a false negative).
-_EQ_DECIMALS = 12
-
-
-def _quant(a) -> np.ndarray:
-    # `+ 0.0` folds -0.0 → +0.0 so the two share one byte pattern
-    return np.round(np.asarray(a, dtype=np.float64), _EQ_DECIMALS) + 0.0
-
-
-def _canon_ring(ring: np.ndarray) -> np.ndarray:
-    """Canonical form of a ring: quantize, open it, rotate so the
-    lexicographically smallest vertex comes first, then pick the
-    byte-smaller of the two orientations — so two rings equal up to
-    rotation AND direction get the identical array."""
-    r = kernels.close_ring(_quant(ring))[:-1]
-    i = int(np.lexsort((r[:, 1], r[:, 0]))[0])
-    fwd = np.roll(r, -i, axis=0)
-    rev = np.roll(fwd[::-1], 1, axis=0)  # same start vertex, opposite walk
-    return fwd if fwd.tobytes() <= rev.tobytes() else rev
-
-
-def _canon_line(line: np.ndarray) -> np.ndarray:
-    """Direction-canonical polyline: the byte-smaller of the two walks
-    (quantized, so selection and comparison use the same values)."""
-    c = _quant(line)
-    r = c[::-1]
-    return c if c.tobytes() <= r.tobytes() else r
-
-
-def equals(ga: wkt.Geometry, gb: wkt.Geometry) -> bool:
-    """Geometry equality up to the representation freedoms JTS ``equals``
-    ignores: ring ROTATION and DIRECTION for polygons, line DIRECTION for
-    linestrings, part/vertex ORDER for MULTI* (round 4 — the round-3
-    coordinate-sequence narrowing).  Coordinates compare after
-    quantization to `_EQ_DECIMALS` decimals (round 5): canonical
-    rotation/direction selection and the equality check see the SAME
-    values, so tolerance-equal inputs can no longer canonicalize to
-    different rotations.  Still vertex-based: two boundaries tracing the
-    same set with different collinear-vertex splits compare unequal
-    (documented; JTS normalizes nodes, we don't)."""
-    if ga.kind != gb.kind:
-        return False
-    if ga.kind == wkt.WKB_POINT:
-        return bool(np.array_equal(_quant(ga.coords), _quant(gb.coords)))
-    try:
-        if ga.kind == wkt.WKB_POLYGON:
-            if len(ga.coords) != len(gb.coords):
-                return False
-            # outer ring pairs with outer; holes compare as a multiset
-            if not _ring_eq(ga.coords[0], gb.coords[0]):
-                return False
-            return _multiset_eq(
-                [_canon_ring(h) for h in ga.coords[1:]],
-                [_canon_ring(h) for h in gb.coords[1:]],
-            )
-        if ga.kind == wkt.WKB_LINESTRING:
-            a, b = _canon_line(ga.coords), _canon_line(gb.coords)
-            return bool(np.array_equal(a, b))
-        if ga.kind == wkt.WKB_MULTIPOINT:
-            a = _quant(ga.coords)
-            b = _quant(gb.coords)
-            if a.shape != b.shape:
-                return False
-            a = a[np.lexsort((a[:, 1], a[:, 0]))]
-            b = b[np.lexsort((b[:, 1], b[:, 0]))]
-            return bool(np.array_equal(a, b))
-        if ga.kind == wkt.WKB_MULTILINESTRING:
-            return _multiset_eq(
-                [_canon_line(p) for p in ga.coords],
-                [_canon_line(p) for p in gb.coords],
-            )
-        if ga.kind == wkt.WKB_MULTIPOLYGON:
-            return _multiset_eq(
-                [_canon_poly(poly) for poly in ga.coords],
-                [_canon_poly(poly) for poly in gb.coords],
-            )
-        return bool(np.allclose(ga.coords, gb.coords, atol=1e-12))
-    except (ValueError, TypeError):
-        return False
-
-
-def _canon_poly(poly: list[np.ndarray]) -> np.ndarray:
-    """Canonical polygon: outer ring first, holes sorted by canonical
-    bytes, each ring prefixed by an (inf, ring_len) separator row so
-    different ring partitions of the same vertex rows can never collide
-    (inf never appears as a coordinate)."""
-    rings = [_canon_ring(poly[0])] + sorted(
-        (_canon_ring(h) for h in poly[1:]), key=lambda r: r.tobytes()
-    )
-    parts = []
-    for r in rings:
-        parts.append(np.array([[np.inf, float(len(r))]]))
-        parts.append(r)
-    return np.vstack(parts)
-
-
-def _ring_eq(a: np.ndarray, b: np.ndarray) -> bool:
-    return bool(np.array_equal(_canon_ring(a), _canon_ring(b)))
-
-
-def _multiset_eq(parts_a: list[np.ndarray], parts_b: list[np.ndarray]) -> bool:
-    """Order-insensitive comparison of canonicalized (quantized) parts:
-    sorted by the canonical bytes, then pairwise exact — sound because
-    sorting and comparison operate on the same quantized values."""
-    if len(parts_a) != len(parts_b):
-        return False
-    sa = sorted(parts_a, key=lambda p: p.tobytes())
-    sb = sorted(parts_b, key=lambda p: p.tobytes())
-    return all(np.array_equal(x, y) for x, y in zip(sa, sb))
+    m = de9im.decomposed_matrix(da, db)
+    return any(matches(m, p) for p in pats)
 
 
 def distance_deg(ga: wkt.Geometry, gb: wkt.Geometry) -> float:

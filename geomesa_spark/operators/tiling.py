@@ -76,7 +76,6 @@ def assign_tiles(
 
 def tile_pyramid(
     df: DataFrame, zooms: list[int], lon="lon", lat="lat", weight: str | None = None,
-    partial_agg: bool = True,
 ) -> DataFrame:
     """Density pyramid: (zoom, tile_x, tile_y) → count (+ weighted sum).
 
@@ -110,16 +109,6 @@ def tile_pyramid(
     keyed = d.select(
         _cell_key(lon, lat, base_z).alias("tkey"), *([weight] if weight is not None else [])
     )
-    # partial_agg=False: when the base-zoom keyspace (4^base_z tiles) is
-    # comparable to rows-per-task — high zooms over wide-area data — the
-    # map-side partial agg compresses ~nothing yet builds a task-sized hash
-    # map AND pads the exchange rows with a count column.  Shuffling the
-    # raw single-column key instead ships 16-byte rows (vs 24) and
-    # aggregates once, post-exchange, over small per-partition key ranges.
-    # Keep the default True for low zooms / dense data, where map-side
-    # combine is the win (DensityScan partial/final shape).
-    if not partial_agg:
-        keyed = keyed.repartition("tkey")
     base = (
         keyed
         .groupBy("tkey")

@@ -197,39 +197,28 @@ def route_join(
         )
     cover_df = spark.createDataFrame(pd.concat(rows, ignore_index=True).drop_duplicates())
 
-    @F.pandas_udf("double")
-    def route_dist(lon: pd.Series, lat: pd.Series, rid: pd.Series) -> pd.Series:
+    @F.pandas_udf("struct<dist:double,bearing:double>")
+    def route_near(lon: pd.Series, lat: pd.Series, rid: pd.Series) -> pd.DataFrame:
         lons = lon.to_numpy(np.float64, na_value=np.nan)
         lats = lat.to_numpy(np.float64, na_value=np.nan)
         rids = rid.to_numpy(object)
-        out = np.full(len(lons), np.inf)
+        dist = np.full(len(lons), np.inf)
+        bear = np.zeros(len(lons))
         for rr in pd.unique(rids):
             m = rids == rr
-            out[m] = kernels.point_segments_dist_m(lons[m], lats[m], segs[rr])
-        return pd.Series(out)
+            dist[m], bear[m] = kernels.point_segments_nearest(lons[m], lats[m], segs[rr])
+        return pd.DataFrame({"dist": dist, "bearing": bear})
 
     pts = spatial_join.add_cell_column(points, res)
     cand = pts.join(F.broadcast(cover_df), "cell", "inner")
+    # optimizer fence (nondeterministic flag): the filter below cannot
+    # be pushed through this projection, so the UDF is evaluated once
+    cand = cand.withColumn(
+        "_near",
+        route_near.asNondeterministic()(F.col("lon"), F.col("lat"), F.col("route_id")),
+    ).withColumn("route_dist_m", F.col("_near.dist"))
+    keep = F.col("route_dist_m") <= float(max_dist_m)
     if heading_col is not None and max_heading_delta_deg is not None:
-
-        @F.pandas_udf("struct<dist:double,bearing:double>")
-        def route_near(lon: pd.Series, lat: pd.Series, rid: pd.Series) -> pd.DataFrame:
-            lons = lon.to_numpy(np.float64, na_value=np.nan)
-            lats = lat.to_numpy(np.float64, na_value=np.nan)
-            rids = rid.to_numpy(object)
-            dist = np.full(len(lons), np.inf)
-            bear = np.zeros(len(lons))
-            for rr in pd.unique(rids):
-                m = rids == rr
-                dist[m], bear[m] = kernels.point_segments_nearest(lons[m], lats[m], segs[rr])
-            return pd.DataFrame({"dist": dist, "bearing": bear})
-
-        # optimizer fence (nondeterministic flag): the filter below cannot
-        # be pushed through this projection, so the UDF is evaluated once
-        cand = cand.withColumn(
-            "_near",
-            route_near.asNondeterministic()(F.col("lon"), F.col("lat"), F.col("route_id")),
-        ).withColumn("route_dist_m", F.col("_near.dist"))
         delta = F.pmod(F.abs(F.col(heading_col) - F.col("_near.bearing")), F.lit(360.0))
         delta = F.least(delta, F.lit(360.0) - delta)
         if bidirectional:
@@ -238,18 +227,8 @@ def route_join(
         # is matched on distance alone, same as the non-heading path — the
         # heading constraint filters only points that assert a conflicting
         # heading.  coalesce keeps the NULL delta from dropping the row.
-        cand = cand.filter(
-            (F.col("route_dist_m") <= float(max_dist_m))
-            & F.coalesce(delta <= float(max_heading_delta_deg), F.lit(True))
-        ).drop("_near")
-    else:
-        # optimizer fence (nondeterministic flag): one route_dist evaluation,
-        # not a filter copy plus a projection copy
-        cand = cand.withColumn(
-            "route_dist_m",
-            route_dist.asNondeterministic()(F.col("lon"), F.col("lat"), F.col("route_id")),
-        )
-        cand = cand.filter(F.col("route_dist_m") <= float(max_dist_m))
+        keep &= F.coalesce(delta <= float(max_heading_delta_deg), F.lit(True))
+    cand = cand.filter(keep).drop("_near")
     w = Window.partitionBy(id_col).orderBy(F.col("route_dist_m").asc(), F.col("route_id").asc())
     return (
         cand.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") == 1).drop("_rk")

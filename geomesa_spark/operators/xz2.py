@@ -406,14 +406,10 @@ def xz2_join_points(
 
 def geom_refine_udf(predicate: str = "intersects"):
     """Exact geometry×geometry refine for candidate pairs: (wkt_a, wkt_b)
-    → bool through :mod:`geomesa_spark.geo.relate`, with per-batch parse
-    caching on both sides (candidates cluster by geometry, so each parses
-    once per batch).
-
-    A polygon that crosses the antimeridian is evaluated on its
-    :func:`wkt.antimeridian_split` parts, as the XZ2 keys and
-    :func:`pip_refine_udf` see it: intersects when any part of A meets
-    any part of B, contains when each part of B lies in some part of A."""
+    → ``relate.predicate(predicate, a, b)``, with per-batch parse caching
+    on both sides (candidates cluster by geometry, so each parses once
+    per batch).  An antimeridian-crossing polygon is read on its split
+    parts there, as the XZ2 keys and :func:`pip_refine_udf` read it."""
     from ..geo import relate
 
     pred = predicate
@@ -422,8 +418,7 @@ def geom_refine_udf(predicate: str = "intersects"):
 
     def _parse(w):
         if w not in parsed:
-            g = wkt.parse_wkt(w)
-            parsed[w] = None if g is None else wkt.antimeridian_split(g)
+            parsed[w] = wkt.parse_wkt(w)
         return parsed[w]
 
     @F.pandas_udf("boolean")
@@ -434,19 +429,14 @@ def geom_refine_udf(predicate: str = "intersects"):
         cb, ub = pd.factorize(wb, use_na_sentinel=True)
         pa = [_parse(w) for w in ua]
         pb = [_parse(w) for w in ub]
-        memo: dict[tuple[int, int], bool] = {}
-        for ia, ib in zip(ca, cb):
-            if (ia, ib) in memo:
-                continue
-            ga = pa[ia] if ia >= 0 else None
-            gb = pb[ib] if ib >= 0 else None
-            if ga is None or gb is None:
-                memo[ia, ib] = False
-            elif pred == "contains":
-                memo[ia, ib] = all(any(relate.contains(x, y) for x in ga) for y in gb)
-            else:
-                memo[ia, ib] = any(relate.intersects(x, y) for x in ga for y in gb)
-        return pd.Series([memo[k] for k in zip(ca, cb)], dtype=bool)
+        return pd.Series(
+            [
+                ia >= 0 and ib >= 0 and pa[ia] is not None and pb[ib] is not None
+                and relate.predicate(pred, pa[ia], pb[ib]) is True
+                for ia, ib in zip(ca, cb)
+            ],
+            dtype=bool,
+        )
 
     return refine
 

@@ -6,6 +6,9 @@ offline).  Pure numpy — no Spark session needed.
 """
 
 import numpy as np
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from geomesa_spark.geo import de9im, wkt
 
@@ -234,8 +237,6 @@ class TestPolyPoly:
             m = de9im.poly_poly_matrix(ra, rb)
             inter = any(c != "F" for c in (m[0], m[1], m[3], m[4]))
             assert inter == relate.intersects(ga, gb), (ra, rb, m)
-            contains = m[0] != "F" and m[6] == "F" and m[7] == "F"
-            assert contains == relate.contains(ga, gb), (ra, rb, m)
 
 
 class TestMultiJoint:
@@ -397,15 +398,14 @@ class TestPolyPolyBoxDifferential:
 
 
 class TestEqualsCanonical:
-    """Round 4: `relate.equals` is invariant to ring rotation/direction,
-    line direction, and MULTI* part order (the round-3 coordinate-sequence
-    narrowing).  Still vertex-based: different collinear splits of the
-    same boundary compare unequal (documented)."""
+    """`equals` (the JTS ``T*F**FFF*`` pattern over the matrix) is invariant
+    to ring rotation/direction, line direction, MULTI* part order and
+    collinear vertex splits: it compares point sets, not vertex lists."""
 
     def _eq(self, a, b):
         from geomesa_spark.geo import relate
 
-        return relate.equals(wkt.parse_wkt(a), wkt.parse_wkt(b))
+        return relate.predicate("equals", wkt.parse_wkt(a), wkt.parse_wkt(b))
 
     def test_polygon_rotation(self):
         assert self._eq(
@@ -442,9 +442,12 @@ class TestEqualsCanonical:
         assert self._eq("LINESTRING(0 0, 1 1, 2 0)", "LINESTRING(2 0, 1 1, 0 0)")
         assert not self._eq("LINESTRING(0 0, 1 1, 2 0)", "LINESTRING(0 0, 1 1, 2 1)")
 
-    def test_collinear_split_documented_unequal(self):
-        # same point set, extra collinear vertex: JTS says equal, we don't
-        assert not self._eq("LINESTRING(0 0, 2 0)", "LINESTRING(0 0, 1 0, 2 0)")
+    def test_collinear_split_equal(self):
+        # same point set, extra collinear vertex: equal, as in JTS
+        assert self._eq("LINESTRING(0 0, 2 0)", "LINESTRING(0 0, 1 0, 2 0)")
+        assert self._eq(
+            "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))", "POLYGON((0 0, 2 0, 4 0, 4 4, 0 4, 0 0))"
+        )
 
     def test_multipoint_order_insensitive(self):
         assert self._eq("MULTIPOINT(1 1, 2 2, 3 3)", "MULTIPOINT(3 3, 1 1, 2 2)")
@@ -495,3 +498,125 @@ class TestEqualsCanonical:
         assert self._eq(
             "LINESTRING(-0.0 1, 2 2)", "LINESTRING(2 2, 0.0 1)"
         )
+
+
+NAMES = ("contains", "within", "covers", "coveredBy", "intersects", "disjoint",
+         "touches", "crosses", "overlaps", "equals")
+
+
+def _jts_relation(name, m, da, db):
+    """The named relation read off the matrix cell by cell, restating JTS
+    ``IntersectionMatrix.isContains``/``isTouches``/… independently of the
+    pattern table in ``relate``."""
+    t = [c != "F" for c in m]
+    II, IB, IE, BI, BB, BE, EI, EB = range(8)
+    common = t[II] or t[IB] or t[BI] or t[BB]
+    dims = da + db
+    if name == "intersects":
+        return common
+    if name == "disjoint":
+        return not common
+    if name == "contains":
+        return t[II] and not t[EI] and not t[EB]
+    if name == "within":
+        return t[II] and not t[IE] and not t[BE]
+    if name == "covers":
+        return common and not t[EI] and not t[EB]
+    if name == "coveredBy":
+        return common and not t[IE] and not t[BE]
+    if name == "touches":
+        return dims != "PP" and not t[II] and (t[IB] or t[BI] or t[BB])
+    if name == "crosses":
+        if dims in ("PL", "PA", "LA"):
+            return t[II] and t[IE]
+        if dims in ("LP", "AP", "AL"):
+            return t[II] and t[EI]
+        return dims == "LL" and m[II] == "0"
+    if name == "overlaps":
+        if dims in ("PP", "AA"):
+            return t[II] and t[IE] and t[EI]
+        return dims == "LL" and m[II] == "1" and t[IE] and t[EI]
+    assert name == "equals"
+    return da == db and t[II] and not (t[IE] or t[BE] or t[EI] or t[EB])
+
+
+def _box(x0, y0, x1, y1):
+    return f"({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0})"
+
+
+class TestNamedRelations:
+    """Every named relation is its JTS pattern over ``relate_matrix``:
+    ``relate.predicate`` (with its intersects, vertex-exterior and point
+    shortcuts) must give what the matrix says."""
+
+    @pytest.mark.parametrize("name,a,b,want", [
+        # each pair once disagreed between a hand-written predicate and
+        # the matrix; the expected value is JTS's
+        ("contains", "MULTIPOLYGON(((0 0, 10 0, 10 10, 0 10, 0 0)))", "POINT(5 5)", True),
+        ("contains", "LINESTRING(0 0, 10 0)", "LINESTRING(2 0, 5 0)", True),
+        ("overlaps", f"POLYGON({_box(0, 0, 10, 10)})", f"POLYGON({_box(10, 0, 20, 10)})", False),
+        ("crosses", "LINESTRING(0 0, 10 0)", "LINESTRING(5 0, 15 0)", False),
+        ("crosses", f"POLYGON({_box(0, 0, 10, 10)})", f"POLYGON({_box(5, 5, 15, 15)})", False),
+        ("intersects", "POINT(5 0.000003)", "LINESTRING(0 0, 10 0)", False),
+        ("disjoint", "POINT(5 0.000003)", "LINESTRING(0 0, 10 0)", True),
+        # antimeridian-crossing polygon: its split parts, not its planar hull
+        ("intersects", "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))",
+         f"POLYGON({_box(0, 0, 10, 10)})", False),
+        ("intersects", "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))",
+         f"POLYGON({_box(-175, 2, -165, 8)})", True),
+        ("contains", "POLYGON((160 -5, -160 -5, -160 15, 160 15, 160 -5))",
+         "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))", True),
+    ])
+    def test_motivating_pairs(self, name, a, b, want):
+        from geomesa_spark.geo import relate
+
+        ga, gb = wkt.parse_wkt(a), wkt.parse_wkt(b)
+        assert relate.predicate(name, ga, gb) is want
+        m = relate.matrix(ga, gb)
+        da, db = de9im.decompose(relate.unwrap(ga))[0], de9im.decompose(relate.unwrap(gb))[0]
+        assert _jts_relation(name, m, da, db) is want, m
+
+    def test_mixed_collection_is_null(self):
+        from geomesa_spark.geo import relate
+
+        gc = wkt.parse_wkt("GEOMETRYCOLLECTION(POINT(1 1), LINESTRING(0 0, 2 2))")
+        poly = wkt.parse_wkt(f"POLYGON({_box(0, 0, 4, 4)})")
+        assert relate.matrix(gc, poly) is None
+        assert relate.predicate("intersects", gc, poly) is True
+        assert relate.predicate("disjoint", poly, gc) is False
+        for name in NAMES[:4] + NAMES[6:]:
+            assert relate.predicate(name, gc, poly) is None, name
+            assert relate.predicate(name, poly, gc) is None, name
+
+
+_C = st.integers(0, 6)
+_S = st.integers(1, 3)
+_GEOMS = st.one_of(
+    st.builds(lambda x, y: f"POINT({x} {y})", _C, _C),
+    st.lists(st.tuples(_C, _C), min_size=2, max_size=3)
+    .filter(lambda v: len(set(v)) > 1)
+    .map(lambda v: "LINESTRING(" + ", ".join(f"{x} {y}" for x, y in v) + ")"),
+    st.builds(lambda x, y, w, h: f"POLYGON({_box(x, y, x + w, y + h)})", _C, _C, _S, _S),
+    st.builds(
+        lambda x, y, w, h: f"POLYGON({_box(x, y, x + w + 2, y + h + 2)}, "
+        f"{_box(x + 1, y + 1, x + w + 1, y + h + 1)})",
+        _C, _C, st.integers(1, 2), st.integers(1, 2),
+    ),
+    st.builds(
+        lambda x, y, w, h, gap, dy: f"MULTIPOLYGON(({_box(x, y, x + w, y + h)}), "
+        f"({_box(x + w + gap, y + dy, x + 2 * w + gap, y + dy + h)}))",
+        _C, _C, _S, _S, st.integers(1, 2), st.integers(-2, 2),
+    ),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_GEOMS, _GEOMS)
+def test_predicate_is_pattern_over_matrix(a, b):
+    from geomesa_spark.geo import relate
+
+    ga, gb = wkt.parse_wkt(a), wkt.parse_wkt(b)
+    m = de9im.relate_matrix(ga, gb)
+    da, db = de9im.decompose(ga)[0], de9im.decompose(gb)[0]
+    for name in NAMES:
+        assert relate.predicate(name, ga, gb) == _jts_relation(name, m, da, db), (name, m)

@@ -204,6 +204,17 @@ _CHILD = textwrap.dedent(
     xz2.feature_view(spark, root + "/shapes_t", "geom_id").createOrReplaceTempView("shapes_t")
     shapes_t.createOrReplaceTempView("raw_shapes_t")
     layout("shapes_t", root + "/shapes_t")
+    # an antimeridian-crossing polygon: the layout keys its split parts, so
+    # st_intersects must read it on those parts too, or the rule drops a
+    # row that the unpruned query keeps
+    am = boxes(20, 3)
+    am.loc[len(am)] = ["am", "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))"]
+    am.loc[len(am)] = ["near", "POLYGON((2 2, 4 2, 4 4, 2 4, 2 2))"]
+    am_shapes = spark.createDataFrame(am)
+    xz2.write_partitioned_geoms(am_shapes, root + "/am_shapes")
+    xz2.feature_view(spark, root + "/am_shapes", "geom_id").createOrReplaceTempView("am_shapes")
+    am_shapes.createOrReplaceTempView("raw_am_shapes")
+    layout("am_shapes", root + "/am_shapes")
     spark.read.parquet(root + "/shapes").createOrReplaceTempView("shape_keys")
     spark.createDataFrame(spark.read.parquet(root + "/shapes").toPandas()
                           ).createOrReplaceTempView("raw_shape_keys")
@@ -223,6 +234,9 @@ _CHILD = textwrap.dedent(
     }}
     for name, sql in xz_cases.items():
         case(name, "shapes", sql, "shapes", "raw_shapes")
+    case("xz_intersects_antimeridian", "am_shapes", "SELECT geom_id FROM TABLE WHERE "
+         "st_intersects(st_geomFromWKT('POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))'), "
+         "st_geomFromWKT(wkt))", "am_shapes", "raw_am_shapes")
     # a Filter on the key rows themselves: pruning would change their count
     case("xz_key_rows", "shapes", "SELECT geom_id, xz_level, xz_cell FROM TABLE WHERE "
          f"st_intersects(st_geomFromWKT('{{BOX}}'), st_geomFromWKT(wkt))",
@@ -289,7 +303,8 @@ PRUNED = {
     "dwithin_point_literal", "dwithin_wkt_point", "dwithin_linestring", "dwithin_polygon",
     "wkt_trailing_dot", "wkt_leading_dot", "wkt_plus_sign", "wkt_exponent",
     "z3_space_time", "z3_dwithin_time", "z3_time_only", "z3_time_between", "z3_corridor_time",
-    "xz_intersects", "xz_contains", "xz_dwithin", "xz3_all_dims", "xz3_time_only",
+    "xz_intersects", "xz_contains", "xz_dwithin", "xz_intersects_antimeridian",
+    "xz3_all_dims", "xz3_time_only",
     "attr_eq", "attr_range", "attr_between", "attr_range_date", "attr_eq_date",
     "attr_own_alias", "attr_escaped_quote", "attr_non_ascii", "attr_non_ascii_cjk",
 }

@@ -222,48 +222,49 @@ class TestPipFastParity:
             "POLYGON((0 0, 10 0, 10 10, 5 3, 0 10, 0 0))",  # concave
             "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))",
             "MULTIPOLYGON(((0 0, 5 0, 5 5, 0 5, 0 0)), ((8 8, 12 8, 12 12, 8 12, 8 8)))",
+            # antimeridian-crossing: read on its split parts, not planarly
+            "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))",
         ]
         gs = [W.geom_to_wkb(W.parse_wkt(w)) for w in polys_wkt]
         geoms = [gs[i % len(gs)] for i in range(n)]
         geoms[3] = None
+        # points paired with the antimeridian polygon: east part, west
+        # part, its planar hull only, and the +180 seam
+        for i, (x, y) in zip((4, 9, 14, 19), ((175, 5), (-175, 5), (0, 5), (180, 5))):
+            pts[i] = W.point_to_wkb(x, y)
         return pd.Series(pts, dtype=object), pd.Series(geoms, dtype=object)
 
     @pytest.mark.parametrize("name", [
-        "st_contains", "st_within", "st_intersects",
-        "st_disjoint", "st_covers", "st_coveredBy",
+        "contains", "within", "intersects", "disjoint", "covers", "coveredBy",
     ])
     def test_fast_equals_slow(self, name):
-        import pandas as pd
-
         from geomesa_spark.functions import st_funcs as S
         from geomesa_spark.geo import relate
 
         pts, geoms = self._data()
-        fn = getattr(S, name)
-        slow = {
-            "st_contains": S._binary_relation(relate.contains),
-            "st_within": S._binary_relation(lambda a, b: relate.contains(b, a)),
-            "st_intersects": S._binary_relation(relate.intersects),
-            "st_disjoint": S._binary_relation(lambda a, b: not relate.intersects(a, b)),
-            "st_covers": S._binary_relation(relate.covers),
-            "st_coveredBy": S._binary_relation(lambda a, b: relate.covers(b, a)),
-        }[name]
+        fn = getattr(S, "st_" + name)
         for a, b in [(geoms, pts), (pts, geoms)]:
             got = fn(a, b)
-            exp = slow(a, b)
-            assert list(got) == list(exp), f"{name} parity ({'geom,pt' if a is geoms else 'pt,geom'})"
+            exp = [
+                relate.predicate(name, x, y) if (x is not None and y is not None) else None
+                for x, y in zip(S._parse_series(a), S._parse_series(b))
+            ]
+            assert list(got) == exp, f"{name} parity ({'geom,pt' if a is geoms else 'pt,geom'})"
 
     def test_fast_path_triggers(self):
+        import pandas as pd
+
         from geomesa_spark.functions import st_funcs as S
+        from geomesa_spark.geo import wkt as W
 
         pts, geoms = self._data()
-        # multipolygon uniques: fast path must engage for intersects...
-        assert S._pip_fast(geoms, pts, "any", "int") is not None
-        # ...but decline for contains (per-row semantics differ for multi)
-        assert S._pip_fast(geoms, pts, "b", "in") is None
-        only_polys = geoms[geoms.map(lambda b: b is None or b[1:5] != b"\x06\x00\x00\x00")]
-        pts2 = pts[: len(only_polys)].reset_index(drop=True)
-        assert S._pip_fast(only_polys.reset_index(drop=True), pts2, "b", "in") is not None
+        # multipolygon and antimeridian uniques: every rule engages
+        for side, rule in S._PIP_FAST.values():
+            a, b = (geoms, pts) if side == "b" else (pts, geoms)
+            assert S._pip_fast(a, b, side, rule) is not None, (side, rule)
+        # a line among the geometries keeps the per-row path
+        line = W.geom_to_wkb(W.parse_wkt("LINESTRING(0 0, 1 1)"))
+        assert S._pip_fast(pd.Series([line] * 3, dtype=object), pts[:3], "b", "in") is None
 
 
 def test_geohash_per_row_precision(spark):
