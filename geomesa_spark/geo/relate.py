@@ -51,8 +51,18 @@ def _pip_one(lon: float, lat: float, rings) -> int:
 
 
 def _point_on_line(lon: float, lat: float, coords: np.ndarray) -> bool:
-    # de9im's planar incidence rule, so the fast path and the matrix agree
-    return de9im._on_polyline((lon, lat), de9im._segments(coords))
+    """de9im's planar incidence rule (``_seg_param`` over ``_segments``),
+    over all segments at once, so the fast path and the matrix agree."""
+    eps = de9im._EPS
+    c = np.asarray(coords, dtype=np.float64)
+    p, d = c[:-1], np.diff(c, axis=0)
+    keep = (np.abs(d) > eps).any(axis=1)  # _segments drops zero-length ones
+    px, py, dx, dy = p[keep, 0], p[keep, 1], d[keep, 0], d[keep, 1]
+    rx, ry = lon - px, lat - py
+    L2 = dx * dx + dy * dy
+    on = np.abs(dx * ry - dy * rx) <= eps * np.maximum(1.0, np.sqrt(L2))
+    t = (rx * dx + ry * dy) / L2
+    return bool((on & (t >= -eps) & (t <= 1 + eps)).any())
 
 
 def _edges(coords: np.ndarray):
@@ -88,21 +98,6 @@ def _poly_poly_intersects(pa: list[np.ndarray], pb: list[np.ndarray]) -> bool:
             if _any_edge_cross(kernels.close_ring(ra), kernels.close_ring(rb)):
                 return True
     return False
-
-
-def _poly_contains_poly(pa: list[np.ndarray], pb: list[np.ndarray]) -> bool:
-    # cheap exact rejection: any outer-ring vertex of B strictly outside A
-    ob = kernels.close_ring(pb[0])
-    cls = kernels.point_in_polygon(ob[:-1, 0], ob[:-1, 1], pa)
-    if (cls == PIP_OUT).any():
-        return False
-    # exact decision via the computed DE-9IM (round-2's vertex+edge-touch
-    # heuristic wrongly rejected B touching A's boundary from inside):
-    # contains ⟺ II≠F ∧ EI=F ∧ EB=F
-    from . import de9im
-
-    m = de9im.poly_poly_matrix(pa, pb)
-    return m[0] != "F" and m[6] == "F" and m[7] == "F"
 
 
 def _line_poly_intersects(line: np.ndarray, rings: list[np.ndarray]) -> bool:

@@ -372,31 +372,67 @@ def _read_geom(mv: memoryview, off: int) -> tuple[Geometry, int]:
 # antimeridian handling (st_antimeridianSafeGeom analogue)
 # ---------------------------------------------------------------------------
 
+def _clip_ring_180(ring: np.ndarray, east: bool) -> np.ndarray | None:
+    """The part of the closed ``ring`` (longitudes in [0, 360)) on one side
+    of lon 180: x <= 180 when ``east``, else x >= 180, each edge that
+    crosses it cut at its intersection (Sutherland-Hodgman against one
+    half-plane).  None when that part has no width."""
+    inside = ring[:, 0] <= 180.0 if east else ring[:, 0] >= 180.0
+    out = []
+    for i in range(len(ring) - 1):
+        (x0, y0), (x1, y1) = ring[i], ring[i + 1]
+        if inside[i]:
+            out.append((x0, y0))
+        if inside[i] != inside[i + 1] and x0 != x1:
+            t = (180.0 - x0) / (x1 - x0)
+            out.append((180.0, y0 + t * (y1 - y0)))
+    if len(out) < 3:
+        return None
+    c = np.asarray(out + out[:1], dtype=np.float64)
+    return c if np.ptp(c[:, 0]) > 1e-9 else None
+
+
 def antimeridian_split(g: Geometry) -> list[Geometry]:
     """Split a polygon whose ring walks across ±180° into east/west parts.
 
-    Heuristic matching GeoMesa's st_antimeridianSafeGeom intent: a ring is
-    considered crossing when consecutive vertices jump > 180° in lon.  The
-    split shifts west-hemisphere lons by +360, clips at 180, and emits the
-    two clipped polygons.  Only rectangles-with-holes-free crossings are
-    supported (covers fixture P8); exotic crossings fall back to the
-    original geometry.
+    A polygon crosses when two consecutive vertices of its outer ring lie
+    more than 180° apart in longitude: an edge wider than 180° is read as
+    going the short way round, across ±180°, by every caller (the XZ2
+    keys, ``PolygonSet``, the ``st_*`` relations, st_antimeridianSafeGeom).  Every ring, holes included, is
+    shifted to [0, 360) and clipped at 180 by edge intersection; the part
+    west of ±180° is shifted back by -360.  A hole that straddles the
+    seam is cut into both parts.  A polygon this cannot split exactly is
+    returned unchanged: a ring that crosses 180 more than twice (its
+    part on one side would be several pieces), or one that still jumps
+    more than 180° after the shift.
     """
     if g.kind != WKB_POLYGON:
         return [g]
-    outer = np.asarray(g.coords[0], dtype=np.float64)
-    jumps = np.abs(np.diff(outer[:, 0])) > 180.0
-    if not jumps.any():
+    rings = [np.asarray(r, dtype=np.float64) for r in g.coords]
+    if not (np.abs(np.diff(rings[0][:, 0])) > 180.0).any():
         return [g]
-    shifted = outer.copy()
-    shifted[shifted[:, 0] < 0.0, 0] += 360.0  # now in [0, 360)
-    east = shifted.copy()
-    east[:, 0] = np.clip(east[:, 0], None, 180.0)
-    west = shifted.copy()
-    west[:, 0] = np.clip(west[:, 0], 180.0, None)
-    west[:, 0] -= 360.0
+    shifted = []
+    for r in rings:
+        r = r.copy()
+        if not np.array_equal(r[0], r[-1]):
+            r = np.vstack([r, r[:1]])
+        r[r[:, 0] < 0.0, 0] += 360.0  # now in [0, 360)
+        east_side = r[:, 0] > 180.0
+        if (np.abs(np.diff(r[:, 0])) > 180.0).any() or np.count_nonzero(
+            east_side[1:] != east_side[:-1]
+        ) > 2:
+            return [g]
+        shifted.append(r)
     out = []
-    for part in (east, west):
-        if np.ptp(part[:, 0]) > 1e-9:
-            out.append(Geometry(WKB_POLYGON, [part]))
+    for east in (True, False):
+        outer = _clip_ring_180(shifted[0], east)
+        if outer is None:
+            continue
+        part = [outer] + [
+            h for h in (_clip_ring_180(r, east) for r in shifted[1:]) if h is not None
+        ]
+        if not east:
+            for r in part:
+                r[:, 0] -= 360.0
+        out.append(Geometry(WKB_POLYGON, part))
     return out if out else [g]

@@ -659,9 +659,9 @@ def query_geoms(
     id_col: str = "geom_id", wkt_col: str = "wkt",
     time_col: str | None = None, time_range: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """Region query over a stored geometry table: pruned scan → exact
-    geometry-geometry refine (Arrow-batched, per-row relate on the pruned
-    candidate set only) → per-feature dedupe (a feature has ≤4 key rows).
+    """Region query over a stored geometry table: pruned scan → per-feature
+    dedupe (a feature has ≤4 key rows) → exact geometry-geometry refine
+    (Arrow-batched, per-row relate on the pruned candidate set only).
 
     With ``time_col`` + ``time_range`` over an XZ3 layout this is the
     spatio-temporal region query: the time_bin dir prunes coarse, then the
@@ -682,8 +682,10 @@ def query_geoms(
             (F.col(time_col) >= F.lit(time_range[0]).cast("timestamp"))
             & (F.col(time_col) < F.lit(time_range[1]).cast("timestamp"))
         )
+    # the refine reads only the feature's geometry, so dedupe first and
+    # refine each feature once, not once per key row
     return (
-        cand.filter(geom_refine_udf(predicate)(F.lit(query_wkt), F.col(wkt_col)))
-        .drop(*_KEY_COLS)
+        cand.drop(*_KEY_COLS)
         .dropDuplicates([id_col])
+        .filter(geom_refine_udf(predicate)(F.lit(query_wkt), F.col(wkt_col)))
     )

@@ -566,6 +566,18 @@ class TestNamedRelations:
          f"POLYGON({_box(-175, 2, -165, 8)})", True),
         ("contains", "POLYGON((160 -5, -160 -5, -160 15, 160 15, 160 -5))",
          "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))", True),
+        # a crossing triangle is clipped at ±180, not clamped: its west
+        # edge meets -180 at y=5
+        ("contains", "POLYGON((170 0, -170 10, 170 10, 170 0))", "POINT(-179 3)", False),
+        ("contains", "POLYGON((170 0, -170 10, 170 10, 170 0))", "POINT(-179 9)", True),
+        ("contains", "POLYGON((170 0, -170 10, 170 10, 170 0))", "POINT(175 3)", True),
+        # holes survive the split, also one that straddles the seam
+        ("contains", "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0), "
+         "(175 2, 178 2, 178 4, 175 4, 175 2))", "POINT(176 3)", False),
+        ("contains", "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0), "
+         "(178 2, -178 2, -178 4, 178 4, 178 2))", "POINT(-179 3)", False),
+        ("contains", "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0), "
+         "(178 2, -178 2, -178 4, 178 4, 178 2))", "POINT(-179 6)", True),
     ])
     def test_motivating_pairs(self, name, a, b, want):
         from geomesa_spark.geo import relate

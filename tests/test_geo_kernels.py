@@ -163,3 +163,41 @@ class TestWkt:
         # non-crossing polygon untouched
         sq = wkt.parse_wkt("POLYGON((0 0, 1 0, 1 1, 0 1, 0 0))")
         assert wkt.antimeridian_split(sq) == [sq]
+
+    def test_antimeridian_split_clips_rings(self):
+        # a non-rectangle is cut where its edges meet ±180, not clamped
+        tri = wkt.parse_wkt("POLYGON((170 0, -170 10, 170 10, 170 0))")
+        east, west = wkt.antimeridian_split(tri)
+        assert east.coords[0].tolist() == [[170, 0], [180, 5], [180, 10], [170, 10], [170, 0]]
+        assert west.coords[0].tolist() == [[-180, 5], [-170, 10], [-180, 10], [-180, 5]]
+        # holes go to their side; one straddling the seam is cut into both
+        g = wkt.parse_wkt(
+            "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0), "
+            "(175 2, 178 2, 178 4, 175 4, 175 2), (178 6, -178 6, -178 8, 178 8, 178 6))"
+        )
+        east, west = wkt.antimeridian_split(g)
+        assert [r[:, 0].min() for r in east.coords[1:]] == [175, 178]
+        assert [r[:, 0].max() for r in east.coords[1:]] == [178, 180]
+        assert len(west.coords) == 2
+        assert west.coords[1][:, 0].min() == -180 and west.coords[1][:, 0].max() == -178
+        # a ring crossing 180 four times would split into several pieces
+        # per side: left as it is
+        zig = wkt.parse_wkt(
+            "POLYGON((170 0, -170 0, -170 2, 175 2, 175 4, -170 4, -170 6, 170 6, 170 0))"
+        )
+        assert wkt.antimeridian_split(zig) == [zig]
+
+    def test_wide_edge_reads_across_antimeridian(self):
+        """An outer-ring edge wider than 180° is read the short way round,
+        by every reader of the polygon: the predicates as the join."""
+        from geomesa_spark.geo import de9im, relate
+        from geomesa_spark.operators.spatial_join import PolygonSet
+
+        w = "POLYGON((-10 30, 175 30, 175 70, -10 70, -10 30))"
+        g = wkt.parse_wkt(w)
+        parts = PolygonSet.from_rows([{"polygon_id": "p", "wkt": w}]).parts["p"]
+        for x, want in ((100.0, False), (-100.0, True), (178.0, True)):
+            got = relate.predicate("contains", g, wkt.parse_wkt(f"POINT({x} 50)"))
+            assert got is want, x
+            cls = de9im._pip_multi(np.array([x]), np.array([50.0]), parts)[0]
+            assert bool(cls == kernels.PIP_IN) is want, x

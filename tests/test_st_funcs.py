@@ -224,13 +224,23 @@ class TestPipFastParity:
             "MULTIPOLYGON(((0 0, 5 0, 5 5, 0 5, 0 0)), ((8 8, 12 8, 12 12, 8 12, 8 8)))",
             # antimeridian-crossing: read on its split parts, not planarly
             "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))",
+            "POLYGON((170 0, -170 10, 170 10, 170 0))",  # crossing triangle
+            # crossing, with a hole on each side of the seam
+            "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0), "
+            "(175 2, 178 2, 178 4, 175 4, 175 2), (-178 6, -175 6, -175 8, -178 8, -178 6))",
         ]
         gs = [W.geom_to_wkb(W.parse_wkt(w)) for w in polys_wkt]
         geoms = [gs[i % len(gs)] for i in range(n)]
         geoms[3] = None
         # points paired with the antimeridian polygon: east part, west
         # part, its planar hull only, and the +180 seam
-        for i, (x, y) in zip((4, 9, 14, 19), ((175, 5), (-175, 5), (0, 5), (180, 5))):
+        for i, (x, y) in zip((4, 11, 18, 25), ((175, 5), (-175, 5), (0, 5), (180, 5))):
+            pts[i] = W.point_to_wkb(x, y)
+        # the triangle: west part below and above its edge, east part
+        for i, (x, y) in zip((5, 12, 19), ((-179, 3), (-179, 9), (175, 3))):
+            pts[i] = W.point_to_wkb(x, y)
+        # the holed polygon: in each hole, and outside both
+        for i, (x, y) in zip((6, 13, 20), ((176, 3), (-176, 7), (-176, 3))):
             pts[i] = W.point_to_wkb(x, y)
         return pd.Series(pts, dtype=object), pd.Series(geoms, dtype=object)
 
