@@ -103,11 +103,6 @@ def _is_closed(coords: np.ndarray) -> bool:
     return len(c) >= 3 and _close(c[0], c[-1])
 
 
-def _boundary_points(coords: np.ndarray):
-    c = np.asarray(coords, dtype=np.float64)
-    return [] if _is_closed(c) else [tuple(c[0]), tuple(c[-1])]
-
-
 def _on_polyline(pt, segs) -> bool:
     return any(_seg_param(p, q, pt) is not None for p, q in segs)
 
@@ -197,14 +192,6 @@ def _split_points(segs_self, segs_other):
                 tm = (t0 + t1) / 2.0
                 mids.append((p[0] + tm * (q[0] - p[0]), p[1] + tm * (q[1] - p[1])))
     return mids
-
-
-def _classify(points, rings) -> set[int]:
-    if not points:
-        return set()
-    xs = np.asarray([p[0] for p in points])
-    ys = np.asarray([p[1] for p in points])
-    return set(kernels.point_in_polygon(xs, ys, rings).tolist())
 
 
 def poly_poly_matrix(rings_a: list[np.ndarray], rings_b: list[np.ndarray]) -> str:

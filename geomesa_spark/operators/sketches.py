@@ -21,6 +21,7 @@ is what the driver-oracle query relies on (5 event types, eps=1e-4).
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -57,5 +58,8 @@ def cms_frequencies(
                 f"{col} has more than {MAX_DISTINCT_ITEMS} distinct values; "
                 "pass items= with the values to estimate"
             )
-    rows = [(it, int(jcms.estimateCount(it))) for it in items]
-    return spark.createDataFrame(rows, f"{col} string, est_n long")
+    # an Arrow table is a LocalRelation: no Python-worker job when scanned
+    return spark.createDataFrame(pa.table({
+        col: pa.array([None if it is None else str(it) for it in items], pa.string()),
+        "est_n": pa.array([jcms.estimateCount(it) for it in items], pa.int64()),
+    }))

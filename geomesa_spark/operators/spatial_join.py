@@ -13,10 +13,12 @@ survey time, SURVEY.md §0):
   codegen'd Morton cell id (:func:`add_cell_column`) → BroadcastHashJoin
   on the cover → BroadcastHashJoin on the polygon edge arrays → exact
   point-in-polygon as a Catalyst higher-order expression
-  (:meth:`PolygonSet.jvm_pip_sql`).  (doc, polygon) uniqueness is
-  enforced in the filter itself — a match survives only if no earlier geo
-  span of the same doc matches — so no dedupe exchange exists and the
-  ``spans`` payload never crosses a shuffle OR an Arrow boundary.
+  (:meth:`PolygonSet.jvm_pip_sql`).  Both broadcast sides are built on
+  the driver as Arrow ``LocalRelation``s, so no Python worker runs.
+  (doc, polygon) uniqueness is enforced in the filter itself — a match
+  survives only if no earlier geo span of the same doc matches — so no
+  dedupe exchange exists and the ``spans`` payload never crosses a
+  shuffle OR an Arrow boundary.
   :func:`spatial_join_broadcast` is the general API for arbitrary point
   tables and refines the same way (geometry broadcast + JVM PIP; tested
   equal to the numpy kernel);
@@ -43,7 +45,7 @@ import math
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -62,6 +64,19 @@ DEFAULT_RES = 8
 AUTO_SALT_TASK_ROWS = 250_000
 
 POINT_WKT_RE = r"^\s*[Pp][Oo][Ii][Nn][Tt]\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)\s*$"
+
+def _local_frame(spark, columns: dict[str, pa.Array]) -> DataFrame:
+    """A driver-built table as a ``LocalRelation``: the Arrow batches reach
+    the JVM in one call, so a plan that scans it runs no Python worker.
+    (``createDataFrame`` over Python rows is a ``LogicalRDD`` instead, and
+    every query over it runs a Python-worker job to produce the rows.)"""
+    return spark.createDataFrame(pa.table(columns))
+
+
+def _id_array(ids: list) -> pa.Array:
+    """Polygon or center ids with their inferred Arrow type (string when
+    there are none, so an empty set still has a typed id column)."""
+    return pa.array(ids) if ids else pa.array([], pa.string())
 
 
 @dataclass
@@ -86,7 +101,8 @@ class PolygonSet:
             g = wkt.parse_wkt(r[wkt_col])
             if g is None or g.kind not in (wkt.WKB_POLYGON, wkt.WKB_MULTIPOLYGON):
                 continue
-            ps.ids.append(r[id_col])
+            if r[id_col] not in ps.parts:  # a repeated id keeps its last geometry
+                ps.ids.append(r[id_col])
             if g.kind == wkt.WKB_MULTIPOLYGON:
                 polys = [wkt.Geometry(wkt.WKB_POLYGON, p) for p in g.coords]
             else:
@@ -105,6 +121,7 @@ class PolygonSet:
         interior — candidates in those cells skip the exact refine
         (GeoMesa's range-fully-contained optimization): for a hot cluster
         inside a big polygon that's the overwhelming majority of matches.
+        An empty set gives an empty frame with the same columns.
         """
         covers: dict[str, np.ndarray] = {}
         res_used = res
@@ -121,7 +138,7 @@ class PolygonSet:
             )
             covers[pid] = (merged, r_min)
             res_used = min(res_used, r_min)
-        frames = []
+        pids, cover_cells, fulls = [], [], []
         for pid, (c, r) in covers.items():
             cc = np.unique(cells.parent(c, r - res_used)) if r > res_used else c
             lon0, lat0, lon1, lat1 = cells.cell_bounds(cc, res_used)
@@ -130,43 +147,46 @@ class PolygonSet:
                 # a cell fully inside ANY single part is fully matched
                 # (parts are disjoint, holes are inside their part's rings)
                 full |= kernels.rect_fully_inside_polygon(lon0, lat0, lon1, lat1, rings)
-            frames.append(pd.DataFrame({"polygon_id": pid, "cell": cc, "full": full}))
-        pdf = pd.concat(frames, ignore_index=True).drop_duplicates(["polygon_id", "cell"])
-        return spark.createDataFrame(pdf), res_used
+            pids += [pid] * len(cc)
+            cover_cells.append(cc)
+            fulls.append(full)
+        return _local_frame(spark, {
+            "polygon_id": _id_array(pids),
+            "cell": pa.array(np.concatenate([np.empty(0, np.int64)] + cover_cells)),
+            "full": pa.array(np.concatenate([np.empty(0, bool)] + fulls)),
+        }), res_used
 
-    def flat_edges(self, pid: str) -> list[tuple[float, float, float, float]]:
+    def flat_edges(self, pid: str) -> np.ndarray:
         """Every closed ring's edges of every part of ``pid``, FLATTENED
-        into one (x1, y1, x2, y2) list.
+        into one (n, 4) array of (x1, y1, x2, y2) rows.
 
         Even-odd crossing parity over the union of closed rings equals the
         sum of per-ring parities, so one flat array suffices — and the
         per-candidate PIP expression becomes a single ``aggregate`` over a
         precomputed array (no per-row sequence/struct building; Spark HOFs
         are interpreted, so per-row allocation is the cost driver)."""
-        edges: list[tuple[float, float, float, float]] = []
+        edges = [np.empty((0, 4))]
         for part_rings in self.parts[pid]:
             for ring in part_rings:
                 c = kernels.close_ring(np.asarray(ring, dtype=np.float64))
-                edges.extend(
-                    zip(c[:-1, 0].tolist(), c[:-1, 1].tolist(),
-                        c[1:, 0].tolist(), c[1:, 1].tolist())
-                )
-        return edges
+                edges.append(np.hstack([c[:-1], c[1:]]))
+        return np.concatenate(edges)
 
     def geometry_frame(self, spark) -> DataFrame:
         """(polygon_id, edges array<struct<x1,y1,x2,y2>>) — one row per
-        polygon holding its :meth:`flat_edges`."""
-        rows = [
-            {
-                "polygon_id": pid,
-                "edges": [dict(zip(("x1", "y1", "x2", "y2"), e)) for e in self.flat_edges(pid)],
-            }
-            for pid in self.ids
-        ]
-        return spark.createDataFrame(
-            rows,
-            schema="polygon_id string, edges array<struct<x1:double,y1:double,x2:double,y2:double>>",
+        polygon holding its :meth:`flat_edges`, as a ``LocalRelation``
+        (:func:`_local_frame`), so the refine's broadcast runs no Python
+        worker."""
+        per_poly = [self.flat_edges(pid) for pid in self.ids]
+        flat = np.concatenate([np.empty((0, 4))] + per_poly)
+        offsets = np.cumsum([0] + [len(e) for e in per_poly], dtype=np.int32)
+        structs = pa.StructArray.from_arrays(
+            [pa.array(flat[:, k]) for k in range(4)], names=["x1", "y1", "x2", "y2"]
         )
+        return _local_frame(spark, {
+            "polygon_id": _id_array(self.ids),
+            "edges": pa.ListArray.from_arrays(pa.array(offsets), structs),
+        })
 
     def edges_sql(self, pid: str) -> str:
         """``pid``'s :meth:`flat_edges` as ONE SQL array literal — the
@@ -181,7 +201,7 @@ class PolygonSet:
 
         return "array(" + ", ".join(
             f"named_struct('x1', {lit(x1)}, 'y1', {lit(y1)}, 'x2', {lit(x2)}, 'y2', {lit(y2)})"
-            for x1, y1, x2, y2 in self.flat_edges(pid)
+            for x1, y1, x2, y2 in self.flat_edges(pid).tolist()
         ) + ")"
 
     @staticmethod
@@ -275,6 +295,10 @@ _PAIR_HAVERSINE = HAVERSINE_M_SQL.format(lon1="lon", lat1="lat", lon2="lon_r", l
 #: haversine with ``dist_m``, so a kept pair may lie a few ulp beyond it
 _RING_SLACK = 1.0 + 1e-9
 
+#: absolute slack (degrees) on the ring's per-cell gap tests: a point a few
+#: ulp from a seam may be encoded into the cell on either side of it
+_SEAM_SLACK_DEG = 1e-9
+
 
 def _ring_cover(df: DataFrame, res: int, dist_m: float) -> DataFrame:
     """``df`` (with ``lon``/``lat``) exploded to one row per cell of its
@@ -287,10 +311,15 @@ def _ring_cover(df: DataFrame, res: int, dist_m: float) -> DataFrame:
     (h = 180°/2^res).  In longitude, hav(δ) = hav(Δφ) + cos φ1 cos φ2
     hav(Δλ) ≥ cos²(φmax) hav(Δλ) with φmax = |lat| + δ, so
     Δλ ≤ 2·asin(min(1, sin(δ/2) / cos φmax)) and kx = ⌈Δλ / w⌉ columns
-    (w = 360°/2^res), or every column once φmax reaches the pole.  x wraps
-    (pmod, the antimeridian is an ordinary seam), y clamps at the poles and
-    ``array_distinct`` drops the clamped repeats, so each (row, cell)
-    appears once.  Each step is one projection, like
+    (w = 360°/2^res), or every column once φmax reaches the pole.  Within
+    that window a column is kept only if the row's longitude is at most the
+    Δλ bound from the column's span, and a grid row only if its latitude is
+    at most δ from the grid row's span (:func:`_gap_sql`): both are lower
+    bounds on the distance to any point in the cell, so the kept cells
+    stay complete.  x wraps (pmod, the antimeridian is an ordinary seam;
+    a column half the world away is reached both ways and
+    ``array_distinct`` keeps it once) and y stops at the poles, so each
+    (row, cell) appears once.  Each step is one projection, like
     :func:`add_cell_column`, and the cell key is
     :func:`_interleave_projections`."""
     n = 1 << res
@@ -299,25 +328,38 @@ def _ring_cover(df: DataFrame, res: int, dist_m: float) -> DataFrame:
     ky = min(math.ceil(d_deg / (180.0 / n)), n)
     phi = f"abs(lat) + {d_deg!r}D"
     span = f"degrees(2.0D * asin(least(1.0D, {math.sin(delta / 2.0)!r}D / cos(radians({phi})))))"
-    kx = (
-        f"CASE WHEN {phi} >= 90.0D THEN {n // 2} "
-        f"ELSE CAST(least(ceil({span} / {360.0 / n!r}D), {n // 2}) AS INT) END"
-    )
-    keep = [_quote(c) for c in df.columns if c not in ("_gx", "_gy", "_kx")]
+    kx = f"CAST(least(ceil(_dl / {360.0 / n!r}D), {n // 2}) AS INT)"
+    keep = [_quote(c) for c in df.columns if c not in ("_gx", "_gy", "_dl")]
     d = df.filter(_finite_sql("lon", "lat")).selectExpr(
         *keep, f"{_axis_sql('lon', res)} AS _gx", f"{_axis_sql('lat', res, lat=True)} AS _gy",
-        f"{kx} AS _kx",
+        f"CASE WHEN {phi} >= 90.0D THEN 360.0D ELSE {span} END AS _dl",
     )
+    near_x = _gap_sql("lon", "_gx + i", res)
     d = d.selectExpr(
         *keep, "_gy",
-        f"explode(array_distinct(transform(sequence(-_kx, _kx), i -> pmod(_gx + i, {n})))) AS _gx",
+        f"explode(array_distinct(transform(filter(sequence(-{kx}, {kx}), "
+        f"i -> {near_x} <= _dl + {_SEAM_SLACK_DEG!r}D), i -> pmod(_gx + i, {n})))) AS _gx",
     )
+    near_y = _gap_sql("lat", "_gy + j", res, lat=True)
     d = d.selectExpr(
         *keep, "_gx",
-        f"explode(array_distinct(transform(sequence({-ky}, {ky}), "
-        f"j -> least(greatest(_gy + j, 0), {n - 1})))) AS _gy",
+        f"explode(transform(filter(sequence({-ky}, {ky}), j -> _gy + j BETWEEN 0 AND {n - 1} "
+        f"AND {near_y} <= {d_deg + _SEAM_SLACK_DEG!r}D), j -> _gy + j)) AS _gy",
     )
     return _interleave_projections(d, "_gx", "_gy", "cell")
+
+
+def _gap_sql(col: str, index: str, res: int, lat: bool = False) -> str:
+    """SQL: the degrees between coordinate column ``col`` and the span of
+    grid column (or, with ``lat``, grid row) ``index`` at ``res`` — 0 when
+    the coordinate lies in it.  ``index`` may run past the grid's edge; the
+    span is then read unwrapped, so the gap is the one measured in that
+    direction.  Same axis offsets as :func:`_axis_sql`."""
+    offset, size = (90.0, 180.0 / (1 << res)) if lat else (180.0, 360.0 / (1 << res))
+    x = f"({_quote(col)} + {offset}D)"
+    return (
+        f"greatest(({index}) * {size!r}D - {x}, {x} - ({index} + 1) * {size!r}D, 0.0D)"
+    )
 
 
 def _interleave_projections(
@@ -453,7 +495,8 @@ def spatial_join_broadcast(
     the whole join is then ZERO-shuffle (Scan → cell id →
     BroadcastHashJoin on the cover → BroadcastHashJoin on the edges →
     JVM refine).  Default keeps the dedupe for exploded inputs (one doc,
-    many geo points)."""
+    many geo points).  Rows that parse to no (multi)polygon are skipped;
+    with none left the join returns zero rows."""
     spark = points.sparkSession
     ps = PolygonSet.from_rows(polygon_rows)
     cover_df, res_used = ps.cover_frame(spark, res, max_cells)
@@ -527,6 +570,8 @@ def spatial_join_documents(
     broadcast join → refine); only the multi-geo slice pays the
     ``dropDuplicates`` exchange — and that exchange carries the full
     spans payload for a few percent of rows instead of all of them.
+    Rows that parse to no (multi)polygon are skipped; with none left the
+    join returns zero rows.
     """
     spark = docs.sparkSession
     if res == "auto":  # sampled histogram → finest in-budget resolution
@@ -603,19 +648,27 @@ def dwithin_join_broadcast(
     center's ``clon``/``clat``, which the broadcast cover rows carry).
     Same plan shape (and same ``unique_ids`` zero-shuffle argument) as the
     polygon join: one cell per point × deduped cover ⇒ one candidate per
-    (row, center)."""
+    (row, center).  No centers give zero rows."""
     spark = points.sparkSession
-    rows = []
     res_common = res
     covers = {}
     for c in centers:
         cc, r = cells.cover_point_radius(float(c["lon"]), float(c["lat"]), dist_m, res)
         covers[c[center_id_col]] = (cc, r, float(c["lon"]), float(c["lat"]))
         res_common = min(res_common, r)
+    cids, cover_cells, clons, clats = [], [], [], []
     for cid, (cc, r, clon, clat) in covers.items():
-        cc = np.unique(cells.parent(cc, r - res_common)) if r > res_common else cc
-        rows.append(pd.DataFrame({center_id_col: cid, "cell": cc, "clon": clon, "clat": clat}))
-    cover_df = spark.createDataFrame(pd.concat(rows, ignore_index=True).drop_duplicates())
+        cc = np.unique(cells.parent(cc, r - res_common))
+        cids += [cid] * len(cc)
+        clons += [clon] * len(cc)
+        clats += [clat] * len(cc)
+        cover_cells.append(cc)
+    cover_df = _local_frame(spark, {
+        center_id_col: _id_array(cids),
+        "cell": pa.array(np.concatenate([np.empty(0, np.int64)] + cover_cells)),
+        "clon": pa.array(clons, pa.float64()),
+        "clat": pa.array(clats, pa.float64()),
+    })
 
     pts = add_cell_column(points, res_common)
     joined = pts.join(F.broadcast(cover_df), "cell", "inner")

@@ -100,12 +100,6 @@ def completed_chunks(job_dir: str, epoch: int | None = None) -> set[tuple[int, i
     return done
 
 
-def completed_buckets(job_dir: str, epoch: int | None = None) -> set[int]:
-    """Buckets with at least one committed chunk (legacy view of
-    :func:`completed_chunks`; resume logic uses the chunk set)."""
-    return {b for b, _ in completed_chunks(job_dir, epoch=epoch)}
-
-
 def _job_config(job_dir: str, n_shards: int | None) -> dict:
     """Shard fan-out is a JOB-LIFETIME constant: the (bucket, shard) chunk is
     the unit of commit/skip, so a resume (or a later streaming epoch) must

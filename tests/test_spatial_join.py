@@ -305,6 +305,7 @@ def test_broadcast_join_refine_equals_numpy_kernel(spark, predicate):
     rows = out.select("event_id", "polygon_id").collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "ExistingRDD" not in plan  # the broadcast sides are LocalRelations
     got = {(r["event_id"], r["polygon_id"]) for r in rows}
     assert len(rows) == len(got)
     exp, n_boundary = set(), 0
@@ -411,6 +412,56 @@ def test_flagship_plan_jit_guard(spark, docs_df):
     assert plan.count("FLOOR") <= 2, "Morton encode collapsed: JIT-hostile plan"
     assert "Exchange hashpartitioning" not in plan
     assert "Exchange SinglePartition" not in plan
+
+
+def test_flagship_runs_no_python_worker(spark, docs_df):
+    """The flagship's broadcast sides (cover and edge arrays) are built on
+    the driver as Arrow ``LocalRelation``s: the executed plan scans them as
+    ``LocalTableScan``, with no ``Scan ExistingRDD`` (a Python-RDD frame,
+    one Python-worker job per query) and no Python eval node."""
+    df = sj.spatial_join_documents(
+        docs_df, corpus.fixture_polygons(), "intersects"
+    ).select("doc_id", "polygon_id")
+    assert df.count() > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert plan.count("LocalTableScan") >= 2
+
+
+#: polygon sets with no row that parses to a (multi)polygon
+NO_POLYGONS = {
+    "empty": [],
+    "malformed": [dict(polygon_id="bad", wkt="POLYGON((oops")],
+    "points only": [dict(polygon_id="pt", wkt="POINT(1 2)")],
+}
+
+
+@pytest.mark.parametrize("rows", NO_POLYGONS.values(), ids=NO_POLYGONS.keys())
+def test_documents_join_without_polygons_is_empty(spark, docs_df, rows):
+    """No (multi)polygon gives zero rows with the usual columns."""
+    want = sj.spatial_join_documents(docs_df, corpus.fixture_polygons()).columns
+    out = sj.spatial_join_documents(docs_df, rows)
+    assert out.columns == want and out.count() == 0
+
+
+@pytest.mark.parametrize("rows", NO_POLYGONS.values(), ids=NO_POLYGONS.keys())
+def test_broadcast_join_without_polygons_is_empty(spark, rows):
+    """No (multi)polygon gives zero rows with the usual columns."""
+    pts = spark.createDataFrame(pd.DataFrame({"event_id": [1], "lon": [1.0], "lat": [1.0]}))
+    want = sj.spatial_join_broadcast(pts, REFINE_POLYGONS, id_col="event_id")
+    assert want.count() == 1
+    out = sj.spatial_join_broadcast(pts, rows, id_col="event_id")
+    assert out.columns == want.columns and out.count() == 0
+
+
+def test_dwithin_join_without_centers_is_empty(spark):
+    """No centers gives zero rows with the usual columns."""
+    pts = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "lon": [5.0], "lat": [5.0]}))
+    want = sj.dwithin_join_broadcast(pts, [dict(center_id="c", lon=5.0, lat=5.0)], 1_000.0)
+    assert want.count() == 1
+    out = sj.dwithin_join_broadcast(pts, [], 1_000.0)
+    assert out.columns == want.columns and out.count() == 0
 
 
 def test_spatiotemporal_grid_join_matches_bruteforce(spark):
@@ -574,3 +625,52 @@ def test_ring_cover_complete_on_seams_antimeridian_poles(spark, res, dist_m):
     ):
         got = {(r["doc_id"], r["event_id"]) for r in j.select("doc_id", "event_id").collect()}
         assert got == exp, (sorted(exp - got)[:5], sorted(got - exp)[:5])
+
+
+@pytest.mark.parametrize("res,dist_m", [(8, 50_000.0), (6, 200_000.0), (3, 1_500_000.0)])
+def test_pruned_ring_keeps_every_pair(spark, res, dist_m):
+    """Brute force: every pair within ``dist_m`` shares a cell of the left
+    row's pruned ring — for left rows on cell seams and corners, on the
+    antimeridian and near the poles, and partners at random bearings and
+    distances up to just past ``dist_m``.  The pruning is real: a point in
+    the middle of an equatorial cell keeps only its own column when the
+    radius is below half a cell width."""
+    from geomesa_spark import cells as c
+
+    n = 1 << res
+    w, h = 360.0 / n, 180.0 / n
+    corners = [(-180.0 + kx * w, -90.0 + ky * h)
+               for kx in (0, 1, n // 2, n - 1) for ky in (1, n // 4, n // 2, n - 1)]
+    rng = np.random.default_rng(res)
+    left = np.concatenate([
+        _awkward_points(res), np.array(corners),
+        np.column_stack([rng.uniform(-180, 180, 40), rng.uniform(-90, 90, 40)]),
+    ])
+    ring = {
+        (r["i"], r["cell"])
+        for r in sj._ring_cover(spark.createDataFrame(pd.DataFrame(
+            {"i": np.arange(len(left)), "lon": left[:, 0], "lat": left[:, 1]})), res, dist_m
+        ).collect()
+    }
+    rlon, rlat = [], []
+    for x, y in left:
+        k = 64
+        dx, dy = _destinations(x, y, rng.uniform(0.0, 1.0 + 1e-6, k) * dist_m,
+                               rng.uniform(0.0, 360.0, k))
+        rlon.append(dx)
+        rlat.append(dy)
+    rlon, rlat = np.concatenate(rlon), np.concatenate(rlat)
+    d = kernels.haversine_m(left[:, :1], left[:, 1:], rlon[None, :], rlat[None, :])
+    ii, jj = np.nonzero(d <= dist_m)
+    assert len(ii) >= len(left) * 48
+    cell_r = c.encode(rlon, rlat, res).tolist()
+    missing = [(i, j) for i, j in zip(ii.tolist(), jj.tolist()) if (i, cell_r[j]) not in ring]
+    assert not missing, [(tuple(left[i]), (rlon[j], rlat[j])) for i, j in missing[:5]]
+
+    # radius 0.4 cell heights: the mid-cell point's gaps to the neighbour
+    # columns (half a width) and rows (half a height) exceed it
+    r_m = 0.4 * h * np.pi / 180.0 * kernels.EARTH_RADIUS_M
+    mid = sj._ring_cover(spark.createDataFrame(pd.DataFrame(
+        {"lon": [0.5 * w], "lat": [0.5 * h]})), res, r_m).collect()
+    own = c.encode(np.array([0.5 * w]), np.array([0.5 * h]), res).tolist()
+    assert [r["cell"] for r in mid] == own

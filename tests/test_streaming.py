@@ -431,8 +431,10 @@ def test_cms_frequencies_default_items_bounded(spark):
     assert len(est) == bound and all(r["est_n"] >= 1 for r in est)
     with pytest.raises(ValueError, match="items="):
         sketches.cms_frequencies(keys(bound + 1), "k")
-    got = sketches.cms_frequencies(keys(bound + 1), "k", items=["0", str(bound)]).collect()
-    assert [r["est_n"] for r in got] == [1, 1]
+    got = sketches.cms_frequencies(keys(bound + 1), "k", items=["0", str(bound)])
+    assert [r["est_n"] for r in got.collect()] == [1, 1]
+    # the result is a LocalRelation, not a Python-RDD scan
+    assert "ExistingRDD" not in got._jdf.queryExecution().executedPlan().toString()
 
 
 # ---------------------------------------------------------------- dedup

@@ -331,21 +331,29 @@ def main() -> None:
         )
 
     # REGRESSION GUARD: these plans are JVM-only.  The Z3 query path and
-    # the general broadcast polygon join refine with Catalyst PIP over the
-    # polygon's edges; the distance joins build their ring cover
-    # (sequence/pmod explode) and refine with the haversine SQL, the
+    # the flagship and general broadcast polygon joins refine with Catalyst
+    # PIP over the polygon's edges; the distance joins build their ring
+    # cover (sequence/pmod explode) and refine with the haversine SQL, the
     # dwithin cover rows carrying each center's coordinates; the SimHash
     # and token-MinHash near-dup plans hash with md5 in projections.  A
     # Python eval node means a step went back to an Arrow UDF and every
-    # row or candidate crosses the Python boundary again.
-    for name in ("z3_bbox_time", "spatial_join_rect_intersects", "st_dwithin_centers",
-                 "spacetime_join", "simhash_pairs", "simhash_md5_pairs",
-                 "minhash_md5_pairs"):
+    # row or candidate crosses the Python boundary again.  A ``Scan
+    # ExistingRDD`` is a frame built from Python rows: every query over it
+    # runs a Python-worker job to produce them (the driver-built broadcast
+    # sides are Arrow LocalRelations, scanned as LocalTableScan).
+    for name in ("flagship_spans_join", "z3_bbox_time", "spatial_join_rect_intersects",
+                 "st_dwithin_centers", "spacetime_join", "simhash_pairs",
+                 "simhash_md5_pairs", "minhash_md5_pairs"):
         text = plans[name][1]
         if "ArrowEvalPython" in text or "BatchEvalPython" in text:
             sys.exit(
                 f"PLAN REGRESSION: {name} has a Python eval node (want: "
                 "every step in the JVM)"
+            )
+        if "Scan ExistingRDD" in text:
+            sys.exit(
+                f"PLAN REGRESSION: {name} scans a Python-RDD frame (want: "
+                "driver-built tables as LocalTableScan)"
             )
 
     # REGRESSION GUARD (round-2 JIT discovery): the Morton cell encode must
