@@ -13,8 +13,8 @@ survey time, SURVEY.md §0):
   codegen'd Morton cell id (:func:`add_cell_column`) → BroadcastHashJoin
   on the cover → BroadcastHashJoin on the polygon edge arrays → exact
   point-in-polygon as a Catalyst higher-order expression
-  (:meth:`PolygonSet.jvm_pip_sql`).  Both broadcast sides are built on
-  the driver as Arrow ``LocalRelation``s, so no Python worker runs.
+  (:meth:`PolygonSet.jvm_pip_sql`).  Both broadcast sides are Arrow
+  ``LocalRelation``s, so no Python worker runs.
   (doc, polygon) uniqueness is enforced in the filter itself — a match
   survives only if no earlier geo span of the same doc matches — so no
   dedupe exchange exists and the ``spans`` payload never crosses a
@@ -65,13 +65,6 @@ AUTO_SALT_TASK_ROWS = 250_000
 
 POINT_WKT_RE = r"^\s*[Pp][Oo][Ii][Nn][Tt]\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)\s*$"
 
-def _local_frame(spark, columns: dict[str, pa.Array]) -> DataFrame:
-    """A driver-built table as a ``LocalRelation``: the Arrow batches reach
-    the JVM in one call, so a plan that scans it runs no Python worker.
-    (``createDataFrame`` over Python rows is a ``LogicalRDD`` instead, and
-    every query over it runs a Python-worker job to produce the rows.)"""
-    return spark.createDataFrame(pa.table(columns))
-
 
 def _id_array(ids: list) -> pa.Array:
     """Polygon or center ids with their inferred Arrow type (string when
@@ -101,8 +94,7 @@ class PolygonSet:
             g = wkt.parse_wkt(r[wkt_col])
             if g is None or g.kind not in (wkt.WKB_POLYGON, wkt.WKB_MULTIPOLYGON):
                 continue
-            if r[id_col] not in ps.parts:  # a repeated id keeps its last geometry
-                ps.ids.append(r[id_col])
+            ps.ids.append(r[id_col])
             if g.kind == wkt.WKB_MULTIPOLYGON:
                 polys = [wkt.Geometry(wkt.WKB_POLYGON, p) for p in g.coords]
             else:
@@ -150,11 +142,11 @@ class PolygonSet:
             pids += [pid] * len(cc)
             cover_cells.append(cc)
             fulls.append(full)
-        return _local_frame(spark, {
+        return spark.createDataFrame(pa.table({
             "polygon_id": _id_array(pids),
             "cell": pa.array(np.concatenate([np.empty(0, np.int64)] + cover_cells)),
             "full": pa.array(np.concatenate([np.empty(0, bool)] + fulls)),
-        }), res_used
+        })), res_used
 
     def flat_edges(self, pid: str) -> np.ndarray:
         """Every closed ring's edges of every part of ``pid``, FLATTENED
@@ -174,19 +166,22 @@ class PolygonSet:
 
     def geometry_frame(self, spark) -> DataFrame:
         """(polygon_id, edges array<struct<x1,y1,x2,y2>>) — one row per
-        polygon holding its :meth:`flat_edges`, as a ``LocalRelation``
-        (:func:`_local_frame`), so the refine's broadcast runs no Python
-        worker."""
+        polygon holding its :meth:`flat_edges`.
+
+        Built from an Arrow table, so it is a ``LocalRelation`` and the
+        refine's broadcast runs no Python worker; ``createDataFrame`` over
+        Python rows is a ``LogicalRDD``, and every query over it runs a
+        Python-worker job to produce them."""
         per_poly = [self.flat_edges(pid) for pid in self.ids]
         flat = np.concatenate([np.empty((0, 4))] + per_poly)
         offsets = np.cumsum([0] + [len(e) for e in per_poly], dtype=np.int32)
         structs = pa.StructArray.from_arrays(
             [pa.array(flat[:, k]) for k in range(4)], names=["x1", "y1", "x2", "y2"]
         )
-        return _local_frame(spark, {
+        return spark.createDataFrame(pa.table({
             "polygon_id": _id_array(self.ids),
             "edges": pa.ListArray.from_arrays(pa.array(offsets), structs),
-        })
+        }))
 
     def edges_sql(self, pid: str) -> str:
         """``pid``'s :meth:`flat_edges` as ONE SQL array literal — the
@@ -663,12 +658,12 @@ def dwithin_join_broadcast(
         clons += [clon] * len(cc)
         clats += [clat] * len(cc)
         cover_cells.append(cc)
-    cover_df = _local_frame(spark, {
+    cover_df = spark.createDataFrame(pa.table({
         center_id_col: _id_array(cids),
         "cell": pa.array(np.concatenate([np.empty(0, np.int64)] + cover_cells)),
         "clon": pa.array(clons, pa.float64()),
         "clat": pa.array(clats, pa.float64()),
-    })
+    }))
 
     pts = add_cell_column(points, res_common)
     joined = pts.join(F.broadcast(cover_df), "cell", "inner")

@@ -415,8 +415,8 @@ def test_flagship_plan_jit_guard(spark, docs_df):
 
 
 def test_flagship_runs_no_python_worker(spark, docs_df):
-    """The flagship's broadcast sides (cover and edge arrays) are built on
-    the driver as Arrow ``LocalRelation``s: the executed plan scans them as
+    """The flagship's broadcast sides (cover and edge arrays) are Arrow
+    ``LocalRelation``s: the executed plan scans them as
     ``LocalTableScan``, with no ``Scan ExistingRDD`` (a Python-RDD frame,
     one Python-worker job per query) and no Python eval node."""
     df = sj.spatial_join_documents(

@@ -339,8 +339,8 @@ def main() -> None:
     # Python eval node means a step went back to an Arrow UDF and every
     # row or candidate crosses the Python boundary again.  A ``Scan
     # ExistingRDD`` is a frame built from Python rows: every query over it
-    # runs a Python-worker job to produce them (the driver-built broadcast
-    # sides are Arrow LocalRelations, scanned as LocalTableScan).
+    # runs a Python-worker job to produce them (the locally built
+    # broadcast sides are Arrow LocalRelations, scanned as LocalTableScan).
     for name in ("flagship_spans_join", "z3_bbox_time", "spatial_join_rect_intersects",
                  "st_dwithin_centers", "spacetime_join", "simhash_pairs",
                  "simhash_md5_pairs", "minhash_md5_pairs"):
@@ -353,7 +353,7 @@ def main() -> None:
         if "Scan ExistingRDD" in text:
             sys.exit(
                 f"PLAN REGRESSION: {name} scans a Python-RDD frame (want: "
-                "driver-built tables as LocalTableScan)"
+                "locally built tables as LocalTableScan)"
             )
 
     # REGRESSION GUARD (round-2 JIT discovery): the Morton cell encode must
