@@ -387,16 +387,25 @@ def st_lengthSphere(s: pd.Series) -> pd.Series:
     return pd.Series([ln(b) for b in s.to_numpy(object)])
 
 
+def _pair_metric(a: pd.Series, b: pd.Series, metric) -> list:
+    """``metric(pa, pb)`` of each row's :func:`relate.nearest` pair; None
+    where either side is NULL or unparseable."""
+    ga, gb = _parse_series(a), _parse_series(b)
+    return [metric(*relate.nearest(x, y)) if (x is not None and y is not None) else None
+            for x, y in zip(ga, gb)]
+
+
+def _sphere_m(pa: np.ndarray, pb: np.ndarray) -> float:
+    return float(kernels.haversine_m(pa[0], pa[1], pb[0], pb[1]))
+
+
 @_pd("double")
 def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
     if _all_points(a) and _all_points(b):  # vectorized hot path
         lon1, lat1 = wkt.wkb_points_to_lonlat(a)
         lon2, lat2 = wkt.wkb_points_to_lonlat(b)
         return pd.Series(np.sqrt((lon1 - lon2) ** 2 + (lat1 - lat2) ** 2))
-    ga, gb = _parse_series(a), _parse_series(b)
-    return pd.Series(
-        [relate.distance_deg(x, y) if x and y else None for x, y in zip(ga, gb)]
-    )
+    return pd.Series(_pair_metric(a, b, lambda pa, pb: float(np.hypot(*(pa - pb)))))
 
 
 @_pd("double")
@@ -405,10 +414,7 @@ def st_distanceSphere(a: pd.Series, b: pd.Series) -> pd.Series:
         lon1, lat1 = wkt.wkb_points_to_lonlat(a)
         lon2, lat2 = wkt.wkb_points_to_lonlat(b)
         return pd.Series(kernels.haversine_m(lon1, lat1, lon2, lat2))
-    ga, gb = _parse_series(a), _parse_series(b)
-    return pd.Series(
-        [relate.distance_sphere_m(x, y) if x and y else None for x, y in zip(ga, gb)]
-    )
+    return pd.Series(_pair_metric(a, b, _sphere_m))
 
 
 @_pd("binary")
@@ -540,13 +546,8 @@ def st_dwithin(a: pd.Series, b: pd.Series, meters: pd.Series) -> pd.Series:
         lon1, lat1 = wkt.wkb_points_to_lonlat(a)
         lon2, lat2 = wkt.wkb_points_to_lonlat(b)
         return pd.Series(kernels.haversine_m(lon1, lat1, lon2, lat2) <= m)
-    ga, gb = _parse_series(a), _parse_series(b)
-    return pd.Series(
-        [
-            relate.distance_sphere_m(x, y) <= mm if (x is not None and y is not None) else None
-            for x, y, mm in zip(ga, gb, m)
-        ]
-    )
+    d = _pair_metric(a, b, _sphere_m)
+    return pd.Series([None if x is None else x <= mm for x, mm in zip(d, m)])
 
 
 @_pd("string")
@@ -575,43 +576,12 @@ def st_relateBool(a: pd.Series, b: pd.Series, pattern: pd.Series) -> pd.Series:
 
 @_pd("binary")
 def st_closestPoint(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Closest point ON geometry a to geometry b (point/line/polygon-ring
-    support; planar parametric projection like JTS)."""
-    ga, gb = _parse_series(a), _parse_series(b)
-    out = []
-    for x, y in zip(ga, gb):
-        if x is None or y is None:
-            out.append(None)
-            continue
-        if x.kind == wkt.WKB_POINT:
-            out.append(wkt.point_to_wkb(float(x.coords[0]), float(x.coords[1])))
-            continue
-        if y.kind != wkt.WKB_POINT:
-            # general geom×geom closest point: nearest vertex approximation
-            ca = relate._all_coords(x)
-            cb = relate._all_coords(y)
-            d = ((ca[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-            i = int(np.unravel_index(np.argmin(d), d.shape)[0])
-            out.append(wkt.point_to_wkb(float(ca[i, 0]), float(ca[i, 1])))
-            continue
-        px, py = float(y.coords[0]), float(y.coords[1])
-        best, bd = None, np.inf
-        for seg in relate._segments_of(x):
-            x1, y1 = seg[:-1, 0], seg[:-1, 1]
-            x2, y2 = seg[1:, 0], seg[1:, 1]
-            dx, dy = x2 - x1, y2 - y1
-            ln = dx * dx + dy * dy
-            with np.errstate(divide="ignore", invalid="ignore"):
-                t = np.where(ln > 0, ((px - x1) * dx + (py - y1) * dy) / ln, 0.0)
-            t = np.clip(t, 0.0, 1.0)
-            nx, ny = x1 + t * dx, y1 + t * dy
-            d2 = (px - nx) ** 2 + (py - ny) ** 2
-            i = int(np.argmin(d2))
-            if d2[i] < bd:
-                bd = float(d2[i])
-                best = (float(nx[i]), float(ny[i]))
-        out.append(wkt.point_to_wkb(*best) if best else None)
-    return pd.Series(out, dtype=object)
+    """The point of geometry a nearest to geometry b: the A side of
+    :func:`relate.nearest`'s pair (JTS ``DistanceOp.nearestPoints``)."""
+    return pd.Series(
+        _pair_metric(a, b, lambda pa, pb: wkt.point_to_wkb(float(pa[0]), float(pa[1]))),
+        dtype=object,
+    )
 
 
 # -- processing -------------------------------------------------------------
@@ -949,32 +919,19 @@ def st_geomFromGeoJSON(s: pd.Series) -> pd.Series:
 
 @_pd("double")
 def st_distanceSpheroid(a: pd.Series, b: pd.Series) -> pd.Series:
-    """True WGS84 spheroid distance (Vincenty inverse — round-1 verdict
-    upgraded this from the sphere alias).  Point×point is vectorized; for
-    extended geometries the distance is taken between the planar closest
-    vertices (documented vertex approximation, same as the sphere path)."""
+    """True WGS84 spheroid distance (Vincenty inverse).  Point×point is
+    vectorized; otherwise it is the Vincenty length of
+    :func:`relate.nearest`'s pair, whose approximation is documented
+    there."""
     if _all_points(a) and _all_points(b):
         lon1, lat1 = wkt.wkb_points_to_lonlat(a)
         lon2, lat2 = wkt.wkb_points_to_lonlat(b)
         d = kernels.vincenty_m(lon1, lat1, lon2, lat2)
         return pd.Series(np.where(np.isfinite(d), d, np.nan))
-    ga, gb = _parse_series(a), _parse_series(b)
-    out = []
-    for x, y in zip(ga, gb):
-        if x is None or y is None:
-            out.append(None)
-            continue
-        ca, cb = relate._all_coords(x), relate._all_coords(y)
-        d2 = ((ca[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-        i, j = np.unravel_index(np.argmin(d2), d2.shape)
-        out.append(
-            float(
-                kernels.vincenty_m(
-                    np.asarray([ca[i, 0]]), np.asarray([ca[i, 1]]), cb[j, 0], cb[j, 1]
-                )[0]
-            )
-        )
-    return pd.Series(out, dtype=float)
+    return pd.Series(
+        _pair_metric(a, b, lambda pa, pb: float(kernels.vincenty_m(pa[0], pa[1], pb[0], pb[1])[0])),
+        dtype=float,
+    )
 
 
 @_pd("double")

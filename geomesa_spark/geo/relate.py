@@ -21,8 +21,9 @@ Semantics:
 - a polygon whose ring jumps more than 180° in longitude is read as its
   :func:`wkt.antimeridian_split` parts, as the XZ2 keys, ``PolygonSet``
   and ``pip_refine_udf`` read it;
-- distances: planar in degrees (st_distance parity with JTS) and
-  spherical meters (haversine; vertex/edge-projection for lines).
+- every distance is a metric on ONE planar nearest point pair,
+  :func:`nearest` (JTS ``DistanceOp``); its docstring states the
+  approximation of the sphere and spheroid metrics.
 """
 
 from __future__ import annotations
@@ -250,37 +251,70 @@ def predicate(name: str, ga: wkt.Geometry, gb: wkt.Geometry) -> bool | None:
     return any(matches(m, p) for p in pats)
 
 
-def distance_deg(ga: wkt.Geometry, gb: wkt.Geometry) -> float:
-    """Planar cartesian distance in degrees (JTS st_distance parity)."""
-    if intersects(ga, gb):
-        return 0.0
-    pts_a = _sample_coords(ga)
-    pts_b = _sample_coords(gb)
-    best = np.inf
-    for coords, other in ((pts_a, gb), (pts_b, ga)):
-        for seg in _segments_of(other):
-            d = _pts_to_seg_planar(coords, seg)
-            best = min(best, float(d.min()))
-    return best
+def nearest(ga: wkt.Geometry, gb: wkt.Geometry) -> tuple[np.ndarray, np.ndarray]:
+    """The planar nearest point pair ``(pa, pb)``, ``pa`` on A and ``pb``
+    on B (JTS ``DistanceOp.nearestPoints``), over the :func:`unwrap`ped
+    parts: each point, line and ring is its own chain of segments.  When A
+    and B intersect, both are one shared point.
+
+    Every ``st_*`` distance is a metric on this pair (planar length,
+    haversine, Vincenty; ``st_closestPoint`` is ``pa``), so the sphere
+    distance is always the great-circle length between a point of A and
+    one of B.  The pair is planar-nearest, as GeoMesa takes its sphere and
+    spheroid metrics on JTS's planar pair: exact between points, and an
+    approximation of the geodesic nearest pair on long or high-latitude
+    segments."""
+    ga, gb = unwrap(ga), unwrap(gb)
+    hit = intersects(ga, gb)
+    va, sa = _vertices_segments(ga)
+    vb, sb = _vertices_segments(gb)
+    pa, pb = _nearest_projection(va, sb)
+    qb, qa = _nearest_projection(vb, sa)
+    if np.hypot(*(qa - qb)) < np.hypot(*(pa - pb)):
+        pa, pb = qa, qb
+    if hit and np.hypot(*(pa - pb)) > de9im._EPS:
+        pa = _shared_point(ga, va, sa, gb, vb, sb, pa)
+    return (pa, pa) if hit else (pa, pb)
 
 
-def distance_sphere_m(ga: wkt.Geometry, gb: wkt.Geometry) -> float:
-    if intersects(ga, gb):
-        return 0.0
-    best = np.inf
-    pa, pb = _sample_coords(ga), _sample_coords(gb)
-    for coords, other in ((pa, gb), (pb, ga)):
-        o = _all_coords(other)
-        if len(o) >= 2:
-            d = kernels.point_segments_dist_m(coords[:, 0], coords[:, 1], o)
-        else:
-            d = kernels.haversine_m(coords[:, 0], coords[:, 1], o[0, 0], o[0, 1])
-        best = min(best, float(np.min(d)))
-    return best
+def _vertices_segments(g: wkt.Geometry) -> tuple[np.ndarray, np.ndarray]:
+    """Every vertex (k, 2) and every segment (m, 2, 2) of ``g``'s parts; a
+    point is one zero-length segment."""
+    chains = list(_segments_of(g))
+    segs = [np.concatenate([c[:-1, None], c[1:, None]], axis=1) for c in chains]
+    return np.concatenate(chains), np.concatenate(segs)
 
 
-def _sample_coords(g: wkt.Geometry) -> np.ndarray:
-    return _all_coords(g)
+def _nearest_projection(v: np.ndarray, s: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The vertex of ``v`` nearest to the segments ``s``, and its nearest
+    point on them."""
+    a, d = s[:, 0], s[:, 1] - s[:, 0]
+    L2 = (d * d).sum(-1)
+    t = np.clip(((v[:, None] - a) * d).sum(-1) / np.where(L2 > 0, L2, 1.0), 0.0, 1.0)
+    q = a + t[..., None] * d
+    i, j = np.unravel_index(((q - v[:, None]) ** 2).sum(-1).argmin(), t.shape)
+    return v[i], q[i, j]
+
+
+def _shared_point(ga, va, sa, gb, vb, sb, pa: np.ndarray) -> np.ndarray:
+    """A point of both sides of an intersecting pair whose nearest vertex
+    pair is not 0 apart: the first segment crossing, else a vertex of one
+    side in the other's area (``pa`` if neither is found)."""
+    hit = kernels.segments_intersect(sa[:, None, 0], sa[:, None, 1], sb[None, :, 0], sb[None, :, 1])
+    i, j = np.nonzero(hit)
+    r, s, w = sa[i, 1] - sa[i, 0], sb[j, 1] - sb[j, 0], sb[j, 0] - sa[i, 0]
+    den = r[:, 0] * s[:, 1] - r[:, 1] * s[:, 0]
+    if (den != 0).any():
+        k = int((den != 0).argmax())
+        t = (w[k, 0] * s[k, 1] - w[k, 1] * s[k, 0]) / den[k]
+        return sa[i[k], 0] + np.clip(t, 0.0, 1.0) * r[k]
+    for v, g in ((va, gb), (vb, ga)):
+        polys = [p.coords for p in _as_parts(g) if p.kind == wkt.WKB_POLYGON]
+        if polys:
+            inside = de9im._pip_multi(v[:, 0], v[:, 1], polys) != PIP_OUT
+            if inside.any():
+                return v[int(inside.argmax())]
+    return pa
 
 
 def _all_coords(g: wkt.Geometry) -> np.ndarray:
@@ -304,16 +338,3 @@ def _segments_of(g: wkt.Geometry):
     else:
         for p in _as_parts(g):
             yield from _segments_of(p)
-
-
-def _pts_to_seg_planar(pts: np.ndarray, seg: np.ndarray) -> np.ndarray:
-    x, y = pts[:, 0][:, None], pts[:, 1][:, None]
-    x1, y1 = seg[:-1, 0][None, :], seg[:-1, 1][None, :]
-    x2, y2 = seg[1:, 0][None, :], seg[1:, 1][None, :]
-    dx, dy = x2 - x1, y2 - y1
-    len2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(len2 > 0, ((x - x1) * dx + (y - y1) * dy) / len2, 0.0)
-    t = np.clip(t, 0.0, 1.0)
-    nx, ny = x1 + t * dx, y1 + t * dy
-    return np.sqrt((x - nx) ** 2 + (y - ny) ** 2).min(axis=1)
