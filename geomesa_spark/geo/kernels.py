@@ -12,7 +12,7 @@ unavailable offline, so the exact stage is hand-written numpy:
 - haversine great-circle distance (sphere radius 6371008.8 m, matching
   GeoMesa's ``st_distanceSphere``);
 - segment intersection and rect/polygon overlap (used by cell covers);
-- point-to-segment geodesic distance (st_dwithin against linestrings).
+- point-to-segment geodesic distance (the corridor and line refines).
 
 All kernels broadcast over numpy arrays and are called from Arrow-batched
 pandas UDFs — never per-row Python.
@@ -111,15 +111,20 @@ def segments_intersect(p1, p2, q1, q2) -> np.ndarray:
     d4 = orient(p1, p2, q2)
     proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
 
-    def on_seg(a, b, c, d):
-        return (np.abs(d) <= _EPS) & (
+    near = [np.abs(d) <= _EPS for d in (d1, d2, d3, d4)]
+    if not any(n.any() for n in near):  # no endpoint on the other's line
+        return proper
+
+    def on_seg(a, b, c, near):
+        return near & (
             (c[..., 0] >= np.minimum(a[..., 0], b[..., 0]) - _EPS)
             & (c[..., 0] <= np.maximum(a[..., 0], b[..., 0]) + _EPS)
             & (c[..., 1] >= np.minimum(a[..., 1], b[..., 1]) - _EPS)
             & (c[..., 1] <= np.maximum(a[..., 1], b[..., 1]) + _EPS)
         )
 
-    touch = on_seg(q1, q2, p1, d1) | on_seg(q1, q2, p2, d2) | on_seg(p1, p2, q1, d3) | on_seg(p1, p2, q2, d4)
+    touch = (on_seg(q1, q2, p1, near[0]) | on_seg(q1, q2, p2, near[1])
+             | on_seg(p1, p2, q1, near[2]) | on_seg(p1, p2, q2, near[3]))
     return proper | touch
 
 
@@ -230,10 +235,10 @@ def rect_fully_inside_polygon(
     return out
 
 
-def point_segments_dist_m(
-    lons: np.ndarray, lats: np.ndarray, seg: np.ndarray
-) -> np.ndarray:
-    """Min geodesic distance from each point to a polyline ``seg`` (M, 2).
+def _point_segments(lons, lats, seg: np.ndarray):
+    """Geodesic distance (N, M) from each point to each segment of the
+    polyline ``seg`` (M + 1, 2), and the segments' (1, M) direction
+    ``(dx, dy)``.
 
     Uses a local equirectangular projection around each segment (accurate
     for the sub-degree segments in the fixtures/corpus) then exact
@@ -253,8 +258,15 @@ def point_segments_dist_m(
     t = np.clip(t, 0.0, 1.0)
     nx = x1 + t * (x2 - x1)
     ny = y1 + t * (y2 - y1)
-    d = haversine_m(x, y, nx, ny)
-    return d.min(axis=1)
+    return haversine_m(x, y, nx, ny), dx, dy
+
+
+def point_segments_dist_m(
+    lons: np.ndarray, lats: np.ndarray, seg: np.ndarray
+) -> np.ndarray:
+    """Min geodesic distance from each point to a polyline ``seg`` (M, 2)
+    (:func:`_point_segments`)."""
+    return _point_segments(lons, lats, seg)[0].min(axis=1)
 
 
 def point_segments_nearest(
@@ -264,25 +276,10 @@ def point_segments_nearest(
     the nearest segment per point (degrees clockwise from north, [0, 360),
     planar in the same local equirectangular frame the distance uses) —
     the quantity RouteSearchProcess compares against a track's heading."""
-    seg = np.asarray(seg, dtype=np.float64)
-    x = np.asarray(lons, dtype=np.float64)[:, None]
-    y = np.asarray(lats, dtype=np.float64)[:, None]
-    x1, y1 = seg[:-1, 0][None, :], seg[:-1, 1][None, :]
-    x2, y2 = seg[1:, 0][None, :], seg[1:, 1][None, :]
-    k = np.cos(np.radians((y1 + y2) / 2.0))
-    px, py = (x - x1) * k, y - y1
-    dx, dy = (x2 - x1) * k, y2 - y1
-    len2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.where(len2 > 0, (px * dx + py * dy) / len2, 0.0)
-    t = np.clip(t, 0.0, 1.0)
-    nx = x1 + t * (x2 - x1)
-    ny = y1 + t * (y2 - y1)
-    d = haversine_m(x, y, nx, ny)
+    d, dx, dy = _point_segments(lons, lats, seg)
     i = d.argmin(axis=1)
-    rows = np.arange(d.shape[0])
     seg_bearing = np.degrees(np.arctan2(dx, dy)) % 360.0  # (1, M)
-    return d[rows, i], seg_bearing[0, i]
+    return d[np.arange(d.shape[0]), i], seg_bearing[0, i]
 
 
 def heading_delta_deg(a: np.ndarray, b: np.ndarray, bidirectional: bool = True) -> np.ndarray:
