@@ -89,17 +89,26 @@ class PolygonSet:
 
     @classmethod
     def from_rows(cls, rows: list[dict], id_col: str = "polygon_id", wkt_col: str = "wkt"):
-        ps = cls(ids=[])
+        """Rows that are not a (multi)polygon are skipped.  An id listed
+        twice is kept once when both rows hold the same geometry, and
+        raises ``ValueError`` when they do not."""
+        ps, seen = cls(ids=[]), {}
         for r in rows:
             g = wkt.parse_wkt(r[wkt_col])
             if g is None or g.kind not in (wkt.WKB_POLYGON, wkt.WKB_MULTIPOLYGON):
                 continue
-            ps.ids.append(r[id_col])
+            pid, b = r[id_col], wkt.geom_to_wkb(g)
+            if pid in seen:
+                if seen[pid] != b:
+                    raise ValueError(f"polygon id {pid!r} is listed with two different geometries")
+                continue
+            seen[pid] = b
+            ps.ids.append(pid)
             if g.kind == wkt.WKB_MULTIPOLYGON:
                 polys = [wkt.Geometry(wkt.WKB_POLYGON, p) for p in g.coords]
             else:
                 polys = [g]
-            ps.parts[r[id_col]] = [
+            ps.parts[pid] = [
                 part.rings() for poly in polys for part in wkt.antimeridian_split(poly)
             ]
         return ps
