@@ -111,20 +111,15 @@ def segments_intersect(p1, p2, q1, q2) -> np.ndarray:
     d4 = orient(p1, p2, q2)
     proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
 
-    near = [np.abs(d) <= _EPS for d in (d1, d2, d3, d4)]
-    if not any(n.any() for n in near):  # no endpoint on the other's line
-        return proper
-
-    def on_seg(a, b, c, near):
-        return near & (
+    def on_seg(a, b, c, d):
+        return (np.abs(d) <= _EPS) & (
             (c[..., 0] >= np.minimum(a[..., 0], b[..., 0]) - _EPS)
             & (c[..., 0] <= np.maximum(a[..., 0], b[..., 0]) + _EPS)
             & (c[..., 1] >= np.minimum(a[..., 1], b[..., 1]) - _EPS)
             & (c[..., 1] <= np.maximum(a[..., 1], b[..., 1]) + _EPS)
         )
 
-    touch = (on_seg(q1, q2, p1, near[0]) | on_seg(q1, q2, p2, near[1])
-             | on_seg(p1, p2, q1, near[2]) | on_seg(p1, p2, q2, near[3]))
+    touch = on_seg(q1, q2, p1, d1) | on_seg(q1, q2, p2, d2) | on_seg(p1, p2, q1, d3) | on_seg(p1, p2, q2, d4)
     return proper | touch
 
 
