@@ -387,16 +387,14 @@ def st_lengthSphere(s: pd.Series) -> pd.Series:
     return pd.Series([ln(b) for b in s.to_numpy(object)])
 
 
-def _pair_metric(a: pd.Series, b: pd.Series, metric) -> list:
-    """``metric(pa, pb)`` of each row's :func:`relate.nearest` pair; None
-    where either side is NULL or unparseable."""
+def _pair_metric(a: pd.Series, b: pd.Series, fn) -> list:
+    """``fn(ga, gb)`` per row; None where either side is NULL or unparseable."""
     ga, gb = _parse_series(a), _parse_series(b)
-    return [metric(*relate.nearest(x, y)) if (x is not None and y is not None) else None
-            for x, y in zip(ga, gb)]
+    return [fn(x, y) if (x is not None and y is not None) else None for x, y in zip(ga, gb)]
 
 
-def _sphere_m(pa: np.ndarray, pb: np.ndarray) -> float:
-    return float(kernels.haversine_m(pa[0], pa[1], pb[0], pb[1]))
+def _sphere_m(ga: wkt.Geometry, gb: wkt.Geometry) -> float:
+    return relate.distance(ga, gb, lambda pa, pb: float(kernels.haversine_m(*pa, *pb)))
 
 
 @_pd("double")
@@ -405,7 +403,7 @@ def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
         lon1, lat1 = wkt.wkb_points_to_lonlat(a)
         lon2, lat2 = wkt.wkb_points_to_lonlat(b)
         return pd.Series(np.sqrt((lon1 - lon2) ** 2 + (lat1 - lat2) ** 2))
-    return pd.Series(_pair_metric(a, b, lambda pa, pb: float(np.hypot(*(pa - pb)))))
+    return pd.Series(_pair_metric(a, b, relate.distance))
 
 
 @_pd("double")
@@ -578,10 +576,8 @@ def st_relateBool(a: pd.Series, b: pd.Series, pattern: pd.Series) -> pd.Series:
 def st_closestPoint(a: pd.Series, b: pd.Series) -> pd.Series:
     """The point of geometry a nearest to geometry b: the A side of
     :func:`relate.nearest`'s pair (JTS ``DistanceOp.nearestPoints``)."""
-    return pd.Series(
-        _pair_metric(a, b, lambda pa, pb: wkt.point_to_wkb(float(pa[0]), float(pa[1]))),
-        dtype=object,
-    )
+    return pd.Series(_pair_metric(
+        a, b, lambda x, y: wkt.point_to_wkb(*map(float, relate.nearest(x, y)[0]))), dtype=object)
 
 
 # -- processing -------------------------------------------------------------
@@ -920,18 +916,16 @@ def st_geomFromGeoJSON(s: pd.Series) -> pd.Series:
 @_pd("double")
 def st_distanceSpheroid(a: pd.Series, b: pd.Series) -> pd.Series:
     """True WGS84 spheroid distance (Vincenty inverse).  Point×point is
-    vectorized; otherwise it is the Vincenty length of
-    :func:`relate.nearest`'s pair, whose approximation is documented
-    there."""
+    vectorized; otherwise it is the Vincenty length of the planar nearest
+    pair read across ±180° (:func:`relate.distance`), whose
+    approximation :func:`relate.nearest` documents."""
     if _all_points(a) and _all_points(b):
         lon1, lat1 = wkt.wkb_points_to_lonlat(a)
         lon2, lat2 = wkt.wkb_points_to_lonlat(b)
         d = kernels.vincenty_m(lon1, lat1, lon2, lat2)
         return pd.Series(np.where(np.isfinite(d), d, np.nan))
-    return pd.Series(
-        _pair_metric(a, b, lambda pa, pb: float(kernels.vincenty_m(pa[0], pa[1], pb[0], pb[1])[0])),
-        dtype=float,
-    )
+    return pd.Series(_pair_metric(a, b, lambda x, y: relate.distance(
+        x, y, lambda pa, pb: float(kernels.vincenty_m(*pa, *pb)[0]))), dtype=float)
 
 
 @_pd("double")

@@ -22,8 +22,8 @@ Semantics:
   :func:`wkt.antimeridian_split` parts, as the XZ2 keys, ``PolygonSet``
   and ``pip_refine_udf`` read it;
 - every distance is a metric on ONE planar nearest point pair,
-  :func:`nearest` (JTS ``DistanceOp``); its docstring states the
-  approximation of the sphere and spheroid metrics.
+  :func:`nearest` (JTS ``DistanceOp``), which the sphere and spheroid
+  metrics read across ±180° (:func:`distance`).
 """
 
 from __future__ import annotations
@@ -254,27 +254,50 @@ def predicate(name: str, ga: wkt.Geometry, gb: wkt.Geometry) -> bool | None:
 def nearest(ga: wkt.Geometry, gb: wkt.Geometry) -> tuple[np.ndarray, np.ndarray]:
     """The planar nearest point pair ``(pa, pb)``, ``pa`` on A and ``pb``
     on B (JTS ``DistanceOp.nearestPoints``), over the :func:`unwrap`ped
-    parts: each point, line and ring is its own chain of segments.  When A
-    and B intersect, both are one shared point.
+    parts, each point, line and ring its own chain of segments; one shared
+    point when A and B intersect.
 
-    Every ``st_*`` distance is a metric on this pair (planar length,
-    haversine, Vincenty; ``st_closestPoint`` is ``pa``), so the sphere
-    distance is always the great-circle length between a point of A and
-    one of B.  The pair is planar-nearest, as GeoMesa takes its sphere and
-    spheroid metrics on JTS's planar pair: exact between points, and an
-    approximation of the geodesic nearest pair on long or high-latitude
-    segments."""
+    Every ``st_*`` distance is a metric on this pair (:func:`distance`;
+    ``st_closestPoint`` is ``pa``).  Taking the sphere and spheroid
+    metrics on the planar pair, as GeoMesa does on JTS's, is exact between
+    points and approximates the geodesic nearest pair on long or
+    high-latitude segments."""
     ga, gb = unwrap(ga), unwrap(gb)
-    hit = intersects(ga, gb)
     va, sa = _vertices_segments(ga)
     vb, sb = _vertices_segments(gb)
+    pa, pb = _nearest_pair(va, sa, vb, sb)
+    if not intersects(ga, gb):
+        return pa, pb
+    if np.hypot(*(pa - pb)) > de9im._EPS:
+        pa = _shared_point(ga, va, sa, gb, vb, sb, pa)
+    return pa, pa
+
+
+def distance(ga: wkt.Geometry, gb: wkt.Geometry, metric=None) -> float:
+    """``metric(pa, pb)`` on the planar nearest pair, or without a
+    ``metric`` its planar length (JTS ``DistanceOp.distance``); 0 where A
+    and B intersect, with no shared point sought.  A ``metric`` wraps
+    longitude (haversine, Vincenty), so its pair is searched over B and
+    B's copies shifted by ±360°: near ±180° the unshifted pair can lie a
+    map's width apart while a pair across the seam is a few km, and each
+    candidate is still a point of A and one of B modulo 360°."""
+    ga, gb = unwrap(ga), unwrap(gb)
+    if intersects(ga, gb):
+        return 0.0
+    va, sa = _vertices_segments(ga)
+    vb, sb = _vertices_segments(gb)
+    if metric is None:
+        return float(np.hypot(*np.subtract(*_nearest_pair(va, sa, vb, sb))))
+    turns = (-360.0, 0.0, 360.0)
+    return metric(*_nearest_pair(va, sa, np.concatenate([vb + (t, 0.0) for t in turns]),
+                                 np.concatenate([sb + (t, 0.0) for t in turns])))
+
+
+def _nearest_pair(va, sa, vb, sb) -> tuple[np.ndarray, np.ndarray]:
+    """The planar nearest pair between the vertices/segments of A and B."""
     pa, pb = _nearest_projection(va, sb)
     qb, qa = _nearest_projection(vb, sa)
-    if np.hypot(*(qa - qb)) < np.hypot(*(pa - pb)):
-        pa, pb = qa, qb
-    if hit and np.hypot(*(pa - pb)) > de9im._EPS:
-        pa = _shared_point(ga, va, sa, gb, vb, sb, pa)
-    return (pa, pa) if hit else (pa, pb)
+    return (qa, qb) if np.hypot(*(qa - qb)) < np.hypot(*(pa - pb)) else (pa, pb)
 
 
 def _vertices_segments(g: wkt.Geometry) -> tuple[np.ndarray, np.ndarray]:

@@ -98,11 +98,10 @@ class PolygonSet:
             if g is None or g.kind not in (wkt.WKB_POLYGON, wkt.WKB_MULTIPOLYGON):
                 continue
             pid, b = r[id_col], wkt.geom_to_wkb(g)
-            if pid in seen:
-                if seen[pid] != b:
-                    raise ValueError(f"polygon id {pid!r} is listed with two different geometries")
+            if seen.setdefault(pid, b) != b:
+                raise ValueError(f"polygon id {pid!r} is listed with two different geometries")
+            if pid in ps.parts:
                 continue
-            seen[pid] = b
             ps.ids.append(pid)
             if g.kind == wkt.WKB_MULTIPOLYGON:
                 polys = [wkt.Geometry(wkt.WKB_POLYGON, p) for p in g.coords]

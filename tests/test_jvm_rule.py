@@ -211,6 +211,8 @@ _CHILD = textwrap.dedent(
     am.loc[len(am)] = ["am", "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))"]
     am.loc[len(am)] = ["near", "POLYGON((2 2, 4 2, 4 4, 2 4, 2 2))"]
     am.loc[len(am)] = ["near_dw", "POLYGON((12 4, 13 4, 13 6, 12 6, 12 4))"]
+    # 0.2° east of POINT(179.9 -0.5) across the seam, ~1,100 km on the plane
+    am.loc[len(am)] = ["seam", "POLYGON((-179.9 -1, -170 -1, -170 1, -179.9 1, -179.9 -1))"]
     am_shapes = spark.createDataFrame(am)
     xz2.write_partitioned_geoms(am_shapes, root + "/am_shapes")
     xz2.feature_view(spark, root + "/am_shapes", "geom_id").createOrReplaceTempView("am_shapes")
@@ -240,6 +242,9 @@ _CHILD = textwrap.dedent(
          "st_geomFromWKT(wkt))", "am_shapes", "raw_am_shapes")
     case("xz_dwithin_antimeridian", "am_shapes", "SELECT geom_id FROM TABLE WHERE "
          "st_dwithin(st_geomFromWKT('POINT(10 5)'), st_geomFromWKT(wkt), 500000.0D)",
+         "am_shapes", "raw_am_shapes")
+    case("xz_dwithin_seam", "am_shapes", "SELECT geom_id FROM TABLE WHERE "
+         "st_dwithin(st_geomFromWKT('POINT(179.9 -0.5)'), st_geomFromWKT(wkt), 50000.0D)",
          "am_shapes", "raw_am_shapes")
     # a Filter on the key rows themselves: pruning would change their count
     case("xz_key_rows", "shapes", "SELECT geom_id, xz_level, xz_cell FROM TABLE WHERE "
@@ -308,7 +313,7 @@ PRUNED = {
     "wkt_trailing_dot", "wkt_leading_dot", "wkt_plus_sign", "wkt_exponent",
     "z3_space_time", "z3_dwithin_time", "z3_time_only", "z3_time_between", "z3_corridor_time",
     "xz_intersects", "xz_contains", "xz_dwithin", "xz_intersects_antimeridian",
-    "xz_dwithin_antimeridian",
+    "xz_dwithin_antimeridian", "xz_dwithin_seam",
     "xz3_all_dims", "xz3_time_only",
     "attr_eq", "attr_range", "attr_between", "attr_range_date", "attr_eq_date",
     "attr_own_alias", "attr_escaped_quote", "attr_non_ascii", "attr_non_ascii_cjk",

@@ -236,6 +236,20 @@ class TestNearestPair:
         s = one(spark, f"st_distanceSphere({self.EAST}, {self.NORTH})")
         assert abs(s - 111_195.08) < 1.0
 
+    @pytest.mark.parametrize("wkt_b", [
+        "POLYGON((-179.9 -1, -170 -1, -170 1, -179.9 1, -179.9 -1))",
+        "LINESTRING(-179.9 0, -175 0)",
+    ])
+    def test_sphere_metrics_take_the_pair_across_the_seam(self, spark, wkt_b):
+        # the planar pair lies at -170/-175; the pair over ±180° is 0.2° apart
+        a, b = "st_geomFromWKT('POINT(179.9 0)')", f"st_geomFromWKT('{wkt_b}')"
+        for x, y in ((a, b), (b, a)):
+            assert abs(one(spark, f"st_distanceSphere({x}, {y})") - 22_239.0) < 1.0
+            assert abs(one(spark, f"st_distanceSpheroid({x}, {y})") - 22_263.9) < 1.0
+            assert one(spark, f"st_dwithin({x}, {y}, 50000.0D)") is True
+        # st_distance stays JTS's planar length
+        assert one(spark, f"st_distance({a}, {b})") > 349.0
+
     def test_intersecting_pair_is_one_shared_point(self, spark):
         cross = "st_geomFromWKT('LINESTRING(5 -5, 5 5)')"
         c = f"st_closestPoint({self.EAST}, {cross})"
