@@ -229,16 +229,18 @@ def cover_bbox(
 def cover_polygon(rings: list[np.ndarray], res: int, max_cells: int = 4096) -> tuple[np.ndarray, int]:
     """Complete cell cover of a polygon (outer ring + holes) at ≤ ``res``.
 
-    Starts from the bbox cover, then drops cells whose rectangle provably
-    does not intersect the outer ring (conservative rect/polygon test);
-    holes are NOT used to drop cells (a cell overlapping a hole edge still
-    matters) — the exact refine stage applies hole semantics.
+    Starts from the cover of the bbox padded by ``kernels.BAND_PAD`` (so a
+    point on an edge that lies on a cell seam is covered on both sides),
+    then drops cells whose rectangle provably does not intersect the outer
+    ring (conservative rect/polygon test); holes are NOT used to drop
+    cells (a cell overlapping a hole edge still matters) — the exact
+    refine stage applies hole semantics.
     """
     from .geo import kernels
 
     outer = np.asarray(rings[0], dtype=np.float64)
-    lon0, lat0 = outer[:, 0].min(), outer[:, 1].min()
-    lon1, lat1 = outer[:, 0].max(), outer[:, 1].max()
+    lon0, lat0 = outer[:, 0].min() - kernels.BAND_PAD, outer[:, 1].min() - kernels.BAND_PAD
+    lon1, lat1 = outer[:, 0].max() + kernels.BAND_PAD, outer[:, 1].max() + kernels.BAND_PAD
     cells, r = cover_bbox(float(lon0), float(lat0), float(lon1), float(lat1), res, max_cells)
     if len(cells) <= 4:
         return cells, r

@@ -1847,15 +1847,19 @@ def _media_dims_sql() -> str:
 def _pip_expr_for_polygon(wkt_text: str) -> str:
     """SQL boolean over (lon, lat): EXACTLY the engine's intersects refine
     for one fixture polygon — antimeridian split via the engine's own
-    splitter, then per part the kernel's crossing-parity + boundary test
-    (`geo/kernels._pip_ring`) with every edge constant precomputed in
-    Python (same IEEE doubles numpy would derive, embedded via repr) and
-    the arithmetic parenthesized in the kernel's evaluation order.  Any
-    drift in crossing rule, boundary tolerance, or the split makes the
-    oracle disagree — that is the point."""
+    splitter, then per part the kernel's crossing parity
+    (`geo/kernels._pip_ring`, its edge constants precomputed in Python and
+    the arithmetic parenthesized in the kernel's evaluation order) and the
+    engine's one on-segment rule, `kernels.on_segment_sql`, over each edge
+    as DOUBLE literals (a bare `0.1` is a DuckDB DECIMAL).  Any drift in
+    crossing rule, boundary rule, or the split makes the oracle disagree —
+    that is the point."""
     import numpy as np
 
     from .geo import kernels, wkt as wktmod
+
+    def dbl(v: float) -> str:
+        return repr(v) if "e" in repr(v) else repr(v) + "e0"
 
     g = wktmod.parse_wkt(wkt_text)
     polys = (
@@ -1878,16 +1882,8 @@ def _pip_expr_for_polygon(wkt_text: str) -> str:
                         f"AND lon < {x1!r} + (lat - {y1!r}) / {dy!r} * {dx!r} "
                         f"THEN 1 ELSE 0 END)"
                     )
-                    thresh = float(
-                        np.sqrt(max(dx * dx + dy * dy, 1.0) * 1e-12) * 1e-1 + 1e-12
-                    )
-                    lox, hix = min(x1, x2) - 1e-12, max(x1, x2) + 1e-12
-                    loy, hiy = min(y1, y2) - 1e-12, max(y1, y2) + 1e-12
-                    boundary_terms.append(
-                        f"(abs({dx!r} * (lat - {y1!r}) - {dy!r} * (lon - {x1!r}))"
-                        f" <= {thresh!r} AND lon >= {lox!r} AND lon <= {hix!r}"
-                        f" AND lat >= {loy!r} AND lat <= {hiy!r})"
-                    )
+                    boundary_terms.append(kernels.on_segment_sql(
+                        "lon", "lat", *map(dbl, (x1, y1, x2, y2))))
             part_exprs.append(
                 "(((" + " + ".join(parity_terms) + ") % 2 = 1) OR "
                 + " OR ".join(boundary_terms) + ")"

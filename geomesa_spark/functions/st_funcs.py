@@ -31,7 +31,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
-from ..geo import de9im, geohash, kernels, relate, wkt
+from ..geo import geohash, kernels, relate, wkt
 
 _POINT_LEN = 21
 
@@ -438,19 +438,16 @@ def st_translate(s: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
 
 # -- relations --------------------------------------------------------------
 
-def _pip_fast(a: pd.Series, b: pd.Series, side: str, rule: str) -> pd.Series | None:
-    """Vectorized fast path for the priority-tier predicates: one argument
-    is ALL points and the other has few DISTINCT areal geometries (the
-    ``WHERE st_contains(st_geomFromWKT('POLY…'), geom)`` shape — a literal
-    constant column).  Each distinct geometry is parsed once and classified
-    against its whole point group with the per-row path's union
-    point-in-polygon (``de9im._pip_multi`` over the same
-    :func:`relate.unwrap` parts), so results are bit-identical; returns
-    None (caller falls back) when the shape doesn't fit.
+def _pip_fast(a: pd.Series, b: pd.Series, name: str, side: str) -> pd.Series | None:
+    """Vectorized point path of the relations in :data:`_PIP_FAST`: one
+    argument is ALL points (the ``WHERE st_contains(st_geomFromWKT('POLY…'),
+    geom)`` shape, a literal constant column on the other side).  Each
+    distinct geometry is parsed once and its whole point group runs through
+    :func:`relate.point_predicate`, the per-row path's own point classes,
+    so results are identical; None (caller falls back) when neither side
+    is all points, or both are.
 
-    side: which argument must be the point side ('a', 'b', 'any');
-    rule: 'in' (interior only), 'cov' (boundary counts: covers and
-    intersects), 'out' (disjoint)."""
+    side: which argument must be the point side ('a', 'b', 'any')."""
     if side in ("b", "any") and _all_points(b) and not _all_points(a):
         pts, geoms = b, a
     elif side in ("a", "any") and _all_points(a) and not _all_points(b):
@@ -458,50 +455,27 @@ def _pip_fast(a: pd.Series, b: pd.Series, side: str, rule: str) -> pd.Series | N
     else:
         return None
     codes, uniques = pd.factorize(geoms, use_na_sentinel=True)
-    parsed = []
-    for u in uniques:
-        g = wkt.wkb_to_geom(u)
-        if g is None:
-            parsed.append(None)
-            continue
-        g = relate.unwrap(g)
-        if g.kind == wkt.WKB_POLYGON:
-            parsed.append([g.coords])
-        elif g.kind == wkt.WKB_MULTIPOLYGON:
-            parsed.append(list(g.coords))
-        else:
-            return None  # mixed/odd kinds: keep exact per-row semantics
     lons, lats = wkt.wkb_points_to_lonlat(pts)
-    pt_null = ~(np.isfinite(lons) & np.isfinite(lats))
-    geom_null = codes == -1
-    hit = np.zeros(len(lons), dtype=bool)
-    for ui, polys in enumerate(parsed):
-        m = codes == ui
-        if polys is None:  # unparseable WKB → None, like the per-row path
-            geom_null |= m
-            continue
-        if not m.any():
-            continue
-        cls = de9im._pip_multi(lons[m], lats[m], polys)
-        if rule == "in":
-            hit[m] = cls == kernels.PIP_IN
-        elif rule == "out":
-            hit[m] = cls == kernels.PIP_OUT
-        else:
-            hit[m] = cls != kernels.PIP_OUT
-    out = hit.astype(object)
-    out[pt_null | geom_null] = None
+    finite = np.isfinite(lons) & np.isfinite(lats)
+    out = np.full(len(lons), None, dtype=object)
+    for ui, u in enumerate(uniques):
+        m = (codes == ui) & finite
+        g = wkt.wkb_to_geom(u) if m.any() else None
+        if g is not None:  # unparseable WKB stays None, like the per-row path
+            hit = relate.point_predicate(name, g, lons[m], lats[m])
+            if hit is not None:
+                out[m] = hit
     return pd.Series(out)
 
 
-#: point-side shapes :func:`_pip_fast` answers, per relation: (point side, rule)
+#: the relations :func:`_pip_fast` answers, and their point side
 _PIP_FAST = {
-    "contains": ("b", "in"),
-    "within": ("a", "in"),
-    "intersects": ("any", "cov"),
-    "disjoint": ("any", "out"),
-    "covers": ("b", "cov"),
-    "coveredBy": ("a", "cov"),
+    "contains": "b",
+    "within": "a",
+    "intersects": "any",
+    "disjoint": "any",
+    "covers": "b",
+    "coveredBy": "a",
 }
 
 
@@ -512,7 +486,7 @@ def _binary_relation(name: str):
 
     def impl(a: pd.Series, b: pd.Series) -> pd.Series:
         if fast is not None:
-            r = _pip_fast(a, b, *fast)
+            r = _pip_fast(a, b, name, fast)
             if r is not None:
                 return r
         ga, gb = _parse_series(a), _parse_series(b)

@@ -37,41 +37,25 @@ def _close(p, q) -> bool:
     return abs(p[0] - q[0]) <= _EPS and abs(p[1] - q[1]) <= _EPS
 
 
-def _cross(ox, oy, ax, ay, bx, by) -> float:
-    return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
-
-
 def _seg_param(p, q, pt):
-    """Param t of ``pt`` along segment (p, q) if pt lies on it, else None."""
-    dx, dy = q[0] - p[0], q[1] - p[1]
-    L2 = dx * dx + dy * dy
-    if L2 <= _EPS * _EPS:
-        return 0.0 if _close(p, pt) else None
-    if abs(_cross(p[0], p[1], q[0], q[1], pt[0], pt[1])) > _EPS * max(1.0, np.sqrt(L2)):
+    """Param t of ``pt`` along segment (p, q) if pt lies on it
+    (:func:`kernels.on_segment`), else None."""
+    if not kernels.on_segment(pt[0], pt[1], p[0], p[1], q[0], q[1]):
         return None
-    t = ((pt[0] - p[0]) * dx + (pt[1] - p[1]) * dy) / L2
-    return t if -_EPS <= t <= 1 + _EPS else None
+    dx, dy = q[0] - p[0], q[1] - p[1]
+    return ((pt[0] - p[0]) * dx + (pt[1] - p[1]) * dy) / (dx * dx + dy * dy)
 
 
 def _collinear_overlap(p, q, a, b):
-    """Overlap interval [t0, t1] of segment (a, b) projected onto (p, q)
-    when the two are collinear and overlap with positive length; None
-    otherwise."""
-    ta, tb = _seg_param(p, q, a), _seg_param(p, q, b)
-    # both endpoints of (a,b) must be collinear with (p,q); partial cases
-    # (only one endpoint on the carrier line) are not collinear overlaps
-    dx, dy = q[0] - p[0], q[1] - p[1]
-    L2 = dx * dx + dy * dy
-    if L2 <= _EPS * _EPS:
+    """Overlap interval [t0, t1] along (p, q) of segments (p, q) and
+    (a, b) when they overlap with positive length, else None: the params
+    of those of p, q, a and b that lie on both segments.  Two such points
+    bound a stretch that lies on both, since each segment is convex."""
+    ts = [t for t in (_seg_param(p, q, a), _seg_param(p, q, b)) if t is not None]
+    ts += [t for pt, t in ((p, 0.0), (q, 1.0)) if _seg_param(a, b, pt) is not None]
+    if len(ts) < 2:
         return None
-    c1 = abs(_cross(p[0], p[1], q[0], q[1], a[0], a[1])) <= _EPS * max(1.0, np.sqrt(L2))
-    c2 = abs(_cross(p[0], p[1], q[0], q[1], b[0], b[1])) <= _EPS * max(1.0, np.sqrt(L2))
-    if not (c1 and c2):
-        return None
-    ta = ((a[0] - p[0]) * dx + (a[1] - p[1]) * dy) / L2
-    tb = ((b[0] - p[0]) * dx + (b[1] - p[1]) * dy) / L2
-    t0, t1 = min(ta, tb), max(ta, tb)
-    t0, t1 = max(t0, 0.0), min(t1, 1.0)
+    t0, t1 = max(min(ts), 0.0), min(max(ts), 1.0)
     return (t0, t1) if t1 - t0 > _EPS else None
 
 
@@ -243,6 +227,39 @@ def _pip_multi(xs: np.ndarray, ys: np.ndarray, polys: list[list[np.ndarray]]) ->
     for rings in polys:
         best = np.maximum(best, _RANK[kernels.point_in_polygon(xs, ys, rings)])
     return _UNRANK[best]
+
+
+def _line_class(xs: np.ndarray, ys: np.ndarray, lines: list[np.ndarray]) -> np.ndarray:
+    """Class of each point against a union of lines: BOUNDARY at a mod-2
+    endpoint (:func:`_parity_boundary`, to within :func:`_close`), else
+    IN on one of their :func:`_segments` (:func:`kernels.on_segment`),
+    else OUT."""
+    x, y = np.asarray(xs, dtype=np.float64)[:, None], np.asarray(ys, dtype=np.float64)[:, None]
+    p = np.concatenate([np.asarray(c, dtype=np.float64)[:-1] for c in lines])
+    q = np.concatenate([np.asarray(c, dtype=np.float64)[1:] for c in lines])
+    keep = (np.abs(q - p) > _EPS).any(axis=1)  # _segments drops the rest
+    p, q = p[keep], q[keep]
+    on = kernels.on_segment(x, y, p[:, 0], p[:, 1], q[:, 0], q[:, 1]).any(axis=1)
+    out = np.where(on, kernels.PIP_IN, kernels.PIP_OUT).astype(np.int8)
+    e = np.asarray(_parity_boundary(lines), dtype=np.float64).reshape(-1, 2)
+    out[((np.abs(x - e[:, 0]) <= _EPS) & (np.abs(y - e[:, 1]) <= _EPS)).any(axis=1)] = kernels.PIP_BOUNDARY
+    return out
+
+
+def classify(d: tuple, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
+    """PIP_IN / PIP_BOUNDARY / PIP_OUT of each point against the interior,
+    boundary and exterior of a :func:`decompose` result: the one point path
+    of the matrix's point rows and of the vectorised ``st_*`` and XZ2
+    refines.  Areal: :func:`_pip_multi`; lineal: :func:`_line_class`;
+    puntal: equal :func:`_pt_key` is IN."""
+    kind, parts = d
+    if kind == "A":
+        return _pip_multi(xs, ys, parts)
+    if kind == "L":
+        return _line_class(xs, ys, parts)
+    keys = {_pt_key(p) for p in parts}
+    return np.asarray([kernels.PIP_IN if _pt_key(p) in keys else kernels.PIP_OUT
+                       for p in zip(xs, ys)], dtype=np.int8)
 
 
 def _classify_multi(points, polys) -> set[int]:
@@ -455,21 +472,14 @@ def pointset_matrix(pts_a: list[tuple], pts_b: list[tuple]) -> str:
 
 def pointset_lineset_matrix(pts: list[tuple], lines: list[np.ndarray]) -> str:
     """DE-9IM for (Multi)Point × (Multi)LineString."""
-    lines = [np.asarray(c, dtype=np.float64) for c in lines]
-    segs = [s for c in lines for s in _segments(c)]
-    bnd = _parity_boundary(lines)
-    ii = ib = ie = "F"
-    covered_bnd = set()
-    for p in pts:
-        if any(_close(p, e) for e in bnd):
-            ib = "0"
-            covered_bnd.add(_pt_key(p))
-        elif _on_polyline(tuple(p), segs):
-            ii = "0"
-        else:
-            ie = "0"
-    ei = "1" if segs else "F"  # a finite point set never covers a dim-1 interior
-    eb = "0" if any(_pt_key(e) not in covered_bnd for e in bnd) else "F"
+    xy = np.asarray(pts, dtype=np.float64).reshape(-1, 2)
+    cls = set(_line_class(xy[:, 0], xy[:, 1], lines).tolist())
+    ii = "0" if kernels.PIP_IN in cls else "F"
+    ib = "0" if kernels.PIP_BOUNDARY in cls else "F"
+    ie = "0" if kernels.PIP_OUT in cls else "F"
+    # a finite point set never covers a dim-1 interior
+    ei = "1" if any(_segments(c) for c in lines) else "F"
+    eb = "0" if any(not any(_close(p, e) for p in pts) for e in _parity_boundary(lines)) else "F"
     return ii + ib + ie + "FFF" + ei + eb + "2"
 
 

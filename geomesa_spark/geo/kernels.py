@@ -12,13 +12,21 @@ unavailable offline, so the exact stage is hand-written numpy:
 - haversine great-circle distance (sphere radius 6371008.8 m, matching
   GeoMesa's ``st_distanceSphere``);
 - segment intersection and rect/polygon overlap (used by cell covers);
-- point-to-segment geodesic distance (the corridor and line refines).
+- point-to-segment geodesic distance (the corridor refine).
+
+A point is on a segment by ONE rule, :func:`on_segment` (and its SQL text
+:func:`on_segment_sql`): within :data:`ON_SEGMENT_EPS` of the segment.
+The polygon boundary, the touch test of :func:`segments_intersect`, the
+DE-9IM incidence of :mod:`geomesa_spark.geo.de9im`, the JVM refine and the
+DuckDB flagship oracle all read it.
 
 All kernels broadcast over numpy arrays and are called from Arrow-batched
 pandas UDFs — never per-row Python.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
@@ -28,6 +36,44 @@ _EPS = 1e-12
 PIP_OUT = 0
 PIP_IN = 1
 PIP_BOUNDARY = 2
+
+#: the one on-segment tolerance, in degrees (about 0.06 mm at the
+#: equator)
+ON_SEGMENT_EPS = 5e-10
+
+#: padding that keeps a bbox prefilter complete under :func:`on_segment`:
+#: a point on an edge lies at most √2·ε ≈ 7.1e-10° past the edge's
+#: bounding box.  The cell covers, the XZ2 keys and ``SpatialFilterRule``
+#: (``PAD``, the same 1e-9) pad by it.
+BAND_PAD = 2 * ON_SEGMENT_EPS
+
+
+def on_segment(px, py, x1, y1, x2, y2):
+    """Whether each point (px, py) is on the segment (x1, y1)–(x2, y2):
+    within :data:`ON_SEGMENT_EPS` of it, measured across it and beyond
+    each end — ``|cross| ≤ ε·L`` and ``−ε·L ≤ dot ≤ L² + ε·L``, L the
+    segment length.  A zero-length segment holds no point.  Broadcasts
+    over numpy arrays, and takes plain floats at float speed (de9im's
+    per-segment loops); :func:`on_segment_sql` is the same arithmetic in
+    the same IEEE order."""
+    dx, dy = x2 - x1, y2 - y1
+    rx, ry = px - x1, py - y1
+    L2 = dx * dx + dy * dy
+    tol = ON_SEGMENT_EPS * (np.sqrt(L2) if isinstance(L2, np.ndarray) else math.sqrt(L2))
+    dot = rx * dx + ry * dy
+    return (abs(dx * ry - dy * rx) <= tol) & (L2 > 0) & (dot >= -tol) & (dot <= L2 + tol)
+
+
+def on_segment_sql(px: str, py: str, x1: str, y1: str, x2: str, y2: str) -> str:
+    """:func:`on_segment` as one SQL boolean over six DOUBLE expressions,
+    for Spark and DuckDB alike.  The first conjunct fails for almost every
+    point, so the rest run only on collinear hits."""
+    dx, dy, rx, ry = f"({x2} - {x1})", f"({y2} - {y1})", f"({px} - {x1})", f"({py} - {y1})"
+    L2 = f"({dx} * {dx} + {dy} * {dy})"
+    tol = f"({ON_SEGMENT_EPS!r} * sqrt({L2}))"
+    dot = f"({rx} * {dx} + {ry} * {dy})"
+    return (f"(abs({dx} * {ry} - {dy} * {rx}) <= {tol} AND {L2} > 0 "
+            f"AND {dot} >= -{tol} AND {dot} <= {L2} + {tol})")
 
 
 def close_ring(ring: np.ndarray) -> np.ndarray:
@@ -51,14 +97,7 @@ def _pip_ring(lons: np.ndarray, lats: np.ndarray, ring: np.ndarray) -> tuple[np.
     x1, y1 = ring[:-1, 0][None, :], ring[:-1, 1][None, :]
     x2, y2 = ring[1:, 0][None, :], ring[1:, 1][None, :]
 
-    # boundary: point collinear with edge and within its bbox
-    cross = (x2 - x1) * (y - y1) - (y2 - y1) * (x - x1)
-    seg_len2 = (x2 - x1) ** 2 + (y2 - y1) ** 2
-    tol = np.maximum(seg_len2, 1.0) * _EPS
-    collinear = np.abs(cross) <= np.sqrt(tol) * 1e-1 + _EPS
-    inx = (x >= np.minimum(x1, x2) - _EPS) & (x <= np.maximum(x1, x2) + _EPS)
-    iny = (y >= np.minimum(y1, y2) - _EPS) & (y <= np.maximum(y1, y2) + _EPS)
-    on_edge = (collinear & inx & iny).any(axis=1)
+    on_edge = on_segment(x, y, x1, y1, x2, y2).any(axis=1)
 
     # crossing number (half-open rule avoids double-counting vertices)
     cond = (y1 <= y) != (y2 <= y)
@@ -97,7 +136,9 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
 
 def segments_intersect(p1, p2, q1, q2) -> np.ndarray:
     """Proper-or-touching segment intersection test, broadcasting over the
-    leading dimensions of the four (…, 2) point arrays."""
+    leading dimensions of the four (…, 2) point arrays: an exact sign test
+    for a proper crossing, and :func:`on_segment` for an endpoint of one
+    segment on the other."""
     p1, p2, q1, q2 = (np.asarray(a, dtype=np.float64) for a in (p1, p2, q1, q2))
 
     def orient(a, b, c):
@@ -111,16 +152,10 @@ def segments_intersect(p1, p2, q1, q2) -> np.ndarray:
     d4 = orient(p1, p2, q2)
     proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
 
-    def on_seg(a, b, c, d):
-        return (np.abs(d) <= _EPS) & (
-            (c[..., 0] >= np.minimum(a[..., 0], b[..., 0]) - _EPS)
-            & (c[..., 0] <= np.maximum(a[..., 0], b[..., 0]) + _EPS)
-            & (c[..., 1] >= np.minimum(a[..., 1], b[..., 1]) - _EPS)
-            & (c[..., 1] <= np.maximum(a[..., 1], b[..., 1]) + _EPS)
-        )
+    def on(c, a, b):
+        return on_segment(c[..., 0], c[..., 1], a[..., 0], a[..., 1], b[..., 0], b[..., 1])
 
-    touch = on_seg(q1, q2, p1, d1) | on_seg(q1, q2, p2, d2) | on_seg(p1, p2, q1, d3) | on_seg(p1, p2, q2, d4)
-    return proper | touch
+    return proper | on(p1, q1, q2) | on(p2, q1, q2) | on(q1, p1, p2) | on(q2, p1, p2)
 
 
 def rect_intersects_polygon(
@@ -128,8 +163,10 @@ def rect_intersects_polygon(
 ) -> np.ndarray:
     """Conservative test: does each rect [lon0,lon1]×[lat0,lat1] intersect
     the polygon outer ring?  True iff a rect corner is inside/on the
-    polygon, a polygon vertex is inside the rect, or an edge crosses a rect
-    edge.  Used to tighten cell covers (never drops a true intersection)."""
+    polygon, a polygon vertex is inside the rect, or an edge crosses or
+    touches a rect edge — "on" and "touches" read :func:`on_segment`, so a
+    rect within the band of an edge counts.  Used to tighten cell covers
+    (never drops a true intersection)."""
     ring = close_ring(ring)
     lon0, lat0, lon1, lat1 = (np.asarray(a, dtype=np.float64) for a in (lon0, lat0, lon1, lat1))
     n = lon0.shape[0]
@@ -138,7 +175,8 @@ def rect_intersects_polygon(
     # polygon bbox reject (cheap)
     rx0, ry0 = ring[:, 0].min(), ring[:, 1].min()
     rx1, ry1 = ring[:, 0].max(), ring[:, 1].max()
-    cand = ~((lon1 < rx0) | (lon0 > rx1) | (lat1 < ry0) | (lat0 > ry1))
+    cand = ~((lon1 < rx0 - BAND_PAD) | (lon0 > rx1 + BAND_PAD)
+             | (lat1 < ry0 - BAND_PAD) | (lat0 > ry1 + BAND_PAD))
     if not cand.any():
         return out
     idx = np.nonzero(cand)[0]

@@ -14,10 +14,14 @@ Semantics:
   :func:`geomesa_spark.geo.de9im.relate_matrix`, through
   :func:`predicate`; ``st_relate``/``st_relateBool`` read the same matrix
   (:func:`matrix`, :func:`matches`);
+- a point is judged by ONE path, :func:`point_class` (the class the
+  matrix's point row holds, :func:`de9im.classify`), and a point on a
+  segment by one rule, :func:`kernels.on_segment`: the matrix, the
+  vectorised ``st_*`` point path and the XZ2 point refine
+  (:func:`point_predicate`) all read it;
 - :func:`intersects` is the fast ``intersects``/``disjoint`` (vertex
-  point-in-polygon + edge crossings, with de9im's planar incidence rule
-  for points on lines), so it agrees with the matrix's four
-  intersection cells;
+  classes + edge crossings, both through that rule), so it agrees with
+  the matrix's four intersection cells;
 - a polygon whose ring jumps more than 180° in longitude is read as its
   :func:`wkt.antimeridian_split` parts, as the XZ2 keys, ``PolygonSet``
   and ``pip_refine_udf`` read it;
@@ -45,25 +49,6 @@ def _as_parts(g: wkt.Geometry) -> list:
     if g.kind == wkt.WKB_COLLECTION:
         return [p for part in g.coords for p in _as_parts(part)]
     return [g]
-
-
-def _pip_one(lon: float, lat: float, rings) -> int:
-    return int(kernels.point_in_polygon(np.asarray([lon]), np.asarray([lat]), rings)[0])
-
-
-def _point_on_line(lon: float, lat: float, coords: np.ndarray) -> bool:
-    """de9im's planar incidence rule (``_seg_param`` over ``_segments``),
-    over all segments at once, so the fast path and the matrix agree."""
-    eps = de9im._EPS
-    c = np.asarray(coords, dtype=np.float64)
-    p, d = c[:-1], np.diff(c, axis=0)
-    keep = (np.abs(d) > eps).any(axis=1)  # _segments drops zero-length ones
-    px, py, dx, dy = p[keep, 0], p[keep, 1], d[keep, 0], d[keep, 1]
-    rx, ry = lon - px, lat - py
-    L2 = dx * dx + dy * dy
-    on = np.abs(dx * ry - dy * rx) <= eps * np.maximum(1.0, np.sqrt(L2))
-    t = (rx * dx + ry * dy) / L2
-    return bool((on & (t >= -eps) & (t <= 1 + eps)).any())
 
 
 def _edges(coords: np.ndarray):
@@ -121,16 +106,11 @@ def intersects(ga: wkt.Geometry, gb: wkt.Geometry) -> bool:
 
 def _intersects_single(a: wkt.Geometry, b: wkt.Geometry) -> bool:
     P, L, G = wkt.WKB_POINT, wkt.WKB_LINESTRING, wkt.WKB_POLYGON
-    if a.kind == P and b.kind == P:
-        return de9im._pt_key(a.coords) == de9im._pt_key(b.coords)
-    if a.kind == P and b.kind == G:
-        return _pip_one(a.coords[0], a.coords[1], b.coords) != PIP_OUT
-    if a.kind == G and b.kind == P:
-        return _intersects_single(b, a)
-    if a.kind == P and b.kind == L:
-        return _point_on_line(a.coords[0], a.coords[1], b.coords)
-    if a.kind == L and b.kind == P:
-        return _intersects_single(b, a)
+    if b.kind == P:
+        a, b = b, a
+    if a.kind == P:
+        d = de9im.decompose(b)
+        return d is not None and bool(de9im.classify(d, a.coords[:1], a.coords[1:])[0] != PIP_OUT)
     if a.kind == L and b.kind == L:
         return _any_edge_cross(a.coords, b.coords)
     if a.kind == L and b.kind == G:
@@ -249,6 +229,52 @@ def predicate(name: str, ga: wkt.Geometry, gb: wkt.Geometry) -> bool | None:
             return False
     m = de9im.decomposed_matrix(da, db)
     return any(matches(m, p) for p in pats)
+
+
+def point_class(g: wkt.Geometry, lons: np.ndarray, lats: np.ndarray) -> np.ndarray | None:
+    """PIP_IN / PIP_BOUNDARY / PIP_OUT of each point against the interior,
+    boundary and exterior of ``g`` read on its :func:`unwrap`ped parts —
+    the class the matrix's point row holds (:func:`de9im.classify`): areal
+    parts by point-in-polygon, lineal ones by :func:`kernels.on_segment`
+    with the mod-2 boundary, puntal ones by coordinate equality.  None for
+    a mixed-dimension GEOMETRYCOLLECTION, which has no matrix here."""
+    d = de9im.decompose(unwrap(g))
+    return None if d is None else de9im.classify(d, lons, lats)
+
+
+#: whether a point of each class satisfies each relation with a geometry,
+#: as a lookup table indexed by the class code; ``within`` and
+#: ``coveredBy`` are ``contains`` and ``covers`` read from the point's side
+_POINT_RULES = {
+    name: np.isin(np.arange(3), classes)
+    for name, classes in (
+        ("contains", (kernels.PIP_IN,)),
+        ("within", (kernels.PIP_IN,)),
+        ("covers", (kernels.PIP_IN, kernels.PIP_BOUNDARY)),
+        ("coveredBy", (kernels.PIP_IN, kernels.PIP_BOUNDARY)),
+        ("intersects", (kernels.PIP_IN, kernels.PIP_BOUNDARY)),
+        ("disjoint", (PIP_OUT,)),
+    )
+}
+
+
+def point_predicate(name: str, g: wkt.Geometry, lons: np.ndarray, lats: np.ndarray) -> np.ndarray | None:
+    """:func:`predicate` between ``g`` and each point at once, through
+    :func:`point_class` — ``name`` is a key of :data:`_POINT_RULES`, the
+    point the second argument of ``contains``/``covers`` and the first of
+    ``within``/``coveredBy``.  A mixed-dimension GEOMETRYCOLLECTION
+    answers ``intersects``/``disjoint`` through its members and None for
+    the rest, as :func:`predicate` does."""
+    cls = point_class(g, lons, lats)
+    if cls is not None:
+        return _POINT_RULES[name][cls]
+    if name not in ("intersects", "disjoint"):
+        return None
+    hit = np.zeros(len(lons), dtype=bool)
+    for d in map(de9im.decompose, _as_parts(g)):
+        if d is not None:
+            hit |= de9im.classify(d, lons, lats) != PIP_OUT
+    return hit if name == "intersects" else ~hit
 
 
 def nearest(ga: wkt.Geometry, gb: wkt.Geometry) -> tuple[np.ndarray, np.ndarray]:

@@ -213,8 +213,9 @@ class PolygonSet:
         """Exact PIP as a PURE Catalyst SQL string (one ``aggregate`` +
         one ``exists`` over the precomputed flat edge array) —
         bit-compatible with :func:`geomesa_spark.geo.kernels.
-        point_in_polygon` (same ray-crossing + boundary-eps math, same
-        IEEE op order).
+        point_in_polygon`: the same half-open ray crossing, and
+        :func:`geomesa_spark.geo.kernels.on_segment_sql` for the boundary
+        (the same on-segment rule in the same IEEE op order).
 
         JVM-evaluated next to the scan: no Arrow exchange, so wide payload
         columns (``spans``) are never queued behind Python — the flagship
@@ -227,13 +228,9 @@ class PolygonSet:
             f"AND {lon} < e.x1 + ({lat} - e.y1) / (e.y2 - e.y1) * (e.x2 - e.x1) "
             f"THEN 1L ELSE 0L END))"
         )
-        # boundary: |cross| <= sqrt(greatest(len2,1))*1e-7 + 1e-12 within bbox±eps
         on_edge = (
             f"exists({edges}, e -> "
-            f"abs((e.x2 - e.x1) * ({lat} - e.y1) - (e.y2 - e.y1) * ({lon} - e.x1)) <= "
-            f"sqrt(greatest(pow(e.x2 - e.x1, 2) + pow(e.y2 - e.y1, 2), 1.0D)) * 1e-7 + 1e-12 "
-            f"AND {lon} >= least(e.x1, e.x2) - 1e-12 AND {lon} <= greatest(e.x1, e.x2) + 1e-12 "
-            f"AND {lat} >= least(e.y1, e.y2) - 1e-12 AND {lat} <= greatest(e.y1, e.y2) + 1e-12)"
+            f"{kernels.on_segment_sql(lon, lat, 'e.x1', 'e.y1', 'e.x2', 'e.y2')})"
         )
         inside = f"(({crossings}) % 2 = 1)"
         if predicate == "contains":  # interior only (DE-9IM T*****FF*)

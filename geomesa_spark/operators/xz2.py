@@ -31,12 +31,13 @@ Scale notes (100 TB): geometry encoding is a one-pass Arrow-batched UDF
 you :func:`write_partitioned_geoms`); the point side's per-level
 ancestors are pure codegen'd JVM (shift of the max-res cell); the join
 shuffles on a composite int key with AQE skew splitting; the exact
-refine parses each DISTINCT geometry once per Arrow batch and runs the
-vectorized numpy point-in-polygon kernel over that geometry's whole
-candidate group.
+refine parses each DISTINCT geometry once per worker and runs the
+``st_*`` vectorized point path over that geometry's whole candidate group.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -44,7 +45,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import cells
-from ..geo import kernels, wkt
+from ..geo import kernels, relate, wkt
 from . import spatial_join as cell_mod
 
 #: default finest level for geometry keys.  12 → cells ~0.09° (~10 km);
@@ -102,29 +103,25 @@ def geometry_keys(geom_wkt: str | None, max_res: int) -> list[tuple[int, int]]:
     return _keys_and_bbox(geom_wkt, max_res)[0]
 
 
-#: loose-bbox padding in degrees — covers the 1e-6 m on-line tolerance of
-#: the linestring refine (≈1e-11°) with margin; padding only LOOSENS the
-#: prefilter, so completeness never depends on it being tight
-_BBOX_EPS = 1e-9
+#: bbox padding in degrees, applied before keying: the reach of the
+#: refine's on-segment band past a geometry's bbox (``kernels.BAND_PAD``),
+#: so a point in the band of an edge on a cell seam still probes a key
+#: cell; padding only LOOSENS the keys and the prefilter, so completeness
+#: never depends on it being tight
+_BBOX_EPS = kernels.BAND_PAD
 
 
 def _keys_and_bbox(
     geom_wkt: str | None, max_res: int
 ) -> tuple[list[tuple[int, int]], tuple[float, float, float, float] | None]:
-    """(keys, overall bbox) in ONE parse.  The bbox feeds the codegen
-    loose-bbox prefilter (GeoMesa's loose-then-exact filter split):
-    candidates outside it never cross the Arrow boundary into the exact
-    refine.  Antimeridian-split parts union into one box — loose for
+    """(keys, overall padded bbox) in ONE parse.  The bbox feeds the
+    codegen loose-bbox prefilter (GeoMesa's loose-then-exact filter
+    split): candidates outside it never cross the Arrow boundary into the
+    exact refine.  Antimeridian-split parts union into one box — loose for
     wrap-around geometries but always sound."""
     g = wkt.parse_wkt(geom_wkt)
     if g is None:
         return [], None
-    if g.kind == wkt.WKB_POINT:
-        c = cells.encode(np.asarray([g.coords[0]]), np.asarray([g.coords[1]]), max_res)
-        if c[0] < 0:
-            return [], None
-        x, y = float(g.coords[0]), float(g.coords[1])
-        return [(max_res, int(c[0]))], (x, y, x, y)
     parts = []
     for poly in _flatten_parts(g):
         parts.extend(wkt.antimeridian_split(poly) if poly.kind == wkt.WKB_POLYGON else [poly])
@@ -140,6 +137,8 @@ def _keys_and_bbox(
             boxes.append((xy[:, 0].min(), xy[:, 1].min(), xy[:, 0].max(), xy[:, 1].max()))
         else:
             return [], None
+    boxes = [(b[0] - _BBOX_EPS, b[1] - _BBOX_EPS, b[2] + _BBOX_EPS, b[3] + _BBOX_EPS)
+             for b in boxes if all(map(math.isfinite, b))]
     if not boxes:
         return [], None
     ws = np.asarray([b[2] - b[0] for b in boxes])
@@ -183,8 +182,8 @@ def geometry_keys_udf(max_res: int = DEFAULT_MAX_RES, with_bbox: bool = False):
                     [
                         {
                             "xz_level": lv, "xz_cell": cc,
-                            "xz_minx": bb[0] - _BBOX_EPS, "xz_miny": bb[1] - _BBOX_EPS,
-                            "xz_maxx": bb[2] + _BBOX_EPS, "xz_maxy": bb[3] + _BBOX_EPS,
+                            "xz_minx": bb[0], "xz_miny": bb[1],
+                            "xz_maxx": bb[2], "xz_maxy": bb[3],
                         }
                         for lv, cc in ks
                     ]
@@ -256,21 +255,20 @@ def point_level_keys(
 
 def pip_refine_udf(predicate: str = "intersects"):
     """Exact refine for arbitrary (non-broadcastable) geometry columns:
-    (wkt, lon, lat) → bool.  Each DISTINCT geometry in the Arrow batch is
-    parsed once and evaluated with the vectorized numpy kernels over its
-    whole candidate group — the per-row cost is one factorize lookup.
-
-    Polygons/multipolygons: point-in-polygon (contains = interior only,
-    DE-9IM T*****FF*; intersects/covers include the boundary).
-    Linestrings: intersects = point within 1e-6 m of the line (exact
-    on-line up to float noise); contains additionally excludes the two
-    endpoints (line boundary)."""
+    (wkt, lon, lat) → bool, the ``st_*`` point path
+    (:func:`geomesa_spark.geo.relate.point_predicate`) of ``predicate``
+    (``intersects``, ``contains`` or ``covers``) between the geometry and
+    the point.  Each DISTINCT geometry in the Arrow batch runs once over
+    its whole candidate group — the per-row cost is one factorize lookup.
+    A relation that a mixed-dimension GEOMETRYCOLLECTION cannot answer
+    (NULL in ``st_*``) reads as False."""
     pred = predicate
-    # per-WORKER parse cache: the closure survives across Arrow batches
-    # (and reused worker processes), so each distinct WKT parses once per
-    # worker instead of once per batch — at 14M candidates in ~10k-row
-    # batches the per-batch reparse was a double-digit share of the whole
-    # join (round-4 scaling sweep).  Bounded: cleared past 200k entries.
+    # per-WORKER cache of the parsed, unwrapped geometry: the closure
+    # survives across Arrow batches (and reused worker processes), so each
+    # distinct WKT parses and splits once per worker instead of once per
+    # batch — at 14M candidates in ~10k-row batches the per-batch reparse
+    # was a double-digit share of the whole join (round-4 scaling sweep).
+    # Bounded: cleared past 200k entries.
     parsed: dict[str, object] = {}
 
     @F.pandas_udf("boolean")
@@ -281,67 +279,17 @@ def pip_refine_udf(predicate: str = "intersects"):
         codes, uniques = pd.factorize(wkt_s, use_na_sentinel=True)
         if len(parsed) > 200_000:
             parsed.clear()
-
-        def hit_of(g: wkt.Geometry, gl: np.ndarray, gt: np.ndarray) -> np.ndarray:
-            hit = np.zeros(len(gl), dtype=bool)
-            if g.kind == wkt.WKB_COLLECTION:
-                # union-of-members semantics (a point on a shared member
-                # boundary counts per-member — documented narrowing)
-                for member in g.coords:
-                    hit |= hit_of(member, gl, gt)
-            elif g.kind == wkt.WKB_POINT:
-                # point-geometry row vs point probe: exact coordinate match
-                # (contains == intersects for point×point)
-                hit = (gl == float(g.coords[0])) & (gt == float(g.coords[1]))
-            elif g.kind == wkt.WKB_MULTIPOINT:
-                for c in np.asarray(g.coords, dtype=np.float64).reshape(-1, 2):
-                    hit |= (gl == c[0]) & (gt == c[1])
-            elif g.kind == wkt.WKB_MULTILINESTRING:
-                for c in g.coords:
-                    d = kernels.point_segments_dist_m(gl, gt, np.asarray(c, dtype=np.float64))
-                    hit |= d <= 1e-6  # contains-boundary nuance n/a per part here
-                if pred == "contains":
-                    # multiline boundary = mod-2 endpoints; conservative:
-                    # exclude probe points at any part endpoint
-                    for c in g.coords:
-                        ends = np.asarray(c, dtype=np.float64)[[0, -1]]
-                        at_end = ((gl[:, None] == ends[None, :, 0]) &
-                                  (gt[:, None] == ends[None, :, 1])).any(axis=1)
-                        hit &= ~at_end
-            elif g.kind in (wkt.WKB_POLYGON, wkt.WKB_MULTIPOLYGON):
-                polys = (
-                    [wkt.Geometry(wkt.WKB_POLYGON, p) for p in g.coords]
-                    if g.kind == wkt.WKB_MULTIPOLYGON
-                    else [g]
-                )
-                for poly in polys:
-                    for part in wkt.antimeridian_split(poly):
-                        cls = kernels.point_in_polygon(gl, gt, part.rings())
-                        if pred == "contains":
-                            hit |= cls == kernels.PIP_IN
-                        else:
-                            hit |= cls != kernels.PIP_OUT
-            elif g.kind == wkt.WKB_LINESTRING:
-                d = kernels.point_segments_dist_m(gl, gt, np.asarray(g.coords))
-                on_line = d <= 1e-6
-                if pred == "contains":
-                    ends = np.asarray(g.coords)[[0, -1]]
-                    at_end = ((gl[:, None] == ends[None, :, 0]) &
-                              (gt[:, None] == ends[None, :, 1])).any(axis=1)
-                    hit = on_line & ~at_end
-                else:
-                    hit = on_line
-            return hit
-
         for ui, w in enumerate(uniques):
-            m = codes == ui
-            if w in parsed:
-                g = parsed[w]
-            else:
-                g = parsed[w] = wkt.parse_wkt(w)
+            if w not in parsed:
+                g = wkt.parse_wkt(w)
+                parsed[w] = None if g is None else relate.unwrap(g)
+            g = parsed[w]
             if g is None:
                 continue
-            out[m] = hit_of(g, lons[m], lats[m])
+            m = codes == ui
+            hit = relate.point_predicate(pred, g, lons[m], lats[m])
+            if hit is not None:
+                out[m] = hit
         return pd.Series(out)
 
     return refine
@@ -410,8 +358,6 @@ def geom_refine_udf(predicate: str = "intersects"):
     on both sides (candidates cluster by geometry, so each parses once
     per batch).  An antimeridian-crossing polygon is read on its split
     parts there, as the XZ2 keys and :func:`pip_refine_udf` read it."""
-    from ..geo import relate
-
     pred = predicate
     # per-worker parse cache across batches (see pip_refine_udf)
     parsed: dict[str, object] = {}

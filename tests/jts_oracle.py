@@ -7,7 +7,9 @@ against JTS's answers.  JTS stays out of ``geomesa_spark/``.
 :func:`random_shape` is the seeded shape generator the distance property
 draws from, and :func:`nearest_pairs` counts a pair's nearest point pairs
 by brute force, so a property can skip the ties where JTS and the engine
-may each pick a different pair of equal distance."""
+may each pick a different pair of equal distance.
+:func:`random_point_target` draws the shapes of the point-predicate
+property."""
 
 import numpy as np
 
@@ -17,6 +19,7 @@ class Jts:
         jts = spark._jvm.org.locationtech.jts
         self._reader = jts.io.WKTReader()
         self._op = jts.operation.distance.DistanceOp
+        self._ng = jts.operation.relateng.RelateNG
 
     def read(self, text: str):
         """The JTS geometry of ``text``, or None when JTS calls it invalid."""
@@ -27,6 +30,11 @@ class Jts:
     # ``nearestPoints`` can fail in a busy session
     def distance(self, a, b) -> float:
         return float(self._op(a, b).distance())
+
+    def relate(self, a, b) -> tuple[str, str]:
+        """The DE-9IM matrix of (a, b) from legacy ``Geometry.relate`` and
+        from ``RelateNG``; JTS is an oracle only where the two agree."""
+        return a.relate(b).toString(), self._ng.relate(a, b).toString()
 
     def nearest_points(self, a, b) -> np.ndarray:
         """``DistanceOp.nearestPoints``: a (2, 2) array, the point on A first."""
@@ -73,13 +81,37 @@ def random_shape(rng) -> tuple[str, list[np.ndarray]]:
     if kind == 4:
         a, b = _rand_box(rng), _rand_box(rng)
         return f"MULTIPOLYGON(({_seq(a)}), ({_seq(b)}))", [a, b]
-    outer = _rand_box(rng)
     if kind == 2:
+        outer = _rand_box(rng)
         return f"POLYGON({_seq(outer)})", [outer]
+    return _holed_box(rng)
+
+
+def _holed_box(rng) -> tuple[str, list[np.ndarray]]:
+    outer = _rand_box(rng)
     (x0, y0), (x1, y1) = outer[0], outer[2]
     hx, hy = round((x0 + x1) / 2, 3), round((y0 + y1) / 2, 3)
     hole = _box(round(hx - (x1 - x0) / 4, 3), round(hy - (y1 - y0) / 4, 3), hx, hy)
     return f"POLYGON({_seq(outer)}, {_seq(hole)})", [outer, hole]
+
+
+def random_point_target(rng) -> tuple[str, list[np.ndarray]]:
+    """A shape for the point predicates, in the 0–10 square with 3-decimal
+    coordinates (a 2–4-vertex line, a two-part multiline whose parts share
+    an endpoint, a holed box or a 2–4-point multipoint), as WKT and as its
+    chains (a multipoint's points as one (k, 2) array)."""
+    kind = int(rng.integers(4))
+    if kind == 0:
+        c = _rand_line(rng)
+        return "LINESTRING" + _seq(c), [c]
+    if kind == 1:
+        a, b = _rand_line(rng), _rand_line(rng)
+        b[int(rng.integers(2)) * (len(b) - 1)] = a[int(rng.integers(2)) * (len(a) - 1)]
+        return f"MULTILINESTRING({_seq(a)}, {_seq(b)})", [a, b]
+    if kind == 2:
+        return _holed_box(rng)
+    p = np.array([[_c(rng), _c(rng)] for _ in range(int(rng.integers(2, 5)))])
+    return "MULTIPOINT(" + ", ".join(f"({x:.3f} {y:.3f})" for x, y in p) + ")", [p]
 
 
 def nearest_pairs(chains_a: list, chains_b: list, tol: float = 1e-9) -> set:

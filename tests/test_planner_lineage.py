@@ -111,11 +111,23 @@ class TestJvmExactRefine:
         on_edges = np.concatenate(
             [e[:, :2] + t * (e[:, 2:] - e[:, :2]) for t in (0.0, 0.25, 0.5, 1.0 / 3.0)]
         )
+        # 0.5ε, ε(1 ± 1e-3) and 2ε off each edge's middle (both sides) and
+        # beyond each vertex along the edge: both sides of the band's edge
+        d = e[:, 2:] - e[:, :2]
+        u = d / np.maximum(np.hypot(d[:, 0], d[:, 1]), 1e-300)[:, None]
+        n = u[:, ::-1] * [-1.0, 1.0]
+        mid = e[:, :2] + 0.5 * d
+        near = np.concatenate([
+            p
+            for k in (0.5, 1 - 1e-3, 1 + 1e-3, 2.0)
+            for off in [k * kernels.ON_SEGMENT_EPS]
+            for p in (mid + off * n, mid - off * n, e[:, :2] - off * u, e[:, 2:] + off * u)
+        ])
         lon0, lat0, lon1, lat1 = planner.extract_bounds(poly_wkt)
         rand = np.column_stack(
             [rng.uniform(lon0 - 2, lon1 + 2, n_random), rng.uniform(lat0 - 2, lat1 + 2, n_random)]
         )
-        pts = np.concatenate([on_edges, rand])
+        pts = np.concatenate([on_edges, near, rand])
         pts[:, 0] = np.clip(pts[:, 0], -180.0, 180.0)
         return ps, pts
 
