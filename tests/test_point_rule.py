@@ -60,7 +60,7 @@ class TestOnSegment:
         assert vec.tolist() == sca
 
 
-class TestMotivationRows:
+class TestOneAnswerPerPair:
     """Pairs on which two parts of the engine disagreed before there was
     one rule; each now reads one answer through SQL."""
 
@@ -107,7 +107,7 @@ class TestXz2Rows:
         out = xz2.xz2_join_points(gdf, pdf, predicate)
         return {(r["geom_id"], r["point_id"]) for r in out.collect()}
 
-    def test_motivation_rows(self, spark):
+    def test_pairs_read_as_st_funcs(self, spark):
         geoms = [("sq", SQUARE), ("ring", SQUARE_RING),
                  ("ml", "MULTILINESTRING((0 0, 1 0), (1 0, 2 0))"),
                  ("diag", "LINESTRING(0 0, 10 10)")]
