@@ -443,7 +443,7 @@ def _pip_fast(a: pd.Series, b: pd.Series, name: str, side: str) -> pd.Series | N
     argument is ALL points (the ``WHERE st_contains(st_geomFromWKT('POLY…'),
     geom)`` shape, a literal constant column on the other side).  Each
     distinct geometry is parsed once and its whole point group runs through
-    :func:`relate.point_predicate`, the per-row path's own point classes,
+    :func:`relate.grouped_point_predicate`, the per-row path's point classes,
     so results are identical; None (caller falls back) when neither side
     is all points, or both are.
 
@@ -456,16 +456,11 @@ def _pip_fast(a: pd.Series, b: pd.Series, name: str, side: str) -> pd.Series | N
         return None
     codes, uniques = pd.factorize(geoms, use_na_sentinel=True)
     lons, lats = wkt.wkb_points_to_lonlat(pts)
-    finite = np.isfinite(lons) & np.isfinite(lats)
+    codes[~(np.isfinite(lons) & np.isfinite(lats))] = -1
+    # a NULL side, or unparseable WKB, stays None like the per-row path
     out = np.full(len(lons), None, dtype=object)
-    for ui, u in enumerate(uniques):
-        m = (codes == ui) & finite
-        g = wkt.wkb_to_geom(u) if m.any() else None
-        if g is not None:  # unparseable WKB stays None, like the per-row path
-            hit = relate.point_predicate(name, g, lons[m], lats[m])
-            if hit is not None:
-                out[m] = hit
-    return pd.Series(out)
+    parsed = [wkt.wkb_to_geom(u) for u in uniques]
+    return pd.Series(relate.grouped_point_predicate(name, parsed, codes, lons, lats, out))
 
 
 #: the relations :func:`_pip_fast` answers, and their point side

@@ -251,23 +251,40 @@ def classify(d: tuple, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
     boundary and exterior of a :func:`decompose` result: the one point path
     of the matrix's point rows and of the vectorised ``st_*`` and XZ2
     refines.  Areal: :func:`_pip_multi`; lineal: :func:`_line_class`;
-    puntal: equal :func:`_pt_key` is IN."""
+    puntal: :func:`_point_class`."""
     kind, parts = d
     if kind == "A":
         return _pip_multi(xs, ys, parts)
     if kind == "L":
         return _line_class(xs, ys, parts)
-    keys = {_pt_key(p) for p in parts}
-    return np.asarray([kernels.PIP_IN if _pt_key(p) in keys else kernels.PIP_OUT
-                       for p in zip(xs, ys)], dtype=np.int8)
+    return _point_class(xs, ys, parts)
 
 
-def _classify_multi(points, polys) -> set[int]:
-    if not points:
-        return set()
-    xs = np.asarray([p[0] for p in points])
-    ys = np.asarray([p[1] for p in points])
-    return set(_pip_multi(xs, ys, polys).tolist())
+def _point_class(xs: np.ndarray, ys: np.ndarray, pts: list[tuple]) -> np.ndarray:
+    """IN where a point's :func:`_pt_key` equals a part's, else OUT.  Equal
+    keys lie within 1e-9 (plus a rounding ulp) of each other in x, so the
+    key test runs only on the points whose x is that close to a part's."""
+    x, y = np.asarray(xs, dtype=np.float64), np.asarray(ys, dtype=np.float64)
+    px = np.sort(np.asarray(pts, dtype=np.float64).reshape(-1, 2)[:, 0])
+    tol = 2e-9 + 4 * np.spacing(np.abs(x))
+    near = np.flatnonzero(np.searchsorted(px, x + tol, "right") > np.searchsorted(px, x - tol))
+    keys = {_pt_key(p) for p in pts}
+    out = np.full(len(x), kernels.PIP_OUT, dtype=np.int8)
+    out[near] = [kernels.PIP_IN if _pt_key(p) in keys else kernels.PIP_OUT
+                 for p in zip(x[near], y[near])]
+    return out
+
+
+def _classes(points: list[tuple], d: tuple) -> set[int]:
+    """The classes :func:`classify` gives a point set against ``d``."""
+    xy = np.asarray(points, dtype=np.float64).reshape(-1, 2)
+    return set(classify(d, xy[:, 0], xy[:, 1]).tolist())
+
+
+def _point_row(pts: list[tuple], d: tuple) -> str:
+    """The interior row (II, IB, IE) of a point set against ``d``."""
+    cls = _classes(pts, d)
+    return "".join("0" if c in cls else "F" for c in (kernels.PIP_IN, kernels.PIP_BOUNDARY, kernels.PIP_OUT))
 
 
 def _pt_key(p) -> tuple:
@@ -424,15 +441,15 @@ def polyset_matrix(polys_a: list[list[np.ndarray]], polys_b: list[list[np.ndarra
     sb = [s for rings in polys_b for s in _ring_segs(rings)]
     mids_a = _split_points(sa, sb)
     mids_b = _split_points(sb, sa)
-    cls_a_in_b = _classify_multi(mids_a, polys_b)
-    cls_b_in_a = _classify_multi(mids_b, polys_a)
+    cls_a_in_b = _classes(mids_a, ("A", polys_b))
+    cls_b_in_a = _classes(mids_b, ("A", polys_a))
 
     probes_a = [p for rings in polys_a if (p := _interior_probe(rings))]
     probes_b = [p for rings in polys_b if (p := _interior_probe(rings))]
-    pa_in_b = _classify_multi(probes_a, polys_b)
-    pb_in_a = _classify_multi(probes_b, polys_a)
-    holes_b_in_a = _classify_multi(_hole_probes(polys_b), polys_a)
-    holes_a_in_b = _classify_multi(_hole_probes(polys_a), polys_b)
+    pa_in_b = _classes(probes_a, ("A", polys_b))
+    pb_in_a = _classes(probes_b, ("A", polys_a))
+    holes_b_in_a = _classes(_hole_probes(polys_b), ("A", polys_a))
+    holes_a_in_b = _classes(_hole_probes(polys_a), ("A", polys_b))
 
     IN, OUT = kernels.PIP_IN, kernels.PIP_OUT
 
@@ -462,34 +479,21 @@ def polyset_matrix(polys_a: list[list[np.ndarray]], polys_b: list[list[np.ndarra
 
 def pointset_matrix(pts_a: list[tuple], pts_b: list[tuple]) -> str:
     """DE-9IM for (Multi)Point × (Multi)Point (points have empty boundary)."""
-    ka = {_pt_key(p) for p in pts_a}
-    kb = {_pt_key(p) for p in pts_b}
-    ii = "0" if ka & kb else "F"
-    ie = "0" if ka - kb else "F"
-    ei = "0" if kb - ka else "F"
-    return ii + "F" + ie + "FFF" + ei + "F" + "2"
+    ei = _point_row(pts_b, ("P", pts_a))[2]
+    return _point_row(pts_a, ("P", pts_b)) + "FFF" + ei + "F" + "2"
 
 
 def pointset_lineset_matrix(pts: list[tuple], lines: list[np.ndarray]) -> str:
     """DE-9IM for (Multi)Point × (Multi)LineString."""
-    xy = np.asarray(pts, dtype=np.float64).reshape(-1, 2)
-    cls = set(_line_class(xy[:, 0], xy[:, 1], lines).tolist())
-    ii = "0" if kernels.PIP_IN in cls else "F"
-    ib = "0" if kernels.PIP_BOUNDARY in cls else "F"
-    ie = "0" if kernels.PIP_OUT in cls else "F"
     # a finite point set never covers a dim-1 interior
-    ei = "1" if any(_segments(c) for c in lines) else "F"
+    ei = "1" if any((np.abs(np.diff(c, axis=0)) > _EPS).any() for c in lines) else "F"
     eb = "0" if any(not any(_close(p, e) for p in pts) for e in _parity_boundary(lines)) else "F"
-    return ii + ib + ie + "FFF" + ei + eb + "2"
+    return _point_row(pts, ("L", lines)) + "FFF" + ei + eb + "2"
 
 
 def pointset_polyset_matrix(pts: list[tuple], polys: list[list[np.ndarray]]) -> str:
     """DE-9IM for (Multi)Point × (Multi)Polygon."""
-    cls = _classify_multi([tuple(p) for p in pts], polys)
-    ii = "0" if kernels.PIP_IN in cls else "F"
-    ib = "0" if kernels.PIP_BOUNDARY in cls else "F"
-    ie = "0" if kernels.PIP_OUT in cls else "F"
-    return ii + ib + ie + "FFF" + "21" + "2"
+    return _point_row(pts, ("A", polys)) + "FFF" + "21" + "2"
 
 
 def decompose(g):

@@ -14,11 +14,10 @@ Semantics:
   :func:`geomesa_spark.geo.de9im.relate_matrix`, through
   :func:`predicate`; ``st_relate``/``st_relateBool`` read the same matrix
   (:func:`matrix`, :func:`matches`);
-- a point is judged by ONE path, :func:`point_class` (the class the
-  matrix's point row holds, :func:`de9im.classify`), and a point on a
-  segment by one rule, :func:`kernels.on_segment`: the matrix, the
-  vectorised ``st_*`` point path and the XZ2 point refine
-  (:func:`point_predicate`) all read it;
+- a point is judged by ONE path, :func:`de9im.classify` (the class the
+  matrix's point row holds), and a point on a segment by one rule,
+  :func:`kernels.on_segment`: the matrix, the vectorised ``st_*`` point
+  path and the XZ2 point refine (:func:`point_predicate`) all read it;
 - :func:`intersects` is the fast ``intersects``/``disjoint`` (vertex
   classes + edge crossings, both through that rule), so it agrees with
   the matrix's four intersection cells;
@@ -125,7 +124,10 @@ def _intersects_single(a: wkt.Geometry, b: wkt.Geometry) -> bool:
 def unwrap(g: wkt.Geometry) -> wkt.Geometry:
     """``g`` with each polygon whose ring jumps more than 180° in longitude
     replaced by its :func:`wkt.antimeridian_split` parts (a MULTIPOLYGON
-    then); any other geometry is returned as is."""
+    then), inside a GEOMETRYCOLLECTION too, as the XZ2 keys read it; any
+    other geometry is returned as is."""
+    if g.kind == wkt.WKB_COLLECTION:
+        return wkt.Geometry(wkt.WKB_COLLECTION, [unwrap(m) for m in g.coords])
     if g.kind == wkt.WKB_POLYGON:
         polys = [g.coords]
     elif g.kind == wkt.WKB_MULTIPOLYGON:
@@ -202,13 +204,22 @@ def predicate(name: str, ga: wkt.Geometry, gb: wkt.Geometry) -> bool | None:
     skip the matrix: a vertex of B in areal A's exterior rejects
     ``contains``/``covers`` (and of A in areal B's, ``within``/
     ``coveredBy``), and a dimension pair without patterns is False.  A
-    point side goes straight to the matrix, which is then its
-    point-in-polygon class.
+    single POINT on the point side of a relation in :data:`_POINT_RULES`
+    is answered by :func:`point_predicate`, from the class the matrix's
+    point row holds.
 
     A mixed-dimension GEOMETRYCOLLECTION has no matrix here: every
     relation but ``intersects``/``disjoint`` is then None (NULL), as
     ``st_relate`` is."""
     ga, gb = unwrap(ga), unwrap(gb)
+    if name in _POINT_RULES:
+        # the point side: B of contains/covers, A of within/coveredBy
+        g, p = (gb, ga) if name in ("within", "coveredBy") else (ga, gb)
+        if name in ("intersects", "disjoint") and p.kind != wkt.WKB_POINT:
+            g, p = p, g
+        if p.kind == wkt.WKB_POINT:
+            hit = point_predicate(name, g, p.coords[:1], p.coords[1:])
+            return None if hit is None else bool(hit[0])
     if name in ("intersects", "disjoint"):
         return intersects(ga, gb) == (name == "intersects")
     table = _PATTERNS[name]
@@ -231,17 +242,6 @@ def predicate(name: str, ga: wkt.Geometry, gb: wkt.Geometry) -> bool | None:
     return any(matches(m, p) for p in pats)
 
 
-def point_class(g: wkt.Geometry, lons: np.ndarray, lats: np.ndarray) -> np.ndarray | None:
-    """PIP_IN / PIP_BOUNDARY / PIP_OUT of each point against the interior,
-    boundary and exterior of ``g`` read on its :func:`unwrap`ped parts —
-    the class the matrix's point row holds (:func:`de9im.classify`): areal
-    parts by point-in-polygon, lineal ones by :func:`kernels.on_segment`
-    with the mod-2 boundary, puntal ones by coordinate equality.  None for
-    a mixed-dimension GEOMETRYCOLLECTION, which has no matrix here."""
-    d = de9im.decompose(unwrap(g))
-    return None if d is None else de9im.classify(d, lons, lats)
-
-
 #: whether a point of each class satisfies each relation with a geometry,
 #: as a lookup table indexed by the class code; ``within`` and
 #: ``coveredBy`` are ``contains`` and ``covers`` read from the point's side
@@ -259,15 +259,17 @@ _POINT_RULES = {
 
 
 def point_predicate(name: str, g: wkt.Geometry, lons: np.ndarray, lats: np.ndarray) -> np.ndarray | None:
-    """:func:`predicate` between ``g`` and each point at once, through
-    :func:`point_class` — ``name`` is a key of :data:`_POINT_RULES`, the
-    point the second argument of ``contains``/``covers`` and the first of
-    ``within``/``coveredBy``.  A mixed-dimension GEOMETRYCOLLECTION
-    answers ``intersects``/``disjoint`` through its members and None for
-    the rest, as :func:`predicate` does."""
-    cls = point_class(g, lons, lats)
-    if cls is not None:
-        return _POINT_RULES[name][cls]
+    """:func:`predicate` between ``g`` and each point at once, through the
+    class of each point against ``g``'s :func:`unwrap`ped parts
+    (:func:`de9im.classify`, the matrix's point row) — ``name`` is a key
+    of :data:`_POINT_RULES`, the point the second argument of
+    ``contains``/``covers`` and the first of ``within``/``coveredBy``.  A
+    mixed-dimension GEOMETRYCOLLECTION answers ``intersects``/``disjoint``
+    through its members and None for the rest, as :func:`predicate` does."""
+    g = unwrap(g)
+    d = de9im.decompose(g)
+    if d is not None:
+        return _POINT_RULES[name][de9im.classify(d, lons, lats)]
     if name not in ("intersects", "disjoint"):
         return None
     hit = np.zeros(len(lons), dtype=bool)
@@ -275,6 +277,21 @@ def point_predicate(name: str, g: wkt.Geometry, lons: np.ndarray, lats: np.ndarr
         if d is not None:
             hit |= de9im.classify(d, lons, lats) != PIP_OUT
     return hit if name == "intersects" else ~hit
+
+
+def grouped_point_predicate(name: str, geoms: list, codes: np.ndarray, lons: np.ndarray,
+                            lats: np.ndarray, out: np.ndarray) -> np.ndarray:
+    """:func:`point_predicate` of each of ``geoms`` (parsed, or None) over
+    the points whose ``codes`` index it, written into ``out``; a row whose
+    geometry or answer is None, or whose code is -1, keeps its value."""
+    order = np.argsort(codes, kind="stable")  # each geometry's rows, one slice
+    bounds = np.searchsorted(codes[order], np.arange(len(geoms) + 1))
+    for g, lo, hi in zip(geoms, bounds[:-1], bounds[1:]):
+        rows = order[lo:hi]
+        hit = None if g is None or lo == hi else point_predicate(name, g, lons[rows], lats[rows])
+        if hit is not None:
+            out[rows] = hit
+    return out
 
 
 def nearest(ga: wkt.Geometry, gb: wkt.Geometry) -> tuple[np.ndarray, np.ndarray]:

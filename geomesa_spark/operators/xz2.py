@@ -259,7 +259,7 @@ def pip_refine_udf(predicate: str = "intersects"):
     (:func:`geomesa_spark.geo.relate.point_predicate`) of ``predicate``
     (``intersects``, ``contains`` or ``covers``) between the geometry and
     the point.  Each DISTINCT geometry in the Arrow batch runs once over
-    its whole candidate group — the per-row cost is one factorize lookup.
+    its whole candidate group (:func:`relate.grouped_point_predicate`).
     A relation that a mixed-dimension GEOMETRYCOLLECTION cannot answer
     (NULL in ``st_*``) reads as False."""
     pred = predicate
@@ -275,22 +275,16 @@ def pip_refine_udf(predicate: str = "intersects"):
     def refine(wkt_s: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
         lons = lon.to_numpy(dtype=np.float64, na_value=np.nan)
         lats = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        out = np.zeros(len(lons), dtype=bool)
         codes, uniques = pd.factorize(wkt_s, use_na_sentinel=True)
         if len(parsed) > 200_000:
             parsed.clear()
-        for ui, w in enumerate(uniques):
+        for w in uniques:
             if w not in parsed:
                 g = wkt.parse_wkt(w)
                 parsed[w] = None if g is None else relate.unwrap(g)
-            g = parsed[w]
-            if g is None:
-                continue
-            m = codes == ui
-            hit = relate.point_predicate(pred, g, lons[m], lats[m])
-            if hit is not None:
-                out[m] = hit
-        return pd.Series(out)
+        out = np.zeros(len(lons), dtype=bool)
+        geoms = [parsed[w] for w in uniques]
+        return pd.Series(relate.grouped_point_predicate(pred, geoms, codes, lons, lats, out))
 
     return refine
 

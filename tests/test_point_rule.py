@@ -31,6 +31,7 @@ def g(text):
 
 SQUARE = "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))"
 SQUARE_RING = "LINESTRING(0 0, 10 0, 10 10, 0 10, 0 0)"
+ANTI = "POLYGON((170 0, -170 0, -170 10, 170 10, 170 0))"
 
 
 class TestOnSegment:
@@ -58,6 +59,29 @@ class TestOnSegment:
         vec = kernels.on_segment(px, py, *seg.T)
         sca = [bool(kernels.on_segment(*map(float, r))) for r in zip(px, py, *seg.T)]
         assert vec.tolist() == sca
+
+
+def test_point_class_equals_the_key_loop():
+    """The vectorised puntal class is the matrix's 9-place key identity:
+    points on, ulps and fractions of 1e-9 off seeded parts, at
+    magnitudes where a key rounds across a double's spacing."""
+    from geomesa_spark.geo import de9im
+
+    rng = np.random.default_rng(11)
+    for scale in (1.0, 180.0, 5e6, 1e7, 1e12):
+        parts = [tuple(rng.uniform(-scale, scale, 2)) for _ in range(3)]
+        parts[1] = (parts[0][0], parts[1][1])  # two parts share an x
+        xy = []
+        for p in parts:
+            for d in (0.0, 1e-10, 5e-10, 9e-10, 1.1e-9, 2e-9):
+                for sx, sy in ((1, 0), (-1, 1), (0, -1)):
+                    ulp = np.spacing(abs(p[0])) * rng.integers(-3, 4)
+                    xy.append((p[0] + sx * d + ulp, p[1] + sy * d))
+        xy += [tuple(q) for q in rng.uniform(-scale, scale, (20, 2))] + [(np.nan, 0.0)]
+        x, y = np.asarray(xy).T
+        keys = {de9im._pt_key(p) for p in parts}
+        want = [kernels.PIP_IN if de9im._pt_key(q) in keys else kernels.PIP_OUT for q in xy]
+        assert de9im.classify(("P", parts), x, y).tolist() == want, scale
 
 
 class TestOneAnswerPerPair:
@@ -116,6 +140,20 @@ class TestXz2Rows:
             ("sq", 0), ("sq", 1), ("sq", 2), ("ring", 0), ("ring", 1), ("ml", 1), ("diag", 2)}
         assert self._join(spark, geoms, pts, "contains") == {
             ("sq", 2), ("ring", 0), ("ring", 1), ("ml", 1), ("diag", 2)}
+
+    def test_collection_member_read_on_its_split_parts(self, spark):
+        # an antimeridian polygon inside a GEOMETRYCOLLECTION keys on its
+        # split parts, and the refine reads those parts too
+        geoms = [("gc", f"GEOMETRYCOLLECTION({ANTI})"),
+                 ("mixed", f"GEOMETRYCOLLECTION(POINT(1 1), {ANTI})")]
+        pts = [(0, 175.0, 5.0), (1, -175.0, 5.0), (2, 0.0, 5.0), (3, 1.0, 1.0)]
+        assert self._join(spark, geoms, pts, "intersects") == {
+            ("gc", 0), ("gc", 1), ("mixed", 0), ("mixed", 1), ("mixed", 3)}
+        # a mixed collection answers contains with NULL, read as False
+        assert self._join(spark, geoms, pts, "contains") == {("gc", 0), ("gc", 1)}
+        gc = g(f"GEOMETRYCOLLECTION({ANTI})")
+        assert sql(spark, f"st_contains({gc}, st_point(175.0, 5.0))") is True
+        assert sql(spark, f"st_contains({gc}, st_point(0.0, 5.0))") is False
 
 
 # -- prefilter completeness at the band ---------------------------------------

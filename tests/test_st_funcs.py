@@ -298,6 +298,9 @@ class TestPipFastParity:
             "MULTIPOINT((2 2), (3 3))",
             "GEOMETRYCOLLECTION(POINT(1 1), LINESTRING(0 0, 10 10), "
             "POLYGON((0 0, 5 0, 5 5, 0 5, 0 0)))",
+            # antimeridian polygon as a collection member, alone and mixed
+            "GEOMETRYCOLLECTION(POLYGON((170 0, -170 0, -170 10, 170 10, 170 0)))",
+            "GEOMETRYCOLLECTION(POINT(1 1), POLYGON((170 0, -170 0, -170 10, 170 10, 170 0)))",
         ]
         polys_wkt += others_wkt
         gs = [W.geom_to_wkb(W.parse_wkt(w)) for w in polys_wkt]
@@ -333,6 +336,10 @@ class TestPipFastParity:
         # the holed polygon: in each hole, and outside both
         for i, (x, y) in zip((6, 13, 20), ((176, 3), (-176, 7), (-176, 3))):
             pts[i], geoms[i] = W.point_to_wkb(x, y), gs[6]
+        # the collections: east part, west part, the planar hull only
+        for k, rows in ((len(gs) - 2, (7, 14, 21)), (len(gs) - 1, (8, 15, 22))):
+            for i, (x, y) in zip(rows, ((175, 5), (-175, 5), (0, 5))):
+                pts[i], geoms[i] = W.point_to_wkb(x, y), gs[k]
         return pd.Series(pts, dtype=object), pd.Series(geoms, dtype=object)
 
     @pytest.mark.parametrize("name", [
@@ -351,6 +358,35 @@ class TestPipFastParity:
                 for x, y in zip(S._parse_series(a), S._parse_series(b))
             ]
             assert list(got) == exp, f"{name} parity ({'geom,pt' if a is geoms else 'pt,geom'})"
+
+    @pytest.mark.parametrize("name", [
+        "contains", "within", "intersects", "disjoint", "covers", "coveredBy",
+    ])
+    def test_fast_equals_matrix(self, name):
+        """The point path against the relation's patterns over the
+        computed DE-9IM matrix, which the per-row path skips for a single
+        point."""
+        from geomesa_spark.functions import st_funcs as S
+        from geomesa_spark.geo import de9im, relate
+
+        def by_matrix(x, y):
+            m = relate.matrix(x, y)
+            if m is None:  # mixed collection: intersects through its members
+                if name not in ("intersects", "disjoint"):
+                    return None
+                return relate.intersects(relate.unwrap(x), relate.unwrap(y)) == (name == "intersects")
+            kinds = de9im.decompose(relate.unwrap(x))[0] + de9im.decompose(relate.unwrap(y))[0]
+            table = relate._PATTERNS[name]
+            return any(relate.matches(m, p) for p in table.get(kinds, table.get("**", ())))
+
+        pts, geoms = self._data()
+        fn = getattr(S, "st_" + name)
+        for a, b in [(geoms, pts), (pts, geoms)]:
+            exp = [
+                by_matrix(x, y) if (x is not None and y is not None) else None
+                for x, y in zip(S._parse_series(a), S._parse_series(b))
+            ]
+            assert list(fn(a, b)) == exp, f"{name} ({'geom,pt' if a is geoms else 'pt,geom'})"
 
     def test_fast_path_triggers(self):
         import pandas as pd
@@ -374,6 +410,15 @@ class TestPipFastParity:
             "GEOMETRYCOLLECTION(POINT(0.5 0.5), LINESTRING(0 0, 1 1))"))] * 3, dtype=object)
         assert list(S._pip_fast(gc, onl, "contains", "b")) == [None] * 3
         assert list(S._pip_fast(gc, onl, "intersects", "any")) == [True] * 3
+
+    def test_collection_member_read_on_its_split_parts(self):
+        from geomesa_spark.functions import st_funcs as S
+
+        pts, geoms = self._data()
+        rows = [7, 14, 21, 8, 15, 22]
+        a, b = geoms[rows].reset_index(drop=True), pts[rows].reset_index(drop=True)
+        assert list(S._pip_fast(a, b, "intersects", "any")) == [True, True, False] * 2
+        assert list(S._pip_fast(a, b, "contains", "b")) == [True, True, False, None, None, None]
 
 
 def test_geohash_per_row_precision(spark):
