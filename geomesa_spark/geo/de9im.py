@@ -230,10 +230,10 @@ def _pip_multi(xs: np.ndarray, ys: np.ndarray, polys: list[list[np.ndarray]]) ->
 
 
 def _line_class(xs: np.ndarray, ys: np.ndarray, lines: list[np.ndarray]) -> np.ndarray:
-    """Class of each point against a union of lines: BOUNDARY at a mod-2
-    endpoint (:func:`_parity_boundary`, to within :func:`_close`), else
-    IN on one of their :func:`_segments` (:func:`kernels.on_segment`),
-    else OUT."""
+    """Class of each point against a union of lines: OUT unless on one of
+    their :func:`_segments` (:func:`kernels.on_segment`), so never beyond
+    the band; there BOUNDARY at a mod-2 endpoint (:func:`_parity_boundary`,
+    to within :func:`_close`), else IN."""
     x, y = np.asarray(xs, dtype=np.float64)[:, None], np.asarray(ys, dtype=np.float64)[:, None]
     p = np.concatenate([np.asarray(c, dtype=np.float64)[:-1] for c in lines])
     q = np.concatenate([np.asarray(c, dtype=np.float64)[1:] for c in lines])
@@ -242,7 +242,8 @@ def _line_class(xs: np.ndarray, ys: np.ndarray, lines: list[np.ndarray]) -> np.n
     on = kernels.on_segment(x, y, p[:, 0], p[:, 1], q[:, 0], q[:, 1]).any(axis=1)
     out = np.where(on, kernels.PIP_IN, kernels.PIP_OUT).astype(np.int8)
     e = np.asarray(_parity_boundary(lines), dtype=np.float64).reshape(-1, 2)
-    out[((np.abs(x - e[:, 0]) <= _EPS) & (np.abs(y - e[:, 1]) <= _EPS)).any(axis=1)] = kernels.PIP_BOUNDARY
+    at_end = ((np.abs(x - e[:, 0]) <= _EPS) & (np.abs(y - e[:, 1]) <= _EPS)).any(axis=1)
+    out[on & at_end] = kernels.PIP_BOUNDARY
     return out
 
 
@@ -484,10 +485,13 @@ def pointset_matrix(pts_a: list[tuple], pts_b: list[tuple]) -> str:
 
 
 def pointset_lineset_matrix(pts: list[tuple], lines: list[np.ndarray]) -> str:
-    """DE-9IM for (Multi)Point × (Multi)LineString."""
+    """DE-9IM for (Multi)Point × (Multi)LineString.  An endpoint is in the
+    point set when a point :func:`_line_class` calls BOUNDARY is close."""
     # a finite point set never covers a dim-1 interior
     ei = "1" if any((np.abs(np.diff(c, axis=0)) > _EPS).any() for c in lines) else "F"
-    eb = "0" if any(not any(_close(p, e) for p in pts) for e in _parity_boundary(lines)) else "F"
+    xy = np.asarray(pts, dtype=np.float64).reshape(-1, 2)
+    ends = xy[_line_class(xy[:, 0], xy[:, 1], lines) == kernels.PIP_BOUNDARY]
+    eb = "0" if any(not any(_close(p, e) for p in ends) for e in _parity_boundary(lines)) else "F"
     return _point_row(pts, ("L", lines)) + "FFF" + ei + eb + "2"
 
 

@@ -65,6 +65,24 @@ AUTO_SALT_TASK_ROWS = 250_000
 
 POINT_WKT_RE = r"^\s*[Pp][Oo][Ii][Nn][Tt]\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)\s*$"
 
+#: The engine's one span-to-point extraction: SQL over ``spans`` giving
+#: each geo span as ``named_struct(lon, lat)``.  The regexp runs once per
+#: coordinate (``nullif`` would expand to ``if(x = '', NULL, x)`` and run
+#: it twice); TRY_CAST reads '' and ``POINT(1.2.3 4)``'s '1.2.3' as NULL.
+_SQL_POINT_RE = POINT_WKT_RE.replace("\\", "\\\\")  # SQL string-literal escaping
+GEO_POINTS_SQL = (
+    "transform(filter(spans, s -> s.kind = 'geo'), s -> named_struct("
+    f"'lon', TRY_CAST(regexp_extract(s.text, '{_SQL_POINT_RE}', 1) AS DOUBLE), "
+    f"'lat', TRY_CAST(regexp_extract(s.text, '{_SQL_POINT_RE}', 2) AS DOUBLE)))"
+)
+
+#: SQL: ``{lon}``/``{lat}`` is a point of the lon/lat domain — false, not
+#: NULL, for a NULL coordinate, so it also serves inside ``exists``
+_IN_DOMAIN_SQL = (
+    "{lon} IS NOT NULL AND {lat} IS NOT NULL AND "
+    "{lon} BETWEEN -180.0D AND 180.0D AND {lat} BETWEEN -90.0D AND 90.0D"
+)
+
 
 def _id_array(ids: list) -> pa.Array:
     """Polygon or center ids with their inferred Arrow type (string when
@@ -434,41 +452,37 @@ def add_cell_column(
     )
 
 
+def _geo_point_rows(docs: DataFrame, keep_lls: bool) -> DataFrame:
+    """``docs`` plus ``geo_pos`` (place among the doc's geo spans), ``lon``
+    and ``lat``, one row per geo span that reads as an in-domain point;
+    with ``keep_lls`` also the doc's :data:`GEO_POINTS_SQL` array ``_lls``.
+    The regexp runs once per span either way: exploding a projected array
+    makes Catalyst infer ``size(col) > 0`` and push it below the
+    projection, evaluating the array twice, so the inner explode takes the
+    expression itself, and ``_lls`` gets an OUTER explode (no inferred
+    filter; a doc without geo spans gives one NULL row, filtered out)."""
+    if keep_lls:
+        g = docs.selectExpr("*", f"{GEO_POINTS_SQL} AS _lls")
+        g = g.selectExpr("*", "posexplode_outer(_lls) AS (geo_pos, _ll)")
+    else:
+        g = docs.selectExpr("*", f"posexplode({GEO_POINTS_SQL}) AS (geo_pos, _ll)")
+    keep = [_quote(c) for c in g.columns if c not in ("_ll", "lon", "lat")]
+    g = g.selectExpr(*keep, "_ll.lon AS lon", "_ll.lat AS lat")
+    return g.filter(_IN_DOMAIN_SQL.format(lon="lon", lat="lat"))
+
+
 def extract_geo_points(docs: DataFrame) -> DataFrame:
     """documents_spans → one row per geo span with (lon, lat) columns.
 
     The ``spans`` array is NEVER rebuilt: ``filter``/``transform`` read it,
-    ``posexplode`` of the *derived* WKT array adds rows, and every output
+    ``posexplode`` of the *derived* point array adds rows, and every output
     row carries the original ``spans`` value (span-sequence invariant).
     Docs without a geo span drop out (inner explode — "the join must not
     invent rows"); malformed/EMPTY WKT nulls out and is filtered.
-    Extraction is pure JVM (regexp) and whole-stage-codegen friendly, as
-    is the cell encode that follows it (:func:`add_cell_column`).
+    Extraction is pure JVM (:data:`GEO_POINTS_SQL`), as is the cell encode
+    that follows it (:func:`add_cell_column`).
     """
-    # explode the expression itself: exploding a projected array column
-    # makes Catalyst infer size(col) > 0 below the explode and push it
-    # through the projection, which evaluates the array a second time
-    geo_wkts = F.expr("transform(filter(spans, s -> s.kind = 'geo'), s -> s.text)")
-    g = docs.select("*", F.posexplode(geo_wkts).alias("geo_pos", "_geo_wkt"))
-    # two regexp_extract calls run the anchored match twice, but the A/B
-    # measured alternatives slower: a single regexp_replace("$1\x01$2") +
-    # split pays replacement-string allocation, a string != compare and a
-    # second (split) regex — net ~10% worse at 12.8M docs.  Match cost is
-    # NOT the extraction bottleneck; scan+explode of the spans array is.
-    lon = F.regexp_extract(F.col("_geo_wkt"), POINT_WKT_RE, 1)
-    lat = F.regexp_extract(F.col("_geo_wkt"), POINT_WKT_RE, 2)
-    g = g.withColumn("lon", F.when(lon != "", lon.cast("double"))).withColumn(
-        "lat", F.when(lat != "", lat.cast("double"))
-    )
-    g = g.filter(
-        F.col("lon").isNotNull()
-        & F.col("lat").isNotNull()
-        & (F.col("lon") >= -180.0)
-        & (F.col("lon") <= 180.0)
-        & (F.col("lat") >= -90.0)
-        & (F.col("lat") <= 90.0)
-    ).drop("_geo_wkt")
-    return g
+    return _geo_point_rows(docs, keep_lls=False)
 
 
 def spatial_join_broadcast(
@@ -585,32 +599,7 @@ def spatial_join_documents(
     # (doc, polygon) uniqueness is enforced IN THE FILTER (keep a match
     # only if no earlier geo span of the same doc also matches) — no
     # dropDuplicates exchange, duplicates impossible by construction.
-    sql_re = POINT_WKT_RE.replace("\\", "\\\\")  # SQL string-literal escaping
-    lls = (
-        "transform(filter(spans, s -> s.kind = 'geo'), s -> named_struct("
-        f"'lon', TRY_CAST(nullif(regexp_extract(s.text, '{sql_re}', 1), '') AS DOUBLE), "
-        f"'lat', TRY_CAST(nullif(regexp_extract(s.text, '{sql_re}', 2), '') AS DOUBLE)))"
-    )
-    # the refine below reads _lls again, so it stays a column; the OUTER
-    # posexplode gets no inferred size(_lls) > 0 filter, which Catalyst
-    # would push below the projection and so run every span's regexp
-    # extraction twice.  A doc without a geo span yields one NULL row,
-    # which the NOT NULL filter drops.
-    g = docs.withColumn("_lls", F.expr(lls))
-    g = g.select("*", F.posexplode_outer("_lls").alias("geo_pos", "_ll"))
-    g = (
-        g.withColumn("lon", F.col("_ll.lon"))
-        .withColumn("lat", F.col("_ll.lat"))
-        .drop("_ll")
-        .filter(
-            F.col("lon").isNotNull()
-            & F.col("lat").isNotNull()
-            & (F.col("lon") >= -180.0)
-            & (F.col("lon") <= 180.0)
-            & (F.col("lat") >= -90.0)
-            & (F.col("lat") <= 90.0)
-        )
-    )
+    g = _geo_point_rows(docs, keep_lls=True)
     g = add_cell_column(g, res_used)
     joined = g.join(F.broadcast(cover_df), "cell", "inner")
     if loose:
@@ -622,7 +611,8 @@ def spatial_join_documents(
     match_here = PolygonSet.jvm_pip_sql(predicate)
     earlier_match = (
         "CASE WHEN geo_pos = 0 THEN false ELSE "
-        "exists(slice(_lls, 1, geo_pos), p -> p.lon IS NOT NULL AND p.lat IS NOT NULL AND "
+        "exists(slice(_lls, 1, geo_pos), p -> "
+        + _IN_DOMAIN_SQL.format(lon="p.lon", lat="p.lat") + " AND "
         + PolygonSet.jvm_pip_sql(predicate, lon="p.lon", lat="p.lat")
         + ") END"
     )

@@ -121,6 +121,19 @@ class TestOneAnswerPerPair:
         p = g("POINT(5 5.00000000005)")
         assert sql(spark, f"st_intersects({g('LINESTRING(0 0, 10 10)')}, {p})") is True
 
+    def test_endpoint_box_stops_at_the_band(self, spark):
+        # 8e-10 past the end of the line: inside the 1e-9 endpoint box, but
+        # outside the band, so it is on none of the three
+        line, p = g("LINESTRING(0 0, 1 0)"), g("POINT(1.0000000008 0)")
+        for a in ("LINESTRING(0 0, 1 0)", "POLYGON((0 0, 1 0, 1 1, 0 1, 0 0))",
+                  "LINESTRING(0 0, 1 0, 1 1, 0 1, 0 0)"):
+            assert sql(spark, f"st_intersects({g(a)}, {p})") is False, a
+        assert sql(spark, f"st_relate({line}, {p})") == "FF1FF00F2"
+        assert sql(spark, f"st_relate({g('MULTIPOINT((0 0), (1.0000000008 0))')}, {line})") == (
+            "F00FFF102")
+        # 4e-10 past it is inside the band: the point is the line's endpoint
+        assert sql(spark, f"st_touches({line}, {g('POINT(1.0000000004 0)')})") is True
+
 
 class TestXz2Rows:
     """The XZ2 point refine reads the same rule as ``st_*``."""

@@ -62,6 +62,20 @@ def main() -> None:
         flagship,
     )
 
+    centers = [dict(center_id="C1", lon=15.0, lat=15.0),
+               dict(center_id="C2", lon=-50.0, lat=-20.0)]
+    dw_docs = sj.dwithin_join_broadcast(
+        sj.extract_geo_points(docs), centers, 100_000.0, unique_ids=True
+    ).select("doc_id", "geo_pos", "center_id")
+    plans["dwithin_doc_points"] = (
+        "Want: zero Exchange; the span points extracted inside the Generate "
+        "(the regexp once per coordinate, no Filter or Project re-running "
+        "it) -> codegen cell -> BroadcastHashJoin on the center cover with "
+        "the haversine refine in its condition; no Python eval node.",
+        plan_of(dw_docs),
+        dw_docs,
+    )
+
     plans["xz2_poly_point_join"] = (
         "Want: one shuffle pair on (xz_level, xz_cell), no dedupe exchange, "
         "point ancestor keys as codegen'd shifts, loose-bbox prefilter "
@@ -304,19 +318,30 @@ def main() -> None:
             f"PLAN REGRESSION: xz2_poly_point_join evaluates the geometry keys UDF "
             f"in {n_keys_evals} ArrowEvalPython nodes (want 1)"
         )
-    flag_text = plans["flagship_spans_join"][1]
-    gen_id = int(re.search(r"^\((\d+)\) Generate", flag_text, re.M).group(1))
-    regex_filters = [
-        i for i, cond in re.findall(
-            r"^\((\d+)\) Filter\n(?:(?!\(\d+\) ).*\n)*?Condition : (.*)$", flag_text, re.M
+    # The span extraction (spatial_join.GEO_POINTS_SQL) must run its regexp
+    # in ONE node, once per coordinate: the Generate that explodes it (the
+    # extract_geo_points consumers) or the Project right below it that
+    # makes the flagship's point array.  A Filter or Project that carries
+    # it again re-runs every span's regexp per conjunct or column.
+    for name in ("flagship_spans_join", "dwithin_doc_points"):
+        text = plans[name][1]
+        gen_id = int(re.search(r"^\((\d+)\) Generate", text, re.M).group(1))
+        sites = [
+            (int(i), node, body.count("regexp_extract("))
+            for i, node, body in re.findall(
+                r"^\((\d+)\) (\w+)[^\n]*\n((?:(?!\(\d+\) ).*\n)*)", text, re.M
+            )
+            if "regexp_extract(" in body
+        ]
+        one = len(sites) == 1 and sites[0][2] == 2 and (
+            sites[0][:2] == (gen_id, "Generate") or sites[0][:2] == (gen_id - 1, "Project")
         )
-        if int(i) < gen_id and "regexp_extract" in cond
-    ]
-    if regex_filters:
-        sys.exit(
-            f"PLAN REGRESSION: flagship Filter(s) {regex_filters} below the Generate "
-            "re-run the span regexp extraction (want: the array evaluated once)"
-        )
+        if not one:
+            sys.exit(
+                f"PLAN REGRESSION: {name} evaluates the span regexp in (node id, node, "
+                f"calls) {sites} (want one site, the Generate ({gen_id}) or the "
+                "Project below it, with 2 calls)"
+            )
 
     # REGRESSION GUARD (round-3 split-explode design): the spacetime join
     # must shuffle each side ONCE and never re-exchange for a dedupe — a
@@ -341,9 +366,9 @@ def main() -> None:
     # ExistingRDD`` is a frame built from Python rows: every query over it
     # runs a Python-worker job to produce them (the locally built
     # broadcast sides are Arrow LocalRelations, scanned as LocalTableScan).
-    for name in ("flagship_spans_join", "z3_bbox_time", "spatial_join_rect_intersects",
-                 "st_dwithin_centers", "spacetime_join", "simhash_pairs",
-                 "simhash_md5_pairs", "minhash_md5_pairs"):
+    for name in ("flagship_spans_join", "dwithin_doc_points", "z3_bbox_time",
+                 "spatial_join_rect_intersects", "st_dwithin_centers", "spacetime_join",
+                 "simhash_pairs", "simhash_md5_pairs", "minhash_md5_pairs"):
         text = plans[name][1]
         if "ArrowEvalPython" in text or "BatchEvalPython" in text:
             sys.exit(
@@ -362,6 +387,7 @@ def main() -> None:
     # to compile (8 kB bytecode limit), silently interpreting the hot path
     # at ~1/3 throughput.  A healthy flagship plan shows exactly 2 FLOOR
     # leaves (one per axis norm) and ZERO shuffle Exchanges.
+    flag_text = plans["flagship_spans_join"][1]
     n_floor = flag_text.count("FLOOR")
     n_flag_shuf = len(re.findall(r"^\(\d+\) Exchange", flag_text, re.M))
     if n_floor > 2 or n_flag_shuf > 0:
